@@ -57,7 +57,9 @@ object Bench {
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.forall(_.contains(name)))
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed in warm pass: ${e.getMessage}")
+        }
     }
     // Timed runs, report the min-of-3 per query: first touch pays
     // JIT/classload noise that says nothing about the plan, and a forced
@@ -79,22 +81,34 @@ object Bench {
     // the question is growth FACTORS, not +-5%.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val samples = scala.collection.mutable.Map[String, List[Double]]()
+    // A lane that throws in any timed pass gets no time sample: it is
+    // listed as failed (with its last error) and left out of the total.
+    val failed = scala.collection.mutable.Map[String, String]()
     (1 to passes).foreach { _ =>
       ordered.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         // noop sink fully materializes every output row (count() would
         // let Spark skip projections).
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          val t = (System.nanoTime() - t0) / 1e9
+          samples.updateWith(name)(s => Some(t :: s.getOrElse(Nil)))
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed(name) = String.valueOf(e.getMessage)
         }
-        val t = (System.nanoTime() - t0) / 1e9
-        samples.updateWith(name)(s => Some(t :: s.getOrElse(Nil)))
       }
     }
-    val results = ordered.map { case (name, _) => name -> samples(name).min }
+    val results = ordered.collect { case (name, _) if !failed.contains(name) =>
+      name -> samples(name).min
+    }
+    def jstr(v: String): String = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
+      .map(ch => if (ch < ' ') ' ' else ch) + "\""
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedQs = failed.toSeq.sortBy(_._1).map { case (k, msg) =>
+      s""""$k":{"status":"failed","error":${jstr(msg)}}"""
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val loadEnd = loadavg()
     // Convention pinned in the record itself (round-13, VERDICT item 2):
@@ -103,7 +117,7 @@ object Bench {
     // Cross-round curve points are only comparable when this field
     // matches.
     val detailed =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"per_query_stat":"min_of_passes","queries":$qs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"per_query_stat":"min_of_passes","queries":$qs,"failed":$failedQs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
     // The driver keeps only a short stdout tail (~2.2 KB); the detailed
     // per-query record (~10 KB over 311 lanes) overruns it, which left
     // PERF per_query/scaling EMPTY in r12/r13 (the driver parsed only a
@@ -129,7 +143,7 @@ object Bench {
       slowest.map { case (k, v) => s"\"$k\":${r3(v)}" })
       .mkString("{", ",", "}")
     val short =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$compactQs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$compactQs,"failed":${failed.size},"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
     println(detailed)
     println(short)
     java.nio.file.Files.write(

@@ -264,12 +264,10 @@ case class JsonSchemaOf(child: Expression, parseFailOnError: Boolean)
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try {
-        val t = JsonFused.fastSchemaOfDoc(bytes)
-        return if (t == null) null else UTF8String.fromString(t.render)
-      } catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try {
+      val t = JsonFused.fastSchemaOfDoc(bytes)
+      return if (t == null) null else UTF8String.fromString(t.render)
+    } catch { case graft.variant.FastJsonLex.Miss => () }
     try {
       val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
       try {
@@ -335,12 +333,10 @@ case class SchemaOfJsonAgg(
     val in = child.eval(input)
     if (in == null) return buffer
     val bytes = JsonFused.toBytes(in)
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try {
-        val t = JsonFused.fastSchemaOfDoc(bytes)
-        return if (t == null) buffer else SchemaInfer.merge(buffer, t)
-      } catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try {
+      val t = JsonFused.fastSchemaOfDoc(bytes)
+      return if (t == null) buffer else SchemaInfer.merge(buffer, t)
+    } catch { case graft.variant.FastJsonLex.Miss => () }
     try {
       val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
       try {
@@ -408,10 +404,8 @@ case class JsonTypeOf(child: Expression, parseFailOnError: Boolean)
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try return fastTypeOf(bytes)
-      catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try return fastTypeOf(bytes)
+    catch { case graft.variant.FastJsonLex.Miss => () }
     try {
       val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
       try {
@@ -516,10 +510,8 @@ case class JsonKeys(child: Expression, parseFailOnError: Boolean)
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try return fastKeys(bytes)
-      catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try return fastKeys(bytes)
+    catch { case graft.variant.FastJsonLex.Miss => () }
     try {
       val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
       try {
@@ -626,10 +618,8 @@ case class JsonSize(child: Expression, parseFailOnError: Boolean)
 
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try return fastSize(bytes)
-      catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try return fastSize(bytes)
+    catch { case graft.variant.FastJsonLex.Miss => () }
     try {
       val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
       try {

@@ -83,10 +83,8 @@ case class JsonPathExtract(
     // anomaly throws Miss and the Jackson path below re-runs the row
     // and owns the error). Misses: escaped keys, subtree→string
     // re-encodes, >18-digit integer leaves, any malformed input.
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try return fastEvalBytes(bytes)
-      catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try return fastEvalBytes(bytes)
+    catch { case graft.variant.FastJsonLex.Miss => () }
     jacksonEvalBytes(bytes)
   }
 

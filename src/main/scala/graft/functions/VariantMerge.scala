@@ -415,10 +415,8 @@ object VariantMergePatch {
     // byte-level tree build first (FastJsonLex — same miss-to-Jackson
     // contract as the encode/extract fast paths; keys with escapes,
     // >18-digit ints, and any malformed input fall through)
-    if (VariantJsonCodec.fastJsonEnabled) {
-      try return fastDocToVNode(utf8)
-      catch { case graft.variant.FastJsonLex.Miss => () }
-    }
+    try return fastDocToVNode(utf8)
+    catch { case graft.variant.FastJsonLex.Miss => () }
     jacksonDocToVNode(utf8)
   }
 

@@ -606,18 +606,15 @@ object StreamingQueries {
     * batch-split-invariant (StreamingSpec/TransformStateSpec prove
     * batch-count equivalence; every oracle is a pure function of the
     * per-key event multiset) — while halving the per-batch planning +
-    * offset/WAL-commit cycles StreamPhaseProbe charged at ~19% each.
-    * Knob kept env-overridable so the 4-batch shape remains one
-    * variable away for harness experiments. */
-  private val multiFilesPerTrigger =
-    sys.env.getOrElse("GRAFT_MULTI_BATCH_FILES", "2")
+    * offset/WAL-commit cycles StreamPhaseProbe charged at ~19% each. */
+  private val multiFilesPerTrigger = "2"
 
   /** Stateful-operator partition sizing: a streaming query's state store
     * count is fixed at plan time from spark.sql.shuffle.partitions; for
     * these test-scale states, 32 stores mean 32× the per-batch
     * checkpoint file churn for no parallelism gain. Run the micro-batch
-    * under a bounded setting, restore after. (At 100 TB you size this UP
-    * — the knob is the point.)
+    * under a bounded setting, restore after. (At 100 TB each lane's `n`
+    * is sized UP.)
     */
   private def withStatePartitions[A](s: org.apache.spark.sql.SparkSession, n: Int,
                                      noDataBatches: Boolean = true)(f: => A): A = {
@@ -648,10 +645,7 @@ object StreamingQueries {
     val nd = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
     val prevNd = s.conf.get(nd)
-    // deploy-time override: state sizing is environment-dependent (the
-    // whole point of the knob) — let a harness pin it without a rebuild
-    val eff = sys.env.get("GRAFT_STATE_PARTS").map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
+    s.conf.set(key, n.toString)
     // A no-data micro-batch only matters when event-time state must
     // advance without input (watermark eviction, timers). The complete-
     // mode and NoTimeout queries here have neither, so the extra empty

@@ -40,12 +40,12 @@ object FastJsonFuzz {
 
     def genNumber(): String = rnd.nextInt(8) match {
       case 0 => rnd.nextInt(10).toString
-      case 1 => rnd.nextLong().toString // may exceed 18 digits w/ sign → miss path
+      case 1 => rnd.nextLong().toString // up to 19 digits w/ sign
       case 2 => s"${rnd.nextInt(1000)}.${rnd.nextInt(100000)}"
       case 3 => s"-${rnd.nextInt(100)}.${rnd.nextInt(10)}e${rnd.nextInt(30)}"
       case 4 => s"${rnd.nextInt(10)}E-${rnd.nextInt(30)}"
       case 5 => "123456789012345678"  // 18 digits
-      case 6 => "1234567890123456789" // 19 digits → miss
+      case 6 => "1234567890123456789" // 19 digits: BigInteger arm, int64
       case _ => "0"
     }
 

@@ -40,11 +40,18 @@ object VariantJsonCodec {
         throw new JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
     }
 
-  /** First-seen key interner for the single-pass encoder: keys get
-    * temporary ids in arrival order; `remapTo` translates them to the
-    * final sorted-dictionary ids.
+  /** Key → dictionary-id lookup for one encode walk over the raw bytes.
+    * `id` returns -1 when the row departs from a guessed shape; the
+    * caller then re-runs the walk with a [[KeyInterner]].
     */
-  private final class KeyInterner {
+  private abstract class KeyIds {
+    def id(b: Array[Byte], off: Int, len: Int): Int
+  }
+
+  /** First-seen key interner: keys get temporary ids in arrival order;
+    * `remapTo` translates them to the final sorted-dictionary ids.
+    */
+  private final class KeyInterner extends KeyIds {
     val keys = new java.util.ArrayList[String]()
     private val map = new java.util.HashMap[String, Integer]()
     def intern(k: String): Int = {
@@ -57,6 +64,8 @@ object VariantJsonCodec {
         id
       }
     }
+    def id(b: Array[Byte], off: Int, len: Int): Int =
+      intern(new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8))
     def remapTo(finalIds: java.util.HashMap[String, Integer]): Array[Int] = {
       val remap = new Array[Int](keys.size())
       var i = 0
@@ -65,34 +74,31 @@ object VariantJsonCodec {
     }
   }
 
-  /** Per-thread prediction of the NEXT row's first-seen key sequence:
-    * real scans are runs of structurally-identical rows, so the previous
+  /** Per-thread guess of the NEXT row's first-seen key sequence: real
+    * scans are runs of structurally-identical rows, so the previous
     * row's (arrival keys → final dictionary ids, metadata bytes) almost
     * always applies verbatim. A hit skips the dictionary build (sort +
     * hash map + byte emission) AND the sorted-order re-encode — keys
-    * intern straight to final ids and `VariantObjectBuilder.finish()`
-    * id-sorts fields, so one token pass emits the canonical binary.
+    * resolve straight to final ids and `VariantObjectBuilder.finish()`
+    * id-sorts fields, so one pass emits the canonical binary.
     * This recovers the reference's per-batch shared-metadata
     * amortization (arrow-open-variant/src/json.rs:51-63) without giving
     * up self-contained rows (SURVEY §7.3): the metadata BYTES are shared
     * by reference thread-locally, each row still carries them. Measured
     * 0.30 → ~1 M rows/s single-thread on small homogeneous objects
-    * (CodecBench); a miss costs one extra tokenize of that row only.
+    * (CodecBench); a miss costs one extra walk of that row only.
     */
   private final class Speculation {
-    var keys: Array[String] = new Array[String](0) // first-seen arrival order
-    var keyBytes: Array[Array[Byte]] = new Array[Array[Byte]](0) // same, as UTF-8
+    var keyBytes: Array[Array[Byte]] = new Array[Array[Byte]](0) // first-seen arrival order, UTF-8
     var finalIds: Array[Int] = new Array[Int](0) // their sorted-dictionary ids
     var meta: Array[Byte] = VariantMetadata.EMPTY
 
     def adopt(arrival: java.util.ArrayList[String], remap: Array[Int],
               metaBytes: Array[Byte]): Unit = {
-      keys = new Array[String](arrival.size())
       keyBytes = new Array[Array[Byte]](arrival.size())
       var i = 0
-      while (i < keys.length) {
-        keys(i) = arrival.get(i)
-        keyBytes(i) = keys(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      while (i < keyBytes.length) {
+        keyBytes(i) = arrival.get(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
         i += 1
       }
       finalIds = remap
@@ -102,91 +108,65 @@ object VariantJsonCodec {
   private val lastRowShape: ThreadLocal[Speculation] =
     ThreadLocal.withInitial(() => new Speculation)
 
-  /** Mutable first-seen counter for the speculative walk. */
-  private final class SpecState { var n = 0 }
+  /** Key lookup against the guessed shape, by byte comparison. A key
+    * seen EARLIER in this row resolves by linear scan over the seen
+    * prefix (small, and exactly first-seen interning); a new key must be
+    * the guess's next key, else -1.
+    */
+  private final class ShapeGuess(spec: Speculation) extends KeyIds {
+    private var n = 0 // keys of the guess seen so far
+    def complete: Boolean = n == spec.keyBytes.length
+    def id(b: Array[Byte], off: Int, len: Int): Int = {
+      var k = 0
+      while (k < n) {
+        if (FastJsonLex.sliceEq(b, off, len, spec.keyBytes(k))) return spec.finalIds(k)
+        k += 1
+      }
+      if (n < spec.keyBytes.length && FastJsonLex.sliceEq(b, off, len, spec.keyBytes(n))) {
+        n += 1
+        spec.finalIds(n - 1)
+      } else -1
+    }
+  }
 
   /** JSON text → (metadata, value); returns null for a top-level JSON
     * `null` (the SQL-null rule, json.rs:184-196).
     *
-    * SINGLE streaming pass over the raw bytes. Fast path: the
-    * speculative walk above (per-thread predicted key sequence → final
-    * ids immediately). Fallback: keys intern with first-seen temporary
-    * ids while values encode, then the dictionary is built and, only
-    * when arrival order was not already the sorted order, the compact
-    * binary is re-encoded with final ids (a memcpy-heavy walk over our
-    * own buffer — far cheaper than the second Jackson tokenize the
-    * two-pass scheme paid; json.rs:115-163 does two passes). No JsonNode
-    * tree is materialized. The hot path of `variant_from_json`: at
-    * 100 TB the parse IS the workload.
+    * One streaming pass over the raw bytes in the common case: the byte
+    * walk (`fastConvert`) resolves keys against the guessed shape and
+    * emits final ids directly. When the row departs from the guess, the
+    * same walk re-runs with first-seen interning and `finish` builds the
+    * dictionary and, only when arrival order was not already the sorted
+    * order, re-encodes the compact binary with final ids (a memcpy-heavy
+    * walk over our own buffer). No JsonNode tree is materialized. Rows
+    * the byte lexer declines (escaped keys, lone surrogates, malformed
+    * or oversized input, integers ≥ 2^127) take the plain Jackson walk,
+    * which owns all error semantics. The hot path of `variant_from_json`:
+    * at 100 TB the parse IS the workload.
     */
-  def fromJsonBytes(utf8: Array[Byte], off: Int, len: Int): (Array[Byte], Array[Byte]) = {
-    // Byte-level lexer first (no Jackson tokenizer, no UTF-16 round
-    // trip); parses the strict JSON subset == what Jackson's defaults
-    // accept, and bails to the Jackson paths below on ANYTHING doubtful
-    // (syntax error, >18-digit int, lone surrogate, invalid UTF-8) so
-    // error behavior and edge semantics stay Jackson-defined.
-    if (fastJsonEnabled) {
-      try return fastFromJsonBytes(utf8, off, off + len, lastRowShape.get())
-      catch { case FastJsonLex.Miss => () }
-    }
-    jacksonFromJsonBytes(utf8, off, len)
-  }
+  def fromJsonBytes(utf8: Array[Byte], off: Int, len: Int): (Array[Byte], Array[Byte]) =
+    try fastFromJsonBytes(utf8, off, off + len, lastRowShape.get())
+    catch { case FastJsonLex.Miss => jacksonFromJsonBytes(utf8, off, len) }
 
-  /** The Jackson tokenizer path (speculative + plain) — the fallback for
-    * every row the byte lexer declines, and the semantics reference the
-    * lexer is differential-fuzzed against (FastJsonSpec).
+  /** The Jackson token walk — the fallback for every row the byte lexer
+    * declines, and the semantics reference the lexer is
+    * differential-fuzzed against (FastJsonSpec).
     */
   private[graft] def jacksonFromJsonBytes(
       utf8: Array[Byte], off: Int, len: Int): (Array[Byte], Array[Byte]) = {
     import com.fasterxml.jackson.core.JsonToken
     try {
-      // --- speculative single-pass attempt against the last row's shape
-      val spec = lastRowShape.get()
-      locally {
-        val p = factory.createParser(utf8, off, len)
-        val tok = p.nextToken()
-        if (tok == null) throw new JsonParseException("Failed to parse JSON: empty input", null)
-        if (tok == JsonToken.VALUE_NULL) {
-          if (p.nextToken() != null)
-            throw new JsonParseException("Failed to parse JSON: trailing tokens", null)
-          return null
-        }
-        val buf = new ByteBuf(64)
-        val st = new SpecState
-        if (convertSpec(p, buf, spec, st) && st.n == spec.keys.length) {
-          if (p.nextToken() != null)
-            throw new JsonParseException("Failed to parse JSON: trailing tokens", null)
-          p.close()
-          return (spec.meta, buf.result())
-        }
-        p.close() // speculation missed: discard and re-tokenize plainly
-      }
-
       val p = factory.createParser(utf8, off, len)
-      p.nextToken()
+      val tok = p.nextToken()
+      if (tok == null) throw new JsonParseException("Failed to parse JSON: empty input", null)
       val interner = new KeyInterner
       val buf = new ByteBuf(64)
-      convertStream(p, buf, interner)
+      if (tok != JsonToken.VALUE_NULL) convertStream(p, buf, interner)
       if (p.nextToken() != null)
         throw new JsonParseException("Failed to parse JSON: trailing tokens", null)
       p.close()
-      val (metaBytes, finalIds) = VariantMetadata.build(interner.keys)
-      val remap = interner.remapTo(finalIds)
-      var identity = true
-      var i = 0
-      while (identity && i < remap.length) { identity = remap(i) == i; i += 1 }
-      // adopt this row's shape as the next prediction
-      spec.adopt(interner.keys, remap, metaBytes)
-      if (identity) (metaBytes, buf.result())
-      else {
-        // arrival order ≠ dictionary order: re-encode from our own
-        // binary so frame id widths and field sort reflect final ids
-        // (in-place id rewriting could change a frame's id byte width —
-        // the builders re-derive widths, keeping the encoding canonical)
-        val out = new ByteBuf(buf.length + 16)
-        reencode(buf.rawBytes, 0, out, remap)
-        (metaBytes, out.result())
-      }
+      if (tok == JsonToken.VALUE_NULL) null
+      else finish(interner, buf, lastRowShape.get())
     } catch {
       case e: JsonParseException => throw e
       case e: IllegalArgumentException => throw e
@@ -195,63 +175,27 @@ object VariantJsonCodec {
     }
   }
 
-  /** Speculative token → variant writer: like `convertStream`, but keys
-    * resolve against the predicted first-seen sequence `spec.keys` with
-    * already-final dictionary ids. Returns false the moment the row's
-    * key arrival deviates from the prediction (caller discards the
-    * buffer and re-runs the plain path). A key seen EARLIER in this row
-    * resolves by linear scan over the seen prefix — the prefix is small
-    * and this matches first-seen interning exactly.
+  /** Shared tail of both walks for a row encoded with first-seen temp
+    * ids: build the row's dictionary, adopt its shape as the next guess,
+    * and re-encode with final ids unless arrival order already was
+    * dictionary order. The re-encode runs from our own binary so frame
+    * id widths and field sort reflect final ids (in-place id rewriting
+    * could change a frame's id byte width — the builders re-derive
+    * widths, keeping the encoding canonical).
     */
-  private def convertSpec(p: com.fasterxml.jackson.core.JsonParser, buf: ByteBuf,
-                          spec: Speculation, st: SpecState): Boolean = {
-    import com.fasterxml.jackson.core.{JsonToken => T}
-    p.currentToken() match {
-      case T.VALUE_NULL => VariantWriter.writeNull(buf); true
-      case T.VALUE_TRUE => VariantWriter.writeBoolean(buf, true); true
-      case T.VALUE_FALSE => VariantWriter.writeBoolean(buf, false); true
-      case T.VALUE_NUMBER_INT =>
-        p.getNumberType match {
-          case com.fasterxml.jackson.core.JsonParser.NumberType.BIG_INTEGER =>
-            val bi = p.getBigIntegerValue
-            if (bi.bitLength() >= 128)
-              throw new JsonParseException(s"Could not fit value $bi into an i128", null)
-            VariantWriter.writeDecimal(buf, bi, 0)
-          case _ => VariantWriter.writeLong(buf, p.getLongValue)
-        }
-        true
-      case T.VALUE_NUMBER_FLOAT => VariantWriter.writeDouble(buf, p.getDoubleValue); true
-      case T.VALUE_STRING => VariantWriter.writeString(buf, p.getText); true
-      case T.START_ARRAY =>
-        val ab = new VariantArrayBuilder(buf)
-        while (p.nextToken() != T.END_ARRAY) {
-          if (!convertSpec(p, ab.elementBuffer(), spec, st)) return false
-        }
-        ab.finish()
-        true
-      case T.START_OBJECT =>
-        val ob = new VariantObjectBuilder(buf)
-        while (p.nextToken() != T.END_OBJECT) {
-          val name = p.currentName()
-          var id = -1
-          var i = 0
-          while (id < 0 && i < st.n) {
-            if (spec.keys(i) == name) id = spec.finalIds(i)
-            i += 1
-          }
-          if (id < 0) {
-            // next first-seen key must match the prediction's next key
-            if (st.n >= spec.keys.length || spec.keys(st.n) != name) return false
-            id = spec.finalIds(st.n)
-            st.n += 1
-          }
-          p.nextToken()
-          if (!convertSpec(p, ob.fieldBuffer(id), spec, st)) return false
-        }
-        ob.finish()
-        true
-      case other =>
-        throw new JsonParseException(s"Unsupported JSON token: $other", null)
+  private def finish(interner: KeyInterner, buf: ByteBuf,
+                     spec: Speculation): (Array[Byte], Array[Byte]) = {
+    val (metaBytes, finalIds) = VariantMetadata.build(interner.keys)
+    val remap = interner.remapTo(finalIds)
+    spec.adopt(interner.keys, remap, metaBytes)
+    var identity = true
+    var i = 0
+    while (identity && i < remap.length) { identity = remap(i) == i; i += 1 }
+    if (identity) (metaBytes, buf.result())
+    else {
+      val out = new ByteBuf(buf.length + 16)
+      reencode(buf.rawBytes, 0, out, remap)
+      (metaBytes, out.result())
     }
   }
 
@@ -368,23 +312,20 @@ object VariantJsonCodec {
   }
 
   // ===================================================================
-  // Byte-level JSON fast path (round 7). The reference's kernel is
+  // Byte-level JSON walk (round 7). The reference's kernel is
   // json→variant; with the plan fused and the encoder single-pass, the
   // remaining cost was Jackson's tokenizer (UTF-8→UTF-16 decode, token
   // objects, feature checks). This lexer works directly on the UTF-8
-  // input: escape-free strings become one byte-slice copy, small ints
-  // parse inline, and object keys match the speculative shape by BYTE
+  // input: escape-free strings become one byte-slice copy, integers
+  // parse inline, and object keys match the guessed shape by BYTE
   // comparison. Contract: it accepts a strict SUBSET of what Jackson's
   // default feature set accepts; anything outside (malformed JSON,
-  // >18-digit integers, escapes with lone surrogates, invalid UTF-8,
+  // integers ≥ 2^127, escaped keys, lone surrogates, invalid UTF-8,
   // leading zeros) throws the stackless FastMiss and the row re-runs
-  // through the Jackson paths above, which own all error semantics.
-  // Differential-fuzzed byte-for-byte against the Jackson path in
-  // FastJsonSpec; flag off via GRAFT_DISABLE_FAST_JSON=1.
+  // through the plain Jackson walk above, which owns all error
+  // semantics. Differential-fuzzed byte-for-byte against the Jackson
+  // walk in FastJsonSpec.
   // ===================================================================
-
-  private[graft] val fastJsonEnabled: Boolean =
-    !sys.env.get("GRAFT_DISABLE_FAST_JSON").contains("1")
 
   /** Test hook: run ONLY the byte lexer (production speculation state),
     * Left(()) when it declines the row. */
@@ -399,8 +340,9 @@ object VariantJsonCodec {
   private def FastMiss = FastJsonLex.Miss
   private type FastCursor = FastJsonLex.Cursor
 
-  /** Emit one JSON number through the writer. Integers over 18 digits
-    * miss to Jackson (BigInteger/i128 rules live there). */
+  /** Emit one JSON number through the writer, with Jackson's integer
+    * rule: fits a long → int64, else Decimal16 scale 0; integers ≥ 2^127
+    * miss so the Jackson walk raises its i128 error. */
   private def fastNumber(c: FastCursor, buf: ByteBuf): Unit = {
     val b = c.b
     val start = c.i
@@ -408,12 +350,18 @@ object VariantJsonCodec {
     val isInt = FastJsonLex.scanNumber(c)
     if (isInt) {
       val dStart = c.numStart
-      val nd = c.i - dStart
-      if (nd > 18) throw FastJsonLex.Miss // could exceed long; Jackson owns BigInteger
-      var v = 0L
-      var k = dStart
-      while (k < c.i) { v = v * 10 + (b(k) - '0'); k += 1 }
-      VariantWriter.writeLong(buf, if (neg) -v else v)
+      if (c.i - dStart > 18) {
+        val bi = new java.math.BigInteger(
+          new String(b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII))
+        if (bi.bitLength() <= 63) VariantWriter.writeLong(buf, bi.longValue())
+        else if (bi.bitLength() < 128) VariantWriter.writeDecimal(buf, bi, 0)
+        else throw FastMiss
+      } else {
+        var v = 0L
+        var k = dStart
+        while (k < c.i) { v = v * 10 + (b(k) - '0'); k += 1 }
+        VariantWriter.writeLong(buf, if (neg) -v else v)
+      }
     } else {
       // IEEE-correct, identical to Jackson's double conversion
       VariantWriter.writeDouble(buf, java.lang.Double.parseDouble(
@@ -421,8 +369,9 @@ object VariantJsonCodec {
     }
   }
 
-  /** Fast-path entry: speculation attempt, then fast-plain. Throws
-    * FastMiss to route the row to the Jackson paths. */
+  /** Byte-path entry: the walk against the guessed shape, then, if the
+    * row departs from it, the same walk with first-seen interning.
+    * Throws FastMiss to route the row to the Jackson walk. */
   private def fastFromJsonBytes(b: Array[Byte], off: Int, end: Int,
                                 spec: Speculation): (Array[Byte], Array[Byte]) = {
     val c = new FastJsonLex.Cursor(b, off, end)
@@ -435,131 +384,28 @@ object VariantJsonCodec {
       return null
     }
     val valueStart = c.i
-    // --- speculative attempt against the predicted key sequence
-    locally {
-      val buf = new ByteBuf(64)
-      val st = new SpecState
-      if (fastConvertSpec(c, buf, spec, st) && st.n == spec.keys.length) {
-        c.skipWs()
-        if (c.i != end) throw FastMiss
-        return (spec.meta, buf.result())
-      }
+    val guess = new ShapeGuess(spec)
+    val guessed = new ByteBuf(64)
+    if (fastConvert(c, guessed, guess) && guess.complete) {
+      c.skipWs()
+      if (c.i != end) throw FastMiss
+      return (spec.meta, guessed.result())
     }
-    // --- plain single pass with first-seen interning
     c.i = valueStart
     val interner = new KeyInterner
     val buf = new ByteBuf(64)
-    fastConvertStream(c, buf, interner)
+    fastConvert(c, buf, interner)
     c.skipWs()
     if (c.i != end) throw FastMiss
-    val (metaBytes, finalIds) = VariantMetadata.build(interner.keys)
-    val remap = interner.remapTo(finalIds)
-    var identity = true
-    var i = 0
-    while (identity && i < remap.length) { identity = remap(i) == i; i += 1 }
-    spec.adopt(interner.keys, remap, metaBytes)
-    if (identity) (metaBytes, buf.result())
-    else {
-      val out = new ByteBuf(buf.length + 16)
-      reencode(buf.rawBytes, 0, out, remap)
-      (metaBytes, out.result())
-    }
+    finish(interner, buf, spec)
   }
 
-  /** Speculative fast walk (mirror of convertSpec on bytes): false on a
-    * key-shape mismatch (caller re-runs plain), FastMiss on syntax. */
-  private def fastConvertSpec(c: FastCursor, buf: ByteBuf,
-                              spec: Speculation, st: SpecState,
-                              depth: Int = 0): Boolean = {
-    if (depth > FastJsonLex.MAX_DEPTH) throw FastMiss // Jackson accepts depth MAX, rejects MAX+1
-    val b = c.b
-    (c.peek & 0xff) match {
-      case 'n' => FastJsonLex.literal(c, "null"); VariantWriter.writeNull(buf); true
-      case 't' => FastJsonLex.literal(c, "true"); VariantWriter.writeBoolean(buf, true); true
-      case 'f' => FastJsonLex.literal(c, "false"); VariantWriter.writeBoolean(buf, false); true
-      case '"' =>
-        c.i += 1
-        val close = FastJsonLex.scanSimpleString(c)
-        if (close >= 0) {
-          VariantWriter.writeStringSlice(buf, b, c.i, close - c.i)
-          c.i = close + 1
-        } else {
-          val scratch = new ByteBuf(32)
-          FastJsonLex.unescapeString(c, scratch)
-          VariantWriter.writeStringSlice(buf, scratch.rawBytes, 0, scratch.length)
-        }
-        true
-      case '[' =>
-        c.i += 1
-        val ab = new VariantArrayBuilder(buf)
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == ']') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            if (!fastConvertSpec(c, ab.elementBuffer(), spec, st, depth + 1)) return false
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case ']' => c.i += 1; more = false
-              case _ => throw FastMiss
-            }
-          }
-        }
-        ab.finish()
-        true
-      case '{' =>
-        c.i += 1
-        val ob = new VariantObjectBuilder(buf)
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == '}') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            c.expect('"')
-            val close = FastJsonLex.scanSimpleString(c)
-            if (close < 0) throw FastMiss // escaped keys: rare, Jackson path
-            val kOff = c.i
-            val kLen = close - c.i
-            FastJsonLex.checkName(kLen)
-            c.i = close + 1
-            var id = -1
-            var k = 0
-            while (id < 0 && k < st.n) {
-              if (FastJsonLex.sliceEq(b, kOff, kLen, spec.keyBytes(k))) id = spec.finalIds(k)
-              k += 1
-            }
-            if (id < 0) {
-              if (st.n >= spec.keyBytes.length ||
-                !FastJsonLex.sliceEq(b, kOff, kLen, spec.keyBytes(st.n))) return false
-              id = spec.finalIds(st.n)
-              st.n += 1
-            }
-            c.skipWs()
-            c.expect(':')
-            c.skipWs()
-            if (!fastConvertSpec(c, ob.fieldBuffer(id), spec, st, depth + 1)) return false
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case '}' => c.i += 1; more = false
-              case _ => throw FastMiss
-            }
-          }
-        }
-        ob.finish()
-        true
-      case x if x == '-' || (x >= '0' && x <= '9') => fastNumber(c, buf); true
-      case _ => throw FastMiss
-    }
-  }
-
-  /** Plain fast walk with first-seen interning (mirror of convertStream
-    * on bytes). */
-  private def fastConvertStream(c: FastCursor, buf: ByteBuf, interner: KeyInterner,
-                                depth: Int = 0): Unit = {
+  /** The byte walk: encodes the value at the cursor into `buf`, keys
+    * through `keys`. Returns false the moment `keys` reports a departure
+    * from the guessed shape (the caller discards `buf`); throws FastMiss
+    * on anything the lexer declines. */
+  private def fastConvert(c: FastCursor, buf: ByteBuf, keys: KeyIds,
+                          depth: Int = 0): Boolean = {
     if (depth > FastJsonLex.MAX_DEPTH) throw FastMiss // Jackson accepts depth MAX, rejects MAX+1
     val b = c.b
     (c.peek & 0xff) match {
@@ -586,7 +432,7 @@ object VariantJsonCodec {
           var more = true
           while (more) {
             c.skipWs()
-            fastConvertStream(c, ab.elementBuffer(), interner, depth + 1)
+            if (!fastConvert(c, ab.elementBuffer(), keys, depth + 1)) return false
             c.skipWs()
             (c.peek & 0xff) match {
               case ',' => c.i += 1
@@ -607,16 +453,15 @@ object VariantJsonCodec {
             c.skipWs()
             c.expect('"')
             val close = FastJsonLex.scanSimpleString(c)
-            if (close < 0) throw FastMiss // escaped keys: Jackson path
+            if (close < 0) throw FastMiss // escaped keys: rare, Jackson path
             FastJsonLex.checkName(close - c.i)
-            val key = new String(c.b, c.i, close - c.i,
-              java.nio.charset.StandardCharsets.UTF_8)
+            val id = keys.id(b, c.i, close - c.i)
+            if (id < 0) return false
             c.i = close + 1
-            val id = interner.intern(key)
             c.skipWs()
             c.expect(':')
             c.skipWs()
-            fastConvertStream(c, ob.fieldBuffer(id), interner, depth + 1)
+            if (!fastConvert(c, ob.fieldBuffer(id), keys, depth + 1)) return false
             c.skipWs()
             (c.peek & 0xff) match {
               case ',' => c.i += 1
@@ -629,6 +474,7 @@ object VariantJsonCodec {
       case x if x == '-' || (x >= '0' && x <= '9') => fastNumber(c, buf)
       case _ => throw FastMiss
     }
+    true
   }
 
   def fromTree(tree: JsonNode): (Array[Byte], Array[Byte]) = {

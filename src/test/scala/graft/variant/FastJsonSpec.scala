@@ -60,11 +60,14 @@ class FastJsonSpec extends AnyFunSuite {
   }
 
   test("documented misses route to Jackson: big ints, lone surrogates, escaped keys") {
-    // >18-digit integers (Jackson's BigInteger / i128 rules own these)
-    assert(VariantJsonCodec.fastOnlyForTest(utf8("1234567890123456789")).isLeft)
+    // >18-digit integers below 2^127 stay on the byte path, byte-identical
+    assert(check("1234567890123456789"), "19-digit int should stay on the fast path")
+    // 2^127 and beyond: Jackson's i128 error owns these
     assert(VariantJsonCodec.fastOnlyForTest(
       utf8("170141183460469231731687303715884105728")).isLeft)
-    // the full path still handles them correctly via fallback
+    assert(VariantJsonCodec.fastOnlyForTest(
+      utf8("-170141183460469231731687303715884105729")).isLeft)
+    intercept[Exception](VariantJsonCodec.fromJson("170141183460469231731687303715884105728"))
     val (_, v) = VariantJsonCodec.fromJson("12345678901234567890")
     assert(new VariantView(v, 0).getDecimal.toBigInteger
       === new java.math.BigInteger("12345678901234567890"))
@@ -72,6 +75,20 @@ class FastJsonSpec extends AnyFunSuite {
     assert(VariantJsonCodec.fastOnlyForTest(utf8("\"\\ud800x\"")).isLeft)
     // escaped object key → miss
     assert(VariantJsonCodec.fastOnlyForTest(utf8("""{"a\tb": 1}""")).isLeft)
+  }
+
+  test("big-integer boundaries: long range, decimal range, byte-identical to Jackson") {
+    val two = java.math.BigInteger.TWO
+    val one = java.math.BigInteger.ONE
+    val bounds = Seq(
+      two.pow(63).subtract(one), two.pow(63).subtract(one).negate(), // ±(2^63-1): int64
+      two.pow(63).negate(), // -2^63: int64
+      two.pow(63), // 2^63: decimal
+      two.pow(127).subtract(one), two.pow(127).negate()) // largest/smallest decimal
+    bounds.foreach { bi =>
+      assert(check(bi.toString), s"$bi should stay on the fast path")
+      assert(check(s"""{"n": $bi, "m": [$bi]}"""), s"$bi in a container should stay on the fast path")
+    }
   }
 
   test("malformed inputs are never accepted by the fast path") {
@@ -135,7 +152,10 @@ class FastJsonSpec extends AnyFunSuite {
         }
         sb.append("\"").toString
       case 5 => Seq("true", "false", "null")(rnd.nextInt(3))
-      case 6 => "918273645546372819" // 18 digits: max fast-path int
+      case 6 =>
+        if (rnd.nextBoolean()) "918273645546372819" // 18 digits: the inline-parsed maximum
+        else (if (rnd.nextBoolean()) "-" else "") + (1 + rnd.nextInt(9)) + // 19-39 digits
+          Seq.fill(18 + rnd.nextInt(21))(rnd.nextInt(10)).mkString
       case 7 =>
         (0 until rnd.nextInt(4)).map(_ => genValue(depth + 1)).mkString("[", ", ", "]")
       case _ =>
