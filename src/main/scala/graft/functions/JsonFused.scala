@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.variant.{SchemaInfer, VariantJsonCodec, VariantMetadata}
+import graft.variant.{FastJsonLex, SchemaInfer, VariantJsonCodec, VariantMetadata}
 import com.fasterxml.jackson.core.JsonToken
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -10,13 +10,15 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused forms of `variant_keys` / `variant_size` / `variant_explode`
-  * over a raw JSON column: one streaming token pass instead of
-  * parse → metadata build → variant encode → decode. Installed by
-  * [[VariantGetFusionRule]] when the child is `variant_from_json`; the
-  * unfused expressions remain the semantic reference and each fused form
-  * reproduces their output exactly (dictionary-sorted key order
-  * included — the parity property tests in ExpressionSpec pin this).
+/** Fused forms of `variant_keys` / `variant_size` / `variant_typeof` /
+  * `schema_of_variant[_agg]` / `variant_explode` over a raw JSON column:
+  * one byte walk instead of parse → metadata build → variant encode →
+  * decode. Installed by [[VariantGetFusionRule]] when the child is
+  * `variant_from_json`; the unfused expressions remain the semantic
+  * reference. Each byte walk reproduces their output exactly
+  * (dictionary-sorted key order included — the parity property tests in
+  * FusedPropertySpec pin this), and a row it declines is evaluated by
+  * the unfused pipeline itself ([[JsonFused.evalUnfused]]).
   */
 private[functions] object JsonFused {
   /** Stable sort of strings by UTF-8 byte order — the metadata
@@ -40,13 +42,23 @@ private[functions] object JsonFused {
     case b: Array[Byte] => b
   }
 
+  /** A row a byte walk declined, evaluated by the unfused plan the fused
+    * form replaced: `consumer(variant_from_json(s))`. The parse is the
+    * `VariantFromJson` expression itself — same memo, same error mapping —
+    * so fused and unfused agree by construction on every such row.
+    */
+  def evalUnfused(consumer: UnaryExpression with GraftUnaryCodegen, bytes: Array[Byte]): Any = {
+    val row = consumer.child.asInstanceOf[VariantFromJson].evalChildValue(bytes)
+    if (row == null) null else consumer.evalChildValue(row)
+  }
+
   /** Consume the remainder of the document from wherever the caller's
-    * walk stopped, verifying (a) the rest tokenizes (Jackson throws on
-    * malformed bytes) and (b) exactly one root value exists — the same
-    * two checks `VariantJsonCodec.fromJsonBytes` applies. Every fused
-    * expression must call this before returning: the unfused pipeline
-    * parses the WHOLE document, so `variant_typeof('1 2')` is a parse
-    * error there and must be one here too (judge's round-2 review probe).
+    * token walk stopped, verifying (a) the rest tokenizes (Jackson throws
+    * on malformed bytes) and (b) exactly one root value exists — the same
+    * two checks `VariantJsonCodec.fromJsonBytes` applies. [[JsonExplodeKV]]
+    * must call this before returning: the unfused pipeline parses the
+    * WHOLE document, so `variant_explode('1 2')` is a parse error there
+    * and must be one here too.
     */
   def finishDocument(p: com.fasterxml.jackson.core.JsonParser): Unit = {
     // open-container count at the current position
@@ -75,8 +87,8 @@ private[functions] object JsonFused {
   }
 
   /** The unfused pipeline rejects a document containing an integer past
-    * i128 ANYWHERE (encoding fails on it) — so fused walks must apply
-    * the same bound to values they merely SKIP. Cheap pre-filter: ≤18
+    * i128 ANYWHERE (encoding fails on it) — so [[finishDocument]] applies
+    * the same bound to the values it drains. Cheap pre-filter: ≤18
     * digits always fit i64, so the real numeric parse only runs on long
     * literals.
     */
@@ -90,77 +102,14 @@ private[functions] object JsonFused {
     }
   }
 
-  /** Skip the value the parser is positioned ON (scalar or container),
-    * applying [[checkIntFits]] to every integer inside — the checked
-    * replacement for Jackson's `skipChildren`, whose lazy number
-    * handling would let a beyond-i128 literal slide through a skipped
-    * subtree.
-    */
-  def skipValue(p: com.fasterxml.jackson.core.JsonParser): Unit = {
-    p.currentToken() match {
-      case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
-        var depth = 1
-        while (depth > 0) {
-          p.nextToken() match {
-            case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depth += 1
-            case JsonToken.END_OBJECT | JsonToken.END_ARRAY => depth -= 1
-            case JsonToken.VALUE_NUMBER_INT => checkIntFits(p)
-            case _ => ()
-          }
-        }
-      case JsonToken.VALUE_NUMBER_INT => checkIntFits(p)
-      case _ => ()
-    }
-  }
-
-  /** Schema-lattice inference straight off the token stream — the fused
-    * equivalent of encode-then-`SchemaInfer.infer`. Parity by
-    * construction with the codec's JSON→variant coercions
-    * (VariantJsonCodec.convertStream): long-fitting ints → SLong,
-    * i128-fitting big ints → SDecimal(0) (≥128 bits is a PARSE error),
-    * floats → SDouble; duplicate object keys overwrite in arrival order,
-    * which is exactly what `infer` produces over the streamed encoding
-    * (TreeMap insert, last wins). Parser is positioned ON the value's
-    * first token.
-    */
-  def inferSchema(p: com.fasterxml.jackson.core.JsonParser): SchemaInfer.SType = {
-    import SchemaInfer._
-    p.currentToken() match {
-      case JsonToken.VALUE_NULL => SNull
-      case JsonToken.VALUE_TRUE | JsonToken.VALUE_FALSE => SBool
-      case JsonToken.VALUE_NUMBER_INT =>
-        if (p.getNumberType == com.fasterxml.jackson.core.JsonParser.NumberType.BIG_INTEGER) {
-          val bi = p.getBigIntegerValue
-          if (bi.bitLength() >= 128)
-            throw new VariantJsonCodec.JsonParseException(
-              s"Could not fit value $bi into an i128", null)
-          SDecimal(0)
-        } else SLong
-      case JsonToken.VALUE_NUMBER_FLOAT => SDouble
-      case JsonToken.VALUE_STRING => SString
-      case JsonToken.START_ARRAY =>
-        var elem: SType = SNull
-        while (p.nextToken() != JsonToken.END_ARRAY) elem = merge(elem, inferSchema(p))
-        SArray(elem)
-      case JsonToken.START_OBJECT =>
-        var fields = scala.collection.immutable.TreeMap.empty[String, SType]
-        while (p.nextToken() != JsonToken.END_OBJECT) {
-          val name = p.currentName()
-          p.nextToken()
-          fields += (name -> inferSchema(p))
-        }
-        SObject(fields)
-      case other =>
-        throw new VariantJsonCodec.JsonParseException(s"Unsupported JSON token: $other", null)
-    }
-  }
-
-  /** Byte-level twin of [[inferSchema]] (FastJsonLex miss contract).
-    * Integer classification without materializing: ≤18 digits always
-    * fit i64 → SLong; 20–38 digits always exceed i64 and fit i128 →
-    * SDecimal(0); exactly 19 digits straddle Long.MaxValue and ≥39
-    * digits straddle i128 — both miss so Jackson classifies. Strings
-    * only need validation, never decoding. */
+  /** Schema-lattice inference straight off the bytes — the fused
+    * equivalent of encode-then-`SchemaInfer.infer` (FastJsonLex miss
+    * contract). Parity by construction with the codec's JSON→variant
+    * coercions: long-fitting ints → SLong, i128-fitting big ints →
+    * SDecimal(0) (both by [[graft.variant.FastJsonLex.integer]]), floats
+    * → SDouble; duplicate object keys overwrite in arrival order, which
+    * is exactly what `infer` produces over the encoding (TreeMap insert,
+    * last wins). Strings only need validation, never decoding. */
   def fastInferSchema(c: graft.variant.FastJsonLex.Cursor, depth: Int): SchemaInfer.SType = {
     import graft.variant.{FastJsonLex => L}
     import SchemaInfer._
@@ -201,7 +150,7 @@ private[functions] object JsonFused {
             c.skipWs()
             c.expect('"')
             val close = L.scanSimpleString(c)
-            if (close < 0) throw L.Miss // escaped key: Jackson path
+            if (close < 0) throw L.Miss // escaped key: unfused pipeline
             L.checkName(close - c.i)
             val key = new String(b, c.i, close - c.i,
               java.nio.charset.StandardCharsets.UTF_8)
@@ -220,18 +169,16 @@ private[functions] object JsonFused {
         }
         SObject(fields)
       case x if x == '-' || (x >= '0' && x <= '9') =>
-        if (L.scanNumber(c)) {
-          val nd = c.i - c.numStart
-          if (nd <= 18) SchemaInfer.SLong
-          else if (nd >= 20 && nd <= 38) SchemaInfer.SDecimal(0)
-          else throw L.Miss
-        } else SchemaInfer.SDouble
+        val start = c.i
+        if (!L.scanNumber(c)) SDouble
+        else if (L.integer(c, start) == null) SLong
+        else SDecimal(0)
       case _ => throw L.Miss
     }
   }
 
-  /** Whole-document byte-level schema inference: Right(SType), or
-    * Right(null) for a top-level JSON null; Miss on anything doubtful. */
+  /** Whole-document byte-level schema inference: the SType, or null for
+    * a top-level JSON null; Miss on anything doubtful. */
   def fastSchemaOfDoc(bytes: Array[Byte]): SchemaInfer.SType = {
     import graft.variant.{FastJsonLex => L}
     val c = new L.Cursor(bytes, 0, bytes.length)
@@ -247,8 +194,8 @@ private[functions] object JsonFused {
 }
 
 /** `schema_of_variant(variant_from_json(s))` fused: render the inferred
-  * type straight off the token stream — no metadata build, no encode.
-  * Same walker as the fused aggregate, so lattice semantics are shared.
+  * type straight off the bytes — no metadata build, no encode. Same
+  * walker as the fused aggregate, so lattice semantics are shared.
   */
 case class JsonSchemaOf(child: Expression, parseFailOnError: Boolean)
     extends UnaryExpression with GraftUnaryCodegen {
@@ -262,35 +209,14 @@ case class JsonSchemaOf(child: Expression, parseFailOnError: Boolean)
       s"json_schema_of expects string/binary, got: ${other.simpleString}")
   }
 
+  @transient private lazy val unfused = SchemaOfVariant(VariantFromJson(child, parseFailOnError))
+
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
     try {
       val t = JsonFused.fastSchemaOfDoc(bytes)
-      return if (t == null) null else UTF8String.fromString(t.render)
-    } catch { case graft.variant.FastJsonLex.Miss => () }
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        val tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        if (tok == JsonToken.VALUE_NULL) {
-          JsonFused.finishDocument(p)
-          null // top-level JSON null → SQL-null variant → null schema
-        } else {
-          val t = JsonFused.inferSchema(p)
-          JsonFused.finishDocument(p)
-          UTF8String.fromString(t.render)
-        }
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else null
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else null
-    }
+      if (t == null) null else UTF8String.fromString(t.render)
+    } catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -298,14 +224,14 @@ case class JsonSchemaOf(child: Expression, parseFailOnError: Boolean)
 }
 
 /** `schema_of_variant_agg(variant_from_json(s))` fused: the lattice
-  * merge runs directly on each row's token stream — no metadata build,
-  * no variant encode, no decode walk. Buffer, merge, and wire form are
+  * merge runs directly on each row's bytes — no metadata build, no
+  * variant encode, no decode walk. Buffer, merge, and wire form are
   * shared with [[SchemaOfVariantAgg]] (same `SchemaInfer` lattice), so
   * partial aggregation and the serialized-schema consumers
-  * (`Shred.inferFields`) behave identically. Rows that fail to parse
-  * follow the unfused pipeline's rule: with `parseFailOnError=false`
-  * the row becomes SQL null and is skipped; otherwise the error
-  * propagates.
+  * (`Shred.inferFields`) behave identically. A row the byte walk
+  * declines goes through the unfused aggregate's `update`, so rows that
+  * fail to parse follow its rule: with `parseFailOnError=false` the row
+  * becomes SQL null and is skipped; otherwise the error propagates.
   */
 case class SchemaOfJsonAgg(
     child: Expression,
@@ -329,39 +255,15 @@ case class SchemaOfJsonAgg(
 
   override def createAggregationBuffer(): SchemaInfer.SType = SchemaInfer.SNull
 
+  @transient private lazy val unfused = SchemaOfVariantAgg(VariantFromJson(child, parseFailOnError))
+
   override def update(buffer: SchemaInfer.SType, input: InternalRow): SchemaInfer.SType = {
     val in = child.eval(input)
     if (in == null) return buffer
-    val bytes = JsonFused.toBytes(in)
     try {
-      val t = JsonFused.fastSchemaOfDoc(bytes)
-      return if (t == null) buffer else SchemaInfer.merge(buffer, t)
-    } catch { case graft.variant.FastJsonLex.Miss => () }
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        val tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        if (tok == JsonToken.VALUE_NULL) {
-          if (p.nextToken() != null)
-            throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: trailing tokens", null)
-          buffer // top-level JSON null → SQL-null variant → skipped row
-        } else {
-          val t = JsonFused.inferSchema(p)
-          if (p.nextToken() != null)
-            throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: trailing tokens", null)
-          SchemaInfer.merge(buffer, t)
-        }
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else buffer
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else buffer
-    }
+      val t = JsonFused.fastSchemaOfDoc(JsonFused.toBytes(in))
+      if (t == null) buffer else SchemaInfer.merge(buffer, t)
+    } catch { case FastJsonLex.Miss => unfused.update(buffer, input) }
   }
 
   override def merge(a: SchemaInfer.SType, b: SchemaInfer.SType): SchemaInfer.SType =
@@ -386,7 +288,7 @@ case class SchemaOfJsonAgg(
 }
 
 /** `variant_typeof(variant_from_json(s))` fused: the root's type name
-  * from the FIRST token — no parse of the remainder, no encode. Type
+  * from the FIRST byte, the remainder only validated — no encode. Type
   * names replicate the unfused path exactly, including the
   * narrowest-int-encoding names and big-int → decimal(38,0).
   */
@@ -402,64 +304,22 @@ case class JsonTypeOf(child: Expression, parseFailOnError: Boolean)
       s"json_typeof expects string/binary, got: ${other.simpleString}")
   }
 
+  @transient private lazy val unfused = VariantTypeOf(VariantFromJson(child, parseFailOnError))
+
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    try return fastTypeOf(bytes)
-    catch { case graft.variant.FastJsonLex.Miss => () }
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        val tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        val name = tok match {
-          // top-level JSON null → SQL NULL in the unfused pipeline
-          case JsonToken.VALUE_NULL => null
-          case JsonToken.START_OBJECT => "object"
-          case JsonToken.START_ARRAY => "array"
-          case JsonToken.VALUE_STRING => "string"
-          case JsonToken.VALUE_TRUE | JsonToken.VALUE_FALSE => "boolean"
-          case JsonToken.VALUE_NUMBER_FLOAT => "double"
-          case JsonToken.VALUE_NUMBER_INT =>
-            if (p.getNumberType == com.fasterxml.jackson.core.JsonParser.NumberType.BIG_INTEGER) {
-              val bi = p.getBigIntegerValue
-              if (bi.bitLength() >= 128)
-                throw new VariantJsonCodec.JsonParseException(
-                  s"Could not fit value $bi into an i128", null)
-              "decimal(38,0)"
-            } else {
-              val v = p.getLongValue
-              // names of the narrowest-int encodings the writer picks
-              if (v >= Byte.MinValue && v <= Byte.MaxValue) "tinyint"
-              else if (v >= Short.MinValue && v <= Short.MaxValue) "smallint"
-              else if (v >= Int.MinValue && v <= Int.MaxValue) "int"
-              else "bigint"
-            }
-          case other =>
-            throw new VariantJsonCodec.JsonParseException(s"Unsupported JSON token: $other", null)
-        }
-        JsonFused.finishDocument(p)
-        if (name == null) null else UTF8String.fromString(name)
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else null
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else null
-    }
+    try fastTypeOf(bytes)
+    catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
   }
 
   /** Byte-level root-type read: classify off the first byte, validate
-    * the whole document with the lexer, mirror the narrowest-int names.
-    * >18-digit integers miss (decimal(38,0) naming goes with Jackson's
-    * BigInteger path). */
+    * the whole document with the lexer, mirror the narrowest-int names
+    * and name a scale-0 decimal beyond 63 bits `decimal(38,0)`. */
   private def fastTypeOf(bytes: Array[Byte]): Any = {
     import graft.variant.{FastJsonLex => L}
     val c = new L.Cursor(bytes, 0, bytes.length)
     c.skipWs()
-    if (c.i >= c.end) throw L.Miss // empty: Jackson's error
+    if (c.i >= c.end) throw L.Miss // empty: the unfused parse's error
     val name: String = (c.peek & 0xff) match {
       case 'n' => L.literal(c, "null"); null // top-level null → SQL NULL
       case '{' => L.skipValue(c); "object"
@@ -468,14 +328,12 @@ case class JsonTypeOf(child: Expression, parseFailOnError: Boolean)
       case 't' => L.literal(c, "true"); "boolean"
       case 'f' => L.literal(c, "false"); "boolean"
       case x if x == '-' || (x >= '0' && x <= '9') =>
-        val neg = x == '-'
+        val start = c.i
         if (!L.scanNumber(c)) "double"
+        else if (L.integer(c, start) != null) "decimal(38,0)"
         else {
-          if (c.i - c.numStart > 18) throw L.Miss
-          var v = 0L
-          var k = c.numStart
-          while (k < c.i) { v = v * 10 + (c.b(k) - '0'); k += 1 }
-          if (neg) v = -v
+          val v = c.longValue
+          // names of the narrowest-int encodings the writer picks
           if (v >= Byte.MinValue && v <= Byte.MaxValue) "tinyint"
           else if (v >= Short.MinValue && v <= Short.MaxValue) "smallint"
           else if (v >= Int.MinValue && v <= Int.MaxValue) "int"
@@ -484,7 +342,7 @@ case class JsonTypeOf(child: Expression, parseFailOnError: Boolean)
       case _ => throw L.Miss
     }
     c.skipWs()
-    if (c.i != c.end) throw L.Miss // trailing: Jackson's error
+    if (c.i != c.end) throw L.Miss // trailing: the unfused parse's error
     if (name == null) null else UTF8String.fromString(name)
   }
 
@@ -508,46 +366,17 @@ case class JsonKeys(child: Expression, parseFailOnError: Boolean)
       s"json_keys expects string/binary, got: ${other.simpleString}")
   }
 
+  @transient private lazy val unfused = VariantKeys(VariantFromJson(child, parseFailOnError))
+
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    try return fastKeys(bytes)
-    catch { case graft.variant.FastJsonLex.Miss => () }
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        val tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        if (tok != JsonToken.START_OBJECT) { JsonFused.finishDocument(p); return null }
-        val names = scala.collection.mutable.ArrayBuffer.empty[String]
-        var t = p.nextToken()
-        while (t == JsonToken.FIELD_NAME) {
-          names += p.currentName()
-          p.nextToken()
-          JsonFused.skipValue(p)
-          t = p.nextToken()
-        }
-        JsonFused.finishDocument(p)
-        val arr = names.toArray
-        val order = JsonFused.sortedOrder(arr)
-        val out = new Array[Any](arr.length)
-        var i = 0
-        while (i < arr.length) { out(i) = UTF8String.fromString(arr(order(i))); i += 1 }
-        new GenericArrayData(out)
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else null
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else null
-    }
+    try fastKeys(bytes)
+    catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
   }
 
   /** Byte-level keys read: collect escape-free root keys, skip values
     * with full validation, sort like the dictionary would. Any escaped
-    * key misses to Jackson. */
+    * key misses to the unfused pipeline. */
   private def fastKeys(bytes: Array[Byte]): Any = {
     import graft.variant.{FastJsonLex => L}
     val c = new L.Cursor(bytes, 0, bytes.length)
@@ -570,7 +399,7 @@ case class JsonKeys(child: Expression, parseFailOnError: Boolean)
         c.skipWs()
         c.expect('"')
         val close = L.scanSimpleString(c)
-        if (close < 0) throw L.Miss // escaped key: Jackson path
+        if (close < 0) throw L.Miss // escaped key: unfused pipeline
         L.checkName(close - c.i)
         names += new String(c.b, c.i, close - c.i,
           java.nio.charset.StandardCharsets.UTF_8)
@@ -578,7 +407,7 @@ case class JsonKeys(child: Expression, parseFailOnError: Boolean)
         c.skipWs()
         c.expect(':')
         c.skipWs()
-        L.skipValue(c)
+        L.skipValue(c, 1) // inside the root object
         c.skipWs()
         (c.peek & 0xff) match {
           case ',' => c.i += 1
@@ -616,44 +445,12 @@ case class JsonSize(child: Expression, parseFailOnError: Boolean)
       s"json_size expects string/binary, got: ${other.simpleString}")
   }
 
+  @transient private lazy val unfused = VariantSize(VariantFromJson(child, parseFailOnError))
+
   override def nullSafeEval(input: Any): Any = {
     val bytes = JsonFused.toBytes(input)
-    try return fastSize(bytes)
-    catch { case graft.variant.FastJsonLex.Miss => () }
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        val tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        val out: Any = tok match {
-          case JsonToken.START_OBJECT =>
-            var n = 0
-            var t = p.nextToken()
-            while (t == JsonToken.FIELD_NAME) {
-              p.nextToken(); JsonFused.skipValue(p); n += 1; t = p.nextToken()
-            }
-            n
-          case JsonToken.START_ARRAY =>
-            var n = 0
-            var t = p.nextToken()
-            while (t != JsonToken.END_ARRAY) {
-              JsonFused.skipValue(p); n += 1; t = p.nextToken()
-            }
-            n
-          case _ => null
-        }
-        JsonFused.finishDocument(p)
-        out
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else null
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else null
-    }
+    try fastSize(bytes)
+    catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
   }
 
   /** Byte-level size read: count root members, skip their values with
@@ -679,7 +476,7 @@ case class JsonSize(child: Expression, parseFailOnError: Boolean)
               c.expect('"'); L.skipName(c)
               c.skipWs(); c.expect(':'); c.skipWs()
             }
-            L.skipValue(c)
+            L.skipValue(c, 1) // inside the root container
             n += 1
             c.skipWs()
             (c.peek & 0xff) match {

@@ -1,10 +1,8 @@
 package graft.functions
 
 import graft.variant.{PathStep, VariantJsonCodec, VariantPath}
-import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, UnaryNode}
@@ -12,12 +10,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused `variant_get(variant_from_json(s), path, primitiveType)`:
-  * a single streaming pass that navigates the JSON tokens directly to
-  * the path and casts the scalar — no metadata dictionary, no variant
-  * buffer, no intermediate struct. Installed by [[VariantGetFusionRule]]
-  * (the optimization sketched in SURVEY §4.2.2); the unfused pipeline is
-  * the semantic reference and the fusion is only applied for scalar
-  * target types whose cast rules it reproduces exactly.
+  * a single byte walk that navigates the JSON text directly to the path
+  * and casts the scalar — no metadata dictionary, no variant buffer, no
+  * intermediate struct. Installed by [[VariantGetFusionRule]] (the
+  * optimization sketched in SURVEY §4.2.2) only for scalar target types
+  * whose cast rules the walk reproduces exactly. A row the walk declines
+  * is evaluated by the unfused pipeline itself, which stays the semantic
+  * reference.
   */
 case class JsonPathExtract(
     child: Expression,
@@ -75,25 +74,29 @@ case class JsonPathExtract(
     result
   }
 
-  private def evalBytes(bytes: Array[Byte]): Any = {
-    // Byte-level navigation first (FastJsonLex): skip sibling values
-    // without tokenizing them, cast the leaf straight off the bytes, and
-    // validate the document remainder — byte-for-byte the token path's
-    // semantics (parse errors outrank cast errors because any parse
-    // anomaly throws Miss and the Jackson path below re-runs the row
-    // and owns the error). Misses: escaped keys, subtree→string
-    // re-encodes, >18-digit integer leaves, any malformed input.
-    try return fastEvalBytes(bytes)
-    catch { case graft.variant.FastJsonLex.Miss => () }
-    jacksonEvalBytes(bytes)
-  }
+  /** The unfused plan this expression replaced: it evaluates every row
+    * the byte walk declines. */
+  @transient private lazy val unfused =
+    VariantGet(VariantFromJson(child, parseFailOnError), path, targetType, castFailOnError)
+
+  // Byte-level navigation (FastJsonLex): skip sibling values without
+  // tokenizing them, cast the leaf straight off the bytes, and validate
+  // the document remainder. Parse errors outrank cast errors because any
+  // parse anomaly throws Miss and the unfused pipeline re-runs the row
+  // and owns the error. Misses: escaped keys, integers ≥ 2^127, any
+  // malformed input.
+  private def evalBytes(bytes: Array[Byte]): Any =
+    try fastEvalBytes(bytes)
+    catch { case graft.variant.FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
 
   private def fastEvalBytes(bytes: Array[Byte]): Any = {
     import graft.variant.{FastJsonLex => L}
     val c = new L.Cursor(bytes, 0, bytes.length)
     c.skipWs()
-    if (c.i >= c.end) throw L.Miss // empty input: Jackson's error
-    // navigate; track the containers the path has opened (true = object)
+    if (c.i >= c.end) throw L.Miss // empty input: the unfused parse's error
+    // navigate; track the containers the path has opened (true = object).
+    // Every skip passes the count of containers enclosing the skipped
+    // value, so the lexer's depth bound is the whole document's.
     val open = new Array[Boolean](steps.length)
     var nOpen = 0
     var si = 0
@@ -115,7 +118,7 @@ case class JsonPathExtract(
                 c.skipWs()
                 c.expect('"')
                 val close = L.scanSimpleString(c)
-                if (close < 0) throw L.Miss // escaped key: Jackson path
+                if (close < 0) throw L.Miss // escaped key: unfused pipeline
                 val kOff = c.i
                 val kLen = close - c.i
                 L.checkName(kLen)
@@ -125,7 +128,7 @@ case class JsonPathExtract(
                 c.skipWs()
                 if (L.sliceEq(c.b, kOff, kLen, k.utf8)) matched = true
                 else {
-                  L.skipValue(c)
+                  L.skipValue(c, nOpen + 1)
                   c.skipWs()
                   (c.peek & 0xff) match {
                     case ',' => c.i += 1
@@ -153,7 +156,7 @@ case class JsonPathExtract(
                 c.skipWs()
                 if (i == idx) matched = true
                 else {
-                  L.skipValue(c)
+                  L.skipValue(c, nOpen + 1)
                   c.skipWs()
                   (c.peek & 0xff) match {
                     case ',' => c.i += 1; i += 1
@@ -171,12 +174,12 @@ case class JsonPathExtract(
       if (found) si += 1
     }
     // consume/cast the value at the cursor; cast-class errors are thrown
-    // only AFTER the rest of the document validates (token-path parity)
+    // only AFTER the rest of the document validates (unfused parity)
     var castErr: Throwable = null
     val out =
-      if (!found) { if (pendingValue) L.skipValue(c); null }
+      if (!found) { if (pendingValue) L.skipValue(c, nOpen); null }
       else {
-        try fastCastValue(c)
+        try fastCastValue(c, nOpen)
         catch {
           case e: Exception if (e ne L.Miss) && !castFailOnError => null
           case e: Exception if e ne L.Miss => castErr = e; null
@@ -196,7 +199,7 @@ case class JsonPathExtract(
               c.expect('"'); L.skipName(c)
               c.skipWs(); c.expect(':'); c.skipWs()
             }
-            L.skipValue(c)
+            L.skipValue(c, lvl + 1)
             c.skipWs()
           case '}' if open(lvl) => c.i += 1; closed = true
           case ']' if !open(lvl) => c.i += 1; closed = true
@@ -206,7 +209,7 @@ case class JsonPathExtract(
       lvl -= 1
     }
     c.skipWs()
-    if (c.i != c.end) throw L.Miss // trailing garbage: Jackson's error
+    if (c.i != c.end) throw L.Miss // trailing garbage: the unfused parse's error
     if (castErr != null) throw castErr
     out
   }
@@ -214,9 +217,9 @@ case class JsonPathExtract(
   /** Cast the JSON value at the cursor to `targetType`, consuming it
     * FULLY before any cast-class error is thrown (so the caller can
     * always validate the document remainder). Cast rules mirror
-    * [[castToken]] exactly; hard cases (subtree→string canonical
-    * re-encode, >18-digit integers) miss to the Jackson path. */
-  private def fastCastValue(c: graft.variant.FastJsonLex.Cursor): Any = {
+    * `VariantExtract.cast` on the value the unfused parse would encode.
+    * `depth` counts the containers enclosing the value. */
+  private def fastCastValue(c: graft.variant.FastJsonLex.Cursor, depth: Int): Any = {
     import graft.variant.{FastJsonLex => L}
     val b = c.b
     (c.peek & 0xff) match {
@@ -254,30 +257,43 @@ case class JsonPathExtract(
           }
         }
       case '{' | '[' =>
+        val start = c.i
+        L.skipValue(c, depth) // consume BEFORE the cast error
         targetType match {
-          case _: StringType => throw L.Miss // canonical re-encode: Jackson path
-          case _ =>
-            val isObj = (c.peek & 0xff) == '{'
-            L.skipValue(c) // consume BEFORE the cast error
-            mismatch(if (isObj) "object" else "array")
+          // canonical compact JSON, as the unfused asString prints it:
+          // encode the slice with the same codec and print it back
+          case _: StringType =>
+            val (m, v) =
+              try VariantJsonCodec.fromJsonBytes(b, start, c.i - start)
+              catch { case _: Exception => throw L.Miss }
+            UTF8String.fromString(VariantJsonCodec.toJsonString(m, v))
+          case _ => mismatch(if (b(start) == '{') "object" else "array")
         }
       case x if x == '-' || (x >= '0' && x <= '9') =>
         val start = c.i
-        val neg = x == '-'
-        val isInt = L.scanNumber(c) // consumed
-        if (isInt) {
-          if (c.i - c.numStart > 18) throw L.Miss // BigInteger rules: Jackson
-          var v = 0L
-          var k = c.numStart
-          while (k < c.i) { v = v * 10 + (b(k) - '0'); k += 1 }
-          if (neg) v = -v
-          targetType match {
-            case LongType => v
-            case IntegerType => Math.toIntExact(v)
-            case DoubleType => v.toDouble
-            case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(v), d)
-            case _: StringType => UTF8String.fromString(java.lang.Long.toString(v))
-            case _ => mismatch("bigint")
+        if (L.scanNumber(c)) {
+          val big = L.integer(c, start)
+          if (big == null) {
+            val v = c.longValue
+            targetType match {
+              case LongType => v
+              case IntegerType => Math.toIntExact(v)
+              case DoubleType => v.toDouble
+              case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(v), d)
+              case _: StringType => UTF8String.fromString(java.lang.Long.toString(v))
+              case _ => mismatch("bigint")
+            }
+          } else {
+            // a scale-0 decimal beyond 63 bits, as the unfused parse stores it
+            val bd = new java.math.BigDecimal(big)
+            targetType match {
+              case LongType => bd.longValueExact() // always throws, like the unfused cast
+              case IntegerType => Math.toIntExact(bd.longValueExact())
+              case DoubleType => bd.doubleValue()
+              case d: DecimalType => toDecimal(bd, d)
+              case _: StringType => UTF8String.fromString(big.toString)
+              case _ => mismatch("bigint")
+            }
           }
         } else {
           val dv = java.lang.Double.parseDouble(new String(b, start, c.i - start,
@@ -298,7 +314,8 @@ case class JsonPathExtract(
     }
   }
 
-  /** The VALUE_STRING cast arm of [[castToken]] for non-string targets. */
+  /** A JSON string cast to a non-string target, as `VariantExtract.cast`
+    * casts a string variant. */
   private def castStringTo(s: String): Any = targetType match {
     case LongType => s.trim.toLong
     case IntegerType => Math.toIntExact(s.trim.toLong)
@@ -306,157 +323,6 @@ case class JsonPathExtract(
     case BooleanType => s.trim.toBoolean
     case d: DecimalType => toDecimal(new java.math.BigDecimal(s.trim), d)
     case _ => mismatch("string")
-  }
-
-  private def jacksonEvalBytes(bytes: Array[Byte]): Any = {
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        var tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        // walk the path on the token stream
-        var si = 0
-        var found = true
-        while (found && si < steps.length) {
-          steps(si) match {
-            case k: PathStep.Key =>
-              if (tok != JsonToken.START_OBJECT) found = false
-              else {
-                var hit = false
-                var t = p.nextToken()
-                while (!hit && t == JsonToken.FIELD_NAME) {
-                  val name = p.currentName()
-                  t = p.nextToken() // value token
-                  if (name == k.name) hit = true
-                  else { JsonFused.skipValue(p); t = p.nextToken() }
-                }
-                if (hit) tok = p.currentToken()
-                else found = false
-              }
-            case PathStep.Index(idx) =>
-              if (tok != JsonToken.START_ARRAY || idx < 0) found = false
-              else {
-                var i = 0
-                var t = p.nextToken()
-                while (i < idx && t != JsonToken.END_ARRAY) {
-                  JsonFused.skipValue(p); t = p.nextToken(); i += 1
-                }
-                if (t == JsonToken.END_ARRAY) found = false
-                else tok = t
-              }
-          }
-          si += 1
-        }
-        // Cast AT the value's position, but surface parse errors FIRST:
-        // the unfused pipeline parses the whole document before any cast
-        // runs, so a malformed tail outranks a failing cast. Parse-class
-        // errors from the cast itself (the i128 bound) throw immediately
-        // — they sit earlier in the stream than anything the validation
-        // drain can find.
-        var castErr: Throwable = null
-        val out =
-          if (!found) null
-          else try castToken(p, tok) catch {
-            case e: VariantJsonCodec.JsonParseException => throw e
-            case e: Throwable => castErr = e; null
-          }
-        JsonFused.finishDocument(p)
-        if (castErr != null) throw castErr
-        out
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else null
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else null
-    }
-  }
-
-  /** Cast rules mirror VariantExtract.cast for the scalar targets the
-    * fusion rule admits.
-    */
-  private def castToken(p: JsonParser, tok: JsonToken): Any = {
-    try {
-      tok match {
-        case JsonToken.VALUE_NULL => null
-        case JsonToken.VALUE_TRUE | JsonToken.VALUE_FALSE =>
-          val b = tok == JsonToken.VALUE_TRUE
-          targetType match {
-            case BooleanType => b
-            case LongType => if (b) 1L else 0L
-            case IntegerType => if (b) 1 else 0
-            case _: StringType => UTF8String.fromString(if (b) "true" else "false")
-            case _ => mismatch("boolean")
-          }
-        case JsonToken.VALUE_NUMBER_INT =>
-          val isBig = p.getNumberType == JsonParser.NumberType.BIG_INTEGER
-          // > i128 is a PARSE error in the unfused pipeline
-          // (VariantJsonCodec.fromJsonBytes), not a cast error — keep the
-          // same error class so parseFailOnError governs it.
-          if (isBig && p.getBigIntegerValue.bitLength() >= 128)
-            throw new VariantJsonCodec.JsonParseException(
-              s"Could not fit value ${p.getBigIntegerValue} into an i128", null)
-          targetType match {
-            case LongType =>
-              if (isBig) new java.math.BigDecimal(p.getBigIntegerValue).longValueExact() else p.getLongValue
-            case IntegerType =>
-              Math.toIntExact(if (isBig) new java.math.BigDecimal(p.getBigIntegerValue).longValueExact() else p.getLongValue)
-            case DoubleType =>
-              if (isBig) new java.math.BigDecimal(p.getBigIntegerValue).doubleValue() else p.getLongValue.toDouble
-            case d: DecimalType =>
-              val bd = if (isBig) new java.math.BigDecimal(p.getBigIntegerValue)
-                else java.math.BigDecimal.valueOf(p.getLongValue)
-              toDecimal(bd, d)
-            // decimal16 scale-0 prints via toPlainString == BigInteger.toString
-            case _: StringType => UTF8String.fromString(
-              if (isBig) p.getBigIntegerValue.toString else java.lang.Long.toString(p.getLongValue))
-            case _ => mismatch("bigint")
-          }
-        case JsonToken.VALUE_NUMBER_FLOAT =>
-          targetType match {
-            case DoubleType => p.getDoubleValue
-            // non-integral → integral TRUNCATES toward zero, matching
-            // VariantExtract.cast (round-10 builtin-parity change) so
-            // fused and unfused extraction stay value-identical;
-            // out-of-range/NaN throws instead of saturating
-            case LongType => VariantExtract.doubleToLongExact(p.getDoubleValue)
-            case IntegerType => Math.toIntExact(VariantExtract.doubleToLongExact(p.getDoubleValue))
-            case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(p.getDoubleValue), d)
-            // unfused: codec stores Float64, asString prints Double.toString
-            case _: StringType => UTF8String.fromString(java.lang.Double.toString(p.getDoubleValue))
-            case _ => mismatch("double")
-          }
-        case JsonToken.VALUE_STRING =>
-          val s = p.getText
-          targetType match {
-            case LongType => s.trim.toLong
-            case IntegerType => Math.toIntExact(s.trim.toLong)
-            case DoubleType => s.trim.toDouble
-            case BooleanType => s.trim.toBoolean
-            case d: DecimalType => toDecimal(new java.math.BigDecimal(s.trim), d)
-            case _: StringType => UTF8String.fromString(s)
-            case _ => mismatch("string")
-          }
-        case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
-          targetType match {
-            // object/array → canonical compact JSON: encode the subtree
-            // with the SAME codec the unfused path uses and print it, so
-            // output is byte-identical to VariantExtract.asString
-            // (sorted keys included).
-            case _: StringType =>
-              val (m, vb) = VariantJsonCodec.valueFromParser(p)
-              UTF8String.fromString(VariantJsonCodec.toJsonString(m, vb))
-            case _ => mismatch(if (tok == JsonToken.START_OBJECT) "object" else "array")
-          }
-        case other => mismatch(other.toString)
-      }
-    } catch {
-      case e: VariantJsonCodec.JsonParseException => throw e
-      case e: Exception if !castFailOnError => null
-    }
   }
 
   private def toDecimal(bd: java.math.BigDecimal, d: DecimalType): Any = {
@@ -486,7 +352,7 @@ object JsonPathExtract {
     ThreadLocal.withInitial(() => new Array[AnyRef](3))
 
   /** Targets whose cast semantics the fused path replicates exactly.
-    * String targets: scalar tokens print the same text as
+    * String targets: scalar values print the same text as
     * VariantExtract.asString; object/array subtrees round-trip through
     * the codec's canonical printer. Variant/binary targets keep the
     * unfused pipeline.
@@ -602,50 +468,90 @@ case class JsonGetAllFused(
   */
 object VariantGetFusionRule extends Rule[LogicalPlan] {
 
+  /** The one single-input fusion table: `consumer`, whose only child is
+    * a parse of `src` failing per `parseFail`, becomes its fused form
+    * over the raw `src`; None when it has none. `src` is by-name, so a
+    * caller builds it only on a hit.
+    */
+  private def fuseConsumer(
+      consumer: Expression, src: => Expression, parseFail: Boolean): Option[Expression] =
+    consumer match {
+      case VariantGet(_, path, t, castFail) if JsonPathExtract.fusableTarget(t) =>
+        Some(JsonPathExtract(src, path, t, parseFail, castFail))
+      case VariantGetAll(_, path, t) if JsonPathExtract.fusableTarget(t) =>
+        Some(JsonGetAllFused(src, path, t, parseFail))
+      case _: VariantKeys => Some(JsonKeys(src, parseFail))
+      case _: VariantSize => Some(JsonSize(src, parseFail))
+      case _: VariantTypeOf => Some(JsonTypeOf(src, parseFail))
+      case _: SchemaOfVariant => Some(JsonSchemaOf(src, parseFail))
+      // reaches generators too: Generate.generator is an expression field
+      case _: VariantExplode => Some(JsonExplodeKV(src, parseFail))
+      // reaches aggregate functions: AggregateExpression.aggregateFunction
+      // is an expression field of the Aggregate node
+      case s: SchemaOfVariantAgg =>
+        Some(SchemaOfJsonAgg(src, parseFail, s.renderOutput,
+          s.mutableAggBufferOffset, s.inputAggBufferOffset))
+      case _ => None
+    }
+
   /** Expression-local fusion: the parse is nested directly under the
     * consumer (CollapseProject already inlined it).
     */
-  private def fuseLocal(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case VariantGet(VariantFromJson(src, parseFail), path, t, castFail)
-        if JsonPathExtract.fusableTarget(t) =>
-      JsonPathExtract(src, path, t, parseFail, castFail)
-    case VariantGetAll(VariantFromJson(src, parseFail), path, t)
-        if JsonPathExtract.fusableTarget(t) =>
-      JsonGetAllFused(src, path, t, parseFail)
-    case VariantKeys(VariantFromJson(src, parseFail)) => JsonKeys(src, parseFail)
-    case VariantSize(VariantFromJson(src, parseFail)) => JsonSize(src, parseFail)
-    case VariantTypeOf(VariantFromJson(src, parseFail)) => JsonTypeOf(src, parseFail)
-    case SchemaOfVariant(VariantFromJson(src, parseFail)) => JsonSchemaOf(src, parseFail)
-    // reaches generators too: Generate.generator is an expression field
-    case VariantExplode(VariantFromJson(src, parseFail)) => JsonExplodeKV(src, parseFail)
-    // reaches aggregate functions: AggregateExpression.aggregateFunction
-    // is an expression field of the Aggregate node
-    case SchemaOfVariantAgg(VariantFromJson(src, parseFail), render, o1, o2) =>
-      SchemaOfJsonAgg(src, parseFail, render, o1, o2)
-    // merge patch over two parses: single token walk per document into
-    // the value tree, merge, ONE canonical encode (no intermediate
-    // variant encode+decode round trips)
-    case VariantMergePatch(VariantFromJson(t, failT), VariantFromJson(p, failP)) =>
-      JsonMergePatchFused(t, p, failT, failP)
-    // strip over a parse: one token walk into the tree, drop keys, one
-    // canonical encode
-    case VariantStripKeys(VariantFromJson(src, parseFail), keys) =>
-      JsonStripKeysFused(src, keys, parseFail)
-    // diff over two parses: mirror of the merge fusion
-    case VariantDiff(VariantFromJson(a, failA), VariantFromJson(b, failB)) =>
-      JsonDiffFused(a, b, failA, failB)
-  }
+  private def fuseLocal(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions(
+    Function.unlift { (e: Expression) =>
+      e.children match {
+        case Seq(VariantFromJson(src, parseFail)) => fuseConsumer(e, src, parseFail)
+        case _ => None
+      }
+    }.orElse {
+      // merge patch over two parses: single token walk per document into
+      // the value tree, merge, ONE canonical encode (no intermediate
+      // variant encode+decode round trips)
+      case VariantMergePatch(VariantFromJson(t, failT), VariantFromJson(p, failP)) =>
+        JsonMergePatchFused(t, p, failT, failP)
+      // strip over a parse: one token walk into the tree, drop keys, one
+      // canonical encode
+      case VariantStripKeys(VariantFromJson(src, parseFail), keys) =>
+        JsonStripKeysFused(src, keys, parseFail)
+      // diff over two parses: mirror of the merge fusion
+      case VariantDiff(VariantFromJson(a, failA), VariantFromJson(b, failB)) =>
+        JsonDiffFused(a, b, failA, failB)
+    })
 
   /** Fusion THROUGH a Project boundary. CollapseProject refuses to
     * inline a non-cheap `variant_from_json(src) AS v` referenced more
     * than once (e.g. `select(variant_keys(v), variant_size(v))`), so the
-    * local pattern never sees the parse. Here each fusable consumer of
-    * such an alias is rewritten to its fused form over a NEW alias of the
-    * raw `src` appended to the child project; the original variant alias
-    * survives for any non-fusable consumer and column pruning drops it
-    * when none remain. N fused consumers cost N streaming token walks —
-    * still strictly cheaper than one parse+encode plus N decode walks.
+    * local pattern never sees the parse. [[rule]] rewrites each fusable
+    * consumer of such an alias to its fused form over a NEW alias of the
+    * raw `src`, which [[child]] appends to the project; the original
+    * variant alias survives for any non-fusable consumer and column
+    * pruning drops it when none remain. N fused consumers cost N byte
+    * walks — still strictly cheaper than one parse+encode plus N decode
+    * walks.
     */
+  private final class AliasFusion(proj: Project) {
+    private val parses: Map[ExprId, (Alias, VariantFromJson)] =
+      proj.projectList.collect {
+        case a @ Alias(v: VariantFromJson, _) => a.exprId -> ((a, v))
+      }.toMap
+    private val rawAliases = scala.collection.mutable.LinkedHashMap.empty[ExprId, Alias]
+
+    def isEmpty: Boolean = parses.isEmpty
+    /** True once [[rule]] has fused a consumer. */
+    def changed: Boolean = rawAliases.nonEmpty
+    def child: Project = proj.copy(projectList = proj.projectList ++ rawAliases.values)
+
+    val rule: PartialFunction[Expression, Expression] = Function.unlift { (e: Expression) =>
+      e.children match {
+        case Seq(attr: AttributeReference) if parses.contains(attr.exprId) =>
+          val (a, v) = parses(attr.exprId)
+          fuseConsumer(e, rawAliases.getOrElseUpdate(attr.exprId,
+            Alias(v.child, a.name + "_json")()).toAttribute, v.failOnError)
+        case _ => None
+      }
+    }
+  }
+
   /** Node kinds whose expressions evaluate directly against child.output
     * in every position, so an appended child column is always visible.
     * (An Aggregate's result expressions see only grouping keys and
@@ -666,44 +572,9 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     // `agg(schema_of_variant_agg(v))` / `agg(sum(variant_get(v, ...)))`
     // over a Project-defined variant alias.
     case agg: Aggregate if agg.child.isInstanceOf[Project] =>
-      val proj = agg.child.asInstanceOf[Project]
-      val vfjAliases: Map[ExprId, (Alias, VariantFromJson)] =
-        proj.projectList.collect {
-          case a @ Alias(v: VariantFromJson, _) => a.exprId -> ((a, v))
-        }.toMap
-      if (vfjAliases.isEmpty) agg
+      val fusion = new AliasFusion(agg.child.asInstanceOf[Project])
+      if (fusion.isEmpty) agg
       else {
-        val rawAliases = scala.collection.mutable.LinkedHashMap.empty[ExprId, Alias]
-        def rawAttr(id: ExprId): Attribute = rawAliases.getOrElseUpdate(id, {
-          val (a, v) = vfjAliases(id)
-          Alias(v.child, a.name + "_json")()
-        }).toAttribute
-        var changed = false
-        val fuseInFunction: PartialFunction[Expression, Expression] = {
-          case s: SchemaOfVariantAgg if s.child.isInstanceOf[AttributeReference] &&
-              vfjAliases.contains(s.child.asInstanceOf[AttributeReference].exprId) =>
-            changed = true
-            val id = s.child.asInstanceOf[AttributeReference].exprId
-            SchemaOfJsonAgg(rawAttr(id), vfjAliases(id)._2.failOnError,
-              s.renderOutput, s.mutableAggBufferOffset, s.inputAggBufferOffset)
-          case VariantGet(attr: AttributeReference, path, t, castFail)
-              if vfjAliases.contains(attr.exprId) && JsonPathExtract.fusableTarget(t) =>
-            changed = true
-            JsonPathExtract(rawAttr(attr.exprId), path, t,
-              vfjAliases(attr.exprId)._2.failOnError, castFail)
-          case VariantKeys(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonKeys(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case VariantSize(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonSize(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case VariantTypeOf(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonTypeOf(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case SchemaOfVariant(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonSchemaOf(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-        }
         // Rewrite (a) inside aggregate functions, and (b) GROUPING
         // expressions together with their result-side occurrences — in
         // LOCKSTEP. Result expressions evaluate against grouping keys
@@ -719,7 +590,7 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
         // aggregate list.
         val groupRewrites: Seq[(Expression, Expression)] =
           agg.groupingExpressions.flatMap { g =>
-            val r = g.transform(fuseInFunction)
+            val r = g.transform(fusion.rule)
             if (r eq g) None else Some(g -> r)
           }
         val newGrouping = agg.groupingExpressions.map { g =>
@@ -728,7 +599,7 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
         val newAggList = agg.aggregateExpressions.map { ne =>
           ne.transform {
             case ae: AggregateExpression =>
-              val newFn = ae.aggregateFunction.transform(fuseInFunction)
+              val newFn = ae.aggregateFunction.transform(fusion.rule)
                 .asInstanceOf[AggregateFunction]
               if (newFn eq ae.aggregateFunction) ae
               else ae.copy(aggregateFunction = newFn)
@@ -736,58 +607,21 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
               groupRewrites.find(_._1.semanticEquals(e)).get._2
           }.asInstanceOf[NamedExpression]
         }
-        if (!changed) agg
+        if (!fusion.changed) agg
         else agg.copy(
           groupingExpressions = newGrouping,
           aggregateExpressions = newAggList,
-          child = proj.copy(projectList = proj.projectList ++ rawAliases.values))
+          child = fusion.child)
       }
 
     case node: UnaryNode
         if node.child.isInstanceOf[Project] && expressionsSeeChildOutput(node) =>
-      val proj = node.child.asInstanceOf[Project]
-      val vfjAliases: Map[ExprId, (Alias, VariantFromJson)] =
-        proj.projectList.collect {
-          case a @ Alias(v: VariantFromJson, _) => a.exprId -> ((a, v))
-        }.toMap
-      if (vfjAliases.isEmpty) node
+      val fusion = new AliasFusion(node.child.asInstanceOf[Project])
+      if (fusion.isEmpty) node
       else {
-        val rawAliases = scala.collection.mutable.LinkedHashMap.empty[ExprId, Alias]
-        def rawAttr(id: ExprId): Attribute = rawAliases.getOrElseUpdate(id, {
-          val (a, v) = vfjAliases(id)
-          Alias(v.child, a.name + "_json")()
-        }).toAttribute
-        var changed = false
-        val newNode = node.transformExpressions {
-          case VariantGet(attr: AttributeReference, path, t, castFail)
-              if vfjAliases.contains(attr.exprId) && JsonPathExtract.fusableTarget(t) =>
-            changed = true
-            JsonPathExtract(rawAttr(attr.exprId), path, t,
-              vfjAliases(attr.exprId)._2.failOnError, castFail)
-          case VariantGetAll(attr: AttributeReference, path, t)
-              if vfjAliases.contains(attr.exprId) && JsonPathExtract.fusableTarget(t) =>
-            changed = true
-            JsonGetAllFused(rawAttr(attr.exprId), path, t,
-              vfjAliases(attr.exprId)._2.failOnError)
-          case VariantKeys(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonKeys(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case VariantSize(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonSize(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case VariantTypeOf(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonTypeOf(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case SchemaOfVariant(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonSchemaOf(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-          case VariantExplode(attr: AttributeReference) if vfjAliases.contains(attr.exprId) =>
-            changed = true
-            JsonExplodeKV(rawAttr(attr.exprId), vfjAliases(attr.exprId)._2.failOnError)
-        }
-        if (!changed) node
-        else newNode.withNewChildren(Seq(
-          proj.copy(projectList = proj.projectList ++ rawAliases.values)))
+        val newNode = node.transformExpressions(fusion.rule)
+        if (!fusion.changed) node
+        else newNode.withNewChildren(Seq(fusion.child))
       }
   }
 

@@ -1,15 +1,16 @@
 package graft.variant
 
 /** Shared byte-level JSON lexing core for the fast paths in
-  * [[VariantJsonCodec]] (json→variant encode) and the fused extraction
-  * expressions (`JsonPathExtract`). Everything here follows one
-  * contract: accept a strict SUBSET of what Jackson's default feature
-  * set accepts, and throw the stackless [[FastJsonLex.Miss]] on
-  * ANYTHING doubtful — the caller then re-runs the row through its
-  * Jackson path, which owns all error semantics. In particular the lex
-  * must never accept what Jackson rejects (it validates UTF-8, escape
-  * letters, number grammar, and raw control chars even when merely
-  * SKIPPING a value).
+  * [[VariantJsonCodec]] (json→variant encode) and the fused expressions
+  * over `variant_from_json` (`JsonPathExtract`, `JsonFused`). Everything
+  * here follows one contract: accept a strict SUBSET of what Jackson's
+  * default feature set accepts, and throw the stackless
+  * [[FastJsonLex.Miss]] on ANYTHING doubtful — the caller then re-runs
+  * the row through its fallback (the codec's Jackson walk; for a fused
+  * expression, the unfused pipeline it replaced), which owns all error
+  * semantics. In particular the lex must never accept what Jackson
+  * rejects (it validates UTF-8, escape letters, number grammar, and raw
+  * control chars even when merely SKIPPING a value).
   */
 private[graft] object FastJsonLex {
 
@@ -19,6 +20,8 @@ private[graft] object FastJsonLex {
   final class Cursor(val b: Array[Byte], var i: Int, val end: Int) {
     /** Scratch slot for scanNumber's digit-start (avoids a result box). */
     var numStart: Int = 0
+    /** Scratch slot for [[integer]]'s long result. */
+    var longValue: Long = 0L
 
     def skipWs(): Unit = {
       while (i < end && {
@@ -222,6 +225,29 @@ private[graft] object FastJsonLex {
     isInt
   }
 
+  /** Jackson's rule for the integer literal [[scanNumber]] just consumed
+    * (`start` = its first byte, sign included): a value that fits 63 bits
+    * lands in `c.longValue` and the result is null; one that fits 127 bits
+    * is returned (a scale-0 decimal in the variant); a wider one misses,
+    * so the fallback raises the unfused pipeline's i128 error. Literals
+    * of at most 18 digits always fit a long and never allocate. */
+  def integer(c: Cursor, start: Int): java.math.BigInteger = {
+    val b = c.b
+    if (c.i - c.numStart <= 18) {
+      var v = 0L
+      var k = c.numStart
+      while (k < c.i) { v = v * 10 + (b(k) - '0'); k += 1 }
+      c.longValue = if (start < c.numStart) -v else v
+      null
+    } else {
+      val bi = new java.math.BigInteger(
+        new String(b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII))
+      if (bi.bitLength() <= 63) { c.longValue = bi.longValue(); null }
+      else if (bi.bitLength() < 128) bi
+      else throw Miss
+    }
+  }
+
   def literal(c: Cursor, lit: String): Unit = {
     if (c.i + lit.length > c.end) throw Miss
     var k = 0
@@ -293,10 +319,10 @@ private[graft] object FastJsonLex {
           }
         }
       case x if x == '-' || (x >= '0' && x <= '9') =>
-        // even SKIPPED integers carry the unfused pipeline's i128 bound
-        // (JsonFused.checkIntFits): ≤38 digits always fit i128; anything
-        // longer misses so Jackson applies the bound and its error
-        if (scanNumber(c) && c.i - c.numStart > 38) throw Miss
+        // even SKIPPED integers carry the unfused pipeline's i128 bound:
+        // ≤38 digits always fit i128; longer ones take [[integer]]'s rule
+        val start = c.i
+        if (scanNumber(c) && c.i - c.numStart > 38) integer(c, start)
       case _ => throw Miss
     }
   }

@@ -341,31 +341,19 @@ object VariantJsonCodec {
   private type FastCursor = FastJsonLex.Cursor
 
   /** Emit one JSON number through the writer, with Jackson's integer
-    * rule: fits a long → int64, else Decimal16 scale 0; integers ≥ 2^127
-    * miss so the Jackson walk raises its i128 error. */
+    * rule ([[FastJsonLex.integer]]): fits a long → int64, else Decimal16
+    * scale 0; integers ≥ 2^127 miss so the Jackson walk raises its i128
+    * error. */
   private def fastNumber(c: FastCursor, buf: ByteBuf): Unit = {
-    val b = c.b
     val start = c.i
-    val neg = c.peek == '-'
-    val isInt = FastJsonLex.scanNumber(c)
-    if (isInt) {
-      val dStart = c.numStart
-      if (c.i - dStart > 18) {
-        val bi = new java.math.BigInteger(
-          new String(b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII))
-        if (bi.bitLength() <= 63) VariantWriter.writeLong(buf, bi.longValue())
-        else if (bi.bitLength() < 128) VariantWriter.writeDecimal(buf, bi, 0)
-        else throw FastMiss
-      } else {
-        var v = 0L
-        var k = dStart
-        while (k < c.i) { v = v * 10 + (b(k) - '0'); k += 1 }
-        VariantWriter.writeLong(buf, if (neg) -v else v)
-      }
+    if (FastJsonLex.scanNumber(c)) {
+      val big = FastJsonLex.integer(c, start)
+      if (big == null) VariantWriter.writeLong(buf, c.longValue)
+      else VariantWriter.writeDecimal(buf, big, 0)
     } else {
       // IEEE-correct, identical to Jackson's double conversion
       VariantWriter.writeDouble(buf, java.lang.Double.parseDouble(
-        new String(b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII)))
+        new String(c.b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII)))
     }
   }
 

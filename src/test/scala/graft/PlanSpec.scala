@@ -64,6 +64,11 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.optimizedPlan.toString
     assert(fusedDiff.contains("variant_diff_fused"), fusedDiff)
     assert(!fusedDiff.contains("variant_from_json"), fusedDiff)
+    // merge patch over two parses fuses to one tree walk per document
+    val fusedMerge = Queries.queryMap("v_merge_patch")(spark, TestSpark.SF)
+      .queryExecution.optimizedPlan.toString
+    assert(fusedMerge.contains("variant_merge_patch_fused"), fusedMerge)
+    assert(!fusedMerge.contains("variant_from_json"), fusedMerge)
     // variant-target extraction keeps the full pipeline (the result IS
     // the encoded variant)
     val unfused = Tables.events(spark, TestSpark.SF)
@@ -98,6 +103,22 @@ class PlanSpec extends AnyFunSuite {
     assert(gPlan.contains("json_schema_of_fused"), gPlan)
     assert(!gPlan.contains("variant_from_json"), gPlan)
     assert(fusedGrouping.collect().nonEmpty)
+  }
+
+  test("consumers of a shared parse alias fuse inside aggregate functions, wildcard gets included") {
+    import graft.functions.{VariantFunctions => vf}
+    // v feeds two consumers, so CollapseProject keeps the parse in its
+    // own Project and the Aggregate-through-Project fusion must fire
+    val df = Tables.events(spark, TestSpark.SF)
+      .select(col("event_type"), vf.variant_from_json(col("props")).as("v"))
+      .groupBy(col("event_type"))
+      .agg(sum(size(vf.variant_get_all(col("v"), "$.k[*]",
+          org.apache.spark.sql.types.LongType))).as("n"),
+        max(vf.variant_size(col("v"))).as("w"))
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(plan.contains("json_get_all_fused") && plan.contains("json_size_fused"), plan)
+    assert(!plan.contains("variant_from_json"), plan)
+    assert(df.collect().nonEmpty)
   }
 
   test("auto-shred inference reads a bounded, column-pruned sample") {

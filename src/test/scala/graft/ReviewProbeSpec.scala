@@ -29,7 +29,8 @@ class ReviewProbeSpec extends AnyFunSuite {
     // Round-2 review probe, now a pinned regression: the fused
     // single-pass forms must reject exactly the documents the unfused
     // whole-document parse rejects — trailing roots, trailing garbage,
-    // truncated containers (JsonFused.finishDocument).
+    // truncated containers (the byte walk declines them and the unfused
+    // pipeline raises the error, JsonFused.evalUnfused).
     val bad = Seq("1 2", """{"a":1} x""", "[1,2,", """{"a":1""", "")
     bad.foreach { doc =>
       val docs = Seq(doc).toDF("j")

@@ -9,10 +9,11 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property pin: for arbitrary JSON trees, the FUSED single-pass
-  * extraction ([[JsonPathExtract]], [[JsonKeys]], [[JsonSize]]) equals
-  * the unfused parse → encode → decode pipeline for every target the
-  * fusion rule admits. Direct interpreted eval — no SparkSession — so
-  * hundreds of samples run in milliseconds.
+  * forms ([[JsonPathExtract]], [[JsonKeys]], [[JsonSize]],
+  * [[JsonTypeOf]], [[JsonSchemaOf]], [[SchemaOfJsonAgg]]) equal the
+  * unfused parse → encode → decode pipeline for every target the fusion
+  * rule admits. Direct interpreted eval — no SparkSession — so hundreds
+  * of samples run in milliseconds.
   */
 class FusedPropertySpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
@@ -76,28 +77,57 @@ class FusedPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Documents at the edges of the byte walks: an escaped key and a
+    * 2^127 integer inside a skipped sibling (declined, so the unfused
+    * pipeline evaluates them), an object under a string-target path
+    * (printed from an encoded slice), and nesting one level past the
+    * 1000 the parser accepts (declined). */
+  private val missCorpus = Seq(
+    "{\"\\" + "u0061\": 9}",
+    """{"a": 1, "z": [170141183460469231731687303715884105728]}""",
+    """{"a": {"k": [1, {"b": 2}]}}""",
+    """{"a": 1, "b": """ + "[" * 1000 + "1" + "]" * 1000 + "}")
+
   test("fused schema inference equals unfused lattice over random trees") {
-    import graft.variant.{MetadataView, SchemaInfer, VariantView}
+    import graft.variant.{FastJsonLex, MetadataView, SchemaInfer, VariantView}
     import org.apache.spark.sql.catalyst.InternalRow
-    forAllSamples(genNode(3)) { node =>
-      val json = mapper.writeValueAsString(node)
-      val bytes = json.getBytes("UTF-8")
-      val enc = VariantFromJson(Literal(json)).eval(null)
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      val tok = p.nextToken()
-      if (enc == null) {
-        // top-level JSON null is SQL null in both pipelines
-        assert(tok == com.fasterxml.jackson.core.JsonToken.VALUE_NULL)
-      } else {
-        val row = enc.asInstanceOf[InternalRow]
-        val u = SchemaInfer.infer(
-          new MetadataView(row.getBinary(0), 0), new VariantView(row.getBinary(1), 0))
-        val f = JsonFused.inferSchema(p)
-        assert(SchemaInfer.serialize(u) == SchemaInfer.serialize(f),
-          s"schema json=$json unfused=${u.render} fused=${f.render}")
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.unsafe.types.UTF8String
+    val src = BoundReference(0, StringType, nullable = true)
+    var misses = 0
+    def check(json: String): Unit =
+      try {
+        val f = JsonFused.fastSchemaOfDoc(json.getBytes("UTF-8"))
+        val enc = VariantFromJson(Literal(json)).eval(null)
+        if (enc == null) {
+          // top-level JSON null is SQL null in both pipelines
+          assert(f == null, s"schema json=$json fused=$f")
+        } else {
+          val row = enc.asInstanceOf[InternalRow]
+          val u = SchemaInfer.infer(
+            new MetadataView(row.getBinary(0), 0), new VariantView(row.getBinary(1), 0))
+          assert(SchemaInfer.serialize(u) == SchemaInfer.serialize(f),
+            s"schema json=$json unfused=${u.render} fused=${f.render}")
+        }
+      } catch {
+        case FastJsonLex.Miss =>
+          // the walk declined: the fused aggregate must still equal the
+          // unfused one on this row
+          misses += 1
+          Seq(true, false).foreach { strict =>
+            val unfusedAgg = SchemaOfVariantAgg(VariantFromJson(src, strict))
+            val fusedAgg = SchemaOfJsonAgg(src, strict)
+            val row = InternalRow(UTF8String.fromString(json))
+            def run(f: => Any): Any = try f catch { case e: Exception => e.getClass }
+            val u = run(unfusedAgg.eval(unfusedAgg.update(unfusedAgg.createAggregationBuffer(), row)))
+            val f = run(fusedAgg.eval(fusedAgg.update(fusedAgg.createAggregationBuffer(), row)))
+            assert(u == f, s"agg strict=$strict json=$json unfused=$u fused=$f")
+          }
       }
-      p.close()
-    }
+    forAllSamples(genNode(3))(node => check(mapper.writeValueAsString(node)))
+    missCorpus.foreach(check)
+    // the escaped key, the 2^127 sibling and the deep nesting miss
+    assert(misses >= 3, s"only $misses docs reached the unfused path")
   }
 
   test("fused scalar schema_of equals unfused over random trees and malformed docs") {
@@ -222,6 +252,45 @@ class FusedPropertySpec extends AnyFunSuite {
       JsonPathExtract(Literal("""{"x": "abc"}"""), "$.x", LongType,
         parseFailOnError = true, castFailOnError = true).eval(null))
     assert(!castOnly.isInstanceOf[VariantJsonCodec.JsonParseException], castOnly.toString)
+
+    // the miss corpus (plus the deepest empty nesting the parser accepts):
+    // every fused form returns what the unfused expression returns, or
+    // throws the same exception class, in both parse modes
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    // a value, or the class of the exception evaluation threw
+    def outcome(f: => Any): Any =
+      try f match {
+        case a: ArrayData => a.toSeq[Any](StringType)
+        case v => v
+      } catch { case e: Exception => e.getClass }
+    val src = BoundReference(0, StringType, nullable = true)
+    def agg(a: org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[
+        graft.variant.SchemaInfer.SType], json: String): Any =
+      outcome(a.eval(a.update(a.createAggregationBuffer(), InternalRow(UTF8String.fromString(json)))))
+    (missCorpus ++ Seq("[" * 1001 + "]" * 1001)).foreach { json =>
+      Seq(true, false).foreach { strict =>
+        val s = Literal(json)
+        val parse = VariantFromJson(s, strict)
+        val pairs: Seq[(String, Expression, Expression)] = Seq(
+          ("keys", JsonKeys(s, strict), VariantKeys(parse)),
+          ("size", JsonSize(s, strict), VariantSize(parse)),
+          ("typeof", JsonTypeOf(s, strict), VariantTypeOf(parse)),
+          ("schema_of", JsonSchemaOf(s, strict), SchemaOfVariant(parse)),
+          ("get $.a", JsonPathExtract(s, "$.a", StringType, strict, castFailOnError = true),
+            VariantGet(parse, "$.a", StringType, failOnError = true)))
+        pairs.foreach { case (name, fused, unfused) =>
+          val f = outcome(fused.eval(null))
+          val u = outcome(unfused.eval(null))
+          assert(f == u, s"$name strict=$strict json=${json.take(60)} fused=$f unfused=$u")
+        }
+        val fa = agg(SchemaOfJsonAgg(src, strict), json)
+        val ua = agg(SchemaOfVariantAgg(VariantFromJson(src, strict)), json)
+        assert(fa == ua, s"schema agg strict=$strict json=${json.take(60)} fused=$fa unfused=$ua")
+      }
+    }
   }
 
   test("fast-nav edges: misses, sibling validation, escaped keys via fallback") {
@@ -239,16 +308,16 @@ class FusedPropertySpec extends AnyFunSuite {
     assert(both("""{"a": 5}""", "$.a.b", LongType) == null)        // key step on scalar
     assert(both("""{"z": [1, {"q": 7}, 3], "a": 2}""", "$.z[1].q", LongType) == 7L)
     // escaped key in the DOC ({"a": 9}) still matches path $.a via
-    // the Jackson fallback (fast path declines escaped keys)
+    // the unfused fallback (fast path declines escaped keys)
     assert(both("{\"\\" + "u0061\": 9}", "$.a", LongType) == 9L)
     // sibling AFTER the found value is still validated (parse beats cast)
     intercept[Exception](
       JsonPathExtract(Literal("""{"a": 1, "b": }"""), "$.a", LongType,
         parseFailOnError = true, castFailOnError = true).eval(null))
-    // duplicate keys are the documented UB divergence class (fused token
-    // walk takes the FIRST match; the unfused encoding's walk resolves
-    // to the other copy) — pin only that the FAST nav matches the fused
-    // TOKEN nav, not unfused parity
+    // duplicate keys are the documented UB divergence class (the fused
+    // byte walk takes the FIRST match; the unfused encoding's walk
+    // resolves to the other copy) — pin only the byte walk's choice, not
+    // unfused parity
     assert(fused("""{"a": 1, "a": 2}""", "$.a", LongType) == 1L)
     // whitespace soup navigation
     assert(both("  {  \"a\" : [ 10 ,  {\"b\":\t20} ] } ", "$.a[1].b", LongType) == 20L)
