@@ -15,15 +15,15 @@ import org.apache.spark.sql.types._
   * the subtree (builder-prompt criterion: keep hot paths inside
   * WholeStageCodegen spans).
   *
-  * Fully inlining the extraction token walk into generated Java (rather
+  * Fully inlining the extraction byte walk into generated Java (rather
   * than bridging to `nullSafeEval`) was evaluated and rejected: the
   * per-row costs this bridge leaves behind are one virtual call and one
-  * boxed return (smallints hit the JVM's Long cache), nanoseconds
-  * against the microsecond-scale Jackson tokenization that an inline
-  * version would still perform via the same library calls. Measured on
-  * the PerfProbe string yardstick (sf0.1, warm): bridge 0.124 s vs
+  * boxed return (smallints hit the JVM's Long cache), small against the
+  * per-document walk over the JSON bytes that an inline version would
+  * still perform through the same `FastJsonLex` calls. Measured on the
+  * PerfProbe string yardstick (sf0.1, warm): bridge 0.124 s vs
   * Spark-builtin variant 0.455 s and get_json_object 0.502 s — the
-  * remaining headroom is inside the tokenizer, not the glue.
+  * remaining headroom is inside the JSON walk, not the glue.
   */
 object GraftCodegen {
   def unboxAssign(dt: DataType, res: String): String = dt match {

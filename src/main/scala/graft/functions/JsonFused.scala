@@ -1,24 +1,23 @@
 package graft.functions
 
-import graft.variant.{FastJsonLex, SchemaInfer, VariantJsonCodec, VariantMetadata}
-import com.fasterxml.jackson.core.JsonToken
+import graft.variant.{FastJsonLex, SchemaInfer, VariantMetadata}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused forms of `variant_keys` / `variant_size` / `variant_typeof` /
-  * `schema_of_variant[_agg]` / `variant_explode` over a raw JSON column:
-  * one byte walk instead of parse → metadata build → variant encode →
-  * decode. Installed by [[VariantGetFusionRule]] when the child is
+  * `schema_of_variant[_agg]` over a raw JSON column: one byte walk
+  * instead of parse → metadata build → variant encode → decode.
+  * Installed by [[VariantGetFusionRule]] when the child is
   * `variant_from_json`; the unfused expressions remain the semantic
   * reference. Each byte walk reproduces their output exactly
   * (dictionary-sorted key order included — the parity property tests in
-  * FusedPropertySpec pin this), and a row it declines is evaluated by
-  * the unfused pipeline itself ([[JsonFused.evalUnfused]]).
+  * FusedPropertySpec pin this). Byte walk, else the codec's parse: a row
+  * the walk declines is evaluated by the unfused pipeline itself
+  * ([[JsonFused.evalUnfused]]), so the codec owns every error.
   */
 private[functions] object JsonFused {
   /** Stable sort of strings by UTF-8 byte order — the metadata
@@ -50,56 +49,6 @@ private[functions] object JsonFused {
   def evalUnfused(consumer: UnaryExpression with GraftUnaryCodegen, bytes: Array[Byte]): Any = {
     val row = consumer.child.asInstanceOf[VariantFromJson].evalChildValue(bytes)
     if (row == null) null else consumer.evalChildValue(row)
-  }
-
-  /** Consume the remainder of the document from wherever the caller's
-    * token walk stopped, verifying (a) the rest tokenizes (Jackson throws
-    * on malformed bytes) and (b) exactly one root value exists — the same
-    * two checks `VariantJsonCodec.fromJsonBytes` applies. [[JsonExplodeKV]]
-    * must call this before returning: the unfused pipeline parses the
-    * WHOLE document, so `variant_explode('1 2')` is a parse error there
-    * and must be one here too.
-    */
-  def finishDocument(p: com.fasterxml.jackson.core.JsonParser): Unit = {
-    // open-container count at the current position
-    var open = 0
-    var ctx = p.getParsingContext
-    while (ctx != null && !ctx.inRoot()) { open += 1; ctx = ctx.getParent }
-    var t = p.nextToken()
-    while (t != null) {
-      t match {
-        case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
-          if (open == 0)
-            throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: trailing tokens", null)
-          open += 1
-        case JsonToken.END_OBJECT | JsonToken.END_ARRAY =>
-          open -= 1
-        case JsonToken.VALUE_NUMBER_INT =>
-          if (open == 0)
-            throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: trailing tokens", null)
-          checkIntFits(p)
-        case _ =>
-          if (open == 0)
-            throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: trailing tokens", null)
-      }
-      t = p.nextToken()
-    }
-  }
-
-  /** The unfused pipeline rejects a document containing an integer past
-    * i128 ANYWHERE (encoding fails on it) — so [[finishDocument]] applies
-    * the same bound to the values it drains. Cheap pre-filter: ≤18
-    * digits always fit i64, so the real numeric parse only runs on long
-    * literals.
-    */
-  def checkIntFits(p: com.fasterxml.jackson.core.JsonParser): Unit = {
-    if (p.getTextLength > 18 &&
-        p.getNumberType == com.fasterxml.jackson.core.JsonParser.NumberType.BIG_INTEGER) {
-      val bi = p.getBigIntegerValue
-      if (bi.bitLength() >= 128)
-        throw new VariantJsonCodec.JsonParseException(
-          s"Could not fit value $bi into an i128", null)
-    }
   }
 
   /** Schema-lattice inference straight off the bytes — the fused
@@ -497,96 +446,6 @@ case class JsonSize(child: Expression, parseFailOnError: Boolean)
     out
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `variant_explode(variant_from_json(s))` fused: one row per root
-  * object field (pos, key, value) in dictionary-sorted key order, or per
-  * array element (pos, NULL, value). Each emitted value is a
-  * SELF-CONTAINED mini-variant (its own minimal metadata) rather than a
-  * slice sharing the row's dictionary — content-identical under every
-  * variant operation, and smaller on the wire for wide rows.
-  *
-  * Slice-sharing emission (one shared dictionary per source row) was
-  * considered and measured unnecessary: v_explode_kv runs 0.4 s at
-  * sf0.1 (round-3 probe), well under its 1.5 s budget, and the
-  * self-contained form keeps exploded values independently shippable
-  * through shuffles and sinks without carrying the parent row's
-  * dictionary.
-  */
-case class JsonExplodeKV(child: Expression, parseFailOnError: Boolean)
-    extends UnaryExpression with Generator with CodegenFallback {
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("pos", IntegerType, nullable = false),
-    StructField("key", StringType, nullable = true),
-    StructField("value", VariantSchema.TYPE, nullable = true)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"json_explode expects string/binary, got: ${other.simpleString}")
-  }
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val in = child.eval(input)
-    if (in == null) return Nil
-    val bytes = JsonFused.toBytes(in)
-    try {
-      val p = JsonPathExtract.factory.createParser(bytes, 0, bytes.length)
-      try {
-        val tok = p.nextToken()
-        if (tok == null)
-          throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-        tok match {
-          case JsonToken.START_OBJECT =>
-            val keys = scala.collection.mutable.ArrayBuffer.empty[String]
-            val vals = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
-            var t = p.nextToken()
-            while (t == JsonToken.FIELD_NAME) {
-              keys += p.currentName()
-              p.nextToken()
-              vals += VariantJsonCodec.valueFromParser(p)
-              t = p.nextToken()
-            }
-            JsonFused.finishDocument(p)
-            // unfused explode emits fields in stored (= sorted) order
-            val order = JsonFused.sortedOrder(keys.toArray)
-            (0 until keys.length).map { i =>
-              val src = order(i).intValue()
-              new GenericInternalRow(Array[Any](
-                i,
-                UTF8String.fromString(keys(src)),
-                new GenericInternalRow(Array[Any](vals(src)._1, vals(src)._2))))
-            }
-          case JsonToken.START_ARRAY =>
-            val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-            var t = p.nextToken()
-            var i = 0
-            while (t != JsonToken.END_ARRAY) {
-              val pair = VariantJsonCodec.valueFromParser(p)
-              rows += new GenericInternalRow(Array[Any](
-                i, null, new GenericInternalRow(Array[Any](pair._1, pair._2))))
-              i += 1
-              t = p.nextToken()
-            }
-            JsonFused.finishDocument(p)
-            rows
-          case _ => JsonFused.finishDocument(p); Nil
-        }
-      } finally p.close()
-    } catch {
-      case e: VariantJsonCodec.JsonParseException =>
-        if (parseFailOnError) throw e else Nil
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        if (parseFailOnError)
-          throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-        else Nil
-    }
-  }
-
-  override def prettyName: String = "json_explode_fused"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

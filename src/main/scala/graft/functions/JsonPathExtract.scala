@@ -339,8 +339,6 @@ case class JsonPathExtract(
 }
 
 object JsonPathExtract {
-  private[functions] val factory = new com.fasterxml.jackson.core.JsonFactory()
-
   /** Sentinel distinguishing "memoized null result" from "no memo". */
   private val NULL_RESULT = new Object
 
@@ -364,101 +362,6 @@ object JsonPathExtract {
   }
 }
 
-/** Fused `variant_get_all(variant_from_json(s), path, scalarType)`:
-  * one streaming token walk into the decoded value tree (the
-  * JsonMergePatchFused path — no intermediate variant encode+decode),
-  * then the wildcard walk runs over the tree and each matched LEAF is
-  * cast through the SAME `VariantExtract.cast` the unfused expression
-  * uses (the leaf re-encodes into a tiny scalar buffer first, so cast
-  * semantics cannot drift by construction). Scalar targets only — a
-  * variant-typed result would re-encode subtrees canonically and
-  * differ byte-wise from the unfused raw-slice semantics. Duplicate
-  * keys inside one document collapse last-value-first-position here
-  * (docToVNode's LinkedHashMap) where the unfused walk sees the
-  * canonical encoding's kept-both fields — the same documented
-  * divergence class JsonMergePatchFused accepts.
-  */
-case class JsonGetAllFused(
-    child: Expression,
-    path: String,
-    elemType: DataType,
-    parseFailOnError: Boolean)
-    extends UnaryExpression with GraftUnaryCodegen {
-
-  import VariantMergePatch._
-
-  @transient private lazy val steps: Array[PathStep] = VariantPath.parse(path)
-
-  override def dataType: DataType = ArrayType(elemType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_get_all_fused"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"json_get_all_fused expects string/binary, got: ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = JsonFused.toBytes(input)
-    val root =
-      try docToVNode(bytes)
-      catch {
-        case e: VariantJsonCodec.JsonParseException =>
-          if (parseFailOnError) throw e else return null
-      }
-    if (root == null) return null // top-level JSON null == SQL NULL parse
-    val hits = scala.collection.mutable.ArrayBuffer.empty[VNode]
-    def go(n: VNode, i: Int): Unit = {
-      if (i == steps.length) { hits += n; return }
-      steps(i) match {
-        case k: PathStep.Key => n match {
-          case VObj(f) => f.get(k.name).foreach(go(_, i + 1))
-          case _ => ()
-        }
-        case PathStep.Index(idx) => n match {
-          case VArr(items) if idx >= 0 && idx < items.length => go(items(idx), i + 1)
-          case _ => ()
-        }
-        case PathStep.Wildcard => n match {
-          case VArr(items) => items.foreach(go(_, i + 1))
-          case _ => ()
-        }
-        case PathStep.KeyWildcard => n match {
-          case VObj(f) =>
-            // the unfused walk iterates the ENCODED object, whose field
-            // order is canonical sorted-key (UTF-8 byte order, the
-            // metadata dictionary's collation) — sort the parse-order
-            // tree the same way so fused emission order matches
-            f.toSeq
-              .sortWith { case ((a, _), (b, _)) =>
-                java.util.Arrays.compareUnsigned(
-                  a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                  b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-              }
-              .foreach { case (_, v) => go(v, i + 1) }
-          case _ => ()
-        }
-      }
-    }
-    go(root, 0)
-    val out = new Array[Any](hits.length)
-    var i = 0
-    while (i < hits.length) {
-      val row = encode(hits(i)) // tiny per-leaf buffer, not the document
-      out(i) = VariantExtract.cast(
-        new graft.variant.MetadataView(row.getBinary(0), 0),
-        new graft.variant.VariantView(row.getBinary(1), 0),
-        elemType, failOnError = false)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Optimizer rule: collapse `VariantGet(VariantFromJson(s), path, t)`
   * into the single-pass [[JsonPathExtract]] when `t` is a scalar target.
   * Runs in the operator-optimization batch via
@@ -478,14 +381,10 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     consumer match {
       case VariantGet(_, path, t, castFail) if JsonPathExtract.fusableTarget(t) =>
         Some(JsonPathExtract(src, path, t, parseFail, castFail))
-      case VariantGetAll(_, path, t) if JsonPathExtract.fusableTarget(t) =>
-        Some(JsonGetAllFused(src, path, t, parseFail))
       case _: VariantKeys => Some(JsonKeys(src, parseFail))
       case _: VariantSize => Some(JsonSize(src, parseFail))
       case _: VariantTypeOf => Some(JsonTypeOf(src, parseFail))
       case _: SchemaOfVariant => Some(JsonSchemaOf(src, parseFail))
-      // reaches generators too: Generate.generator is an expression field
-      case _: VariantExplode => Some(JsonExplodeKV(src, parseFail))
       // reaches aggregate functions: AggregateExpression.aggregateFunction
       // is an expression field of the Aggregate node
       case s: SchemaOfVariantAgg =>
@@ -504,12 +403,12 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
         case _ => None
       }
     }.orElse {
-      // merge patch over two parses: single token walk per document into
-      // the value tree, merge, ONE canonical encode (no intermediate
-      // variant encode+decode round trips)
+      // merge patch over two parses: each document straight into the
+      // value tree (docToVNode), merge, ONE canonical encode (no
+      // intermediate variant encode+decode round trips)
       case VariantMergePatch(VariantFromJson(t, failT), VariantFromJson(p, failP)) =>
         JsonMergePatchFused(t, p, failT, failP)
-      // strip over a parse: one token walk into the tree, drop keys, one
+      // strip over a parse: the document into the tree, drop keys, one
       // canonical encode
       case VariantStripKeys(VariantFromJson(src, parseFail), keys) =>
         JsonStripKeysFused(src, keys, parseFail)
@@ -526,8 +425,10 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     * raw `src`, which [[child]] appends to the project; the original
     * variant alias survives for any non-fusable consumer and column
     * pruning drops it when none remain. N fused consumers cost N byte
-    * walks — still strictly cheaper than one parse+encode plus N decode
-    * walks.
+    * walks, each falling back to the codec's parse only on a row it
+    * declines — cheaper than one parse+encode plus N decode walks.
+    * Consumers with no fused form (`variant_get_all`, `variant_explode`)
+    * keep reading the one shared parse.
     */
   private final class AliasFusion(proj: Project) {
     private val parses: Map[ExprId, (Alias, VariantFromJson)] =

@@ -171,10 +171,11 @@ case class VariantDiff(left: Expression, right: Expression)
 }
 
 /** Fused `variant_merge_patch(variant_from_json(t), variant_from_json(p))`
-  * — both documents parse straight into the decoded value tree (one
-  * streaming Jackson walk each) and the merged tree encodes ONCE, so the
-  * unfused chain's per-row intermediate work (2 variant encodes + 2
-  * decodes) disappears. Installed by [[VariantGetFusionRule]]; the
+  * — both documents go straight into the decoded value tree
+  * ([[VariantMergePatch.docToVNode]]: byte walk, else the codec's parse)
+  * and the merged tree encodes ONCE, so the unfused chain's per-row
+  * intermediate work (2 variant encodes + 2 decodes) disappears on every
+  * row the byte walk takes. Installed by [[VariantGetFusionRule]]; the
   * unfused pair stays the semantic reference and the fusion parity is
   * pinned by VariantMergeFuzzSpec.
   *
@@ -183,11 +184,13 @@ case class VariantDiff(left: Expression, right: Expression)
   *    rule), and a NULL on either side makes the merge NULL;
   *  - parse failure throws (variant_from_json) or nulls the result
   *    (try_variant_from_json), each side per its own flag, left first —
-  *    the unfused children evaluate left-to-right;
-  *  - trailing tokens and >i128 integers are rejected like fromJsonBytes;
+  *    the unfused children evaluate left-to-right, and the right one not
+  *    at all after a SQL-null left;
+  *  - every parse error is the codec's own (the byte walk declines any
+  *    doubtful row and the codec re-parses it);
   *  - duplicate keys inside one document collapse to the LAST value at
   *    the FIRST position — byte-for-byte what decode()'s LinkedHashMap
-  *    does to the streaming encoder's kept-both fields.
+  *    does to the encoder's kept-both fields.
   */
 case class JsonMergePatchFused(left: Expression, right: Expression,
                                failLeft: Boolean, failRight: Boolean)
@@ -216,17 +219,10 @@ case class JsonMergePatchFused(left: Expression, right: Expression,
         java.util.Arrays.equals(memo(1).asInstanceOf[Array[Byte]], pb)) {
       return if (memo(2) eq JsonMergePatchFused.NULL_RESULT) null else memo(2)
     }
-    val t =
-      try docToVNode(tb)
-      catch { case e: VariantJsonCodec.JsonParseException =>
-        if (failLeft) throw e else JsonMergePatchFused.FAILED }
-    val p =
-      try docToVNode(pb)
-      catch { case e: VariantJsonCodec.JsonParseException =>
-        if (failRight) throw e else JsonMergePatchFused.FAILED }
+    val t = JsonMergePatchFused.parseSide(tb, failLeft)
+    val p = JsonMergePatchFused.parseRight(t, pb, failRight)
     val merged: AnyRef =
-      if ((t eq JsonMergePatchFused.FAILED) || (p eq JsonMergePatchFused.FAILED) ||
-          t == null || p == null) null
+      if (JsonMergePatchFused.isNull(p)) null
       else encode(merge(t.asInstanceOf[VNode], p.asInstanceOf[VNode]))
     memo(0) = tb.clone(); memo(1) = pb.clone()
     memo(2) = if (merged == null) JsonMergePatchFused.NULL_RESULT else merged
@@ -243,12 +239,29 @@ object JsonMergePatchFused {
   private[functions] val NULL_RESULT: AnyRef = new Object
   /** try_-side parse-failure marker (never escapes nullSafeEval). */
   private[functions] val FAILED: AnyRef = new Object
+
+  /** One parsed side of a fused form: its tree, Scala null for a
+    * top-level JSON null, or [[FAILED]] when the parse fails and the
+    * side is a `try_` parse — `VariantFromJson`'s error mapping. */
+  private[functions] def parseSide(utf8: Array[Byte], failOnError: Boolean): AnyRef =
+    try VariantMergePatch.docToVNode(utf8)
+    catch { case _: Exception if !failOnError => FAILED }
+
+  /** The right side of a two-parse form, parsed only when the left one
+    * gave a tree: the unfused binary expression never evaluates its
+    * right child after a SQL-null left, so a bad right document cannot
+    * raise there. */
+  private[functions] def parseRight(left: AnyRef, utf8: Array[Byte], failOnError: Boolean): AnyRef =
+    if (isNull(left)) left else parseSide(utf8, failOnError)
+
+  /** The side is SQL NULL: a top-level JSON null or a failed `try_` parse. */
+  private[functions] def isNull(side: AnyRef): Boolean = side == null || (side eq FAILED)
 }
 
 /** Fused `variant_diff(variant_from_json(a), variant_from_json(b))` —
-  * both documents parse straight into the value tree (byte-level fast
-  * path with Jackson fallback) and the minimal RFC 7386 patch encodes
-  * ONCE — mirror of [[JsonMergePatchFused]] for the diff direction.
+  * both documents go straight into the value tree (byte walk, else the
+  * codec's parse) and the minimal RFC 7386 patch encodes ONCE — mirror
+  * of [[JsonMergePatchFused]] for the diff direction.
   * Installed by [[VariantGetFusionRule]]; fused ≡ unfused parity is
   * pinned in VariantMergeFuzzSpec.
   */
@@ -274,17 +287,10 @@ case class JsonDiffFused(left: Expression, right: Expression,
         java.util.Arrays.equals(memo(1).asInstanceOf[Array[Byte]], bb)) {
       return if (memo(2) eq JsonMergePatchFused.NULL_RESULT) null else memo(2)
     }
-    val a =
-      try docToVNode(ab)
-      catch { case e: VariantJsonCodec.JsonParseException =>
-        if (failLeft) throw e else JsonMergePatchFused.FAILED }
-    val b =
-      try docToVNode(bb)
-      catch { case e: VariantJsonCodec.JsonParseException =>
-        if (failRight) throw e else JsonMergePatchFused.FAILED }
+    val a = JsonMergePatchFused.parseSide(ab, failLeft)
+    val b = JsonMergePatchFused.parseRight(a, bb, failRight)
     val out: AnyRef =
-      if ((a eq JsonMergePatchFused.FAILED) || (b eq JsonMergePatchFused.FAILED) ||
-          a == null || b == null) null
+      if (JsonMergePatchFused.isNull(b)) null
       else encode(diff(a.asInstanceOf[VNode], b.asInstanceOf[VNode]))
     memo(0) = ab.clone(); memo(1) = bb.clone()
     memo(2) = if (out == null) JsonMergePatchFused.NULL_RESULT else out
@@ -297,8 +303,8 @@ case class JsonDiffFused(left: Expression, right: Expression,
 }
 
 /** Fused `variant_strip_keys(variant_from_json(j), keys)` — the JSON
-  * document parses straight into the value tree (byte-level fast path
-  * with Jackson fallback, same contract as JsonMergePatchFused), the
+  * document goes straight into the value tree (byte walk, else the
+  * codec's parse; same contract as JsonMergePatchFused), the
   * named top-level keys drop from the tree, and the result encodes
   * ONCE — the unfused chain's intermediate variant encode+decode
   * disappears. Installed by [[VariantGetFusionRule]]; semantics match
@@ -348,13 +354,9 @@ case class JsonStripKeysFused(left: Expression, right: Expression, failFast: Boo
         java.util.Arrays.equals(memo(0).asInstanceOf[Array[Byte]], tb)) {
       return if (memo(2) eq JsonMergePatchFused.NULL_RESULT) null else memo(2)
     }
-    val t =
-      try docToVNode(tb)
-      catch { case e: VariantJsonCodec.JsonParseException =>
-        if (failFast) throw e else JsonMergePatchFused.FAILED }
+    val t = JsonMergePatchFused.parseSide(tb, failFast)
     val out: AnyRef =
-      if (t eq JsonMergePatchFused.FAILED) null
-      else if (t == null) null // top-level JSON null → SQL NULL
+      if (JsonMergePatchFused.isNull(t)) null
       else t.asInstanceOf[VNode] match {
         case VObj(fields) =>
           val kept = fields.clone()
@@ -406,30 +408,30 @@ object VariantMergePatch {
 
   /** Parse a whole JSON document straight into the value tree — the
     * fused path's replacement for parse→encode→decode. Returns Scala
-    * null for a top-level JSON `null` (the SQL-null rule,
-    * JsonCodec fromJsonBytes); applies the SAME document validation as
-    * the unfused encoder: empty input, trailing tokens, and integers
-    * past i128 are JsonParseExceptions.
+    * null for a top-level JSON `null` (the SQL-null rule, JsonCodec
+    * fromJsonBytes). Byte walk first; a row it declines (escaped keys,
+    * integers ≥ 2^127, any malformed input) is the codec's own parse,
+    * decoded — so every error, and the tree of every row the walk
+    * declines, is exactly the unfused pipeline's.
     */
-  def docToVNode(utf8: Array[Byte]): VNode = {
-    // byte-level tree build first (FastJsonLex — same miss-to-Jackson
-    // contract as the encode/extract fast paths; keys with escapes,
-    // >18-digit ints, and any malformed input fall through)
-    try return fastDocToVNode(utf8)
-    catch { case graft.variant.FastJsonLex.Miss => () }
-    jacksonDocToVNode(utf8)
-  }
+  def docToVNode(utf8: Array[Byte]): VNode =
+    try fastDocToVNode(utf8)
+    catch {
+      case graft.variant.FastJsonLex.Miss =>
+        val pair = VariantJsonCodec.fromJsonBytes(utf8, 0, utf8.length)
+        if (pair == null) null else decode(pair._1, pair._2)
+    }
 
   private def fastDocToVNode(utf8: Array[Byte]): VNode = {
     import graft.variant.{FastJsonLex => L}
     val c = new L.Cursor(utf8, 0, utf8.length)
     c.skipWs()
-    if (c.i >= c.end) throw L.Miss // empty: Jackson's error
+    if (c.i >= c.end) throw L.Miss // empty: the codec's error
     val v =
       if ((c.peek & 0xff) == 'n') { L.literal(c, "null"); null } // top-level null rule
       else fastVNode(c, 0)
     c.skipWs()
-    if (c.i != c.end) throw L.Miss // trailing: Jackson's error
+    if (c.i != c.end) throw L.Miss // trailing: the codec's error
     v
   }
 
@@ -484,7 +486,7 @@ object VariantMergePatch {
             c.skipWs()
             c.expect('"')
             val close = L.scanSimpleString(c)
-            if (close < 0) throw L.Miss // escaped key: Jackson path
+            if (close < 0) throw L.Miss // escaped key: the codec's parse
             L.checkName(close - c.i)
             val key = new String(b, c.i, close - c.i,
               java.nio.charset.StandardCharsets.UTF_8)
@@ -503,75 +505,15 @@ object VariantMergePatch {
         }
         VObj(out)
       case x if x == '-' || (x >= '0' && x <= '9') =>
+        // the codec's coercions: 63-bit ints → long, below 2^127 →
+        // decimal scale 0; `integer` misses at 2^127 (the codec's error)
         val start = c.i
-        val neg = x == '-'
-        val isInt = L.scanNumber(c)
-        if (isInt) {
-          if (c.i - c.numStart > 18) throw L.Miss // BigInteger rules: Jackson
-          var v = 0L
-          var k = c.numStart
-          while (k < c.i) { v = v * 10 + (b(k) - '0'); k += 1 }
-          VLong(if (neg) -v else v)
+        if (L.scanNumber(c)) {
+          val big = L.integer(c, start)
+          if (big == null) VLong(c.longValue) else VDecimal(big, 0)
         } else VDouble(java.lang.Double.parseDouble(new String(b, start,
           c.i - start, java.nio.charset.StandardCharsets.US_ASCII)))
       case _ => throw L.Miss
-    }
-  }
-
-  private def jacksonDocToVNode(utf8: Array[Byte]): VNode = {
-    import com.fasterxml.jackson.core.JsonToken
-    try {
-      val p = JsonPathExtract.factory.createParser(utf8, 0, utf8.length)
-      val tok = p.nextToken()
-      if (tok == null)
-        throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: empty input", null)
-      val v = if (tok == JsonToken.VALUE_NULL) null else vnodeFromParser(p)
-      if (p.nextToken() != null)
-        throw new VariantJsonCodec.JsonParseException("Failed to parse JSON: trailing tokens", null)
-      v
-    } catch {
-      case e: VariantJsonCodec.JsonParseException => throw e
-      case e: Exception =>
-        throw new VariantJsonCodec.JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
-    }
-  }
-
-  /** One JSON value (the token the parser is ON) → VNode. Number
-    * coercions mirror JsonCodec.convertStream exactly: int → long,
-    * big int → decimal scale 0 with the i128 bound, float → double.
-    */
-  private def vnodeFromParser(p: com.fasterxml.jackson.core.JsonParser): VNode = {
-    import com.fasterxml.jackson.core.{JsonParser => JP, JsonToken => T}
-    p.currentToken() match {
-      case T.VALUE_NULL => VNull
-      case T.VALUE_TRUE => VBool(true)
-      case T.VALUE_FALSE => VBool(false)
-      case T.VALUE_NUMBER_INT =>
-        p.getNumberType match {
-          case JP.NumberType.BIG_INTEGER =>
-            val bi = p.getBigIntegerValue
-            if (bi.bitLength() >= 128)
-              throw new VariantJsonCodec.JsonParseException(
-                s"Could not fit value $bi into an i128", null)
-            VDecimal(bi, 0)
-          case _ => VLong(p.getLongValue)
-        }
-      case T.VALUE_NUMBER_FLOAT => VDouble(p.getDoubleValue)
-      case T.VALUE_STRING => VStr(p.getText)
-      case T.START_ARRAY =>
-        val b = Vector.newBuilder[VNode]
-        while (p.nextToken() != T.END_ARRAY) b += vnodeFromParser(p)
-        VArr(b.result())
-      case T.START_OBJECT =>
-        val out = new scala.collection.mutable.LinkedHashMap[String, VNode]
-        while (p.nextToken() != T.END_OBJECT) {
-          val name = p.currentName()
-          p.nextToken()
-          out.put(name, vnodeFromParser(p))
-        }
-        VObj(out)
-      case other =>
-        throw new VariantJsonCodec.JsonParseException(s"Unsupported JSON token: $other", null)
     }
   }
 

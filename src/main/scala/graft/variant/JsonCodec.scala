@@ -270,42 +270,6 @@ object VariantJsonCodec {
     }
   }
 
-  /** Encode the single JSON value the parser is positioned ON into a
-    * self-contained (metadata, value) pair, consuming exactly that value.
-    * Scalars skip metadata collection (empty dictionary); objects/arrays
-    * go through the tree builder so key collection and canonical sorted
-    * emission match `fromJsonBytes` byte-for-byte. Used by the fused
-    * extraction/explode expressions to materialize sub-variants without
-    * re-parsing the full row. Known divergence: Jackson's tree keeps the
-    * LAST of duplicate keys within a nested object, where the streaming
-    * encoder keeps both fields — content with duplicate JSON keys is
-    * undefined behavior in every variant implementation.
-    */
-  def valueFromParser(p: com.fasterxml.jackson.core.JsonParser): (Array[Byte], Array[Byte]) = {
-    import com.fasterxml.jackson.core.{JsonParser => JP, JsonToken => T}
-    p.currentToken() match {
-      case T.START_OBJECT | T.START_ARRAY => fromTree(mapper.readTree(p))
-      case T.VALUE_NULL => (VariantMetadata.EMPTY, VARIANT_NULL)
-      case tok =>
-        val buf = new ByteBuf(16)
-        tok match {
-          case T.VALUE_TRUE => VariantWriter.writeBoolean(buf, true)
-          case T.VALUE_FALSE => VariantWriter.writeBoolean(buf, false)
-          case T.VALUE_NUMBER_INT =>
-            if (p.getNumberType == JP.NumberType.BIG_INTEGER) {
-              val bi = p.getBigIntegerValue
-              if (bi.bitLength() >= 128)
-                throw new JsonParseException(s"Could not fit value $bi into an i128", null)
-              VariantWriter.writeDecimal(buf, bi, 0)
-            } else VariantWriter.writeLong(buf, p.getLongValue)
-          case T.VALUE_NUMBER_FLOAT => VariantWriter.writeDouble(buf, p.getDoubleValue)
-          case T.VALUE_STRING => VariantWriter.writeString(buf, p.getText)
-          case other => throw new JsonParseException(s"Unsupported JSON token: $other", null)
-        }
-        (VariantMetadata.EMPTY, buf.result())
-    }
-  }
-
   def fromJson(json: String): (Array[Byte], Array[Byte]) = {
     val b = json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     fromJsonBytes(b, 0, b.length)

@@ -460,7 +460,7 @@ class ExpressionSpec extends AnyFunSuite {
     assert(all("$.items[*].*", "bigint") === Seq(1L, 9L, 3L))  // object-value wildcard
     assert(all("$.items[1].*", "bigint") === Seq(9L))
     // .* emits field values in canonical sorted-key order, whatever the
-    // input key order (both the encoded walk and the fused tree walk)
+    // input key order (the encoded walk follows the sorted dictionary)
     assert(sql1("""SELECT variant_get_all(variant_from_json('{"z": {"b": 2, "a": 1, "c": 3}}'), '$.z.*', 'bigint') AS r""")
       .getSeq[Any](0) === Seq(1L, 2L, 3L))
     assert(all("$.missing[*]", "bigint") === Seq())            // absent → empty
@@ -477,17 +477,30 @@ class ExpressionSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("variant_get_all")))
   }
 
+  test("duplicate keys: variant_get_all and variant_explode give the parse's kept-both fields") {
+    // the JSON is built per row so constant folding cannot evaluate the
+    // parse before the optimizer's fusion rule sees the plan
+    val gets = spark.sql(
+      """SELECT variant_get_all(variant_from_json(concat('{"x": {"a": 1, "a": ', id + 2, '}}')),
+        |  '$.x.*', 'bigint') AS r FROM range(1)""".stripMargin)
+    assert(gets.head().getSeq[Any](0) === Seq(1L, 2L))
+    val rows = spark.sql(
+      """SELECT key, variant_to_json(value) AS j FROM (SELECT variant_explode(variant_from_json(
+        |  concat('{"o": {"a": 1, "a": 2}, "b": ', id + 3, '}'))) FROM range(1))""".stripMargin)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(rows === Map("b" -> "3", "o" -> """{"a":1,"a":2}"""))
+  }
+
   test("variant_get_all UNFUSED walk: to_variant input, parquet roundtrip, 2-arg form") {
-    // Every earlier wildcard test extracts over variant_from_json with a
-    // scalar target, which VariantGetFusionRule rewrites to
-    // JsonGetAllFused — so the ENCODED walk (VariantPath.walkAll) needs
-    // its own witnesses. Each input here defeats fusion by construction.
+    // variant_get_all has no fused form: every earlier wildcard test runs
+    // the ENCODED walk (VariantPath.walkAll) over a JSON parse. These
+    // witnesses cover inputs that are not a JSON parse at all, and the
+    // variant-typed 2-arg form.
     // (1) to_variant child — not a JSON parse, cannot fuse
     val df1 = spark.sql(
       """SELECT variant_get_all(to_variant(
         |  array(named_struct('q', 1L), named_struct('q', 2L), named_struct('q', 7L))),
         |  '$[*].q', 'bigint') AS r""".stripMargin)
-    assert(!df1.queryExecution.executedPlan.toString.contains("json_get_all_fused"))
     assert(df1.head().getSeq[Any](0) === Seq(1L, 2L, 7L))
     // .* over to_variant: canonical sorted-key order
     assert(sql1(
@@ -504,7 +517,7 @@ class ExpressionSpec extends AnyFunSuite {
       .selectExpr("i", "variant_get_all(v, '$.items[*].q', 'bigint') AS qs",
         "variant_get_all(v, '$.items[2].z.*', 'bigint') AS zs")
       .orderBy("i")
-    assert(!back.queryExecution.executedPlan.toString.contains("json_get_all_fused"))
+    assert(back.queryExecution.executedPlan.toString.contains("variant_get_all"))
     assert(back.collect().map(r => (r.getSeq[Any](1), r.getSeq[Any](2))).toSeq ===
       Seq((Seq(1L, 10L), Seq(1L, 2L)), (Seq(2L, 20L), Seq(1L, 2L))))
     // (3) 2-arg form: variant-typed elements stay unfused (raw subtree
@@ -513,7 +526,6 @@ class ExpressionSpec extends AnyFunSuite {
       """SELECT transform(variant_get_all(variant_from_json(
         |  '{"items": [{"q": 1}, {"p": 9}]}'), '$.items[*]'),
         |  x -> variant_to_json(x)) AS r""".stripMargin)
-    assert(!twoArg.queryExecution.executedPlan.toString.contains("json_get_all_fused"))
     assert(twoArg.head().getSeq[String](0) === Seq("""{"q":1}""", """{"p":9}"""))
   }
 

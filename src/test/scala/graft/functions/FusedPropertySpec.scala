@@ -238,7 +238,7 @@ class FusedPropertySpec extends AnyFunSuite {
         parseFailOnError = false, castFailOnError = true).eval(null) == null, json)
       assert(JsonKeys(Literal(json), parseFailOnError = false).eval(null) == null, json)
       assert(JsonTypeOf(Literal(json), parseFailOnError = false).eval(null) == null, json)
-      assert(JsonExplodeKV(Literal(json), parseFailOnError = false)
+      assert(VariantExplode(VariantFromJson(Literal(json), false))
         .eval(null).iterator.isEmpty, json)
     }
     // parse errors outrank cast errors, exactly as in the unfused order

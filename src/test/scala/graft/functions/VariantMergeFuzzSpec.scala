@@ -258,4 +258,84 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
       }
     }
   }
+
+  // -------------------------------------------------------------------
+  // docToVNode: the byte walk, else the codec's parse decoded. Pinned
+  // against decode(fromJsonBytes) on random docs plus the walk's edges,
+  // and the three fused forms against their unfused pairs on the same
+  // corpus.
+  // -------------------------------------------------------------------
+  private val edgeDocs: Seq[String] = Seq(
+    "{\"\\" + "u0061\": 1, \"b\": {\"c\\n\": 2}}",              // escaped keys
+    """{"n": 1234567890123456789, "m": -9223372036854775808}""", // 19 digits, 63 bits
+    """{"n": 9223372036854775808}""",                            // 19 digits, 64 bits
+    s"""{"n": ${BigInt(2).pow(100)}, "m": -${BigInt(2).pow(100)}}""",
+    s"""[${BigInt(2).pow(127) - 1}, -${BigInt(2).pow(127)}]""",  // i128 bounds
+    s"""{"n": ${BigInt(2).pow(127)}}""",                         // past i128
+    "[" * 1000 + "]" * 1000,                                     // deepest the walk takes
+    "[" * 1001 + "]" * 1001,                                     // walk declines, codec takes
+    "[" * 1002 + "]" * 1002,                                     // codec rejects
+    """{"a":1} 2""", "null null", "[1] x",                       // trailing tokens
+    "", "   ")                                                   // empty input
+
+  private lazy val nodeCorpus: Seq[String] = {
+    val rnd = new scala.util.Random(20260817L)
+    Seq.fill(300)(gen(rnd, 0)) ++ edgeDocs
+  }
+
+  /** A value, or the class of the exception evaluating it threw. */
+  private def outcome(f: => Any): Any =
+    try f match {
+      case row: InternalRow => (row.getBinary(0).toSeq, row.getBinary(1).toSeq)
+      case v => v
+    } catch { case e: Exception => e.getClass }
+
+  /** Runs `f` on a thread with a deep stack: the trees of the 1000-deep
+    * edge doc are walked and compared recursively. */
+  private def onDeepStack(f: => Unit): Unit = {
+    var err: Throwable = null
+    val t = new Thread(null, () => try f catch { case e: Throwable => err = e }, "deep", 512L << 20)
+    t.start()
+    t.join()
+    if (err != null) throw err
+  }
+
+  test("docToVNode equals the codec's parse, decoded, on random and edge docs") {
+    onDeepStack(nodeCorpus.foreach { doc =>
+      val b = doc.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val got = outcome(VariantMergePatch.docToVNode(b))
+      val want = outcome {
+        val pair = graft.variant.VariantJsonCodec.fromJsonBytes(b, 0, b.length)
+        if (pair == null) null else VariantMergePatch.decode(pair._1, pair._2)
+      }
+      assert(got == want, s"doc=${doc.take(60)}")
+    })
+  }
+
+  test("fused merge/diff/strip equal their unfused pairs on the docToVNode corpus, both fail modes") {
+    val keys = Literal(new GenericArrayData(Array(UTF8String.fromString("a"))),
+      org.apache.spark.sql.types.ArrayType(StringType))
+    // a tree, a top-level null and a malformed doc on the other side
+    // cover the left-first, right-skipped-after-null evaluation order
+    val others = Seq("""{"a":{"b":1},"c":2}""", "null", """{"a":}""")
+    onDeepStack(for (doc <- nodeCorpus; strict <- Seq(true, false)) {
+      def lit(s: String) = Literal.create(s, StringType)
+      def parse(s: String) = VariantFromJson(lit(s), strict)
+      def same(what: String, fused: => Any, unfused: => Any): Unit = {
+        val f = outcome(fused)
+        val u = outcome(unfused)
+        assert(f == u, s"$what strict=$strict doc=${doc.take(60)}: fused=$f unfused=$u")
+      }
+      same("strip", JsonStripKeysFused(lit(doc), keys, strict).eval(InternalRow.empty),
+        VariantStripKeys(parse(doc), keys).eval(InternalRow.empty))
+      for (other <- others; (l, r) <- Seq((doc, other), (other, doc))) {
+        same(s"merge(${l.take(40)}, ${r.take(40)})",
+          JsonMergePatchFused(lit(l), lit(r), strict, strict).eval(InternalRow.empty),
+          VariantMergePatch(parse(l), parse(r)).eval(InternalRow.empty))
+        same(s"diff(${l.take(40)}, ${r.take(40)})",
+          JsonDiffFused(lit(l), lit(r), strict, strict).eval(InternalRow.empty),
+          VariantDiff(parse(l), parse(r)).eval(InternalRow.empty))
+      }
+    })
+  }
 }
