@@ -70,7 +70,7 @@ def main():
         if only and name not in only:
             continue
         try:
-            files = glob.glob(f"{outdir}/{name}/*.parquet") or [f"{outdir}/{name}.parquet"]
+            files = glob.glob(f"{outdir}/{name}/*.parquet")
             sp = norm(pd.concat([pd.read_parquet(f) for f in files], ignore_index=True))
             ora = norm(con.execute(sqls[name]).df())
             probs = dtype_problems(name, sp, ora)

@@ -80,19 +80,22 @@ object Bench {
     // runs warm+1 — at 10x the data, pass count is noise-trimming, and
     // the question is growth FACTORS, not +-5%.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val samples = scala.collection.mutable.Map[String, List[Double]]()
+    // Each timed lane also records where its time and bytes went; the
+    // record keeps the numbers of the pass whose time it reports.
+    val metrics = LaneMetrics.register(spark)
+    val best = scala.collection.mutable.Map[String, (Double, LaneMetrics.Lane)]()
     // A lane that throws in any timed pass gets no time sample: it is
     // listed as failed (with its last error) and left out of the total.
     val failed = scala.collection.mutable.Map[String, String]()
     (1 to passes).foreach { _ =>
       ordered.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
         // noop sink fully materializes every output row (count() would
         // let Spark skip projections).
         try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          val t = (System.nanoTime() - t0) / 1e9
-          samples.updateWith(name)(s => Some(t :: s.getOrElse(Nil)))
+          val sample = metrics.measure(name) {
+            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+          }
+          if (best.get(name).forall(_._1 > sample._1)) best(name) = sample
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           failed(name) = String.valueOf(e.getMessage)
@@ -100,11 +103,14 @@ object Bench {
       }
     }
     val results = ordered.collect { case (name, _) if !failed.contains(name) =>
-      name -> samples(name).min
+      name -> best(name)._1
     }
+    val stage = results.map { case (name, _) => name -> best(name)._2 }.toMap
     def jstr(v: String): String = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
       .map(ch => if (ch < ' ') ' ' else ch) + "\""
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val stageQs = results.map { case (k, _) => s"\"$k\":${stage(k).toJson}" }
       .mkString("{", ",", "}")
     val failedQs = failed.toSeq.sortBy(_._1).map { case (k, msg) =>
       s""""$k":{"status":"failed","error":${jstr(msg)}}"""
@@ -115,18 +121,31 @@ object Bench {
     // every per-query value is the MINIMUM over `passes` timed passes
     // (after one untimed warm pass); the total is the sum of minima.
     // Cross-round curve points are only comparable when this field
-    // matches.
+    // matches. "stage" holds each lane's numbers from that same pass.
     val detailed =
-      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"per_query_stat":"min_of_passes","queries":$qs,"failed":$failedQs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
-    // The driver keeps only a short stdout tail (~2.2 KB); the detailed
-    // per-query record (~10 KB over 311 lanes) overruns it, which left
-    // PERF per_query/scaling EMPTY in r12/r13 (the driver parsed only a
-    // total-only record). Print the detailed record first (for humans /
-    // the file copy), then LAST a COMPACT record that still fits any
-    // tail window: per-FAMILY subtotals (stable keys, ~7 entries) plus
-    // the top-15 slowest individual lanes (the regression-relevant
-    // ones). Keys are prefixed "fam_" so they can never collide with a
-    // real query name; the full per-query map stays in bench_out.json.
+      s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"per_query_stat":"min_of_passes","queries":$qs,"stage":$stageQs,"failed":$failedQs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
+    val short = compactRecord(results, stage, failed.size, sfDir, loadStart, loadEnd)
+    println(detailed)
+    println(short)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get("bench_out.json"),
+      (detailed + "\n" + short + "\n").getBytes("UTF-8"))
+    spark.stop()
+  }
+
+  /** The record Bench prints LAST. Bench's stdout is read from a short
+    * tail (~2.2 KB); the detailed per-query record (~10 KB of times over
+    * 311 lanes, far more with "stage") overruns it, which left PERF
+    * per_query/scaling EMPTY in r12/r13 (only a total-only record
+    * parsed). So the detailed record is printed first (for humans / the
+    * file copy), then this COMPACT one that still fits any tail window:
+    * per-FAMILY subtotals (stable keys, ~7 entries) plus the top-15
+    * slowest individual lanes (the regression-relevant ones), and per
+    * family the summed task run time and shuffle-write bytes. Keys are
+    * prefixed "fam_" so they can never collide with a real query name;
+    * the full per-query map stays in bench_out.json. */
+  def compactRecord(results: Seq[(String, Double)], stage: Map[String, LaneMetrics.Lane],
+                    failed: Int, sfDir: String, loadStart: String, loadEnd: String): String = {
     def fam(n: String): String =
       if (n.startsWith("d_")) "fam_d"
       else if (n.startsWith("e_")) "fam_e"
@@ -135,20 +154,18 @@ object Bench {
       else if (n.startsWith("v_")) "fam_v"
       else if (n.matches("q\\d+_.*")) "fam_tpch"
       else "fam_q"
-    def r3(v: Double): String = f"$v%.3f"
-    val famTotals = results.groupBy { case (n, _) => fam(n) }
-      .view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+    import LaneMetrics.r3
+    val families = results.groupBy { case (n, _) => fam(n) }.toSeq.sortBy(_._1)
     val slowest = results.sortBy { case (_, v) => -v }.take(15)
-    val compactQs = (famTotals.map { case (k, v) => s"\"$k\":${r3(v)}" } ++
+    val compactQs = (families.map { case (k, xs) => s"\"$k\":${r3(xs.map(_._2).sum)}" } ++
       slowest.map { case (k, v) => s"\"$k\":${r3(v)}" })
       .mkString("{", ",", "}")
-    val short =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$compactQs,"failed":${failed.size},"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
-    println(detailed)
-    println(short)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_out.json"),
-      (detailed + "\n" + short + "\n").getBytes("UTF-8"))
-    spark.stop()
+    val compactStage = families.map { case (k, xs) =>
+      val lanes = xs.map { case (n, _) => stage(n) }
+      s""""$k":{"task_run_s":${r3(lanes.map(_.taskRunS).sum)},""" +
+        s""""shuffle_write_bytes":${lanes.map(_.shuffleWriteBytes).sum}}"""
+    }.mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$compactQs,"stage":$compactStage,"failed":$failed,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd"}"""
   }
 }

@@ -62,7 +62,6 @@ private[functions] object JsonFused {
   def fastInferSchema(c: graft.variant.FastJsonLex.Cursor, depth: Int): SchemaInfer.SType = {
     import graft.variant.{FastJsonLex => L}
     import SchemaInfer._
-    if (depth >= L.MAX_DEPTH) throw L.Miss
     val b = c.b
     (c.peek & 0xff) match {
       case 'n' => L.literal(c, "null"); SNull
@@ -70,6 +69,7 @@ private[functions] object JsonFused {
       case 'f' => L.literal(c, "false"); SBool
       case '"' => c.i += 1; L.skipString(c); SString
       case '[' =>
+        L.openContainer(depth)
         c.i += 1
         var elem: SType = SNull
         c.skipWs()
@@ -89,6 +89,7 @@ private[functions] object JsonFused {
         }
         SArray(elem)
       case '{' =>
+        L.openContainer(depth)
         c.i += 1
         var fields = scala.collection.immutable.TreeMap.empty[String, SType]
         c.skipWs()

@@ -437,7 +437,6 @@ object VariantMergePatch {
 
   private def fastVNode(c: graft.variant.FastJsonLex.Cursor, depth: Int): VNode = {
     import graft.variant.{FastJsonLex => L}
-    if (depth >= L.MAX_DEPTH) throw L.Miss
     val b = c.b
     (c.peek & 0xff) match {
       case 'n' => L.literal(c, "null"); VNull
@@ -457,6 +456,7 @@ object VariantMergePatch {
             java.nio.charset.StandardCharsets.UTF_8))
         }
       case '[' =>
+        L.openContainer(depth)
         c.i += 1
         val out = Vector.newBuilder[VNode]
         c.skipWs()
@@ -476,6 +476,7 @@ object VariantMergePatch {
         }
         VArr(out.result())
       case '{' =>
+        L.openContainer(depth)
         c.i += 1
         val out = new scala.collection.mutable.LinkedHashMap[String, VNode]
         c.skipWs()

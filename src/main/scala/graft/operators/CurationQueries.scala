@@ -75,14 +75,12 @@ object CurationQueries {
 
   def containmentJoinRanked(docs: DataFrame, ranked: DataFrame,
                             tNum: Int, tDen: Int): DataFrame = {
-    // candidate-join key width is env-switched for the deep-point
-    // measurement — see TextQueries.candKey (output-identical; the
-    // full-intersect verify filters any hash-added candidate)
-    val rankedK = ranked.select(TextQueries.candKey(col("tok")).as("tok"),
-      col("doc_id"), col("rank"), col("sz"))
-    val prefixA = rankedK.filter(col("rank") <=
+    // the candidate join keys on the token string itself: at 10x,
+    // xxhash64 keys cut this lane's shuffle writes by 6% but ran slower
+    // in 2 of 3 runs, here and on d_prefix_join (OPTIMIZATION_r14.md)
+    val prefixA = ranked.filter(col("rank") <=
       col("sz") - expr(s"($tNum * sz + ${tDen - 1}) div $tDen") + 1)
-    val cand = prefixA.as("a").join(rankedK.as("b"),
+    val cand = prefixA.as("a").join(ranked.as("b"),
         col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id")
           // positional filter: alpha = ceil(t*sz_a); sound at the
           // pair's minimal common token, which a's prefix contains

@@ -542,8 +542,8 @@ object DedupQueries {
     // Checkpointed ONCE per invocation: both verification sides consume
     // it, and without the checkpoint the bucket self-join + distinct
     // recomputes per side (measured 2x the candidate-generation cost,
-    // WmhStageProbe round 13). Pair-id rows only — bounded, never the
-    // residency-cliff class.
+    // round 13, OPTIMIZATION_r13.md). Pair-id rows only — bounded,
+    // never the residency-cliff class.
     val cand0 = banded.as("a")
       .join(banded.as("b"), Seq("band", "bucket"))
       .filter(col("a.id") < col("b.id"))
@@ -555,7 +555,7 @@ object DedupQueries {
     // least(S)*1e6 DIV greatest(S) — a pair failing this bound fails
     // the verify too; output identical. The filter joins carry only
     // (pair, two longs), and at the 100× point it removes 22% of
-    // candidates (WmhPhaseProbe) before any array is shuffled.
+    // candidates (OPTIMIZATION_r13.md §5) before any array is shuffled.
     val sizes = tf.groupBy(col("id")).agg(sum(col("tf")).as("stf"))
     val cand = cand0
       .join(sizes.select(col("id").as("ja"), col("stf").as("sza"))
@@ -574,10 +574,10 @@ object DedupQueries {
     // Σ(|grams a| + |grams b|) over all candidates — ~154M rows at the
     // 30x curve point. Past executor memory the hash aggregate degrades
     // to sort-based spill: isolated fresh-JVM runs measured 11.8 s at
-    // 10x but 103 s at 30x on LINEAR candidate growth (WmhStageProbe
-    // r13: cand 542k @10x → 1.51M @30x — the blow-up was per-row cost,
-    // not candidates). The expansion-free form: fold each doc's grams
-    // into ONE sorted entry array (doc-count-sized table), hash-join
+    // 10x but 103 s at 30x on LINEAR candidate growth (r13,
+    // OPTIMIZATION_r13.md: cand 542k @10x → 1.51M @30x — the blow-up
+    // was per-row cost, not candidates). The expansion-free form: fold
+    // each doc's grams into ONE sorted entry array (doc-count-sized table), hash-join
     // the bounded pair-id rows to the two entry arrays, and compute
     // Σmin per pair in-row with a compiled merge walk
     // (SumMinTfSorted — SQL map_zip_with computes the same fold on the
@@ -591,8 +591,8 @@ object DedupQueries {
     // entries keyed by xxhash64(g), not the gram string (r13 100×
     // curve): the two pair↔entries joins and the exchange between them
     // carry every candidate's entry arrays — 16-byte (long, long)
-    // structs cut those bytes ~3× vs (string, long) (WmhPhaseProbe
-    // 100×: verify 14.8 → 6.9 s warm). Gram identity needs injectivity
+    // structs cut those bytes ~3× vs (string, long) (OPTIMIZATION_r13.md
+    // §5, 100×: verify 14.8 → 6.9 s warm). Gram identity needs injectivity
     // only (the d_repeated_ngram_strip argument: 64-bit over ~100-gram
     // unions per pair, collision odds ~1e-9 corpus-wide,
     // deterministic); the oracle keeps grouping on the raw gram

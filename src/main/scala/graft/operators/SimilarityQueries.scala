@@ -606,7 +606,8 @@ object StreamingQueries {
     * batch-split-invariant (StreamingSpec/TransformStateSpec prove
     * batch-count equivalence; every oracle is a pure function of the
     * per-key event multiset) — while halving the per-batch planning +
-    * offset/WAL-commit cycles StreamPhaseProbe charged at ~19% each. */
+    * offset/WAL-commit cycles, ~19% of batch time together in the
+    * phase accounting OPTIMIZATION_r13.md records. */
   private val multiFilesPerTrigger = "2"
 
   /** Stateful-operator partition sizing: a streaming query's state store
@@ -635,7 +636,7 @@ object StreamingQueries {
     // dedup watermark, schema agg) and run at n=2; the rest stay at 8 —
     // s_minhash_dedup regressed +0.44 s at p2 (its banded-signature
     // shuffle wants the parallelism) and the window/session/map-state
-    // lanes were neutral-to-worse. Phase accounting (StreamPhaseProbe,
+    // lanes were neutral-to-worse. Phase accounting (OPTIMIZATION_r13.md,
     // Spark's own durationMs buckets) shows the per-batch time is ~80%
     // addBatch (real stateful execution), ~11% queryPlanning, ~8%
     // offset/WAL commits — the "fixed overhead" is mostly genuine work

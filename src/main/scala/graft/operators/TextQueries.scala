@@ -128,22 +128,6 @@ object TextQueries {
       .orderBy(col("dist"))
   }
 
-  /** Candidate-join key for the prefix-filter similarity joins:
-    * `xxhash64(tok)` 8-byte longs when GRAFT_HASH_CAND_KEYS=1, the raw
-    * token/shingle string otherwise (the default). Output-identical
-    * either way — a 64-bit collision can only ADD a candidate pair,
-    * which the full-intersect verify filters (all consumer lanes were
-    * oracle-verified hash-exact under both settings, r13+r14). r13
-    * measured the hash as pure added CPU at bench SF, where AQE
-    * broadcasts the candidate join (no exchange to narrow); the r14
-    * 10x/30x/100x curve points re-decide it where the join actually
-    * shuffles — see OPTIMIZATION_r14.md for the measured decision.
-    */
-  private[operators] val hashCandKeys: Boolean =
-    sys.env.get("GRAFT_HASH_CAND_KEYS").contains("1")
-  private[operators] def candKey(c: Column): Column =
-    if (hashCandKeys) xxhash64(c) else c
-
   def prefixSimilarityJoin(docs: DataFrame, tNum: Int, tDen: Int): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(col("toks")).as("tok"))
     // document frequency via groupBy + join-back, NOT a window over
@@ -165,7 +149,7 @@ object TextQueries {
       // prefix length |X| - ceil(t|X|) + 1, ceil in pure ints
       .filter(col("rank") <=
         col("sz") - expr(s"($tNum * sz + ${tDen - 1}) div $tDen") + 1)
-      .select(candKey(col("tok")).as("tok"), col("doc_id"), col("rank"), col("sz"))
+      .select(col("tok"), col("doc_id"), col("rank"), col("sz"))
     // PPJoin candidate pruning, applied per meeting-token BEFORE the
     // distinct (measured 202k -> 33k candidate pairs at sf0.1):
     //  - size filter: J >= t forces t*|larger| <= |smaller|;

@@ -94,8 +94,7 @@ object ScaleProbe {
         // (event_type, hour) bucket grain stays FIXED). This soak is
         // what exposed the original direct-bitmap formulation's inverse
         // scaling (partial bitmaps per map task × all groups) and
-        // motivated the two-level build now in slidingDistinctOn; the
-        // A/B record lives in SlideProbe.
+        // motivated the two-level build now in slidingDistinctOn.
         val p = spark.sparkContext.defaultParallelism
         val e = graft.Tables.events(spark, d).repartition(p)
           .withColumn("rep", explode(expr("sequence(1, 16)")))

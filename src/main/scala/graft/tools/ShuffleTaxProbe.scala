@@ -1,11 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{LaneMetrics, Tables}
 import graft.functions.{VariantFunctions => vf}
 
 /** VERDICT r6 item 5: measure the per-row-metadata shuffle tax.
@@ -38,17 +35,7 @@ object ShuffleTaxProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val shuffleBytes = new AtomicLong(0L)
-    val shuffleRecords = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-    })
+    val metrics = LaneMetrics.register(spark)
 
     // events.props is the hot-schema corpus: every row shares the same
     // small key set — the exact case where per-row metadata repeats.
@@ -68,22 +55,10 @@ object ShuffleTaxProbe {
       f"value=${valB / 1e6}%.1f MB json=${jsonB / 1e6}%.1f MB " +
       f"(per-row metadata ${metaB.toDouble / rows}%.1f B)")
 
-    def settle(): Unit = {
-      // listener events land asynchronously; wait until the counter
-      // stops moving so stale task-end events can't leak across windows
-      var prev = -1L
-      while (prev != shuffleBytes.get()) { prev = shuffleBytes.get(); Thread.sleep(200) }
-    }
-
     def measure(label: String)(job: => Unit): (Long, Double) = {
-      job // warm (listener counts it; settle BEFORE resetting so its
-      settle() // async task-end events can't inflate the measured window)
-      shuffleBytes.set(0); shuffleRecords.set(0)
-      val t0 = System.nanoTime()
-      job
-      val secs = (System.nanoTime() - t0) / 1e9
-      settle()
-      val b = shuffleBytes.get()
+      job // warm
+      val (secs, lane) = metrics.measure(label)(job)
+      val b = lane.shuffleWriteBytes
       println(f"[shuffle-tax] $label%-34s ${b / 1e6}%8.2f MB written  $secs%6.3f s")
       (b, secs)
     }

@@ -272,7 +272,6 @@ private[graft] object FastJsonLex {
   /** Skip (and fully validate) one JSON value of any shape. Depth-bounded
     * like the encoding walks. */
   def skipValue(c: Cursor, depth: Int = 0): Unit = {
-    if (depth > MAX_DEPTH) throw Miss // entry depth == enclosing containers; Jackson accepts depth MAX, rejects MAX+1
     val b = c.b
     (c.peek & 0xff) match {
       case 'n' => literal(c, "null")
@@ -280,6 +279,7 @@ private[graft] object FastJsonLex {
       case 'f' => literal(c, "false")
       case '"' => c.i += 1; skipString(c)
       case '[' =>
+        openContainer(depth)
         c.i += 1
         c.skipWs()
         if (c.i < c.end && b(c.i) == ']') c.i += 1
@@ -297,6 +297,7 @@ private[graft] object FastJsonLex {
           }
         }
       case '{' =>
+        openContainer(depth)
         c.i += 1
         c.skipWs()
         if (c.i < c.end && b(c.i) == '}') c.i += 1
@@ -345,6 +346,13 @@ private[graft] object FastJsonLex {
   /** Nesting bound mirroring Jackson's default StreamReadConstraints max
     * depth (1000): deeper rows miss, Jackson's error is the behavior. */
   final val MAX_DEPTH = 1000
+
+  /** The one nesting rule every byte walk applies where it opens a `[`
+    * or `{`: `depth` counts the containers already open around it, and
+    * a container that takes the nesting past [[MAX_DEPTH]] misses —
+    * Jackson checks at the same point, so an empty innermost container
+    * counts like any other. */
+  @inline def openContainer(depth: Int): Unit = if (depth >= MAX_DEPTH) throw Miss
 
   /** Jackson 2.x default StreamReadConstraints, mirrored so the fast
     * path never accepts a document the Jackson fallback would reject:

@@ -358,7 +358,6 @@ object VariantJsonCodec {
     * on anything the lexer declines. */
   private def fastConvert(c: FastCursor, buf: ByteBuf, keys: KeyIds,
                           depth: Int = 0): Boolean = {
-    if (depth > FastJsonLex.MAX_DEPTH) throw FastMiss // Jackson accepts depth MAX, rejects MAX+1
     val b = c.b
     (c.peek & 0xff) match {
       case 'n' => FastJsonLex.literal(c, "null"); VariantWriter.writeNull(buf)
@@ -376,6 +375,7 @@ object VariantJsonCodec {
           VariantWriter.writeStringSlice(buf, scratch.rawBytes, 0, scratch.length)
         }
       case '[' =>
+        FastJsonLex.openContainer(depth)
         c.i += 1
         val ab = new VariantArrayBuilder(buf)
         c.skipWs()
@@ -395,6 +395,7 @@ object VariantJsonCodec {
         }
         ab.finish()
       case '{' =>
+        FastJsonLex.openContainer(depth)
         c.i += 1
         val ob = new VariantObjectBuilder(buf)
         c.skipWs()

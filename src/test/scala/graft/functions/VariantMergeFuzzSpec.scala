@@ -272,9 +272,9 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
     s"""{"n": ${BigInt(2).pow(100)}, "m": -${BigInt(2).pow(100)}}""",
     s"""[${BigInt(2).pow(127) - 1}, -${BigInt(2).pow(127)}]""",  // i128 bounds
     s"""{"n": ${BigInt(2).pow(127)}}""",                         // past i128
-    "[" * 1000 + "]" * 1000,                                     // deepest the walk takes
-    "[" * 1001 + "]" * 1001,                                     // walk declines, codec takes
-    "[" * 1002 + "]" * 1002,                                     // codec rejects
+    "[" * 1000 + "]" * 1000,                                     // at the nesting bound: walk takes
+    "[" * 1001 + "]" * 1001,                                     // one past: walk misses, codec rejects
+    "[" * 1002 + "]" * 1002,                                     // two past: same
     """{"a":1} 2""", "null null", "[1] x",                       // trailing tokens
     "", "   ")                                                   // empty input
 

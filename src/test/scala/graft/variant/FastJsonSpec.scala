@@ -237,6 +237,13 @@ class FastJsonSpec extends AnyFunSuite {
     assert(VariantJsonCodec.fastOnlyForTest(utf8(overLimit)).isLeft,
       s"fast path accepted depth ${d + 1} > MAX_DEPTH")
     intercept[Exception](VariantJsonCodec.fromJson(overLimit))
+    // the same bound with an EMPTY innermost container: opening the
+    // container is what counts, so the pair splits exactly at the limit
+    assert(check("[" * d + "]" * d), s"empty depth-$d doc should stay on the fast path")
+    val emptyOver = "[" * (d + 1) + "]" * (d + 1)
+    assert(VariantJsonCodec.fastOnlyForTest(utf8(emptyOver)).isLeft,
+      s"fast path accepted an empty container at depth ${d + 1}")
+    intercept[Exception](VariantJsonCodec.fromJson(emptyOver))
     // same at object-nesting depth
     val objOver = """{"k":""" * (d + 1) + "1" + "}" * (d + 1)
     assert(VariantJsonCodec.fastOnlyForTest(utf8(objOver)).isLeft,

@@ -11,7 +11,9 @@
 # lane's plan, not the harness's allocation history; isolation pins that
 # convention, and the record says so ("isolation":"jvm_per_lane").
 # Cross-round curve comparisons are only valid between records whose
-# passes/per_query_stat/isolation fields all match.
+# passes/per_query_stat/isolation fields all match. Each lane's "stage"
+# entry (jobs, task time, shuffle bytes, heaviest stage) is carried over
+# next to its time, so a curve point shows where a lane's bytes grew.
 #
 # Usage: SPARK_GRAFT_SF_DIR=... [SPARK_GRAFT_BENCH_PASSES=2] \
 #        tools/run_curve.sh OUT.json lane1,lane2,...
@@ -34,7 +36,7 @@ LOAD_END=$(cut -d' ' -f1-3 /proc/loadavg | tr ' ' ',')
 python3 - "$OUT" "$TMPD" "$LOAD_START" "$LOAD_END" <<'EOF'
 import json, sys, glob
 out, tmpd, ls, le = sys.argv[1:5]
-queries, passes = {}, None
+queries, stage, passes = {}, {}, None
 for f in sorted(glob.glob(tmpd + "/*.json")):
     for line in open(f):
         try:
@@ -43,12 +45,13 @@ for f in sorted(glob.glob(tmpd + "/*.json")):
             continue
         if isinstance(d, dict) and "queries" in d:
             queries.update(d["queries"])
+            stage.update(d.get("stage", {}))
             passes = d.get("passes", passes)
             sf = d.get("sf")
             break
 rec = {"metric": "total", "value": sum(queries.values()), "unit": "sec",
        "passes": passes, "per_query_stat": "min_of_passes",
-       "isolation": "jvm_per_lane", "queries": queries, "sf": sf,
+       "isolation": "jvm_per_lane", "queries": queries, "stage": stage, "sf": sf,
        "loadavg_start": ls, "loadavg_end": le}
 with open(out, "w") as fh:
     fh.write(json.dumps(rec) + "\n")

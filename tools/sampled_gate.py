@@ -209,11 +209,7 @@ def main():
     record, n_pass = {}, 0
     for name, lane in sorted(LANES.items()):
         try:
-            cands = [f"{outdir}/{lane['engine_file']}"] if "engine_file" in lane else [
-                f"{outdir}/{name}.parquet",  # VerifySubset layout
-                f"{outdir}/{name}",          # graft.Verify layout
-            ]
-            eng_path = next(p for p in cands if os.path.isdir(p) or os.path.exists(p))
+            eng_path = f"{outdir}/{lane.get('engine_file', name)}"
             con.execute("CREATE OR REPLACE VIEW eng AS "
                         f"SELECT * FROM read_parquet('{eng_path}/*.parquet')")
             sp = norm(con.execute(lane["engine"]).df())
