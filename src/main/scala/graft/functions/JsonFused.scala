@@ -1,19 +1,17 @@
 package graft.functions
 
-import graft.variant.{FastJsonLex, SchemaInfer, VariantMetadata}
+import graft.variant.{FastJsonLex => L, PathStep, SchemaInfer, VariantMetadata}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused forms of `variant_keys` / `variant_size` / `variant_typeof` /
-  * `schema_of_variant[_agg]` over a raw JSON column: one byte walk
-  * instead of parse → metadata build → variant encode → decode.
-  * Installed by [[VariantGetFusionRule]] when the child is
-  * `variant_from_json`; the unfused expressions remain the semantic
-  * reference. Each byte walk reproduces their output exactly
+/** The one fused byte walk behind every `<consumer>(variant_from_json(s))`
+  * form ([[JsonPathExtract]], [[SchemaOfJsonAgg]]): navigate to a path,
+  * hand the value there to a consumer, close out and validate the rest of
+  * the document — no metadata build, no variant encode, no decode. Each
+  * consumer reproduces the unfused expression's output exactly
   * (dictionary-sorted key order included — the parity property tests in
   * FusedPropertySpec pin this). Byte walk, else the codec's parse: a row
   * the walk declines is evaluated by the unfused pipeline itself
@@ -41,14 +39,131 @@ private[functions] object JsonFused {
     case b: Array[Byte] => b
   }
 
-  /** A row a byte walk declined, evaluated by the unfused plan the fused
-    * form replaced: `consumer(variant_from_json(s))`. The parse is the
-    * `VariantFromJson` expression itself — same memo, same error mapping —
-    * so fused and unfused agree by construction on every such row.
+  /** A row the walk declined, evaluated by the unfused plan the fused
+    * form replaced: a chain of unary expressions over
+    * `variant_from_json(s)`. The parse is the `VariantFromJson`
+    * expression itself — same memo, same error mapping — and a SQL NULL
+    * anywhere in the chain is the result, so fused and unfused agree by
+    * construction on every such row.
     */
-  def evalUnfused(consumer: UnaryExpression with GraftUnaryCodegen, bytes: Array[Byte]): Any = {
-    val row = consumer.child.asInstanceOf[VariantFromJson].evalChildValue(bytes)
-    if (row == null) null else consumer.evalChildValue(row)
+  def evalUnfused(unfused: Expression, bytes: Array[Byte]): Any = unfused match {
+    case parse: VariantFromJson => parse.evalChildValue(bytes)
+    case e: UnaryExpression with GraftUnaryCodegen =>
+      val in = evalUnfused(e.child, bytes)
+      if (in == null) null else e.evalChildValue(in)
+  }
+
+  /** The walk: navigate `steps` from the document root, hand the value
+    * there to `read` (with the count of containers around it), close out
+    * the containers the navigation opened and reject trailing bytes. A
+    * path that does not resolve reads SQL NULL, and so does a top-level
+    * JSON null (the parse's SQL NULL). An error `read` raises other than
+    * Miss (a cast error) is thrown only after the rest of the document
+    * validates, so parse errors outrank it as in the unfused plan. Miss
+    * on anything the lexer declines, empty input and wildcards included.
+    */
+  def walk(bytes: Array[Byte], steps: Array[PathStep], read: (L.Cursor, Int) => Any): Any = {
+    val c = new L.Cursor(bytes, 0, bytes.length)
+    c.skipWs()
+    val isObj = new Array[Boolean](steps.length) // the containers opened
+    var nOpen = 0
+    var found = true
+    var pending = true // the cursor sits on an unconsumed value
+    while (found && nOpen < steps.length) {
+      val depth = nOpen
+      def skip(): Boolean = { L.skipValue(c, depth + 1); false }
+      val hit: Visit = steps(depth) match {
+        case k: PathStep.Key =>
+          if ((c.peek & 0xff) != '{') null
+          else (_, off, len) => L.sliceEq(c.b, off, len, k.utf8) || skip()
+        case PathStep.Index(idx) =>
+          if ((c.peek & 0xff) != '[') null else (i, _, _) => i == idx || skip()
+        case _ => throw L.Miss // wildcards: the unfused plan raises
+      }
+      if (hit == null) found = false // a step into a scalar
+      else if (members(c, depth, hit) >= 0) { found = false; pending = false }
+      else { isObj(depth) = steps(depth).isInstanceOf[PathStep.Key]; nOpen += 1 }
+    }
+    var err: Exception = null
+    val out =
+      if (!found) { if (pending) L.skipValue(c, nOpen); null }
+      else if (steps.isEmpty && (c.peek & 0xff) == 'n') { L.literal(c, "null"); null }
+      else try read(c, nOpen) catch { case e: Exception if e ne L.Miss => err = e; null }
+    var lvl = nOpen - 1
+    while (lvl >= 0) {
+      c.skipWs()
+      var closed = false
+      while (!closed) {
+        (c.peek & 0xff) match {
+          case ',' =>
+            c.i += 1
+            c.skipWs()
+            if (isObj(lvl)) {
+              c.expect('"'); L.skipName(c)
+              c.skipWs(); c.expect(':'); c.skipWs()
+            }
+            L.skipValue(c, lvl + 1)
+            c.skipWs()
+          case '}' if isObj(lvl) => c.i += 1; closed = true
+          case ']' if !isObj(lvl) => c.i += 1; closed = true
+          case _ => throw L.Miss
+        }
+      }
+      lvl -= 1
+    }
+    c.skipWs()
+    if (c.i != c.end) throw L.Miss // trailing bytes: the unfused parse's error
+    if (err != null) throw err
+    out
+  }
+
+  /** A member visitor for [[members]] (a SAM type, so its Int
+    * arguments are not boxed per call). */
+  trait Visit { def apply(index: Int, keyOff: Int, keyLen: Int): Boolean }
+
+  /** Walk the members of the object or array at the cursor, `depth`
+    * containers around it, and return their count. `visit(index, keyOff,
+    * keyLen)` sees each member with the cursor on its value (an element
+    * has no key: −1, −1) and either consumes the value and returns false,
+    * or returns true to stop there with the container still open; then
+    * the result is −1. With no `visit` each value is skipped; with one,
+    * an escaped key misses.
+    */
+  def members(c: L.Cursor, depth: Int, visit: Visit): Int = {
+    val close = if ((c.peek & 0xff) == '{') '}' else ']'
+    L.openContainer(depth)
+    c.i += 1
+    c.skipWs()
+    var n = 0
+    var more = !(c.i < c.end && c.b(c.i) == close)
+    if (!more) c.i += 1
+    while (more) {
+      c.skipWs()
+      var kOff, kLen = -1
+      if (close == '}') {
+        c.expect('"')
+        if (visit == null) L.skipName(c) // no visitor reads the key: escapes are fine
+        else {
+          val end = L.scanSimpleString(c)
+          if (end < 0) throw L.Miss // escaped key: the unfused plan
+          kOff = c.i
+          kLen = end - c.i
+          L.checkName(kLen)
+          c.i = end + 1
+        }
+        c.skipWs(); c.expect(':'); c.skipWs()
+      }
+      if (visit == null) L.skipValue(c, depth + 1)
+      else if (visit(n, kOff, kLen)) return -1
+      n += 1
+      c.skipWs()
+      (c.peek & 0xff) match {
+        case ',' => c.i += 1
+        case x if x == close => c.i += 1; more = false
+        case _ => throw L.Miss
+      }
+    }
+    n
   }
 
   /** Schema-lattice inference straight off the bytes — the fused
@@ -59,8 +174,7 @@ private[functions] object JsonFused {
     * → SDouble; duplicate object keys overwrite in arrival order, which
     * is exactly what `infer` produces over the encoding (TreeMap insert,
     * last wins). Strings only need validation, never decoding. */
-  def fastInferSchema(c: graft.variant.FastJsonLex.Cursor, depth: Int): SchemaInfer.SType = {
-    import graft.variant.{FastJsonLex => L}
+  def fastInferSchema(c: L.Cursor, depth: Int): SchemaInfer.SType = {
     import SchemaInfer._
     val b = c.b
     (c.peek & 0xff) match {
@@ -69,54 +183,17 @@ private[functions] object JsonFused {
       case 'f' => L.literal(c, "false"); SBool
       case '"' => c.i += 1; L.skipString(c); SString
       case '[' =>
-        L.openContainer(depth)
-        c.i += 1
         var elem: SType = SNull
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == ']') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            elem = merge(elem, fastInferSchema(c, depth + 1))
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case ']' => c.i += 1; more = false
-              case _ => throw L.Miss
-            }
-          }
-        }
+        members(c, depth, (_, _, _) => { elem = merge(elem, fastInferSchema(c, depth + 1)); false })
         SArray(elem)
       case '{' =>
-        L.openContainer(depth)
-        c.i += 1
         var fields = scala.collection.immutable.TreeMap.empty[String, SType]
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == '}') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            c.expect('"')
-            val close = L.scanSimpleString(c)
-            if (close < 0) throw L.Miss // escaped key: unfused pipeline
-            L.checkName(close - c.i)
-            val key = new String(b, c.i, close - c.i,
-              java.nio.charset.StandardCharsets.UTF_8)
-            c.i = close + 1
-            c.skipWs()
-            c.expect(':')
-            c.skipWs()
-            fields += (key -> fastInferSchema(c, depth + 1)) // last dup wins
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case '}' => c.i += 1; more = false
-              case _ => throw L.Miss
-            }
-          }
-        }
+        members(c, depth, (_, off, len) => {
+          // last dup wins
+          fields += (new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8) ->
+            fastInferSchema(c, depth + 1))
+          false
+        })
         SObject(fields)
       case x if x == '-' || (x >= '0' && x <= '9') =>
         val start = c.i
@@ -126,58 +203,14 @@ private[functions] object JsonFused {
       case _ => throw L.Miss
     }
   }
-
-  /** Whole-document byte-level schema inference: the SType, or null for
-    * a top-level JSON null; Miss on anything doubtful. */
-  def fastSchemaOfDoc(bytes: Array[Byte]): SchemaInfer.SType = {
-    import graft.variant.{FastJsonLex => L}
-    val c = new L.Cursor(bytes, 0, bytes.length)
-    c.skipWs()
-    if (c.i >= c.end) throw L.Miss
-    val t =
-      if ((c.peek & 0xff) == 'n') { L.literal(c, "null"); null }
-      else fastInferSchema(c, 0)
-    c.skipWs()
-    if (c.i != c.end) throw L.Miss
-    t
-  }
-}
-
-/** `schema_of_variant(variant_from_json(s))` fused: render the inferred
-  * type straight off the bytes — no metadata build, no encode. Same
-  * walker as the fused aggregate, so lattice semantics are shared.
-  */
-case class JsonSchemaOf(child: Expression, parseFailOnError: Boolean)
-    extends UnaryExpression with GraftUnaryCodegen {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_schema_of_fused"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"json_schema_of expects string/binary, got: ${other.simpleString}")
-  }
-
-  @transient private lazy val unfused = SchemaOfVariant(VariantFromJson(child, parseFailOnError))
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = JsonFused.toBytes(input)
-    try {
-      val t = JsonFused.fastSchemaOfDoc(bytes)
-      if (t == null) null else UTF8String.fromString(t.render)
-    } catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** `schema_of_variant_agg(variant_from_json(s))` fused: the lattice
-  * merge runs directly on each row's bytes — no metadata build, no
-  * variant encode, no decode walk. Buffer, merge, and wire form are
-  * shared with [[SchemaOfVariantAgg]] (same `SchemaInfer` lattice), so
-  * partial aggregation and the serialized-schema consumers
+  * merge runs directly on each row's bytes through the one fused walk
+  * (root path, [[JsonFused.fastInferSchema]] as its consumer) — no
+  * metadata build, no variant encode, no decode walk. Buffer, merge, and
+  * wire form are shared with [[SchemaOfVariantAgg]] (same `SchemaInfer`
+  * lattice), so partial aggregation and the serialized-schema consumers
   * (`Shred.inferFields`) behave identically. A row the byte walk
   * declines goes through the unfused aggregate's `update`, so rows that
   * fail to parse follow its rule: with `parseFailOnError=false` the row
@@ -189,9 +222,8 @@ case class SchemaOfJsonAgg(
     renderOutput: Boolean = true,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[graft.variant.SchemaInfer.SType]
+    extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[SchemaInfer.SType]
     with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
-  import graft.variant.SchemaInfer
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = false
@@ -211,9 +243,11 @@ case class SchemaOfJsonAgg(
     val in = child.eval(input)
     if (in == null) return buffer
     try {
-      val t = JsonFused.fastSchemaOfDoc(JsonFused.toBytes(in))
-      if (t == null) buffer else SchemaInfer.merge(buffer, t)
-    } catch { case FastJsonLex.Miss => unfused.update(buffer, input) }
+      JsonFused.walk(JsonFused.toBytes(in), Array.empty, JsonFused.fastInferSchema) match {
+        case null => buffer
+        case t: SchemaInfer.SType => SchemaInfer.merge(buffer, t)
+      }
+    } catch { case L.Miss => unfused.update(buffer, input) }
   }
 
   override def merge(a: SchemaInfer.SType, b: SchemaInfer.SType): SchemaInfer.SType =
@@ -233,220 +267,6 @@ case class SchemaOfJsonAgg(
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): SchemaOfJsonAgg =
     copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `variant_typeof(variant_from_json(s))` fused: the root's type name
-  * from the FIRST byte, the remainder only validated — no encode. Type
-  * names replicate the unfused path exactly, including the
-  * narrowest-int-encoding names and big-int → decimal(38,0).
-  */
-case class JsonTypeOf(child: Expression, parseFailOnError: Boolean)
-    extends UnaryExpression with GraftUnaryCodegen {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_typeof_fused"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"json_typeof expects string/binary, got: ${other.simpleString}")
-  }
-
-  @transient private lazy val unfused = VariantTypeOf(VariantFromJson(child, parseFailOnError))
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = JsonFused.toBytes(input)
-    try fastTypeOf(bytes)
-    catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
-  }
-
-  /** Byte-level root-type read: classify off the first byte, validate
-    * the whole document with the lexer, mirror the narrowest-int names
-    * and name a scale-0 decimal beyond 63 bits `decimal(38,0)`. */
-  private def fastTypeOf(bytes: Array[Byte]): Any = {
-    import graft.variant.{FastJsonLex => L}
-    val c = new L.Cursor(bytes, 0, bytes.length)
-    c.skipWs()
-    if (c.i >= c.end) throw L.Miss // empty: the unfused parse's error
-    val name: String = (c.peek & 0xff) match {
-      case 'n' => L.literal(c, "null"); null // top-level null → SQL NULL
-      case '{' => L.skipValue(c); "object"
-      case '[' => L.skipValue(c); "array"
-      case '"' => c.i += 1; L.skipString(c); "string"
-      case 't' => L.literal(c, "true"); "boolean"
-      case 'f' => L.literal(c, "false"); "boolean"
-      case x if x == '-' || (x >= '0' && x <= '9') =>
-        val start = c.i
-        if (!L.scanNumber(c)) "double"
-        else if (L.integer(c, start) != null) "decimal(38,0)"
-        else {
-          val v = c.longValue
-          // names of the narrowest-int encodings the writer picks
-          if (v >= Byte.MinValue && v <= Byte.MaxValue) "tinyint"
-          else if (v >= Short.MinValue && v <= Short.MaxValue) "smallint"
-          else if (v >= Int.MinValue && v <= Int.MaxValue) "int"
-          else "bigint"
-        }
-      case _ => throw L.Miss
-    }
-    c.skipWs()
-    if (c.i != c.end) throw L.Miss // trailing: the unfused parse's error
-    if (name == null) null else UTF8String.fromString(name)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `variant_keys(variant_from_json(s))` fused: root-object key names in
-  * dictionary (sorted UTF-8) order; NULL for non-objects and top-level
-  * JSON null.
-  */
-case class JsonKeys(child: Expression, parseFailOnError: Boolean)
-    extends UnaryExpression with GraftUnaryCodegen {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_keys_fused"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"json_keys expects string/binary, got: ${other.simpleString}")
-  }
-
-  @transient private lazy val unfused = VariantKeys(VariantFromJson(child, parseFailOnError))
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = JsonFused.toBytes(input)
-    try fastKeys(bytes)
-    catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
-  }
-
-  /** Byte-level keys read: collect escape-free root keys, skip values
-    * with full validation, sort like the dictionary would. Any escaped
-    * key misses to the unfused pipeline. */
-  private def fastKeys(bytes: Array[Byte]): Any = {
-    import graft.variant.{FastJsonLex => L}
-    val c = new L.Cursor(bytes, 0, bytes.length)
-    c.skipWs()
-    if (c.i >= c.end) throw L.Miss
-    if ((c.peek & 0xff) != '{') {
-      // non-object root (incl. top-level null): validate whole doc → NULL
-      if ((c.peek & 0xff) == 'n') L.literal(c, "null") else L.skipValue(c)
-      c.skipWs()
-      if (c.i != c.end) throw L.Miss
-      return null
-    }
-    c.i += 1
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    c.skipWs()
-    if (c.i < c.end && c.b(c.i) == '}') c.i += 1
-    else {
-      var more = true
-      while (more) {
-        c.skipWs()
-        c.expect('"')
-        val close = L.scanSimpleString(c)
-        if (close < 0) throw L.Miss // escaped key: unfused pipeline
-        L.checkName(close - c.i)
-        names += new String(c.b, c.i, close - c.i,
-          java.nio.charset.StandardCharsets.UTF_8)
-        c.i = close + 1
-        c.skipWs()
-        c.expect(':')
-        c.skipWs()
-        L.skipValue(c, 1) // inside the root object
-        c.skipWs()
-        (c.peek & 0xff) match {
-          case ',' => c.i += 1
-          case '}' => c.i += 1; more = false
-          case _ => throw L.Miss
-        }
-      }
-    }
-    c.skipWs()
-    if (c.i != c.end) throw L.Miss
-    val arr = names.toArray
-    val order = JsonFused.sortedOrder(arr)
-    val out = new Array[Any](arr.length)
-    var i = 0
-    while (i < arr.length) { out(i) = UTF8String.fromString(arr(order(i))); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `variant_size(variant_from_json(s))` fused: field count for root
-  * objects, element count for root arrays, NULL for scalars/JSON null.
-  */
-case class JsonSize(child: Expression, parseFailOnError: Boolean)
-    extends UnaryExpression with GraftUnaryCodegen {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_size_fused"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"json_size expects string/binary, got: ${other.simpleString}")
-  }
-
-  @transient private lazy val unfused = VariantSize(VariantFromJson(child, parseFailOnError))
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = JsonFused.toBytes(input)
-    try fastSize(bytes)
-    catch { case FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
-  }
-
-  /** Byte-level size read: count root members, skip their values with
-    * full validation; scalars validate → NULL. */
-  private def fastSize(bytes: Array[Byte]): Any = {
-    import graft.variant.{FastJsonLex => L}
-    val c = new L.Cursor(bytes, 0, bytes.length)
-    c.skipWs()
-    if (c.i >= c.end) throw L.Miss
-    val first = c.peek & 0xff
-    val out: Any =
-      if (first == '{' || first == '[') {
-        val isObj = first == '{'
-        c.i += 1
-        var n = 0
-        c.skipWs()
-        if (c.i < c.end && (c.b(c.i) & 0xff) == (if (isObj) '}' else ']')) c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            if (isObj) {
-              c.expect('"'); L.skipName(c)
-              c.skipWs(); c.expect(':'); c.skipWs()
-            }
-            L.skipValue(c, 1) // inside the root container
-            n += 1
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case '}' if isObj => c.i += 1; more = false
-              case ']' if !isObj => c.i += 1; more = false
-              case _ => throw L.Miss
-            }
-          }
-        }
-        n
-      } else {
-        if (first == 'n') L.literal(c, "null") else L.skipValue(c)
-        null
-      }
-    c.skipWs()
-    if (c.i != c.end) throw L.Miss
-    out
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

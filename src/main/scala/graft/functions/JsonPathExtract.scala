@@ -1,55 +1,52 @@
 package graft.functions
 
-import graft.variant.{PathStep, VariantJsonCodec, VariantPath}
+import graft.variant.{FastJsonLex => L, PathStep, VariantJsonCodec, VariantPath}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused `variant_get(variant_from_json(s), path, primitiveType)`:
-  * a single byte walk that navigates the JSON text directly to the path
-  * and casts the scalar — no metadata dictionary, no variant buffer, no
+/** The one fused form of `<consumer>(variant_from_json(s))`: a single
+  * [[JsonFused.walk]] navigates the JSON text to `path` and hands the
+  * value there to `consumer` — a scalar cast, keys, size, typeof or
+  * schema — with no metadata dictionary, no variant buffer and no
   * intermediate struct. Installed by [[VariantGetFusionRule]] (the
-  * optimization sketched in SURVEY §4.2.2) only for scalar target types
-  * whose cast rules the walk reproduces exactly. A row the walk declines
-  * is evaluated by the unfused pipeline itself, which stays the semantic
-  * reference.
+  * optimization sketched in SURVEY §4.2.2). A row the walk declines is
+  * evaluated by the unfused plan itself, which stays the semantic
+  * reference: `consumer` over `variant_get(parse, path)`, or over the
+  * parse itself at the root path `$`.
   */
 case class JsonPathExtract(
     child: Expression,
     path: String,
-    targetType: DataType,
-    parseFailOnError: Boolean,
-    castFailOnError: Boolean)
+    consumer: JsonConsumer,
+    parseFailOnError: Boolean)
     extends UnaryExpression with GraftUnaryCodegen {
 
   @transient private lazy val steps: Array[PathStep] = VariantPath.parse(path)
 
-  override def dataType: DataType = targetType
+  override def dataType: DataType = consumer.dataType
   override def nullable: Boolean = true
-  override def prettyName: String = "json_path_extract"
+  override def prettyName: String = consumer.prettyName
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"json_path_extract expects string/binary, got: ${other.simpleString}")
+      s"$prettyName expects string/binary, got: ${other.simpleString}")
   }
 
   /** Memo identity: two Catalyst copies of the same logical extraction
     * (e.g. the Filter and Project copies created by predicate pushdown)
     * share results iff every semantic field matches.
     */
-  @transient private lazy val memoKey =
-    (path, targetType, parseFailOnError, castFailOnError)
+  @transient private lazy val memoKey = (path, consumer, parseFailOnError)
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes: Array[Byte] = input match {
-      case s: UTF8String => s.getBytes
-      case b: Array[Byte] => b
-    }
+    val bytes = JsonFused.toBytes(input)
     // Same pushdown-duplication story as VariantFromJson.lastParse: the
     // Filter and Project copies of this expression evaluate back-to-back
     // on the same thread per row, so a thread-local last-input memo
@@ -67,272 +64,21 @@ case class JsonPathExtract(
         return if (r eq JsonPathExtract.NULL_RESULT) null else r
       }
     }
-    val result = evalBytes(bytes)
+    val result =
+      try JsonFused.walk(bytes, steps, read)
+      catch { case L.Miss => JsonFused.evalUnfused(unfused, bytes) }
     memo(0) = bytes // stored by reference: see immutability note above
     memo(1) = memoKey
     memo(2) = if (result == null) JsonPathExtract.NULL_RESULT else result.asInstanceOf[AnyRef]
     result
   }
 
+  @transient private lazy val read: (L.Cursor, Int) => Any = consumer.read
+
   /** The unfused plan this expression replaced: it evaluates every row
     * the byte walk declines. */
   @transient private lazy val unfused =
-    VariantGet(VariantFromJson(child, parseFailOnError), path, targetType, castFailOnError)
-
-  // Byte-level navigation (FastJsonLex): skip sibling values without
-  // tokenizing them, cast the leaf straight off the bytes, and validate
-  // the document remainder. Parse errors outrank cast errors because any
-  // parse anomaly throws Miss and the unfused pipeline re-runs the row
-  // and owns the error. Misses: escaped keys, integers ≥ 2^127, any
-  // malformed input.
-  private def evalBytes(bytes: Array[Byte]): Any =
-    try fastEvalBytes(bytes)
-    catch { case graft.variant.FastJsonLex.Miss => JsonFused.evalUnfused(unfused, bytes) }
-
-  private def fastEvalBytes(bytes: Array[Byte]): Any = {
-    import graft.variant.{FastJsonLex => L}
-    val c = new L.Cursor(bytes, 0, bytes.length)
-    c.skipWs()
-    if (c.i >= c.end) throw L.Miss // empty input: the unfused parse's error
-    // navigate; track the containers the path has opened (true = object).
-    // Every skip passes the count of containers enclosing the skipped
-    // value, so the lexer's depth bound is the whole document's.
-    val open = new Array[Boolean](steps.length)
-    var nOpen = 0
-    var si = 0
-    var found = true
-    var pendingValue = true // cursor sits ON an unconsumed value
-    while (found && si < steps.length) {
-      steps(si) match {
-        case k: PathStep.Key =>
-          if ((c.peek & 0xff) != '{') found = false // pendingValue stays true
-          else {
-            c.i += 1
-            c.skipWs()
-            if (c.i < c.end && c.b(c.i) == '}') {
-              c.i += 1; found = false; pendingValue = false
-            } else {
-              var matched = false
-              var more = true
-              while (more && !matched) {
-                c.skipWs()
-                c.expect('"')
-                val close = L.scanSimpleString(c)
-                if (close < 0) throw L.Miss // escaped key: unfused pipeline
-                val kOff = c.i
-                val kLen = close - c.i
-                L.checkName(kLen)
-                c.i = close + 1
-                c.skipWs()
-                c.expect(':')
-                c.skipWs()
-                if (L.sliceEq(c.b, kOff, kLen, k.utf8)) matched = true
-                else {
-                  L.skipValue(c, nOpen + 1)
-                  c.skipWs()
-                  (c.peek & 0xff) match {
-                    case ',' => c.i += 1
-                    case '}' => c.i += 1; more = false
-                    case _ => throw L.Miss
-                  }
-                }
-              }
-              if (matched) { open(nOpen) = true; nOpen += 1 }
-              else { found = false; pendingValue = false }
-            }
-          }
-        case PathStep.Index(idx) =>
-          if ((c.peek & 0xff) != '[' || idx < 0) found = false
-          else {
-            c.i += 1
-            c.skipWs()
-            if (c.i < c.end && c.b(c.i) == ']') {
-              c.i += 1; found = false; pendingValue = false
-            } else {
-              var i = 0
-              var matched = false
-              var more = true
-              while (more && !matched) {
-                c.skipWs()
-                if (i == idx) matched = true
-                else {
-                  L.skipValue(c, nOpen + 1)
-                  c.skipWs()
-                  (c.peek & 0xff) match {
-                    case ',' => c.i += 1; i += 1
-                    case ']' => c.i += 1; more = false
-                    case _ => throw L.Miss
-                  }
-                }
-              }
-              if (matched) { open(nOpen) = false; nOpen += 1 }
-              else { found = false; pendingValue = false }
-            }
-          }
-        case _ => throw L.Miss // wildcards: never fused into this expression
-      }
-      if (found) si += 1
-    }
-    // consume/cast the value at the cursor; cast-class errors are thrown
-    // only AFTER the rest of the document validates (unfused parity)
-    var castErr: Throwable = null
-    val out =
-      if (!found) { if (pendingValue) L.skipValue(c, nOpen); null }
-      else {
-        try fastCastValue(c, nOpen)
-        catch {
-          case e: Exception if (e ne L.Miss) && !castFailOnError => null
-          case e: Exception if e ne L.Miss => castErr = e; null
-        }
-      }
-    // close out every container the navigation opened, validating
-    var lvl = nOpen - 1
-    while (lvl >= 0) {
-      c.skipWs()
-      var closed = false
-      while (!closed) {
-        (c.peek & 0xff) match {
-          case ',' =>
-            c.i += 1
-            c.skipWs()
-            if (open(lvl)) {
-              c.expect('"'); L.skipName(c)
-              c.skipWs(); c.expect(':'); c.skipWs()
-            }
-            L.skipValue(c, lvl + 1)
-            c.skipWs()
-          case '}' if open(lvl) => c.i += 1; closed = true
-          case ']' if !open(lvl) => c.i += 1; closed = true
-          case _ => throw L.Miss
-        }
-      }
-      lvl -= 1
-    }
-    c.skipWs()
-    if (c.i != c.end) throw L.Miss // trailing garbage: the unfused parse's error
-    if (castErr != null) throw castErr
-    out
-  }
-
-  /** Cast the JSON value at the cursor to `targetType`, consuming it
-    * FULLY before any cast-class error is thrown (so the caller can
-    * always validate the document remainder). Cast rules mirror
-    * `VariantExtract.cast` on the value the unfused parse would encode.
-    * `depth` counts the containers enclosing the value. */
-  private def fastCastValue(c: graft.variant.FastJsonLex.Cursor, depth: Int): Any = {
-    import graft.variant.{FastJsonLex => L}
-    val b = c.b
-    (c.peek & 0xff) match {
-      case 'n' => L.literal(c, "null"); null
-      case 't' | 'f' =>
-        val v = (c.peek & 0xff) == 't'
-        L.literal(c, if (v) "true" else "false")
-        targetType match {
-          case BooleanType => v
-          case LongType => if (v) 1L else 0L
-          case IntegerType => if (v) 1 else 0
-          case _: StringType => UTF8String.fromString(if (v) "true" else "false")
-          case _ => mismatch("boolean")
-        }
-      case '"' =>
-        c.i += 1
-        val close = L.scanSimpleString(c)
-        if (close >= 0) {
-          val off = c.i
-          val len = close - c.i
-          c.i = close + 1
-          targetType match {
-            case _: StringType => UTF8String.fromBytes(b, off, len)
-            case _ => castStringTo(new String(b, off, len,
-              java.nio.charset.StandardCharsets.UTF_8))
-          }
-        } else {
-          val scratch = new graft.variant.ByteBuf(32)
-          L.unescapeString(c, scratch)
-          targetType match {
-            case _: StringType =>
-              UTF8String.fromBytes(scratch.result(), 0, scratch.length)
-            case _ => castStringTo(new String(scratch.rawBytes, 0, scratch.length,
-              java.nio.charset.StandardCharsets.UTF_8))
-          }
-        }
-      case '{' | '[' =>
-        val start = c.i
-        L.skipValue(c, depth) // consume BEFORE the cast error
-        targetType match {
-          // canonical compact JSON, as the unfused asString prints it:
-          // encode the slice with the same codec and print it back
-          case _: StringType =>
-            val (m, v) =
-              try VariantJsonCodec.fromJsonBytes(b, start, c.i - start)
-              catch { case _: Exception => throw L.Miss }
-            UTF8String.fromString(VariantJsonCodec.toJsonString(m, v))
-          case _ => mismatch(if (b(start) == '{') "object" else "array")
-        }
-      case x if x == '-' || (x >= '0' && x <= '9') =>
-        val start = c.i
-        if (L.scanNumber(c)) {
-          val big = L.integer(c, start)
-          if (big == null) {
-            val v = c.longValue
-            targetType match {
-              case LongType => v
-              case IntegerType => Math.toIntExact(v)
-              case DoubleType => v.toDouble
-              case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(v), d)
-              case _: StringType => UTF8String.fromString(java.lang.Long.toString(v))
-              case _ => mismatch("bigint")
-            }
-          } else {
-            // a scale-0 decimal beyond 63 bits, as the unfused parse stores it
-            val bd = new java.math.BigDecimal(big)
-            targetType match {
-              case LongType => bd.longValueExact() // always throws, like the unfused cast
-              case IntegerType => Math.toIntExact(bd.longValueExact())
-              case DoubleType => bd.doubleValue()
-              case d: DecimalType => toDecimal(bd, d)
-              case _: StringType => UTF8String.fromString(big.toString)
-              case _ => mismatch("bigint")
-            }
-          }
-        } else {
-          val dv = java.lang.Double.parseDouble(new String(b, start, c.i - start,
-            java.nio.charset.StandardCharsets.US_ASCII))
-          targetType match {
-            case DoubleType => dv
-            // truncate-toward-zero, matching VariantExtract.cast;
-            // out-of-range/NaN throws instead of saturating (builtin
-            // parity — lenient mode maps the throw to NULL)
-            case LongType => VariantExtract.doubleToLongExact(dv)
-            case IntegerType => Math.toIntExact(VariantExtract.doubleToLongExact(dv))
-            case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(dv), d)
-            case _: StringType => UTF8String.fromString(java.lang.Double.toString(dv))
-            case _ => mismatch("double")
-          }
-        }
-      case _ => throw L.Miss
-    }
-  }
-
-  /** A JSON string cast to a non-string target, as `VariantExtract.cast`
-    * casts a string variant. */
-  private def castStringTo(s: String): Any = targetType match {
-    case LongType => s.trim.toLong
-    case IntegerType => Math.toIntExact(s.trim.toLong)
-    case DoubleType => s.trim.toDouble
-    case BooleanType => s.trim.toBoolean
-    case d: DecimalType => toDecimal(new java.math.BigDecimal(s.trim), d)
-    case _ => mismatch("string")
-  }
-
-  private def toDecimal(bd: java.math.BigDecimal, d: DecimalType): Any = {
-    val dec = org.apache.spark.sql.types.Decimal(bd)
-    if (dec.changePrecision(d.precision, d.scale)) dec else mismatch("decimal")
-  }
-
-  private def mismatch(from: String): Any =
-    throw new IllegalArgumentException(
-      s"Cannot cast variant $from to ${targetType.simpleString}")
+    consumer.unfused(VariantFromJson(child, parseFailOnError), path)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -348,9 +94,25 @@ object JsonPathExtract {
     */
   private val lastExtract: ThreadLocal[Array[AnyRef]] =
     ThreadLocal.withInitial(() => new Array[AnyRef](3))
+}
 
-  /** Targets whose cast semantics the fused path replicates exactly.
-    * String targets: scalar values print the same text as
+/** What [[JsonPathExtract]] does with the JSON value at its path: `read`
+  * consumes that value fully (`depth` = the containers around it) and
+  * returns the unfused consumer's result; `unfused` builds that consumer
+  * over a parse. Each keeps its form's plan name. Serializable itself,
+  * not only through its case subclasses: expressions ship to executors,
+  * and Java deserialization needs the first non-serializable superclass
+  * to have a no-argument constructor.
+  */
+sealed abstract class JsonConsumer(val prettyName: String, val dataType: DataType)
+    extends Serializable {
+  def read(c: L.Cursor, depth: Int): Any
+  def unfused(parse: Expression, path: String): Expression
+}
+
+object JsonConsumer {
+  /** Targets whose cast semantics [[Cast]] replicates exactly. String
+    * targets: scalar values print the same text as
     * VariantExtract.asString; object/array subtrees round-trip through
     * the codec's canonical printer. Variant/binary targets keep the
     * unfused pipeline.
@@ -360,48 +122,267 @@ object JsonPathExtract {
     case _: StringType => true
     case _ => false
   }
+
+  /** A consumer of the variant value at the path: `over(variant_get(parse,
+    * path))`, or `over(parse)` at the root. A nested JSON null is a
+    * variant null here (typeof `"null"`); a top-level one is the parse's
+    * SQL NULL, which the walk returns without calling `read`.
+    */
+  sealed abstract class OfVariant(prettyName: String, dataType: DataType)
+      extends JsonConsumer(prettyName, dataType) {
+    protected def over(v: Expression): Expression
+    def unfused(parse: Expression, path: String): Expression =
+      over(if (path == "$") parse else VariantGet(parse, path, VariantSchema.TYPE))
+  }
+
+  /** `variant_keys`: object key names in dictionary (sorted UTF-8)
+    * order; NULL for non-objects. */
+  case object Keys extends OfVariant("json_keys_fused", ArrayType(StringType, containsNull = false)) {
+    protected def over(v: Expression): Expression = VariantKeys(v)
+    def read(c: L.Cursor, depth: Int): Any =
+      if ((c.peek & 0xff) != '{') { L.skipValue(c, depth); null }
+      else {
+        val names = scala.collection.mutable.ArrayBuffer.empty[String]
+        JsonFused.members(c, depth, (_, off, len) => {
+          names += new String(c.b, off, len, java.nio.charset.StandardCharsets.UTF_8)
+          L.skipValue(c, depth + 1)
+          false
+        })
+        val arr = names.toArray
+        val order = JsonFused.sortedOrder(arr)
+        new GenericArrayData(Array.tabulate[Any](arr.length)(i => UTF8String.fromString(arr(order(i)))))
+      }
+  }
+
+  /** `variant_size`: field count of an object, element count of an
+    * array, NULL for scalars. */
+  case object Size extends OfVariant("json_size_fused", IntegerType) {
+    protected def over(v: Expression): Expression = VariantSize(v)
+    def read(c: L.Cursor, depth: Int): Any = (c.peek & 0xff) match {
+      case '{' | '[' => JsonFused.members(c, depth, null)
+      case _ => L.skipValue(c, depth); null
+    }
+  }
+
+  /** `variant_typeof`: the type name from the first byte, the value only
+    * validated. Names replicate the unfused path exactly, including the
+    * narrowest-int-encoding names and big-int → decimal(38,0). */
+  case object TypeOf extends OfVariant("json_typeof_fused", StringType) {
+    protected def over(v: Expression): Expression = VariantTypeOf(v)
+    def read(c: L.Cursor, depth: Int): Any = UTF8String.fromString((c.peek & 0xff) match {
+      case 'n' => L.literal(c, "null"); "null"
+      case '{' => L.skipValue(c, depth); "object"
+      case '[' => L.skipValue(c, depth); "array"
+      case '"' => c.i += 1; L.skipString(c); "string"
+      case 't' => L.literal(c, "true"); "boolean"
+      case 'f' => L.literal(c, "false"); "boolean"
+      case x if x == '-' || (x >= '0' && x <= '9') =>
+        val start = c.i
+        if (!L.scanNumber(c)) "double"
+        else if (L.integer(c, start) != null) "decimal(38,0)"
+        else {
+          val v = c.longValue
+          // names of the narrowest-int encodings the writer picks
+          if (v >= Byte.MinValue && v <= Byte.MaxValue) "tinyint"
+          else if (v >= Short.MinValue && v <= Short.MaxValue) "smallint"
+          else if (v >= Int.MinValue && v <= Int.MaxValue) "int"
+          else "bigint"
+        }
+      case _ => throw L.Miss
+    })
+  }
+
+  /** `schema_of_variant`: the rendered schema lattice of the value, by
+    * the walker the fused aggregate uses. */
+  case object SchemaOf extends OfVariant("json_schema_of_fused", StringType) {
+    protected def over(v: Expression): Expression = SchemaOfVariant(v)
+    def read(c: L.Cursor, depth: Int): Any =
+      UTF8String.fromString(JsonFused.fastInferSchema(c, depth).render)
+  }
+
+  /** `variant_get(parse, path, targetType)` for a [[fusableTarget]]: the
+    * scalar cast straight off the bytes. */
+  final case class Cast(targetType: DataType, castFailOnError: Boolean)
+      extends JsonConsumer("json_path_extract", targetType) {
+    def unfused(parse: Expression, path: String): Expression =
+      VariantGet(parse, path, targetType, castFailOnError)
+
+    def read(c: L.Cursor, depth: Int): Any =
+      try castValue(c, depth)
+      catch { case e: Exception if (e ne L.Miss) && !castFailOnError => null }
+
+    /** Cast the JSON value at the cursor to `targetType`, consuming it
+      * FULLY before any cast-class error is thrown (so the walk can
+      * always validate the document remainder). Cast rules mirror
+      * `VariantExtract.cast` on the value the unfused parse would encode.
+      */
+    private def castValue(c: L.Cursor, depth: Int): Any = {
+      val b = c.b
+      (c.peek & 0xff) match {
+        case 'n' => L.literal(c, "null"); null
+        case 't' | 'f' =>
+          val v = (c.peek & 0xff) == 't'
+          L.literal(c, if (v) "true" else "false")
+          targetType match {
+            case BooleanType => v
+            case LongType => if (v) 1L else 0L
+            case IntegerType => if (v) 1 else 0
+            case _: StringType => UTF8String.fromString(if (v) "true" else "false")
+            case _ => mismatch("boolean")
+          }
+        case '"' =>
+          c.i += 1
+          val close = L.scanSimpleString(c)
+          if (close >= 0) {
+            val off = c.i
+            val len = close - c.i
+            c.i = close + 1
+            targetType match {
+              case _: StringType => UTF8String.fromBytes(b, off, len)
+              case _ => castStringTo(new String(b, off, len,
+                java.nio.charset.StandardCharsets.UTF_8))
+            }
+          } else {
+            val scratch = new graft.variant.ByteBuf(32)
+            L.unescapeString(c, scratch)
+            targetType match {
+              case _: StringType =>
+                UTF8String.fromBytes(scratch.result(), 0, scratch.length)
+              case _ => castStringTo(new String(scratch.rawBytes, 0, scratch.length,
+                java.nio.charset.StandardCharsets.UTF_8))
+            }
+          }
+        case '{' | '[' =>
+          val start = c.i
+          L.skipValue(c, depth) // consume BEFORE the cast error
+          targetType match {
+            // canonical compact JSON, as the unfused asString prints it:
+            // encode the slice with the same codec and print it back
+            case _: StringType =>
+              val (m, v) =
+                try VariantJsonCodec.fromJsonBytes(b, start, c.i - start)
+                catch { case _: Exception => throw L.Miss }
+              UTF8String.fromString(VariantJsonCodec.toJsonString(m, v))
+            case _ => mismatch(if (b(start) == '{') "object" else "array")
+          }
+        case x if x == '-' || (x >= '0' && x <= '9') =>
+          val start = c.i
+          if (L.scanNumber(c)) {
+            val big = L.integer(c, start)
+            if (big == null) {
+              val v = c.longValue
+              targetType match {
+                case LongType => v
+                case IntegerType => Math.toIntExact(v)
+                case DoubleType => v.toDouble
+                case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(v), d)
+                case _: StringType => UTF8String.fromString(java.lang.Long.toString(v))
+                case _ => mismatch("bigint")
+              }
+            } else {
+              // a scale-0 decimal beyond 63 bits, as the unfused parse stores it
+              val bd = new java.math.BigDecimal(big)
+              targetType match {
+                case LongType => bd.longValueExact() // always throws, like the unfused cast
+                case IntegerType => Math.toIntExact(bd.longValueExact())
+                case DoubleType => bd.doubleValue()
+                case d: DecimalType => toDecimal(bd, d)
+                case _: StringType => UTF8String.fromString(big.toString)
+                case _ => mismatch("bigint")
+              }
+            }
+          } else {
+            val dv = java.lang.Double.parseDouble(new String(b, start, c.i - start,
+              java.nio.charset.StandardCharsets.US_ASCII))
+            targetType match {
+              case DoubleType => dv
+              // truncate-toward-zero, matching VariantExtract.cast;
+              // out-of-range/NaN throws instead of saturating (builtin
+              // parity — lenient mode maps the throw to NULL)
+              case LongType => VariantExtract.doubleToLongExact(dv)
+              case IntegerType => Math.toIntExact(VariantExtract.doubleToLongExact(dv))
+              case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(dv), d)
+              case _: StringType => UTF8String.fromString(java.lang.Double.toString(dv))
+              case _ => mismatch("double")
+            }
+          }
+        case _ => throw L.Miss
+      }
+    }
+
+    /** A JSON string cast to a non-string target, as `VariantExtract.cast`
+      * casts a string variant. */
+    private def castStringTo(s: String): Any = targetType match {
+      case LongType => s.trim.toLong
+      case IntegerType => Math.toIntExact(s.trim.toLong)
+      case DoubleType => s.trim.toDouble
+      case BooleanType => s.trim.toBoolean
+      case d: DecimalType => toDecimal(new java.math.BigDecimal(s.trim), d)
+      case _ => mismatch("string")
+    }
+
+    private def toDecimal(bd: java.math.BigDecimal, d: DecimalType): Any = {
+      val dec = org.apache.spark.sql.types.Decimal(bd)
+      if (dec.changePrecision(d.precision, d.scale)) dec else mismatch("decimal")
+    }
+
+    private def mismatch(from: String): Any =
+      throw new IllegalArgumentException(
+        s"Cannot cast variant $from to ${targetType.simpleString}")
+  }
 }
 
-/** Optimizer rule: collapse `VariantGet(VariantFromJson(s), path, t)`
-  * into the single-pass [[JsonPathExtract]] when `t` is a scalar target.
-  * Runs in the operator-optimization batch via
-  * `injectOptimizerRule(GraftExtensions)`; the rewrite is a pure
-  * expression-local transformation, so it composes with pushdown — a
-  * pushed-down filter containing the fused form stays fused.
+/** Optimizer rule: collapse a consumer over `variant_from_json(s)` into
+  * its fused form — [[JsonPathExtract]] for scalar gets and for keys,
+  * size, typeof and schema_of at the root or under a variant-typed get,
+  * plus the aggregate, merge, strip and diff forms. Runs in the
+  * operator-optimization batch via `injectOptimizerRule(GraftExtensions)`;
+  * the rewrite is a pure expression-local transformation, so it composes
+  * with pushdown — a pushed-down filter containing the fused form stays
+  * fused.
   */
 object VariantGetFusionRule extends Rule[LogicalPlan] {
 
-  /** The one single-input fusion table: `consumer`, whose only child is
-    * a parse of `src` failing per `parseFail`, becomes its fused form
-    * over the raw `src`; None when it has none. `src` is by-name, so a
-    * caller builds it only on a hit.
+  /** The one single-input fusion table: `e` reads a parse operand `p`
+    * through one of these forms; returns `p` and a builder of the fused
+    * form over the raw JSON `src` parsed per `parseFail`, or None when
+    * `e` has none. Each caller fuses only when `p` is a parse.
     */
-  private def fuseConsumer(
-      consumer: Expression, src: => Expression, parseFail: Boolean): Option[Expression] =
-    consumer match {
-      case VariantGet(_, path, t, castFail) if JsonPathExtract.fusableTarget(t) =>
-        Some(JsonPathExtract(src, path, t, parseFail, castFail))
-      case _: VariantKeys => Some(JsonKeys(src, parseFail))
-      case _: VariantSize => Some(JsonSize(src, parseFail))
-      case _: VariantTypeOf => Some(JsonTypeOf(src, parseFail))
-      case _: SchemaOfVariant => Some(JsonSchemaOf(src, parseFail))
+  private def fusion(e: Expression): Option[(Expression, (Expression, Boolean) => Expression)] = {
+    def walk(p: Expression, path: String, c: JsonConsumer) =
+      Some((p, (src: Expression, fail: Boolean) => JsonPathExtract(src, path, c, fail)))
+    // a variant-typed get is navigation only: the walk does it
+    def at(v: Expression, c: JsonConsumer) = v match {
+      case VariantGet(p, path, t, _) if VariantSchema.isVariantStruct(t) => walk(p, path, c)
+      case p => walk(p, "$", c)
+    }
+    e match {
+      case VariantGet(p, path, t, castFail) if JsonConsumer.fusableTarget(t) =>
+        walk(p, path, JsonConsumer.Cast(t, castFail))
+      case VariantKeys(v) => at(v, JsonConsumer.Keys)
+      case VariantSize(v) => at(v, JsonConsumer.Size)
+      case VariantTypeOf(v) => at(v, JsonConsumer.TypeOf)
+      case SchemaOfVariant(v) => at(v, JsonConsumer.SchemaOf)
+      // the root typeof is SQL NULL exactly when the parse is: null
+      // input, top-level JSON null, a malformed doc in try mode
+      case n @ (_: IsNull | _: IsNotNull) =>
+        Some((n.children.head, (src: Expression, fail: Boolean) =>
+          n.withNewChildren(Seq(JsonPathExtract(src, "$", JsonConsumer.TypeOf, fail)))))
       // reaches aggregate functions: AggregateExpression.aggregateFunction
       // is an expression field of the Aggregate node
       case s: SchemaOfVariantAgg =>
-        Some(SchemaOfJsonAgg(src, parseFail, s.renderOutput,
-          s.mutableAggBufferOffset, s.inputAggBufferOffset))
+        Some((s.child, (src: Expression, fail: Boolean) => SchemaOfJsonAgg(src, fail,
+          s.renderOutput, s.mutableAggBufferOffset, s.inputAggBufferOffset)))
       case _ => None
     }
+  }
 
   /** Expression-local fusion: the parse is nested directly under the
     * consumer (CollapseProject already inlined it).
     */
   private def fuseLocal(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions(
     Function.unlift { (e: Expression) =>
-      e.children match {
-        case Seq(VariantFromJson(src, parseFail)) => fuseConsumer(e, src, parseFail)
-        case _ => None
-      }
+      fusion(e).collect { case (VariantFromJson(src, parseFail), fused) => fused(src, parseFail) }
     }.orElse {
       // merge patch over two parses: each document straight into the
       // value tree (docToVNode), merge, ONE canonical encode (no
@@ -443,12 +424,10 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     def child: Project = proj.copy(projectList = proj.projectList ++ rawAliases.values)
 
     val rule: PartialFunction[Expression, Expression] = Function.unlift { (e: Expression) =>
-      e.children match {
-        case Seq(attr: AttributeReference) if parses.contains(attr.exprId) =>
-          val (a, v) = parses(attr.exprId)
-          fuseConsumer(e, rawAliases.getOrElseUpdate(attr.exprId,
-            Alias(v.child, a.name + "_json")()).toAttribute, v.failOnError)
-        case _ => None
+      fusion(e).collect { case (attr: AttributeReference, fused) if parses.contains(attr.exprId) =>
+        val (a, v) = parses(attr.exprId)
+        fused(rawAliases.getOrElseUpdate(attr.exprId,
+          Alias(v.child, a.name + "_json")()).toAttribute, v.failOnError)
       }
     }
   }

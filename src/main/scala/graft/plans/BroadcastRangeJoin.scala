@@ -30,12 +30,7 @@ import org.apache.spark.sql.types.LongType
   * caller casts; NULL points and NULL-bounded intervals drop, matching
   * SQL comparison semantics in the BNLJ formulation it replaces.
   *
-  * Measured (graft.tools.BrjProbe, sf0.1 events, local[32], warm): at
-  * 30 intervals the two run at parity (~0.5 s — broadcast cost
-  * dominates); at 5,000 intervals this operator holds 0.31 s while the
-  * BNLJ formulation is 2.30 s (7.4×), and the gap grows linearly with
-  * the interval count — at the 100k+ interval sets a calendar or
-  * session table reaches, the BNLJ is simply not runnable.
+  * Why it stays against the BNLJ formulation: README, "Decisions".
   */
 case class BroadcastRangeJoin(
     point: Expression,

@@ -29,14 +29,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * (append a unique tiebreaker) — same contract as any deterministic
   * top-k, enforced nowhere because only the caller knows the keys.
   *
-  * Measured (graft.tools.TopKProbe, sf0.1, local[32], k=2): with 3
-  * groups (top-k per category — the regime this operator exists for)
-  * the partial phase forwards 192 of 600,000 rows and wall-clock is
-  * 0.36 s vs the window formulation's 1.41 s, which must sort three
-  * whole-table partitions on three cores. With ~150k groups
-  * (rows-per-group-per-partition ≈ 1) nothing can prune and the two
-  * run at parity (0.93 s vs 1.02 s) — graceful degradation, never a
-  * regression.
+  * Why it stays against the window formulation: README, "Decisions".
   */
 case class GroupedTopK(
     groupExprs: Seq[Expression],

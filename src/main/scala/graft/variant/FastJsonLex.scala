@@ -1,10 +1,12 @@
 package graft.variant
 
 /** Shared byte-level JSON lexing core for the fast paths in
-  * [[VariantJsonCodec]] (json→variant encode) and the fused expressions
-  * over `variant_from_json` (`JsonPathExtract`, `JsonFused`). Everything
-  * here follows one contract: accept a strict SUBSET of what Jackson's
-  * default feature set accepts, and throw the stackless
+  * [[VariantJsonCodec]] (json→variant encode) and the one fused walk
+  * over `variant_from_json` (`JsonFused.walk`: navigate a path, hand the
+  * value to one consumer of `JsonPathExtract`'s table — cast, keys,
+  * size, typeof or schema — then close out and validate the rest).
+  * Everything here follows one contract: accept a strict SUBSET of what
+  * Jackson's default feature set accepts, and throw the stackless
   * [[FastJsonLex.Miss]] on ANYTHING doubtful — the caller then re-runs
   * the row through its fallback (the codec's Jackson walk; for a fused
   * expression, the unfused pipeline it replaced), which owns all error

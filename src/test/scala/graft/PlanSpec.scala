@@ -122,6 +122,25 @@ class PlanSpec extends AnyFunSuite {
     assert(df.collect().nonEmpty)
   }
 
+  test("typeof at a path and IS NULL over a parse fuse: no parse left in the plan") {
+    import graft.functions.{VariantFunctions => vf}
+    val events = Tables.events(spark, TestSpark.SF)
+    val parse = vf.try_variant_from_json(col("props"))
+    // the raw-query benchmark's typeof_mix and malformed_count shapes
+    val typeofMix = events.groupBy(vf.variant_typeof(vf.variant_get(parse, "$.k")).as("t")).count()
+    val malformed = events.filter(parse.isNull).agg(count(lit(1)))
+    Seq(typeofMix, malformed).foreach { df =>
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(plan.contains("json_typeof_fused"), plan)
+      assert(!plan.contains("variant_from_json"), plan)
+      assert(df.collect().nonEmpty)
+    }
+    // v_sql_surface: variant_typeof(variant_get(variant_from_json(props), '$.k'))
+    val surface = Queries.queryMap("v_sql_surface")(spark, TestSpark.SF)
+      .queryExecution.optimizedPlan.toString
+    assert(surface.contains("json_typeof_fused"), surface)
+  }
+
   test("auto-shred inference reads a bounded, column-pruned sample") {
     val ev = Tables.events(spark, TestSpark.SF)
       .withColumn("v", graft.functions.VariantFunctions.variant_from_json(col("props")))

@@ -37,8 +37,9 @@ class ReviewProbeSpec extends AnyFunSuite {
       val fused = docs.select(
         vf.variant_typeof(vf.variant_from_json(col("j"))).as("t"),
         vf.variant_keys(vf.variant_from_json(col("j"))).as("k"))
-      // variant-target get keeps the full parse → encode pipeline
-      val unfusedV = vf.variant_get(vf.variant_from_json(col("j")), "$")
+      // the rule does not fuse through the Spark-variant bridge, so this
+      // keeps the full parse → encode pipeline
+      val unfusedV = vf.from_spark_variant(vf.to_spark_variant(vf.variant_from_json(col("j"))))
       val unfused = docs.select(
         vf.variant_typeof(unfusedV).as("t"),
         vf.variant_keys(unfusedV).as("k"))

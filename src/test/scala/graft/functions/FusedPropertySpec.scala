@@ -2,18 +2,17 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property pin: for arbitrary JSON trees, the FUSED single-pass
-  * forms ([[JsonPathExtract]], [[JsonKeys]], [[JsonSize]],
-  * [[JsonTypeOf]], [[JsonSchemaOf]], [[SchemaOfJsonAgg]]) equal the
-  * unfused parse → encode → decode pipeline for every target the fusion
-  * rule admits. Direct interpreted eval — no SparkSession — so hundreds
-  * of samples run in milliseconds.
+  * forms ([[JsonPathExtract]] with each [[JsonConsumer]], and
+  * [[SchemaOfJsonAgg]]) equal the unfused parse → encode → decode
+  * pipeline for every target the fusion rule admits. Direct interpreted
+  * eval — no SparkSession — so hundreds of samples run in milliseconds.
   */
 class FusedPropertySpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
@@ -55,9 +54,20 @@ class FusedPropertySpec extends AnyFunSuite {
   private def unfused(json: String, path: String, t: DataType): Any =
     VariantGet(VariantFromJson(Literal(json)), path, t, failOnError = false).eval(null)
 
+  /** A fused consumer at the root path. */
+  private def root(c: JsonConsumer, json: Expression, parseFailOnError: Boolean) =
+    JsonPathExtract(json, "$", c, parseFailOnError)
+
+  /** A value, or the class of the exception evaluation threw. */
+  private def outcome(f: => Any): Any =
+    try f match {
+      case a: org.apache.spark.sql.catalyst.util.ArrayData => a.toSeq[Any](StringType)
+      case v => v
+    } catch { case e: Exception => e.getClass }
+
   private def fused(json: String, path: String, t: DataType): Any =
-    JsonPathExtract(Literal(json), path, t,
-      parseFailOnError = true, castFailOnError = false).eval(null)
+    JsonPathExtract(Literal(json), path, JsonConsumer.Cast(t, castFailOnError = false),
+      parseFailOnError = true).eval(null)
 
   test("fused extraction equals unfused for every admissible target over random trees") {
     val targets = Seq(StringType, LongType, DoubleType, BooleanType,
@@ -97,7 +107,8 @@ class FusedPropertySpec extends AnyFunSuite {
     var misses = 0
     def check(json: String): Unit =
       try {
-        val f = JsonFused.fastSchemaOfDoc(json.getBytes("UTF-8"))
+        val f = JsonFused.walk(json.getBytes("UTF-8"), Array.empty, JsonFused.fastInferSchema)
+          .asInstanceOf[SchemaInfer.SType]
         val enc = VariantFromJson(Literal(json)).eval(null)
         if (enc == null) {
           // top-level JSON null is SQL null in both pipelines
@@ -134,12 +145,12 @@ class FusedPropertySpec extends AnyFunSuite {
     forAllSamples(genNode(3)) { node =>
       val json = mapper.writeValueAsString(node)
       val u = SchemaOfVariant(VariantFromJson(Literal(json))).eval(null)
-      val f = JsonSchemaOf(Literal(json), parseFailOnError = true).eval(null)
+      val f = root(JsonConsumer.SchemaOf, Literal(json), parseFailOnError = true).eval(null)
       assert(u == f, s"schema_of json=$json unfused=$u fused=$f")
     }
     Seq("1 2", """{"a":1} x""", "[1,2,", "").foreach { bad =>
-      intercept[Exception](JsonSchemaOf(Literal(bad), parseFailOnError = true).eval(null))
-      assert(JsonSchemaOf(Literal(bad), parseFailOnError = false).eval(null) == null, bad)
+      intercept[Exception](root(JsonConsumer.SchemaOf, Literal(bad), parseFailOnError = true).eval(null))
+      assert(root(JsonConsumer.SchemaOf, Literal(bad), parseFailOnError = false).eval(null) == null, bad)
     }
   }
 
@@ -203,7 +214,7 @@ class FusedPropertySpec extends AnyFunSuite {
       assert(u == f && u.toString == bi.toString, s"$bi: unfused=$u fused=$f")
       // schema inference sees decimal(38,0) on both paths
       val us = SchemaOfVariant(VariantFromJson(Literal(json))).eval(null)
-      val fs = JsonSchemaOf(Literal(json), parseFailOnError = true).eval(null)
+      val fs = root(JsonConsumer.SchemaOf, Literal(json), parseFailOnError = true).eval(null)
       assert(us == fs && us.toString == "object<x: decimal(38,0)>", s"$bi: $us vs $fs")
     }
     val beyond = Seq((BigInt(1) << 127).toString, ((BigInt(1) << 200) * -1).toString)
@@ -212,11 +223,11 @@ class FusedPropertySpec extends AnyFunSuite {
       intercept[Exception](VariantFromJson(Literal(json)).eval(null))
       val e = intercept[Exception](fused(json, "$.x", StringType))
       assert(e.isInstanceOf[VariantJsonCodec.JsonParseException], e.toString)
-      intercept[Exception](JsonSchemaOf(Literal(json), parseFailOnError = true).eval(null))
-      intercept[Exception](JsonTypeOf(Literal(json), parseFailOnError = true).eval(null))
+      intercept[Exception](root(JsonConsumer.SchemaOf, Literal(json), parseFailOnError = true).eval(null))
+      intercept[Exception](root(JsonConsumer.TypeOf, Literal(json), parseFailOnError = true).eval(null))
       // lenient: null everywhere, no crash
-      assert(JsonPathExtract(Literal(json), "$.x", StringType,
-        parseFailOnError = false, castFailOnError = false).eval(null) == null)
+      assert(JsonPathExtract(Literal(json), "$.x", JsonConsumer.Cast(StringType, castFailOnError = false),
+        parseFailOnError = false).eval(null) == null)
     }
   }
 
@@ -228,29 +239,29 @@ class FusedPropertySpec extends AnyFunSuite {
       // unfused reference behavior: whole-document parse throws
       intercept[Exception](VariantFromJson(Literal(json)).eval(null))
       intercept[Exception](
-        JsonPathExtract(Literal(json), "$.a", LongType,
-          parseFailOnError = true, castFailOnError = true).eval(null))
-      intercept[Exception](JsonKeys(Literal(json), parseFailOnError = true).eval(null))
-      intercept[Exception](JsonSize(Literal(json), parseFailOnError = true).eval(null))
-      intercept[Exception](JsonTypeOf(Literal(json), parseFailOnError = true).eval(null))
+        JsonPathExtract(Literal(json), "$.a", JsonConsumer.Cast(LongType, castFailOnError = true),
+          parseFailOnError = true).eval(null))
+      intercept[Exception](root(JsonConsumer.Keys, Literal(json), parseFailOnError = true).eval(null))
+      intercept[Exception](root(JsonConsumer.Size, Literal(json), parseFailOnError = true).eval(null))
+      intercept[Exception](root(JsonConsumer.TypeOf, Literal(json), parseFailOnError = true).eval(null))
       // lenient: all null / empty, like try_variant_from_json
-      assert(JsonPathExtract(Literal(json), "$.a", LongType,
-        parseFailOnError = false, castFailOnError = true).eval(null) == null, json)
-      assert(JsonKeys(Literal(json), parseFailOnError = false).eval(null) == null, json)
-      assert(JsonTypeOf(Literal(json), parseFailOnError = false).eval(null) == null, json)
+      assert(JsonPathExtract(Literal(json), "$.a", JsonConsumer.Cast(LongType, castFailOnError = true),
+        parseFailOnError = false).eval(null) == null, json)
+      assert(root(JsonConsumer.Keys, Literal(json), parseFailOnError = false).eval(null) == null, json)
+      assert(root(JsonConsumer.TypeOf, Literal(json), parseFailOnError = false).eval(null) == null, json)
       assert(VariantExplode(VariantFromJson(Literal(json), false))
         .eval(null).iterator.isEmpty, json)
     }
     // parse errors outrank cast errors, exactly as in the unfused order
     val parseBeatsCast = """{"x": "abc"} ["""
     val e = intercept[Exception](
-      JsonPathExtract(Literal(parseBeatsCast), "$.x", LongType,
-        parseFailOnError = true, castFailOnError = true).eval(null))
+      JsonPathExtract(Literal(parseBeatsCast), "$.x", JsonConsumer.Cast(LongType, castFailOnError = true),
+        parseFailOnError = true).eval(null))
     assert(e.isInstanceOf[VariantJsonCodec.JsonParseException], e.toString)
     // well-formed + failing cast still raises the cast error
     val castOnly = intercept[Exception](
-      JsonPathExtract(Literal("""{"x": "abc"}"""), "$.x", LongType,
-        parseFailOnError = true, castFailOnError = true).eval(null))
+      JsonPathExtract(Literal("""{"x": "abc"}"""), "$.x", JsonConsumer.Cast(LongType, castFailOnError = true),
+        parseFailOnError = true).eval(null))
     assert(!castOnly.isInstanceOf[VariantJsonCodec.JsonParseException], castOnly.toString)
 
     // the miss corpus (plus the deepest empty nesting the parser accepts):
@@ -258,14 +269,7 @@ class FusedPropertySpec extends AnyFunSuite {
     // throws the same exception class, in both parse modes
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
-    import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.unsafe.types.UTF8String
-    // a value, or the class of the exception evaluation threw
-    def outcome(f: => Any): Any =
-      try f match {
-        case a: ArrayData => a.toSeq[Any](StringType)
-        case v => v
-      } catch { case e: Exception => e.getClass }
     val src = BoundReference(0, StringType, nullable = true)
     def agg(a: org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[
         graft.variant.SchemaInfer.SType], json: String): Any =
@@ -275,11 +279,11 @@ class FusedPropertySpec extends AnyFunSuite {
         val s = Literal(json)
         val parse = VariantFromJson(s, strict)
         val pairs: Seq[(String, Expression, Expression)] = Seq(
-          ("keys", JsonKeys(s, strict), VariantKeys(parse)),
-          ("size", JsonSize(s, strict), VariantSize(parse)),
-          ("typeof", JsonTypeOf(s, strict), VariantTypeOf(parse)),
-          ("schema_of", JsonSchemaOf(s, strict), SchemaOfVariant(parse)),
-          ("get $.a", JsonPathExtract(s, "$.a", StringType, strict, castFailOnError = true),
+          ("keys", root(JsonConsumer.Keys, s, strict), VariantKeys(parse)),
+          ("size", root(JsonConsumer.Size, s, strict), VariantSize(parse)),
+          ("typeof", root(JsonConsumer.TypeOf, s, strict), VariantTypeOf(parse)),
+          ("schema_of", root(JsonConsumer.SchemaOf, s, strict), SchemaOfVariant(parse)),
+          ("get $.a", JsonPathExtract(s, "$.a", JsonConsumer.Cast(StringType, castFailOnError = true), strict),
             VariantGet(parse, "$.a", StringType, failOnError = true)))
         pairs.foreach { case (name, fused, unfused) =>
           val f = outcome(fused.eval(null))
@@ -312,8 +316,8 @@ class FusedPropertySpec extends AnyFunSuite {
     assert(both("{\"\\" + "u0061\": 9}", "$.a", LongType) == 9L)
     // sibling AFTER the found value is still validated (parse beats cast)
     intercept[Exception](
-      JsonPathExtract(Literal("""{"a": 1, "b": }"""), "$.a", LongType,
-        parseFailOnError = true, castFailOnError = true).eval(null))
+      JsonPathExtract(Literal("""{"a": 1, "b": }"""), "$.a",
+        JsonConsumer.Cast(LongType, castFailOnError = true), parseFailOnError = true).eval(null))
     // duplicate keys are the documented UB divergence class (the fused
     // byte walk takes the FIRST match; the unfused encoding's walk
     // resolves to the other copy) — pin only the byte walk's choice, not
@@ -327,17 +331,66 @@ class FusedPropertySpec extends AnyFunSuite {
     forAllSamples(genNode(3)) { node =>
       val json = mapper.writeValueAsString(node)
       val uK = VariantKeys(VariantFromJson(Literal(json))).eval(null)
-      val fK = JsonKeys(Literal(json), parseFailOnError = true).eval(null)
+      val fK = root(JsonConsumer.Keys, Literal(json), parseFailOnError = true).eval(null)
       assert(uK == fK || (uK != null && fK != null &&
         uK.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].array.toSeq ==
           fK.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].array.toSeq),
         s"keys json=$json unfused=$uK fused=$fK")
       val uS = VariantSize(VariantFromJson(Literal(json))).eval(null)
-      val fS = JsonSize(Literal(json), parseFailOnError = true).eval(null)
+      val fS = root(JsonConsumer.Size, Literal(json), parseFailOnError = true).eval(null)
       assert(uS == fS, s"size json=$json unfused=$uS fused=$fS")
       val uT = VariantTypeOf(VariantFromJson(Literal(json))).eval(null)
-      val fT = JsonTypeOf(Literal(json), parseFailOnError = true).eval(null)
+      val fT = root(JsonConsumer.TypeOf, Literal(json), parseFailOnError = true).eval(null)
       assert(uT == fT, s"typeof json=$json unfused=$uT fused=$fT")
     }
+  }
+
+  test("keys, size, typeof and schema_of at non-root paths equal the unfused consumer over a variant get") {
+    val consumers: Seq[(JsonConsumer, Expression => Expression)] = Seq(
+      (JsonConsumer.Keys, VariantKeys(_)), (JsonConsumer.Size, VariantSize(_)),
+      (JsonConsumer.TypeOf, VariantTypeOf(_)), (JsonConsumer.SchemaOf, SchemaOfVariant(_)))
+    // a found key, an array index, a nested JSON null, a missing key, an
+    // index past the end, a path through a scalar and through an array
+    val paths = Seq("$.x", "$.y[0]", "$.y[1]", "$.x.k", "$.missing", "$.y[7]", "$.n.k", "$.y.k",
+      "$.b", "$.a")
+    def check(json: String): Unit = Seq(true, false).foreach { strict =>
+      val s = Literal(json)
+      paths.foreach { path =>
+        consumers.foreach { case (c, unfusedOf) =>
+          val f = outcome(JsonPathExtract(s, path, c, strict).eval(null))
+          val u = outcome(unfusedOf(VariantGet(VariantFromJson(s, strict), path, VariantSchema.TYPE)).eval(null))
+          assert(f == u, s"${c.prettyName} $path strict=$strict json=${json.take(60)} fused=$f unfused=$u")
+        }
+      }
+    }
+    forAllSamples(Gen.zip(genNode(3), genNode(2))) { case (x, y) =>
+      check(s"""{"x": ${mapper.writeValueAsString(x)}, "n": 5, "y": [${mapper.writeValueAsString(y)}, null]}""")
+    }
+    (missCorpus ++ Seq("[" * 1001 + "]" * 1001, """{"a": """ + "[" * 999 + "]" * 999 + "}",
+      "", "null", """{"x": 1} 2""", """{"x": [1, 2]}}""", """{"y": [3, null], "x": {}}""")).foreach(check)
+    // a nested JSON null is a variant null; a top-level one is SQL NULL
+    val nested = Literal("""{"a": null}""")
+    assert(JsonPathExtract(nested, "$.a", JsonConsumer.TypeOf, true).eval(null).toString == "null")
+    assert(JsonPathExtract(nested, "$.a", JsonConsumer.SchemaOf, true).eval(null).toString == "void")
+    assert(JsonPathExtract(Literal("null"), "$", JsonConsumer.TypeOf, true).eval(null) == null)
+    assert(JsonPathExtract(Literal("null"), "$", JsonConsumer.SchemaOf, true).eval(null) == null)
+  }
+
+  test("IS NULL and IS NOT NULL over the parse equal their fused root-typeof forms") {
+    import org.apache.spark.sql.catalyst.expressions.{IsNotNull, IsNull}
+    val docs = Seq[String](null, "null", " null ", "", "1 2", """{"a":1,}""", "tru", "[1] x", "0",
+      """{"a": null}""", "[]") ++ missCorpus ++ Seq("[" * 1001 + "]" * 1001)
+    def check(json: String): Unit = Seq(true, false).foreach { strict =>
+      val s = Literal.create(json, StringType)
+      val typeOf = JsonPathExtract(s, "$", JsonConsumer.TypeOf, strict)
+      Seq[(String, Expression => Expression)](("IS NULL", IsNull(_)), ("IS NOT NULL", IsNotNull(_)))
+        .foreach { case (name, pred) =>
+          val f = outcome(pred(typeOf).eval(null))
+          val u = outcome(pred(VariantFromJson(s, strict)).eval(null))
+          assert(f == u, s"$name strict=$strict json=${String.valueOf(json).take(60)} fused=$f unfused=$u")
+        }
+    }
+    forAllSamples(genNode(3))(node => check(mapper.writeValueAsString(node)))
+    docs.foreach(check)
   }
 }
