@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The one fused byte walk behind every `<consumer>(variant_from_json(s))`
-  * form ([[JsonPathExtract]], [[SchemaOfJsonAgg]]): navigate to a path,
+  * form ([[JsonPathExtract]], [[SchemaOfJsonAgg]], the value-tree reader
+  * of a fused [[VariantEdit]]): navigate to a path,
   * hand the value there to a consumer, close out and validate the rest of
   * the document — no metadata build, no variant encode, no decode. Each
   * consumer reproduces the unfused expression's output exactly

@@ -334,8 +334,10 @@ object JsonConsumer {
 
 /** Optimizer rule: collapse a consumer over `variant_from_json(s)` into
   * its fused form — [[JsonPathExtract]] for scalar gets and for keys,
-  * size, typeof and schema_of at the root or under a variant-typed get,
-  * plus the aggregate, merge, strip and diff forms. Runs in the
+  * size, typeof, schema_of and is_variant_null at the root or under a
+  * variant-typed get, [[SchemaOfJsonAgg]] for the schema aggregate, and
+  * JSON operand sides for a [[VariantEdit]] (merge, diff, strip) whose
+  * tree operands are all parses. Runs in the
   * operator-optimization batch via `injectOptimizerRule(GraftExtensions)`;
   * the rewrite is a pure expression-local transformation, so it composes
   * with pushdown — a pushed-down filter containing the fused form stays
@@ -363,6 +365,12 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
       case VariantSize(v) => at(v, JsonConsumer.Size)
       case VariantTypeOf(v) => at(v, JsonConsumer.TypeOf)
       case SchemaOfVariant(v) => at(v, JsonConsumer.SchemaOf)
+      // a variant null is typeof 'null'; SQL NULL (missing, top-level
+      // JSON null, a failed try_ parse) is false, as is_variant_null says
+      case IsVariantNull(v) => at(v, JsonConsumer.TypeOf).map { case (p, typeOf) =>
+        (p, (src: Expression, fail: Boolean) => Coalesce(Seq(
+          EqualTo(typeOf(src, fail), Literal("null")), Literal(false))))
+      }
       // the root typeof is SQL NULL exactly when the parse is: null
       // input, top-level JSON null, a malformed doc in try mode
       case n @ (_: IsNull | _: IsNotNull) =>
@@ -384,18 +392,18 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     Function.unlift { (e: Expression) =>
       fusion(e).collect { case (VariantFromJson(src, parseFail), fused) => fused(src, parseFail) }
     }.orElse {
-      // merge patch over two parses: each document straight into the
-      // value tree (docToVNode), merge, ONE canonical encode (no
-      // intermediate variant encode+decode round trips)
-      case VariantMergePatch(VariantFromJson(t, failT), VariantFromJson(p, failP)) =>
-        JsonMergePatchFused(t, p, failT, failP)
-      // strip over a parse: the document into the tree, drop keys, one
-      // canonical encode
-      case VariantStripKeys(VariantFromJson(src, parseFail), keys) =>
-        JsonStripKeysFused(src, keys, parseFail)
-      // diff over two parses: mirror of the merge fusion
-      case VariantDiff(VariantFromJson(a, failA), VariantFromJson(b, failB)) =>
-        JsonDiffFused(a, b, failA, failB)
+      // an edit whose tree operands are all parses: each document
+      // straight into the value tree (docToVNode), the edit, ONE
+      // canonical encode — no intermediate variant encode + decode. With
+      // a non-parse right operand the edit stays unfused: it would be
+      // evaluated before the left parse, not after a SQL-null left.
+      case e @ VariantEdit(_, VariantFromJson(src, fail), r, _, rs)
+          if rs == VariantEdit.Side.Keys || r.isInstanceOf[VariantFromJson] =>
+        val (right, rightSide) = r match {
+          case VariantFromJson(rsrc, rfail) => (rsrc, VariantEdit.Side.Json(rfail))
+          case keys => (keys, rs)
+        }
+        e.copy(left = src, right = right, leftSide = VariantEdit.Side.Json(fail), rightSide = rightSide)
     })
 
   /** Fusion THROUGH a Project boundary. CollapseProject refuses to

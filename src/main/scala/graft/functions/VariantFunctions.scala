@@ -38,11 +38,11 @@ object VariantFunctions {
   def is_variant_null(c: Column): Column = col(IsVariantNull(expr(c)))
   def variant_to_json(c: Column): Column = col(VariantToJson(expr(c)))
   def variant_merge_patch(target: Column, patch: Column): Column =
-    col(VariantMergePatch(expr(target), expr(patch)))
+    col(VariantEdit(VariantEdit.Merge, expr(target), expr(patch)))
   def variant_strip_keys(v: Column, keys: Column): Column =
-    col(VariantStripKeys(expr(v), expr(keys)))
+    col(VariantEdit(VariantEdit.Strip, expr(v), expr(keys)))
   def variant_diff(a: Column, b: Column): Column =
-    col(VariantDiff(expr(a), expr(b)))
+    col(VariantEdit(VariantEdit.Diff, expr(a), expr(b)))
   def to_variant(c: Column): Column = col(ToVariant(expr(c)))
   def to_spark_variant(c: Column): Column = col(ToSparkVariant(expr(c)))
   def from_spark_variant(c: Column): Column = col(FromSparkVariant(expr(c)))
@@ -180,13 +180,13 @@ object VariantFunctions {
       (es: Seq[Expression]) => VariantToJson(es.head),
       "variant_to_json(v) - Render a variant as compact JSON text."),
     ("variant_merge_patch",
-      (es: Seq[Expression]) => VariantMergePatch(es.head, es(1)),
+      (es: Seq[Expression]) => VariantEdit(VariantEdit.Merge, es.head, es(1)),
       "variant_merge_patch(target, patch) - RFC 7386 merge: objects merge recursively, patch nulls delete keys, non-objects replace."),
     ("variant_strip_keys",
-      (es: Seq[Expression]) => VariantStripKeys(es.head, es(1)),
+      (es: Seq[Expression]) => VariantEdit(VariantEdit.Strip, es.head, es(1)),
       "variant_strip_keys(v, keys) - Remove named top-level keys from a variant object; no-op on non-objects."),
     ("variant_diff",
-      (es: Seq[Expression]) => VariantDiff(es.head, es(1)),
+      (es: Seq[Expression]) => VariantEdit(VariantEdit.Diff, es.head, es(1)),
       "variant_diff(a, b) - Minimal RFC 7386 patch p with variant_merge_patch(a, p) = b (nulls in b unreachable; non-objects replace)."),
     ("to_variant",
       (es: Seq[Expression]) => ToVariant(es.head),

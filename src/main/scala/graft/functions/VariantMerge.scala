@@ -3,70 +3,80 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
 import graft.variant._
 
-/** `variant_merge_patch(target, patch)` — RFC 7386 JSON merge patch over
-  * two variants, a structural editing operator the text-JSON world gets
-  * from `json_merge_patch` (DuckDB/MySQL/SQLite): object fields merge
-  * recursively, a `null` in the patch DELETES the key, and any
-  * non-object patch value (scalars, arrays, JSON null at the root)
-  * replaces the target wholesale.
+/** One structural edit of a variant value tree — `variant_merge_patch`,
+  * `variant_diff` or `variant_strip_keys` ([[VariantEdit.Edit]]) — over
+  * two operands. Each tree operand ([[VariantEdit.Side]]) is a variant
+  * struct, decoded through the View layer (dictionary-reference scalars,
+  * ids 17/18, materialize on decode), or raw JSON parsed straight into
+  * the tree ([[VariantMergePatch.docToVNode]]) with its own parse mode.
+  * Strip's right operand is a key list. The edited tree encodes once
+  * through the canonical writer, so output bytes are canonical whatever
+  * the input encoding (the guarantee `variant_from_json` gives).
   *
-  * Works directly on the decoded value trees (no JSON text round trip):
-  * both inputs decode through the View layer — including foreign
-  * encodings with dictionary-reference scalars (ids 17/18), which
-  * materialize on decode — then the merged tree re-encodes through the
-  * canonical writer, so output bytes are canonical regardless of input
-  * encoding (same guarantee as `variant_from_json`).
+  * The JSON operands are what [[VariantGetFusionRule]] installs in place
+  * of a `variant_from_json` child: the unfused chain's per-row
+  * intermediate encode + decode disappears, and the plan name gains
+  * `_fused`. Semantics equal the unfused chain (VariantMergeFuzzSpec):
+  *  - the left operand is evaluated first, and the right one is not
+  *    parsed after a SQL-null left, as a binary expression skips its
+  *    right child;
+  *  - a top-level JSON `null` is SQL NULL (the codec's SQL-null rule),
+  *    and so is a failed `try_` parse, per side;
+  *  - every parse error is the codec's own (the byte walk declines any
+  *    doubtful row and the codec re-parses it);
+  *  - a duplicate key inside one document keeps the LAST value at the
+  *    FIRST position, as decode()'s LinkedHashMap does to the encoder's
+  *    kept-both fields.
   *
   * Reference anchor: the codec surface this builds on is
   * arrow-open-variant's read/write layer (read.rs:113-279,
-  * write.rs:197-279); the reference has no merge operator — parity
-  * extension, like `variant_to_json`.
+  * write.rs:197-279); the reference has no merge, diff or strip operator
+  * — parity extensions, like `variant_to_json`.
   */
-case class VariantMergePatch(left: Expression, right: Expression)
+case class VariantEdit(
+    edit: VariantEdit.Edit,
+    left: Expression,
+    right: Expression,
+    leftSide: VariantEdit.Side,
+    rightSide: VariantEdit.Side)
     extends BinaryExpression with GraftBinaryCodegen {
 
+  import VariantEdit._
   import VariantMergePatch._
 
   override def dataType: DataType = VariantSchema.TYPE
   override def nullable: Boolean = true
-  override def prettyName: String = "variant_merge_patch"
+  override def prettyName: String =
+    if (leftSide.isInstanceOf[Side.Json] || rightSide.isInstanceOf[Side.Json])
+      edit.prettyName + "_fused"
+    else edit.prettyName
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(left.dataType) &&
-        VariantSchema.isVariantStruct(right.dataType))
+    if (leftSide != Side.Keys && (rightSide == Side.Keys) == (edit == Strip) &&
+        leftSide.accepts(left.dataType) && rightSide.accepts(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"variant_merge_patch expects two variant structs, got: " +
+      s"$prettyName expects (${leftSide.describe}, ${rightSide.describe}), got: " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
-  // Catalyst duplicates a merge referenced by several aggregate/group
-  // expressions into each of them (the same duplication the parse memo
-  // absorbs for variant_from_json, JsonPathExtract.scala) — a content-
-  // keyed last-input memo collapses the copies to one merge per row.
-  @transient private lazy val lastMerge: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](5))
-
   override def nullSafeEval(l: Any, r: Any): Any = {
-    val lr = l.asInstanceOf[InternalRow]
-    val rr = r.asInstanceOf[InternalRow]
-    val tm = lr.getBinary(0); val tv = lr.getBinary(1)
-    val pm = rr.getBinary(0); val pv = rr.getBinary(1)
-    val memo = lastMerge.get()
-    if (memo(0) != null &&
-        java.util.Arrays.equals(memo(0).asInstanceOf[Array[Byte]], tm) &&
-        java.util.Arrays.equals(memo(1).asInstanceOf[Array[Byte]], tv) &&
-        java.util.Arrays.equals(memo(2).asInstanceOf[Array[Byte]], pm) &&
-        java.util.Arrays.equals(memo(3).asInstanceOf[Array[Byte]], pv)) {
-      return memo(4)
+    val lp = leftSide.parts(l)
+    val rp = rightSide.parts(r)
+    val key = Array[AnyRef](edit, leftSide, rightSide, lp, rp)
+    val memo = lastEdit.get()
+    if (java.util.Arrays.deepEquals(memo(0).asInstanceOf[Array[AnyRef]], key)) {
+      return if (memo(1) eq NULL_RESULT) null else memo(1)
     }
-    val merged = encode(merge(decode(tm, tv), decode(pm, pv)))
-    memo(0) = tm.clone(); memo(1) = tv.clone()
-    memo(2) = pm.clone(); memo(3) = pv.clone()
-    memo(4) = merged
-    merged
+    val lt = leftSide.read(lp).asInstanceOf[VNode]
+    val rt = if (lt == null) null else rightSide.read(rp)
+    val out = if (rt == null) null else encode(edit(lt, rt))
+    memo(0) = snapshot(key)
+    memo(1) = if (out == null) NULL_RESULT else out
+    out
   }
 
   override protected def withNewChildrenInternal(
@@ -74,310 +84,122 @@ case class VariantMergePatch(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `variant_strip_keys(v, keys)` — project named TOP-LEVEL keys OUT of a
-  * variant object: the semi-structured twin of dropping columns, and the
-  * PII-scrubbing primitive for variant pipelines (`d_pii_redact` does it
-  * for text; this does it structurally, no JSON round trip). Non-object
-  * variants pass through unchanged — stripping keys from a scalar or
-  * array is a no-op, not an error (mirrors SQL's forgiving semantics for
-  * `json_merge_patch(v, '{"k":null}')`, which is the textbook way to
-  * delete a key and the semantics DuckDB applies). Output re-encodes
-  * through the canonical writer, so equal content ⇒ equal bytes,
-  * whatever the input encoding.
-  */
-case class VariantStripKeys(left: Expression, right: Expression)
-    extends BinaryExpression with GraftBinaryCodegen {
-
+object VariantEdit {
   import VariantMergePatch._
 
-  override def dataType: DataType = VariantSchema.TYPE
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_strip_keys"
+  /** The unfused form: variant operands, and the key list for strip. */
+  def apply(edit: Edit, left: Expression, right: Expression): VariantEdit =
+    VariantEdit(edit, left, right, Side.Variant, if (edit == Strip) Side.Keys else Side.Variant)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (VariantSchema.isVariantStruct(left.dataType), right.dataType) match {
-      case (true, org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"variant_strip_keys expects (variant, array<string>), got: " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
+  /** A tree combine and its plan name. Serializable itself, not only
+    * through its case objects: Java deserialization needs the first
+    * non-serializable superclass to have a no-argument constructor. */
+  sealed abstract class Edit(val prettyName: String) extends Serializable {
+    /** The edited tree; `r` is the right operand as its side reads it. */
+    def apply(l: VNode, r: AnyRef): VNode
+  }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val lr = l.asInstanceOf[InternalRow]
-    val keys = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    decode(lr.getBinary(0), lr.getBinary(1)) match {
+  /** `variant_merge_patch(target, patch)`: RFC 7386 merge patch — object
+    * fields merge recursively, a `null` in the patch DELETES the key,
+    * and any non-object patch value replaces the target wholesale. */
+  case object Merge extends Edit("variant_merge_patch") {
+    def apply(l: VNode, r: AnyRef): VNode = merge(l, r.asInstanceOf[VNode])
+  }
+
+  /** `variant_diff(a, b)`: the minimal RFC 7386 patch `p` with
+    * `variant_merge_patch(a, p) ≡ b` (see [[VariantMergePatch.diff]] for
+    * the two RFC-inherent caveats) — the CDC primitive for
+    * semi-structured columns: store `diff(yesterday, today)`, re-apply
+    * with merge_patch. */
+  case object Diff extends Edit("variant_diff") {
+    def apply(l: VNode, r: AnyRef): VNode = diff(l, r.asInstanceOf[VNode])
+  }
+
+  /** `variant_strip_keys(v, keys)`: named TOP-LEVEL keys projected OUT of
+    * an object — the semi-structured twin of dropping columns, and the
+    * PII-scrubbing primitive for variant pipelines. A non-object passes
+    * through unchanged (re-encoded, so the canonical-bytes guarantee
+    * holds): DuckDB's `json_merge_patch(v, '{"k":null}')` semantics. */
+  case object Strip extends Edit("variant_strip_keys") {
+    def apply(l: VNode, r: AnyRef): VNode = l match {
       case VObj(fields) =>
-        val out = fields.clone()
-        var i = 0
-        while (i < keys.numElements()) {
-          if (!keys.isNullAt(i)) out.remove(keys.getUTF8String(i).toString)
-          i += 1
-        }
-        encode(VObj(out))
-      case other => encode(other) // non-object: value unchanged, but
-                                  // re-encoded so the canonical-bytes
-                                  // guarantee holds for every input
+        val kept = fields.clone()
+        r.asInstanceOf[Array[AnyRef]].foreach(k => if (k != null) kept.remove(k.asInstanceOf[String]))
+        VObj(kept)
+      case other => other
     }
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `variant_diff(a, b)` — structural diff as an RFC 7386 merge patch:
-  * the minimal patch `p` with `variant_merge_patch(a, p) ≡ b` (see
-  * [[VariantMergePatch.diff]] for the two RFC-inherent caveats:
-  * null-valued fields of `b` are unreachable by ANY patch, and
-  * non-object endpoints replace wholesale). The CDC primitive for
-  * semi-structured columns: store `diff(yesterday, today)` instead of
-  * `today`, re-apply with merge_patch. Output re-encodes through the
-  * canonical writer — equal diffs have equal bytes.
-  *
-  * Reference anchor: like variant_merge_patch, a parity extension on
-  * top of arrow-open-variant's codec surface (read.rs:113-279,
-  * write.rs:197-279); the reference has no structural-diff operator.
-  */
-case class VariantDiff(left: Expression, right: Expression)
-    extends BinaryExpression with GraftBinaryCodegen {
-
-  import VariantMergePatch._
-
-  override def dataType: DataType = VariantSchema.TYPE
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_diff"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(left.dataType) &&
-        VariantSchema.isVariantStruct(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"variant_diff expects two variant structs, got: " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val lr = l.asInstanceOf[InternalRow]
-    val rr = r.asInstanceOf[InternalRow]
-    encode(diff(
-      decode(lr.getBinary(0), lr.getBinary(1)),
-      decode(rr.getBinary(0), rr.getBinary(1))))
+  /** How an operand reaches the edit: `parts` is its content as the
+    * memo compares it (byte arrays by content), `read` the tree, or the
+    * key list, that the edit takes — Scala null for SQL NULL. */
+  sealed abstract class Side(val describe: String) extends Serializable {
+    def accepts(dt: DataType): Boolean
+    def parts(in: Any): Array[AnyRef]
+    def read(parts: Array[AnyRef]): AnyRef
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Fused `variant_merge_patch(variant_from_json(t), variant_from_json(p))`
-  * — both documents go straight into the decoded value tree
-  * ([[VariantMergePatch.docToVNode]]: byte walk, else the codec's parse)
-  * and the merged tree encodes ONCE, so the unfused chain's per-row
-  * intermediate work (2 variant encodes + 2 decodes) disappears on every
-  * row the byte walk takes. Installed by [[VariantGetFusionRule]]; the
-  * unfused pair stays the semantic reference and the fusion parity is
-  * pinned by VariantMergeFuzzSpec.
-  *
-  * Semantics match the unfused chain exactly:
-  *  - top-level JSON `null` parses to SQL NULL (JsonCodec's SQL-null
-  *    rule), and a NULL on either side makes the merge NULL;
-  *  - parse failure throws (variant_from_json) or nulls the result
-  *    (try_variant_from_json), each side per its own flag, left first —
-  *    the unfused children evaluate left-to-right, and the right one not
-  *    at all after a SQL-null left;
-  *  - every parse error is the codec's own (the byte walk declines any
-  *    doubtful row and the codec re-parses it);
-  *  - duplicate keys inside one document collapse to the LAST value at
-  *    the FIRST position — byte-for-byte what decode()'s LinkedHashMap
-  *    does to the encoder's kept-both fields.
-  */
-case class JsonMergePatchFused(left: Expression, right: Expression,
-                               failLeft: Boolean, failRight: Boolean)
-    extends BinaryExpression with GraftBinaryCodegen {
-
-  import VariantMergePatch._
-
-  override def dataType: DataType = VariantSchema.TYPE
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_merge_patch_fused"
-
-  // Same duplication-absorbing memo as the unfused expression: Catalyst
-  // copies the merge into every aggregate/group expression referencing
-  // it; content-keyed last-input memoization collapses the copies to one
-  // parse+merge+encode per row. Slot 2 holds the result; NULL_RESULT
-  // disambiguates a memoized SQL-null from a cold memo.
-  @transient private lazy val lastMerge: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](3))
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val tb = JsonFused.toBytes(l)
-    val pb = JsonFused.toBytes(r)
-    val memo = lastMerge.get()
-    if (memo(0) != null &&
-        java.util.Arrays.equals(memo(0).asInstanceOf[Array[Byte]], tb) &&
-        java.util.Arrays.equals(memo(1).asInstanceOf[Array[Byte]], pb)) {
-      return if (memo(2) eq JsonMergePatchFused.NULL_RESULT) null else memo(2)
-    }
-    val t = JsonMergePatchFused.parseSide(tb, failLeft)
-    val p = JsonMergePatchFused.parseRight(t, pb, failRight)
-    val merged: AnyRef =
-      if (JsonMergePatchFused.isNull(p)) null
-      else encode(merge(t.asInstanceOf[VNode], p.asInstanceOf[VNode]))
-    memo(0) = tb.clone(); memo(1) = pb.clone()
-    memo(2) = if (merged == null) JsonMergePatchFused.NULL_RESULT else merged
-    merged
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object JsonMergePatchFused {
-  /** Memoized-SQL-null marker (never escapes the memo). */
-  private[functions] val NULL_RESULT: AnyRef = new Object
-  /** try_-side parse-failure marker (never escapes nullSafeEval). */
-  private[functions] val FAILED: AnyRef = new Object
-
-  /** One parsed side of a fused form: its tree, Scala null for a
-    * top-level JSON null, or [[FAILED]] when the parse fails and the
-    * side is a `try_` parse — `VariantFromJson`'s error mapping. */
-  private[functions] def parseSide(utf8: Array[Byte], failOnError: Boolean): AnyRef =
-    try VariantMergePatch.docToVNode(utf8)
-    catch { case _: Exception if !failOnError => FAILED }
-
-  /** The right side of a two-parse form, parsed only when the left one
-    * gave a tree: the unfused binary expression never evaluates its
-    * right child after a SQL-null left, so a bad right document cannot
-    * raise there. */
-  private[functions] def parseRight(left: AnyRef, utf8: Array[Byte], failOnError: Boolean): AnyRef =
-    if (isNull(left)) left else parseSide(utf8, failOnError)
-
-  /** The side is SQL NULL: a top-level JSON null or a failed `try_` parse. */
-  private[functions] def isNull(side: AnyRef): Boolean = side == null || (side eq FAILED)
-}
-
-/** Fused `variant_diff(variant_from_json(a), variant_from_json(b))` —
-  * both documents go straight into the value tree (byte walk, else the
-  * codec's parse) and the minimal RFC 7386 patch encodes ONCE — mirror
-  * of [[JsonMergePatchFused]] for the diff direction.
-  * Installed by [[VariantGetFusionRule]]; fused ≡ unfused parity is
-  * pinned in VariantMergeFuzzSpec.
-  */
-case class JsonDiffFused(left: Expression, right: Expression,
-                         failLeft: Boolean, failRight: Boolean)
-    extends BinaryExpression with GraftBinaryCodegen {
-
-  import VariantMergePatch._
-
-  override def dataType: DataType = VariantSchema.TYPE
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_diff_fused"
-
-  @transient private lazy val lastDiff: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](3))
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val ab = JsonFused.toBytes(l)
-    val bb = JsonFused.toBytes(r)
-    val memo = lastDiff.get()
-    if (memo(0) != null &&
-        java.util.Arrays.equals(memo(0).asInstanceOf[Array[Byte]], ab) &&
-        java.util.Arrays.equals(memo(1).asInstanceOf[Array[Byte]], bb)) {
-      return if (memo(2) eq JsonMergePatchFused.NULL_RESULT) null else memo(2)
-    }
-    val a = JsonMergePatchFused.parseSide(ab, failLeft)
-    val b = JsonMergePatchFused.parseRight(a, bb, failRight)
-    val out: AnyRef =
-      if (JsonMergePatchFused.isNull(b)) null
-      else encode(diff(a.asInstanceOf[VNode], b.asInstanceOf[VNode]))
-    memo(0) = ab.clone(); memo(1) = bb.clone()
-    memo(2) = if (out == null) JsonMergePatchFused.NULL_RESULT else out
-    out
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Fused `variant_strip_keys(variant_from_json(j), keys)` — the JSON
-  * document goes straight into the value tree (byte walk, else the
-  * codec's parse; same contract as JsonMergePatchFused), the
-  * named top-level keys drop from the tree, and the result encodes
-  * ONCE — the unfused chain's intermediate variant encode+decode
-  * disappears. Installed by [[VariantGetFusionRule]]; semantics match
-  * the unfused pair exactly (top-level JSON null → SQL NULL; parse
-  * failure throws or nulls per the from_json flag; non-objects
-  * re-encode unchanged, canonical bytes either way).
-  */
-case class JsonStripKeysFused(left: Expression, right: Expression, failFast: Boolean)
-    extends BinaryExpression with GraftBinaryCodegen {
-
-  import VariantMergePatch._
-
-  override def dataType: DataType = VariantSchema.TYPE
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_strip_keys_fused"
-
-  // same duplication-absorbing memo as the merge fusion: Catalyst copies
-  // the strip into every consumer expression; last-input memoization
-  // collapses the copies to one parse+strip+encode per row. The key set
-  // is compared by CONTENT (a snapshot Array[String], like the merge
-  // fusion's byte copy) — an ArrayData instance can be reused with
-  // mutated contents across rows, so reference identity is not a safe
-  // memo key even though the keys are almost always a literal.
-  @transient private lazy val lastStrip: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](3))
-
-  private def keySnapshot(
-      keys: org.apache.spark.sql.catalyst.util.ArrayData): Array[String] = {
-    val out = new Array[String](keys.numElements())
-    var i = 0
-    while (i < out.length) {
-      out(i) = if (keys.isNullAt(i)) null else keys.getUTF8String(i).toString
-      i += 1
-    }
-    out
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val tb = JsonFused.toBytes(l)
-    val keys = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val keyArr = keySnapshot(keys)
-    val memo = lastStrip.get()
-    if (memo(0) != null &&
-        java.util.Arrays.equals(
-          memo(1).asInstanceOf[Array[String]].asInstanceOf[Array[AnyRef]],
-          keyArr.asInstanceOf[Array[AnyRef]]) &&
-        java.util.Arrays.equals(memo(0).asInstanceOf[Array[Byte]], tb)) {
-      return if (memo(2) eq JsonMergePatchFused.NULL_RESULT) null else memo(2)
-    }
-    val t = JsonMergePatchFused.parseSide(tb, failFast)
-    val out: AnyRef =
-      if (JsonMergePatchFused.isNull(t)) null
-      else t.asInstanceOf[VNode] match {
-        case VObj(fields) =>
-          val kept = fields.clone()
-          var i = 0
-          while (i < keyArr.length) {
-            if (keyArr(i) != null) kept.remove(keyArr(i))
-            i += 1
-          }
-          encode(VObj(kept))
-        case other => encode(other)
+  object Side {
+    /** A variant struct, decoded. */
+    case object Variant extends Side("variant") {
+      def accepts(dt: DataType): Boolean = VariantSchema.isVariantStruct(dt)
+      def parts(in: Any): Array[AnyRef] = {
+        val row = in.asInstanceOf[InternalRow]
+        Array(row.getBinary(0), row.getBinary(1))
       }
-    memo(0) = tb.clone(); memo(1) = keyArr
-    memo(2) = if (out == null) JsonMergePatchFused.NULL_RESULT else out
-    out
+      def read(p: Array[AnyRef]): AnyRef =
+        decode(p(0).asInstanceOf[Array[Byte]], p(1).asInstanceOf[Array[Byte]])
+    }
+
+    /** Raw JSON text, parsed into the tree with `VariantFromJson`'s error
+      * mapping: a failed parse throws, or is SQL NULL under `try_`. */
+    final case class Json(failOnError: Boolean) extends Side("string/binary") {
+      def accepts(dt: DataType): Boolean = dt == StringType || dt == BinaryType
+      def parts(in: Any): Array[AnyRef] = Array(JsonFused.toBytes(in))
+      def read(p: Array[AnyRef]): AnyRef =
+        try docToVNode(p(0).asInstanceOf[Array[Byte]])
+        catch { case _: Exception if !failOnError => null }
+    }
+
+    /** Strip's key list; a null element names no key. */
+    case object Keys extends Side("array<string>") {
+      def accepts(dt: DataType): Boolean = dt match {
+        case ArrayType(StringType, _) => true
+        case _ => false
+      }
+      def parts(in: Any): Array[AnyRef] = {
+        val keys = in.asInstanceOf[ArrayData]
+        Array.tabulate[AnyRef](keys.numElements())(i =>
+          if (keys.isNullAt(i)) null else keys.getUTF8String(i).toString)
+      }
+      def read(p: Array[AnyRef]): AnyRef = p
+    }
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** Memoized-SQL-null marker (never escapes the memo). */
+  private val NULL_RESULT: AnyRef = new Object
+
+  /** Thread-local (key, result) of the last edit, shared across
+    * expression INSTANCES: Catalyst copies an edit into every aggregate,
+    * group or pushed-down filter expression that references it, and the
+    * copies evaluate back-to-back on one thread per row. The key is the
+    * edit, both side modes and both operands' contents, so one memo
+    * serves every edit and mode. */
+  private val lastEdit: ThreadLocal[Array[AnyRef]] =
+    ThreadLocal.withInitial(() => new Array[AnyRef](2))
+
+  /** A kept copy of a memo key: the bytes of struct rows and JSON
+    * strings can be reused buffers; strings and modes are immutable. */
+  private def snapshot(key: Array[AnyRef]): Array[AnyRef] = key.map {
+    case b: Array[Byte] => b.clone()
+    case parts: Array[AnyRef] => snapshot(parts)
+    case x => x
+  }
 }
 
+/** The decoded value tree every [[VariantEdit]] works on: its JSON
+  * reader, variant decoder, the merge and diff edits, and the canonical
+  * encoder. */
 object VariantMergePatch {
   import VariantConst._
 
@@ -409,34 +231,27 @@ object VariantMergePatch {
   /** Parse a whole JSON document straight into the value tree — the
     * fused path's replacement for parse→encode→decode. Returns Scala
     * null for a top-level JSON `null` (the SQL-null rule, JsonCodec
-    * fromJsonBytes). Byte walk first; a row it declines (escaped keys,
-    * integers ≥ 2^127, any malformed input) is the codec's own parse,
-    * decoded — so every error, and the tree of every row the walk
+    * fromJsonBytes). The one fused walk ([[JsonFused.walk]] at the root,
+    * [[jsonTree]] as its consumer) first; a row it declines (escaped
+    * keys, integers ≥ 2^127, any malformed input) is the codec's own
+    * parse, decoded — so every error, and the tree of every row the walk
     * declines, is exactly the unfused pipeline's.
     */
   def docToVNode(utf8: Array[Byte]): VNode =
-    try fastDocToVNode(utf8)
+    try JsonFused.walk(utf8, Array.empty, jsonTree).asInstanceOf[VNode]
     catch {
-      case graft.variant.FastJsonLex.Miss =>
+      case FastJsonLex.Miss =>
         val pair = VariantJsonCodec.fromJsonBytes(utf8, 0, utf8.length)
         if (pair == null) null else decode(pair._1, pair._2)
     }
 
-  private def fastDocToVNode(utf8: Array[Byte]): VNode = {
+  /** The JSON value at the cursor as a tree, with the codec's coercions:
+    * 63-bit ints → long, below 2^127 → decimal scale 0 (`integer` misses
+    * at 2^127, the codec's error), other numbers → double; a duplicate
+    * key keeps the last value at the first position, as decode() does. */
+  private def jsonTree(c: FastJsonLex.Cursor, depth: Int): VNode = {
     import graft.variant.{FastJsonLex => L}
-    val c = new L.Cursor(utf8, 0, utf8.length)
-    c.skipWs()
-    if (c.i >= c.end) throw L.Miss // empty: the codec's error
-    val v =
-      if ((c.peek & 0xff) == 'n') { L.literal(c, "null"); null } // top-level null rule
-      else fastVNode(c, 0)
-    c.skipWs()
-    if (c.i != c.end) throw L.Miss // trailing: the codec's error
-    v
-  }
-
-  private def fastVNode(c: graft.variant.FastJsonLex.Cursor, depth: Int): VNode = {
-    import graft.variant.{FastJsonLex => L}
+    import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
     val b = c.b
     (c.peek & 0xff) match {
       case 'n' => L.literal(c, "null"); VNull
@@ -446,74 +261,31 @@ object VariantMergePatch {
         c.i += 1
         val close = L.scanSimpleString(c)
         if (close >= 0) {
-          val s = new String(b, c.i, close - c.i, java.nio.charset.StandardCharsets.UTF_8)
+          val s = new String(b, c.i, close - c.i, UTF_8)
           c.i = close + 1
           VStr(s)
         } else {
-          val scratch = new graft.variant.ByteBuf(32)
+          val scratch = new ByteBuf(32)
           L.unescapeString(c, scratch)
-          VStr(new String(scratch.rawBytes, 0, scratch.length,
-            java.nio.charset.StandardCharsets.UTF_8))
+          VStr(new String(scratch.rawBytes, 0, scratch.length, UTF_8))
         }
       case '[' =>
-        L.openContainer(depth)
-        c.i += 1
         val out = Vector.newBuilder[VNode]
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == ']') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            out += fastVNode(c, depth + 1)
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case ']' => c.i += 1; more = false
-              case _ => throw L.Miss
-            }
-          }
-        }
+        JsonFused.members(c, depth, (_, _, _) => { out += jsonTree(c, depth + 1); false })
         VArr(out.result())
       case '{' =>
-        L.openContainer(depth)
-        c.i += 1
         val out = new scala.collection.mutable.LinkedHashMap[String, VNode]
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == '}') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            c.expect('"')
-            val close = L.scanSimpleString(c)
-            if (close < 0) throw L.Miss // escaped key: the codec's parse
-            L.checkName(close - c.i)
-            val key = new String(b, c.i, close - c.i,
-              java.nio.charset.StandardCharsets.UTF_8)
-            c.i = close + 1
-            c.skipWs()
-            c.expect(':')
-            c.skipWs()
-            out.put(key, fastVNode(c, depth + 1)) // last dup wins, like the tree
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case '}' => c.i += 1; more = false
-              case _ => throw L.Miss
-            }
-          }
-        }
+        JsonFused.members(c, depth, (_, off, len) => {
+          out.put(new String(b, off, len, UTF_8), jsonTree(c, depth + 1))
+          false
+        })
         VObj(out)
       case x if x == '-' || (x >= '0' && x <= '9') =>
-        // the codec's coercions: 63-bit ints → long, below 2^127 →
-        // decimal scale 0; `integer` misses at 2^127 (the codec's error)
         val start = c.i
         if (L.scanNumber(c)) {
           val big = L.integer(c, start)
           if (big == null) VLong(c.longValue) else VDecimal(big, 0)
-        } else VDouble(java.lang.Double.parseDouble(new String(b, start,
-          c.i - start, java.nio.charset.StandardCharsets.US_ASCII)))
+        } else VDouble(java.lang.Double.parseDouble(new String(b, start, c.i - start, US_ASCII)))
       case _ => throw L.Miss
     }
   }
@@ -551,7 +323,7 @@ object VariantMergePatch {
       case P_DATE => VDate(v.getDateDays)
       case P_TIMESTAMP => VTs(v.getTimestampMicros)
       case P_TIMESTAMP_NTZ => VTsNtz(v.getTimestampMicros)
-      case t => throw new IllegalArgumentException(s"variant_merge_patch: unsupported type id $t")
+      case t => throw new IllegalArgumentException(s"cannot decode variant: unsupported primitive type id $t")
     }
   }
 

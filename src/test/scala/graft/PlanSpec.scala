@@ -141,6 +141,41 @@ class PlanSpec extends AnyFunSuite {
     assert(surface.contains("json_typeof_fused"), surface)
   }
 
+  test("is_variant_null over a parse fuses to the root typeof: v_missing_is_null parses nothing") {
+    val plan = Queries.queryMap("v_missing_is_null")(spark, TestSpark.SF)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("json_typeof_fused"), plan)
+    assert(!plan.contains("variant_from_json"), plan)
+  }
+
+  test("r14 rewrites stay planned: KMV sketch on ObjectHashAggregate, compiled kernels without lambdas") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Project}
+    // the bottom-k sketch aggregate replaced distinct + row_number() <= k
+    val kmv = Queries.queryMap("q_kmv_overlap")(spark, TestSpark.SF).queryExecution.sparkPlan
+    val nodes = kmv.collect { case n => n.nodeName }
+    assert(nodes.contains("ObjectHashAggregate"), kmv)
+    assert(!nodes.exists(n => n == "Window" || n == "WindowGroupLimit"), kmv)
+    def has(e: Expression, p: Expression => Boolean) = e.find(p).isDefined
+    val isLambda = (e: Expression) => e.isInstanceOf[LambdaFunction]
+    // d_fuzzy_join: the deletion neighborhood expands through the
+    // compiled kernel; no lambda anywhere in the plan
+    val fuzzy = Queries.queryMap("d_fuzzy_join")(spark, TestSpark.SF).queryExecution.optimizedPlan
+    assert(fuzzy.collect { case g: Generate => g }
+      .exists(g => has(g.generator, _.isInstanceOf[graft.functions.Del1Neighbors])), fuzzy)
+    assert(fuzzy.find(_.expressions.exists(has(_, isLambda))).isEmpty, fuzzy)
+    // e_gram_matrix, e_rand_proj: the per-row quantization projection is
+    // the compiled kernel, not a transform lambda
+    Seq("e_gram_matrix", "e_rand_proj").foreach { name =>
+      val plan = Queries.queryMap(name)(spark, TestSpark.SF).queryExecution.optimizedPlan
+      val quantize = plan.collect {
+        case p: Project if p.projectList.exists(has(_, _.isInstanceOf[graft.functions.VecQuantizePpm])) => p
+      }
+      assert(quantize.nonEmpty, s"$name\n$plan")
+      assert(!quantize.exists(_.projectList.exists(has(_, isLambda))), s"$name\n$plan")
+    }
+  }
+
   test("auto-shred inference reads a bounded, column-pruned sample") {
     val ev = Tables.events(spark, TestSpark.SF)
       .withColumn("v", graft.functions.VariantFunctions.variant_from_json(col("props")))

@@ -393,4 +393,32 @@ class FusedPropertySpec extends AnyFunSuite {
     forAllSamples(genNode(3))(node => check(mapper.writeValueAsString(node)))
     docs.foreach(check)
   }
+
+  test("is_variant_null over a parse equals its fused root or path typeof form") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+    /** The expression the fusion rule makes of `e`. */
+    def fuse(e: Expression): Expression =
+      VariantGetFusionRule(Project(Seq(Alias(e, "r")()), OneRowRelation()))
+        .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child
+    // a top-level null, a nested null, a missing key, malformed docs
+    val docs = Seq[String](null, "null", """{"a": null}""", """{"a": 1, "b": [null]}""", "{}",
+      "1 2", """{"a":1,}""", "", "tru", """{"a": null} x""") ++ missCorpus
+    def check(json: String): Unit = Seq(true, false).foreach { strict =>
+      val parse = VariantFromJson(Literal.create(json, StringType), strict)
+      Seq("$", "$.a", "$.b[0]", "$.zzz").foreach { path =>
+        val unfused = IsVariantNull(if (path == "$") parse else VariantGet(parse, path, VariantSchema.TYPE))
+        val fused = fuse(unfused)
+        assert(fused.find(_.isInstanceOf[JsonPathExtract]).isDefined, fused)
+        val f = outcome(fused.eval(null))
+        val u = outcome(unfused.eval(null))
+        assert(f == u, s"$path strict=$strict json=${String.valueOf(json).take(60)} fused=$f unfused=$u")
+      }
+    }
+    docs.foreach(check)
+    forAllSamples(genNode(3))(node => check(s"""{"a": ${mapper.writeValueAsString(node)}}"""))
+    // the nested null is the one true answer
+    assert(fuse(IsVariantNull(VariantGet(VariantFromJson(Literal("""{"a": null}""")), "$.a",
+      VariantSchema.TYPE))).eval(null) == true)
+  }
 }

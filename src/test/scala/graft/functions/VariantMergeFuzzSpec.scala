@@ -85,19 +85,30 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
 
   // -------------------------------------------------------------------
   // Fusion parity: the optimizer rewrites the SQL surface to
-  // JsonMergePatchFused, so the suite above now exercises the FUSED
-  // plan; this block pins fused ≡ unfused byte-for-byte by direct
-  // expression eval (no optimizer), keeping the unfused path tested.
+  // the fused merge (JSON operand sides), so the suite above now
+  // exercises the FUSED plan; this block pins fused ≡ unfused
+  // byte-for-byte by direct expression eval (no optimizer), keeping the
+  // unfused path tested.
   // -------------------------------------------------------------------
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   import org.apache.spark.sql.types.StringType
+  import VariantEdit.Side.Json
+
+  /** An edit over two raw JSON operands, as the fusion rule builds it. */
+  private def fusedEdit(edit: VariantEdit.Edit, l: Expression, r: Expression,
+                        failLeft: Boolean, failRight: Boolean) =
+    VariantEdit(edit, l, r, Json(failLeft), Json(failRight))
+
+  /** Strip over a raw JSON operand, as the fusion rule builds it. */
+  private def fusedStrip(j: Expression, keys: Expression, failFast: Boolean) =
+    VariantEdit(VariantEdit.Strip, j, keys, Json(failFast), VariantEdit.Side.Keys)
 
   private def evalPair(t: String, p: String): (Any, Any) = {
     val lt = Literal.create(t, StringType)
     val lp = Literal.create(p, StringType)
-    val unfused = VariantMergePatch(VariantFromJson(lt), VariantFromJson(lp)).eval(InternalRow.empty)
-    val fused = JsonMergePatchFused(lt, lp, failLeft = true, failRight = true).eval(InternalRow.empty)
+    val unfused = VariantEdit(VariantEdit.Merge, VariantFromJson(lt), VariantFromJson(lp)).eval(InternalRow.empty)
+    val fused = fusedEdit(VariantEdit.Merge, lt, lp, failLeft = true, failRight = true).eval(InternalRow.empty)
     (unfused, fused)
   }
 
@@ -139,11 +150,11 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
 
   test("fused parity on errors: malformed, trailing tokens, i128 overflow, try_ semantics") {
     def unfusedFails(t: String, p: String): Boolean =
-      try { VariantMergePatch(VariantFromJson(Literal.create(t, StringType)),
+      try { VariantEdit(VariantEdit.Merge, VariantFromJson(Literal.create(t, StringType)),
         VariantFromJson(Literal.create(p, StringType))).eval(InternalRow.empty); false }
       catch { case _: graft.variant.VariantJsonCodec.JsonParseException => true }
     def fusedFails(t: String, p: String): Boolean =
-      try { JsonMergePatchFused(Literal.create(t, StringType), Literal.create(p, StringType),
+      try { fusedEdit(VariantEdit.Merge, Literal.create(t, StringType), Literal.create(p, StringType),
         failLeft = true, failRight = true).eval(InternalRow.empty); false }
       catch { case _: graft.variant.VariantJsonCodec.JsonParseException => true }
     for ((t, p) <- Seq(
@@ -155,7 +166,7 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
       assert(unfusedFails(t, p) && fusedFails(t, p), s"error parity: target=$t patch=$p")
     }
     // try_ form: a failed side nulls the result instead of throwing
-    val tryFused = JsonMergePatchFused(
+    val tryFused = fusedEdit(VariantEdit.Merge,
       Literal.create("""{"a":}""", StringType), Literal.create("""{"b":1}""", StringType),
       failLeft = false, failRight = true).eval(InternalRow.empty)
     assert(tryFused == null)
@@ -173,8 +184,8 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
     val lj = Literal.create(j, StringType)
     val lk = Literal(new GenericArrayData(keys.map(UTF8String.fromString).toArray),
       org.apache.spark.sql.types.ArrayType(StringType))
-    val unfused = VariantStripKeys(VariantFromJson(lj), lk).eval(InternalRow.empty)
-    val fused = JsonStripKeysFused(lj, lk, failFast = true).eval(InternalRow.empty)
+    val unfused = VariantEdit(VariantEdit.Strip, VariantFromJson(lj), lk).eval(InternalRow.empty)
+    val fused = fusedStrip(lj, lk, failFast = true).eval(InternalRow.empty)
     (unfused, fused)
   }
 
@@ -209,14 +220,14 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
     assertStripSame("""{"a":1,"b":2}""", Seq("a", "b")) // empty object result
     assertStripSame("""{"a":1}""", Seq()) // no-op strip
     def fusedStripFails(j: String): Boolean =
-      try { JsonStripKeysFused(Literal.create(j, StringType),
+      try { fusedStrip(Literal.create(j, StringType),
         Literal(new GenericArrayData(Array(UTF8String.fromString("a"))),
           org.apache.spark.sql.types.ArrayType(StringType)),
         failFast = true).eval(InternalRow.empty); false }
       catch { case _: graft.variant.VariantJsonCodec.JsonParseException => true }
     assert(fusedStripFails("""{"a":}"""))
     assert(fusedStripFails("""{"a":1} 2"""))
-    val tryFused = JsonStripKeysFused(Literal.create("""{"a":}""", StringType),
+    val tryFused = fusedStrip(Literal.create("""{"a":}""", StringType),
       Literal(new GenericArrayData(Array(UTF8String.fromString("a"))),
         org.apache.spark.sql.types.ArrayType(StringType)),
       failFast = false).eval(InternalRow.empty)
@@ -229,8 +240,8 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
   private def diffPair(a: String, b: String): (Any, Any) = {
     val la = Literal.create(a, StringType)
     val lb = Literal.create(b, StringType)
-    val unfused = VariantDiff(VariantFromJson(la), VariantFromJson(lb)).eval(InternalRow.empty)
-    val fused = JsonDiffFused(la, lb, failLeft = true, failRight = true).eval(InternalRow.empty)
+    val unfused = VariantEdit(VariantEdit.Diff, VariantFromJson(la), VariantFromJson(lb)).eval(InternalRow.empty)
+    val fused = fusedEdit(VariantEdit.Diff, la, lb, failLeft = true, failRight = true).eval(InternalRow.empty)
     (unfused, fused)
   }
 
@@ -326,16 +337,79 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
         val u = outcome(unfused)
         assert(f == u, s"$what strict=$strict doc=${doc.take(60)}: fused=$f unfused=$u")
       }
-      same("strip", JsonStripKeysFused(lit(doc), keys, strict).eval(InternalRow.empty),
-        VariantStripKeys(parse(doc), keys).eval(InternalRow.empty))
+      same("strip", fusedStrip(lit(doc), keys, strict).eval(InternalRow.empty),
+        VariantEdit(VariantEdit.Strip, parse(doc), keys).eval(InternalRow.empty))
       for (other <- others; (l, r) <- Seq((doc, other), (other, doc))) {
         same(s"merge(${l.take(40)}, ${r.take(40)})",
-          JsonMergePatchFused(lit(l), lit(r), strict, strict).eval(InternalRow.empty),
-          VariantMergePatch(parse(l), parse(r)).eval(InternalRow.empty))
+          fusedEdit(VariantEdit.Merge, lit(l), lit(r), strict, strict).eval(InternalRow.empty),
+          VariantEdit(VariantEdit.Merge, parse(l), parse(r)).eval(InternalRow.empty))
         same(s"diff(${l.take(40)}, ${r.take(40)})",
-          JsonDiffFused(lit(l), lit(r), strict, strict).eval(InternalRow.empty),
-          VariantDiff(parse(l), parse(r)).eval(InternalRow.empty))
+          fusedEdit(VariantEdit.Diff, lit(l), lit(r), strict, strict).eval(InternalRow.empty),
+          VariantEdit(VariantEdit.Diff, parse(l), parse(r)).eval(InternalRow.empty))
       }
     })
+  }
+
+  // -------------------------------------------------------------------
+  // The one edit memo is shared by every edit, mode and instance on a
+  // thread: its key must tell them apart.
+  // -------------------------------------------------------------------
+  private def printed(v: Any): String =
+    if (v == null) null
+    else {
+      val row = v.asInstanceOf[InternalRow]
+      graft.variant.VariantJsonCodec.toJsonString(row.getBinary(0), row.getBinary(1))
+    }
+
+  private def keyList(ks: String*) =
+    Literal(new GenericArrayData(ks.map(UTF8String.fromString).toArray),
+      org.apache.spark.sql.types.ArrayType(StringType))
+
+  test("one memo for every edit: its key covers the edit, each side's mode and the key list") {
+    def lit(s: String) = Literal.create(s, StringType)
+    val a = """{"a":1,"b":{"c":2}}"""
+    val b = """{"a":3,"b":{"c":2},"d":4}"""
+    val bad = """{"a":}"""
+    for (strict <- Seq(true, false)) {
+      // identical operands, back to back on one thread
+      assert(printed(fusedEdit(VariantEdit.Merge, lit(a), lit(b), strict, strict).eval(InternalRow.empty))
+        === """{"a":3,"b":{"c":2},"d":4}""")
+      assert(printed(fusedEdit(VariantEdit.Diff, lit(a), lit(b), strict, strict).eval(InternalRow.empty))
+        === """{"a":3,"d":4}""")
+      assert(printed(VariantEdit(VariantEdit.Diff, VariantFromJson(lit(a), strict),
+        VariantFromJson(lit(b), strict)).eval(InternalRow.empty)) === """{"a":3,"d":4}""")
+      assert(printed(VariantEdit(VariantEdit.Merge, VariantFromJson(lit(a), strict),
+        VariantFromJson(lit(b), strict)).eval(InternalRow.empty)) === """{"a":3,"b":{"c":2},"d":4}""")
+      // the same document, a different key list
+      assert(printed(fusedStrip(lit(a), keyList("a"), strict).eval(InternalRow.empty)) === """{"b":{"c":2}}""")
+      assert(printed(fusedStrip(lit(a), keyList("b"), strict).eval(InternalRow.empty)) === """{"a":1}""")
+      assert(printed(VariantEdit(VariantEdit.Strip, VariantFromJson(lit(a), strict), keyList("a"))
+        .eval(InternalRow.empty)) === """{"b":{"c":2}}""")
+    }
+    // a memoized try_ NULL must not answer the strict form of either side
+    for ((l, r) <- Seq((bad, a), (a, bad))) {
+      assert(fusedEdit(VariantEdit.Merge, lit(l), lit(r), false, false).eval(InternalRow.empty) == null)
+      intercept[graft.variant.VariantJsonCodec.JsonParseException](
+        fusedEdit(VariantEdit.Merge, lit(l), lit(r), l == bad, r == bad).eval(InternalRow.empty))
+    }
+  }
+
+  test("an unknown primitive type id raises an error that names it, through diff and strip") {
+    import VariantMergePatch.{VLong, VObj, encode}
+    val meta = graft.variant.VariantMetadata.build(new java.util.ArrayList[String]())._1
+    // primitive header with type id 20: basic type 0, type info 20
+    val unknown = Literal(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](meta, Array[Byte]((20 << 2).toByte))), VariantSchema.TYPE)
+    val ok = Literal(encode(VObj(scala.collection.mutable.LinkedHashMap("a" -> VLong(1)))),
+      VariantSchema.TYPE)
+    val edits = Seq(
+      VariantEdit(VariantEdit.Strip, unknown, keyList("a")),
+      VariantEdit(VariantEdit.Diff, unknown, ok),
+      VariantEdit(VariantEdit.Diff, ok, unknown))
+    edits.foreach { e =>
+      val err = intercept[IllegalArgumentException](e.eval(InternalRow.empty))
+      assert(err.getMessage.contains("type id 20"), err.getMessage)
+      assert(!err.getMessage.contains("variant_merge_patch"), err.getMessage)
+    }
   }
 }
