@@ -361,10 +361,9 @@ object Queries {
     QueryDef("v_get_multi",
       (s, d) => {
         import org.apache.spark.sql.graftbridge.Bridge
-        val multi = Bridge.column(graft.functions.VariantGetMulti(
-          Bridge.expression(col("v")),
-          Seq(("$.k", LongType, "k"), ("$.k", StringType, "ks"),
-            ("$.zzz", LongType, "zz"))))
+        val multi = Bridge.column(graft.functions.VariantRead(
+          Bridge.expression(col("v")), "$", graft.functions.JsonConsumer.Multi(
+            Seq(("$.k", LongType, "k"), ("$.k", StringType, "ks"), ("$.zzz", LongType, "zz")))))
         parsedEvents(s, d)
           .withColumn("m", multi)
           .select(col("event_id"), col("m.k").as("k"),

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
@@ -34,6 +34,21 @@ object GraftCodegen {
     case FloatType => s"((java.lang.Float) $res).floatValue()"
     case dt => s"(${CodeGenerator.boxedType(dt)}) $res"
   }
+
+  /** Java that makes `call`, a bridge into `e`'s eval, and assigns its
+    * boxed result to `ev`. */
+  def bridge(ctx: CodegenContext, ev: ExprCode, e: Expression, call: String): String = {
+    val res = ctx.freshName("graftRes")
+    val nullHandling =
+      if (e.nullable) s"if ($res == null) { ${ev.isNull} = true; } else"
+      else "" // non-nullable: ev.isNull is a literal, not assignable
+    s"""
+       |Object $res = $call;
+       |$nullHandling {
+       |  ${ev.value} = ${unboxAssign(e.dataType, res)};
+       |}
+     """.stripMargin
+  }
 }
 
 /** Binary twin of [[GraftUnaryCodegen]] for the pair-join kernels. */
@@ -42,18 +57,7 @@ trait GraftBinaryCodegen { self: BinaryExpression =>
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftExpr", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val res = ctx.freshName("graftRes")
-      val nullHandling =
-        if (nullable) s"if ($res == null) { ${ev.isNull} = true; } else"
-        else "" // non-nullable: ev.isNull is a literal, not assignable
-      s"""
-         |Object $res = $ref.evalChildValues($l, $r);
-         |$nullHandling {
-         |  ${ev.value} = ${GraftCodegen.unboxAssign(dataType, res)};
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (l, r) => GraftCodegen.bridge(ctx, ev, this, s"$ref.evalChildValues($l, $r)"))
   }
 }
 
@@ -64,17 +68,6 @@ trait GraftUnaryCodegen { self: UnaryExpression =>
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("graftExpr", this, getClass.getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val res = ctx.freshName("graftRes")
-      val nullHandling =
-        if (nullable) s"if ($res == null) { ${ev.isNull} = true; } else"
-        else "" // non-nullable: ev.isNull is a literal, not assignable
-      s"""
-         |Object $res = $ref.evalChildValue($c);
-         |$nullHandling {
-         |  ${ev.value} = ${GraftCodegen.unboxAssign(dataType, res)};
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c => GraftCodegen.bridge(ctx, ev, this, s"$ref.evalChildValue($c)"))
   }
 }

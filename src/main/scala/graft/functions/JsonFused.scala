@@ -210,8 +210,8 @@ private[functions] object JsonFused {
   * merge runs directly on each row's bytes through the one fused walk
   * (root path, [[JsonFused.fastInferSchema]] as its consumer) — no
   * metadata build, no variant encode, no decode walk. Buffer, merge, and
-  * wire form are shared with [[SchemaOfVariantAgg]] (same `SchemaInfer`
-  * lattice), so partial aggregation and the serialized-schema consumers
+  * wire form are [[SchemaLatticeAgg]]'s, as for [[SchemaOfVariantAgg]],
+  * so partial aggregation and the serialized-schema consumers
   * (`Shred.inferFields`) behave identically. A row the byte walk
   * declines goes through the unfused aggregate's `update`, so rows that
   * fail to parse follow its rule: with `parseFailOnError=false` the row
@@ -222,12 +222,8 @@ case class SchemaOfJsonAgg(
     parseFailOnError: Boolean,
     renderOutput: Boolean = true,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[SchemaInfer.SType]
-    with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
+    inputAggBufferOffset: Int = 0) extends SchemaLatticeAgg {
 
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
   override def prettyName: String = "schema_of_json_agg"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -235,8 +231,6 @@ case class SchemaOfJsonAgg(
     case other => TypeCheckResult.TypeCheckFailure(
       s"schema_of_json_agg expects string/binary, got: ${other.simpleString}")
   }
-
-  override def createAggregationBuffer(): SchemaInfer.SType = SchemaInfer.SNull
 
   @transient private lazy val unfused = SchemaOfVariantAgg(VariantFromJson(child, parseFailOnError))
 
@@ -250,19 +244,6 @@ case class SchemaOfJsonAgg(
       }
     } catch { case L.Miss => unfused.update(buffer, input) }
   }
-
-  override def merge(a: SchemaInfer.SType, b: SchemaInfer.SType): SchemaInfer.SType =
-    SchemaInfer.merge(a, b)
-
-  override def eval(buffer: SchemaInfer.SType): Any =
-    UTF8String.fromString(
-      if (renderOutput) buffer.render else SchemaInfer.serialize(buffer))
-
-  override def serialize(buffer: SchemaInfer.SType): Array[Byte] =
-    SchemaInfer.serialize(buffer).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  override def deserialize(bytes: Array[Byte]): SchemaInfer.SType =
-    SchemaInfer.deserialize(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SchemaOfJsonAgg =
     copy(mutableAggBufferOffset = newOffset)

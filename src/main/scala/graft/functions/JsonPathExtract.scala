@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.variant.{FastJsonLex => L, PathStep, VariantJsonCodec, VariantPath}
+import graft.variant.{FastJsonLex => L, MetadataView, PathStep, SchemaInfer, VariantJsonCodec, VariantPath, VariantView}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -17,8 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * intermediate struct. Installed by [[VariantGetFusionRule]] (the
   * optimization sketched in SURVEY §4.2.2). A row the walk declines is
   * evaluated by the unfused plan itself, which stays the semantic
-  * reference: `consumer` over `variant_get(parse, path)`, or over the
-  * parse itself at the root path `$`.
+  * reference: the [[VariantRead]] of `consumer` at `path` over the parse.
+  * The two byte sources share no evaluation code (a memo here, an id
+  * cache there; a cursor here, a View there), so each stays its own
+  * class; `graft.functions.Json*` names the fused forms.
   */
 case class JsonPathExtract(
     child: Expression,
@@ -31,7 +33,7 @@ case class JsonPathExtract(
 
   override def dataType: DataType = consumer.dataType
   override def nullable: Boolean = true
-  override def prettyName: String = consumer.prettyName
+  override def prettyName: String = consumer.fusedName
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
@@ -78,7 +80,7 @@ case class JsonPathExtract(
   /** The unfused plan this expression replaced: it evaluates every row
     * the byte walk declines. */
   @transient private lazy val unfused =
-    consumer.unfused(VariantFromJson(child, parseFailOnError), path)
+    VariantRead(VariantFromJson(child, parseFailOnError), path, consumer)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -96,18 +98,36 @@ object JsonPathExtract {
     ThreadLocal.withInitial(() => new Array[AnyRef](3))
 }
 
-/** What [[JsonPathExtract]] does with the JSON value at its path: `read`
-  * consumes that value fully (`depth` = the containers around it) and
-  * returns the unfused consumer's result; `unfused` builds that consumer
-  * over a parse. Each keeps its form's plan name. Serializable itself,
-  * not only through its case subclasses: expressions ship to executors,
-  * and Java deserialization needs the first non-serializable superclass
-  * to have a no-argument constructor.
+/** One row per variant reader: what [[VariantRead]] does with the
+  * variant at its path (`readVariant`), and for the rows with a fused
+  * form, what [[JsonPathExtract]] does with the JSON value there (`read`)
+  * — the same result off the raw bytes. `prettyName` is the reader's plan
+  * name and `fusedName` the fused form's, null for a row with no JSON
+  * reader. Serializable itself, not only through its case subclasses:
+  * expressions ship to executors, and Java deserialization needs the
+  * first non-serializable superclass to have a no-argument constructor.
   */
-sealed abstract class JsonConsumer(val prettyName: String, val dataType: DataType)
+sealed abstract class JsonConsumer(val prettyName: String, val fusedName: String, val dataType: DataType)
     extends Serializable {
-  def read(c: L.Cursor, depth: Int): Any
-  def unfused(parse: Expression, path: String): Expression
+  /** The paths it reads, relative to the read's own path. */
+  def paths: Seq[String] = Seq("$")
+
+  /** The variant reader: the result for the document `root`, given the
+    * steps of each of [[paths]] from the root and their key ids. */
+  def readVariant(meta: MetadataView, root: VariantView,
+                  steps: Array[Array[PathStep]], ids: Array[Array[Int]]): Any
+
+  /** The JSON reader: consume the value at the cursor fully (`depth` =
+    * the containers around it) and return what `readVariant` returns for
+    * it. A row without one declines every document. */
+  def read(c: L.Cursor, depth: Int): Any = throw L.Miss
+
+  /** True when the row has a fused form, [[fused]]. */
+  def fusable: Boolean = fusedName != null
+
+  /** The fused form of this row at `path` over `variant_from_json(src)`. */
+  def fused(src: Expression, path: String, parseFailOnError: Boolean): Expression =
+    JsonPathExtract(src, path, this, parseFailOnError)
 }
 
 object JsonConsumer {
@@ -123,23 +143,31 @@ object JsonConsumer {
     case _ => false
   }
 
-  /** A consumer of the variant value at the path: `over(variant_get(parse,
-    * path))`, or `over(parse)` at the root. A nested JSON null is a
-    * variant null here (typeof `"null"`); a top-level one is the parse's
-    * SQL NULL, which the walk returns without calling `read`.
+  /** A row that reads the one value at the path: `at` gets it, null when
+    * the path misses. A nested JSON null is a variant null here (typeof
+    * `"null"`); a top-level one is the parse's SQL NULL, which neither
+    * reader sees.
     */
-  sealed abstract class OfVariant(prettyName: String, dataType: DataType)
-      extends JsonConsumer(prettyName, dataType) {
-    protected def over(v: Expression): Expression
-    def unfused(parse: Expression, path: String): Expression =
-      over(if (path == "$") parse else VariantGet(parse, path, VariantSchema.TYPE))
+  sealed abstract class AtPath(prettyName: String, fusedName: String, dataType: DataType)
+      extends JsonConsumer(prettyName, fusedName, dataType) {
+    def at(meta: MetadataView, v: VariantView): Any
+    final def readVariant(meta: MetadataView, root: VariantView,
+                          steps: Array[Array[PathStep]], ids: Array[Array[Int]]): Any =
+      at(meta, VariantPath.walkWithIds(root, steps(0), ids(0)))
   }
 
   /** `variant_keys`: object key names in dictionary (sorted UTF-8)
     * order; NULL for non-objects. */
-  case object Keys extends OfVariant("json_keys_fused", ArrayType(StringType, containsNull = false)) {
-    protected def over(v: Expression): Expression = VariantKeys(v)
-    def read(c: L.Cursor, depth: Int): Any =
+  case object Keys extends AtPath("variant_keys", "json_keys_fused",
+      ArrayType(StringType, containsNull = false)) {
+    def at(meta: MetadataView, v: VariantView): Any =
+      if (v == null || !v.isObject) null
+      else {
+        val o = v.getObject
+        new GenericArrayData(Array.tabulate[Any](o.numElements)(i =>
+          UTF8String.fromString(meta.getKey(o.fieldIdAt(i)))))
+      }
+    override def read(c: L.Cursor, depth: Int): Any =
       if ((c.peek & 0xff) != '{') { L.skipValue(c, depth); null }
       else {
         val names = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -156,20 +184,26 @@ object JsonConsumer {
 
   /** `variant_size`: field count of an object, element count of an
     * array, NULL for scalars. */
-  case object Size extends OfVariant("json_size_fused", IntegerType) {
-    protected def over(v: Expression): Expression = VariantSize(v)
-    def read(c: L.Cursor, depth: Int): Any = (c.peek & 0xff) match {
+  case object Size extends AtPath("variant_size", "json_size_fused", IntegerType) {
+    def at(meta: MetadataView, v: VariantView): Any =
+      if (v == null) null
+      else if (v.isObject) v.getObject.numElements
+      else if (v.isArray) v.getArray.numElements
+      else null
+    override def read(c: L.Cursor, depth: Int): Any = (c.peek & 0xff) match {
       case '{' | '[' => JsonFused.members(c, depth, null)
       case _ => L.skipValue(c, depth); null
     }
   }
 
-  /** `variant_typeof`: the type name from the first byte, the value only
-    * validated. Names replicate the unfused path exactly, including the
-    * narrowest-int-encoding names and big-int → decimal(38,0). */
-  case object TypeOf extends OfVariant("json_typeof_fused", StringType) {
-    protected def over(v: Expression): Expression = VariantTypeOf(v)
-    def read(c: L.Cursor, depth: Int): Any = UTF8String.fromString((c.peek & 0xff) match {
+  /** `variant_typeof`: the type name. The JSON reader takes it from the
+    * first byte, the value only validated, and replicates the variant
+    * names exactly, including the narrowest-int-encoding names and
+    * big-int → decimal(38,0). */
+  case object TypeOf extends AtPath("variant_typeof", "json_typeof_fused", StringType) {
+    def at(meta: MetadataView, v: VariantView): Any =
+      if (v == null) null else UTF8String.fromString(v.typeName)
+    override def read(c: L.Cursor, depth: Int): Any = UTF8String.fromString((c.peek & 0xff) match {
       case 'n' => L.literal(c, "null"); "null"
       case '{' => L.skipValue(c, depth); "object"
       case '[' => L.skipValue(c, depth); "array"
@@ -192,22 +226,69 @@ object JsonConsumer {
     })
   }
 
-  /** `schema_of_variant`: the rendered schema lattice of the value, by
-    * the walker the fused aggregate uses. */
-  case object SchemaOf extends OfVariant("json_schema_of_fused", StringType) {
-    protected def over(v: Expression): Expression = SchemaOfVariant(v)
-    def read(c: L.Cursor, depth: Int): Any =
+  /** `schema_of_variant`: the rendered schema lattice of the value; the
+    * JSON reader is the walker the fused aggregate uses. */
+  case object SchemaOf extends AtPath("schema_of_variant", "json_schema_of_fused", StringType) {
+    def at(meta: MetadataView, v: VariantView): Any =
+      if (v == null) null else UTF8String.fromString(SchemaInfer.infer(meta, v).render)
+    override def read(c: L.Cursor, depth: Int): Any =
       UTF8String.fromString(JsonFused.fastInferSchema(c, depth).render)
   }
 
-  /** `variant_get(parse, path, targetType)` for a [[fusableTarget]]: the
-    * scalar cast straight off the bytes. */
-  final case class Cast(targetType: DataType, castFailOnError: Boolean)
-      extends JsonConsumer("json_path_extract", targetType) {
-    def unfused(parse: Expression, path: String): Expression =
-      VariantGet(parse, path, targetType, castFailOnError)
+  /** `is_variant_null`: true iff the value is the variant (JSON) `null`
+    * primitive, distinct from SQL NULL (SURVEY §1.4): a missing path and
+    * a SQL NULL input are false. Its fused form is the typeof one: a
+    * variant null is typeof 'null', and SQL NULL (missing, a top-level
+    * JSON null, a failed try_ parse) is false. */
+  case object IsNull extends AtPath("is_variant_null", null, BooleanType) {
+    def at(meta: MetadataView, v: VariantView): Any = v != null && v.isNull
+    override def fusable: Boolean = true
+    override def fused(src: Expression, path: String, parseFailOnError: Boolean): Expression =
+      Coalesce(Seq(EqualTo(TypeOf.fused(src, path, parseFailOnError), Literal("null")), Literal(false)))
+  }
 
-    def read(c: L.Cursor, depth: Int): Any =
+  /** `variant_get_all`: every match of a path with `[*]` / `.*`
+    * wildcards, as an array in document order (array indices ascending,
+    * depth-first across wildcard branches) — FLATTEN-then-aggregate in
+    * one walk with no row explosion. A miss prunes its branch; zero
+    * matches read an EMPTY array. Element casts are try casts. */
+  final case class All(elemType: DataType)
+      extends JsonConsumer("variant_get_all", null, ArrayType(elemType, containsNull = true)) {
+    def readVariant(meta: MetadataView, root: VariantView,
+                    steps: Array[Array[PathStep]], ids: Array[Array[Int]]): Any = {
+      val hits = new scala.collection.mutable.ArrayBuffer[VariantView](8)
+      VariantPath.walkAll(meta, root, steps(0), ids(0), hits)
+      new GenericArrayData(Array.tabulate[Any](hits.length)(i =>
+        VariantExtract.cast(meta, hits(i), elemType, failOnError = false)))
+    }
+  }
+
+  /** `variant_get_multi`: many (path, type, name) fields in one read,
+    * with one id resolution per metadata for the whole set — the
+    * shredding workhorse. No JSON reader: a fused struct of byte walks
+    * cannot produce the NULL struct this returns for a null parse. */
+  final case class Multi(fields: Seq[(String, DataType, String)])
+      extends JsonConsumer("variant_get_multi", null,
+        StructType(fields.map { case (_, dt, name) => StructField(name, dt, nullable = true) })) {
+    require(fields.nonEmpty, "variant_get_multi needs at least one field")
+    override def paths: Seq[String] = fields.map(_._1)
+    def readVariant(meta: MetadataView, root: VariantView,
+                    steps: Array[Array[PathStep]], ids: Array[Array[Int]]): Any =
+      new GenericInternalRow(Array.tabulate[Any](fields.length)(i => VariantExtract.cast(
+        meta, VariantPath.walkWithIds(root, steps(i), ids(i)), fields(i)._2, failOnError = false)))
+  }
+
+  /** `variant_get` (strict casts) or `try_variant_get`: the value at the
+    * path cast to `targetType`. A variant target reads the value itself;
+    * a [[fusableTarget]] also casts straight off the JSON bytes. */
+  final case class Cast(targetType: DataType, castFailOnError: Boolean)
+      extends AtPath(if (castFailOnError) "variant_get" else "try_variant_get",
+        "json_path_extract", targetType) {
+    def at(meta: MetadataView, v: VariantView): Any =
+      VariantExtract.cast(meta, v, targetType, castFailOnError)
+    override def fusable: Boolean = fusableTarget(targetType)
+
+    override def read(c: L.Cursor, depth: Int): Any =
       try castValue(c, depth)
       catch { case e: Exception if (e ne L.Miss) && !castFailOnError => null }
 
@@ -333,11 +414,12 @@ object JsonConsumer {
 }
 
 /** Optimizer rule: collapse a consumer over `variant_from_json(s)` into
-  * its fused form — [[JsonPathExtract]] for scalar gets and for keys,
-  * size, typeof, schema_of and is_variant_null at the root or under a
-  * variant-typed get, [[SchemaOfJsonAgg]] for the schema aggregate, and
-  * JSON operand sides for a [[VariantEdit]] (merge, diff, strip) whose
-  * tree operands are all parses. Runs in the
+  * its fused form — the consumer's own for a [[VariantRead]] whose
+  * [[JsonConsumer]] row has a JSON reader ([[JsonPathExtract]]; a
+  * variant-typed get between the read and the parse only lengthens the
+  * path), the root typeof for `IS [NOT] NULL` of the parse,
+  * [[SchemaOfJsonAgg]] for the schema aggregate, and JSON operand sides
+  * for a [[VariantEdit]] (merge, diff, strip) over a left parse. Runs in the
   * operator-optimization batch via `injectOptimizerRule(GraftExtensions)`;
   * the rewrite is a pure expression-local transformation, so it composes
   * with pushdown — a pushed-down filter containing the fused form stays
@@ -350,32 +432,24 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     * form over the raw JSON `src` parsed per `parseFail`, or None when
     * `e` has none. Each caller fuses only when `p` is a parse.
     */
-  private def fusion(e: Expression): Option[(Expression, (Expression, Boolean) => Expression)] = {
-    def walk(p: Expression, path: String, c: JsonConsumer) =
-      Some((p, (src: Expression, fail: Boolean) => JsonPathExtract(src, path, c, fail)))
-    // a variant-typed get is navigation only: the walk does it
-    def at(v: Expression, c: JsonConsumer) = v match {
-      case VariantGet(p, path, t, _) if VariantSchema.isVariantStruct(t) => walk(p, path, c)
-      case p => walk(p, "$", c)
-    }
+  private def fusion(e: Expression): Option[(Expression, (Expression, Boolean) => Expression)] =
     e match {
-      case VariantGet(p, path, t, castFail) if JsonConsumer.fusableTarget(t) =>
-        walk(p, path, JsonConsumer.Cast(t, castFail))
-      case VariantKeys(v) => at(v, JsonConsumer.Keys)
-      case VariantSize(v) => at(v, JsonConsumer.Size)
-      case VariantTypeOf(v) => at(v, JsonConsumer.TypeOf)
-      case SchemaOfVariant(v) => at(v, JsonConsumer.SchemaOf)
-      // a variant null is typeof 'null'; SQL NULL (missing, top-level
-      // JSON null, a failed try_ parse) is false, as is_variant_null says
-      case IsVariantNull(v) => at(v, JsonConsumer.TypeOf).map { case (p, typeOf) =>
-        (p, (src: Expression, fail: Boolean) => Coalesce(Seq(
-          EqualTo(typeOf(src, fail), Literal("null")), Literal(false))))
-      }
+      case VariantRead(v, path, c) if c.fusable =>
+        // under any row but a get, a variant-typed get is navigation only:
+        // the walk does it. A get over a get stays as written, the one
+        // spelling that keeps a get on the View reader (RobustnessSpec).
+        val (p, at) = v match {
+          case VariantRead(p, inner, JsonConsumer.Cast(t, _))
+              if VariantSchema.isVariantStruct(t) && !c.isInstanceOf[JsonConsumer.Cast] =>
+            (p, inner + path.drop(1))
+          case p => (p, path)
+        }
+        Some((p, (src: Expression, fail: Boolean) => c.fused(src, at, fail)))
       // the root typeof is SQL NULL exactly when the parse is: null
       // input, top-level JSON null, a malformed doc in try mode
       case n @ (_: IsNull | _: IsNotNull) =>
         Some((n.children.head, (src: Expression, fail: Boolean) =>
-          n.withNewChildren(Seq(JsonPathExtract(src, "$", JsonConsumer.TypeOf, fail)))))
+          n.withNewChildren(Seq(JsonConsumer.TypeOf.fused(src, "$", fail)))))
       // reaches aggregate functions: AggregateExpression.aggregateFunction
       // is an expression field of the Aggregate node
       case s: SchemaOfVariantAgg =>
@@ -383,7 +457,6 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
           s.renderOutput, s.mutableAggBufferOffset, s.inputAggBufferOffset)))
       case _ => None
     }
-  }
 
   /** Expression-local fusion: the parse is nested directly under the
     * consumer (CollapseProject already inlined it).
@@ -392,16 +465,13 @@ object VariantGetFusionRule extends Rule[LogicalPlan] {
     Function.unlift { (e: Expression) =>
       fusion(e).collect { case (VariantFromJson(src, parseFail), fused) => fused(src, parseFail) }
     }.orElse {
-      // an edit whose tree operands are all parses: each document
-      // straight into the value tree (docToVNode), the edit, ONE
-      // canonical encode — no intermediate variant encode + decode. With
-      // a non-parse right operand the edit stays unfused: it would be
-      // evaluated before the left parse, not after a SQL-null left.
-      case e @ VariantEdit(_, VariantFromJson(src, fail), r, _, rs)
-          if rs == VariantEdit.Side.Keys || r.isInstanceOf[VariantFromJson] =>
+      // an edit over a parse: each parsed document straight into the
+      // value tree (docToVNode), the edit, ONE canonical encode — no
+      // intermediate variant encode + decode
+      case e @ VariantEdit(_, VariantFromJson(src, fail), r, _, rs) =>
         val (right, rightSide) = r match {
           case VariantFromJson(rsrc, rfail) => (rsrc, VariantEdit.Side.Json(rfail))
-          case keys => (keys, rs)
+          case other => (other, rs)
         }
         e.copy(left = src, right = right, leftSide = VariantEdit.Side.Json(fail), rightSide = rightSide)
     })

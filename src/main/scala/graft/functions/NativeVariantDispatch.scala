@@ -17,8 +17,13 @@ import org.apache.spark.sql.types.VariantType
   *    which keeps Spark's `PushVariantIntoScan` applicable: the scan
   *    is rewritten to read ONLY the requested typed_value subcolumn of
   *    a shredded file (`v_shredded_interop` + PlanSpec pin the plan).
-  *  - our-variant target (the no-type default) → our VariantGet over
-  *    `from_spark_variant(child)`, staying in our codec.
+  *  - every other reader ([[VariantRead]], our-variant targets
+  *    included) and `variant_to_json`, `variant_flatten` and
+  *    `variant_explode` → the same expression over
+  *    `from_spark_variant(child)`, staying in our codec. The conversion
+  *    is byte-verbatim, so semantics are unchanged: a user switching a
+  *    table to Spark's native VariantType keeps every query spelled with
+  *    our function names.
   *
   * Runs at resolution so Spark's optimizer sees its own expression
   * before scan planning.
@@ -38,25 +43,12 @@ object NativeVariantDispatch extends Rule[LogicalPlan] {
     e.resolved && e.dataType.isInstanceOf[VariantType]
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveExpressions {
-    case VariantGet(child, path, t, fail) if isNative(child) =>
-      if (VariantSchema.isVariantStruct(t))
-        VariantGet(FromSparkVariant(child), path, t, fail)
-      else
-        new org.apache.spark.sql.catalyst.expressions.variant.VariantGet(
-          child, Literal(path), t, fail, None)
-    // the rest of the unary surface accepts native columns by
-    // conversion (byte-verbatim, so semantics are unchanged): a user
-    // switching a table to Spark's native VariantType keeps every
-    // query spelled with our function names
-    case VariantGetAll(c, path, t) if isNative(c) =>
-      VariantGetAll(FromSparkVariant(c), path, t)
-    case VariantTypeOf(c) if isNative(c) => VariantTypeOf(FromSparkVariant(c))
-    case IsVariantNull(c) if isNative(c) => IsVariantNull(FromSparkVariant(c))
-    case VariantToJson(c) if isNative(c) => VariantToJson(FromSparkVariant(c))
-    case VariantKeys(c) if isNative(c) => VariantKeys(FromSparkVariant(c))
-    case VariantSize(c) if isNative(c) => VariantSize(FromSparkVariant(c))
-    case SchemaOfVariant(c) if isNative(c) => SchemaOfVariant(FromSparkVariant(c))
-    case VariantFlatten(c) if isNative(c) => VariantFlatten(FromSparkVariant(c))
-    case VariantExplode(c) if isNative(c) => VariantExplode(FromSparkVariant(c))
+    case VariantRead(child, path, JsonConsumer.Cast(t, fail))
+        if isNative(child) && !VariantSchema.isVariantStruct(t) =>
+      new org.apache.spark.sql.catalyst.expressions.variant.VariantGet(
+        child, Literal(path), t, fail, None)
+    case e @ (_: VariantRead | _: VariantToJson | _: VariantFlatten | _: VariantExplode)
+        if isNative(e.children.head) =>
+      e.withNewChildren(Seq(FromSparkVariant(e.children.head)))
   }
 }

@@ -41,7 +41,7 @@ object ShreddedPushdownRule extends Rule[LogicalPlan] {
           // and lenient are indistinguishable there. A sampled shred
           // under a strict get keeps the decode — an unsampled row could
           // owe the user a cast error.
-          case g @ VariantGet(attr: AttributeReference, path, t, failOnError)
+          case g @ VariantRead(attr: AttributeReference, path, JsonConsumer.Cast(t, failOnError))
               if childIds.contains(attr.exprId) =>
             index.get((attr.name, path)) match {
               // exact type match only: a cast could change null/error

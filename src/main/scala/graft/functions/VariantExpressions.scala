@@ -4,7 +4,8 @@ import graft.variant._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,6 +27,12 @@ object VariantSchema {
         s(1).name == "value" && s(1).dataType == BinaryType
     case _ => false
   }
+
+  /** The one type check of an expression that reads a variant struct. */
+  def checkStruct(name: String, dt: DataType): TypeCheckResult =
+    if (isVariantStruct(dt)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name expects a variant struct, got: ${dt.simpleString}")
 }
 
 /** `variant_from_json(jsonStr)` / `try_variant_from_json(jsonStr)`:
@@ -123,22 +130,16 @@ object VariantExtract {
           else if (v.isString) v.getString.trim.toLong
           else if (v.isDictString) v.getDictKey(meta).trim.toLong
           else fail(v, target)
-        case IntegerType =>
-          val l = cast(meta, v, LongType, failOnError)
-          if (l == null) null else Math.toIntExact(l.asInstanceOf[Long])
-        case ShortType =>
+        case IntegerType | ShortType | ByteType =>
           val l = cast(meta, v, LongType, failOnError)
           if (l == null) null
           else {
             val x = l.asInstanceOf[Long]
-            if (x == x.toShort.toLong) x.toShort else fail(v, target)
-          }
-        case ByteType =>
-          val l = cast(meta, v, LongType, failOnError)
-          if (l == null) null
-          else {
-            val x = l.asInstanceOf[Long]
-            if (x == x.toByte.toLong) x.toByte else fail(v, target)
+            target match {
+              case IntegerType => Math.toIntExact(x)
+              case ShortType => if (x == x.toShort.toLong) x.toShort else fail(v, target)
+              case _ => if (x == x.toByte.toLong) x.toByte else fail(v, target)
+            }
           }
         case FloatType =>
           val d = cast(meta, v, DoubleType, failOnError)
@@ -295,9 +296,7 @@ case class ToSparkVariant(child: Expression) extends UnaryExpression with Codege
   override def nullable: Boolean = true
   override def prettyName: String = "to_spark_variant"
   override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"to_spark_variant expects a variant struct, got: ${child.dataType.simpleString}")
+    VariantSchema.checkStruct(prettyName, child.dataType)
   override def nullSafeEval(input: Any): Any = {
     val row = input.asInstanceOf[InternalRow]
     new org.apache.spark.unsafe.types.VariantVal(row.getBinary(1), row.getBinary(0))
@@ -326,163 +325,79 @@ case class FromSparkVariant(child: Expression) extends UnaryExpression with Code
     copy(child = newChild)
 }
 
-/** `variant_get(v, '$.path'[, 'type'])`: walk a pre-parsed path through
-  * the variant and cast to the target type. Path resolution per step is
-  * the reference's `find_string` binary search + `get_field` binary
-  * search (metadata.rs:162-184, read.rs:156-171); a miss at any step
-  * yields SQL NULL.
+/** Every variant reader is this one expression: `variant_get` and
+  * `try_variant_get`, `variant_get_all`, `variant_typeof`,
+  * `is_variant_null`, `variant_get_multi`, `variant_keys`,
+  * `variant_size` and `schema_of_variant`. It walks `path` through the
+  * variant struct's View layer and hands what it finds to `consumer`'s
+  * variant reader; [[JsonConsumer]] is the table the fused forms share,
+  * and the plan name is the consumer's. Each path step is the reference's
+  * polymorphic `VariantRef::field` (read.rs:87-93): a `find_string`
+  * binary search, then a `get_field` binary search (metadata.rs:162-184,
+  * read.rs:156-171). A miss at any step reads SQL NULL.
   */
-case class VariantGet(
-    child: Expression,
-    path: String,
-    targetType: DataType,
-    failOnError: Boolean = false) extends UnaryExpression with GraftUnaryCodegen {
+case class VariantRead(child: Expression, path: String, consumer: JsonConsumer)
+    extends UnaryExpression with GraftUnaryCodegen {
 
-  @transient private lazy val steps: Array[PathStep] = VariantPath.parse(path)
+  /** The steps of each path the consumer reads, from the root. */
+  @transient private lazy val steps: Array[Array[PathStep]] =
+    consumer.paths.map(p => VariantPath.parse(path + p.drop(1))).toArray
 
   /** Decoded-metadata amortization (SURVEY §4.2.3): rows read back from
     * parquet/shuffle repeat the same metadata bytes file- or
-    * partition-wide, so the key→id binary searches resolve once and
-    * reuse until the bytes change — the Spark-native restoration of the
-    * reference's batch-shared dictionary
+    * partition-wide, so the key→id binary searches of every path resolve
+    * once and are reused until the bytes change — the Spark-native
+    * restoration of the reference's batch-shared dictionary
     * (/root/reference/arrow-open-variant/src/json.rs:51-63).
-    * Slots: 0 = metadata bytes, 1 = resolved ids.
+    * Slots: 0 = metadata bytes, 1 = resolved ids per path.
     */
   @transient private lazy val idCache: ThreadLocal[Array[AnyRef]] =
     ThreadLocal.withInitial(() => new Array[AnyRef](2))
 
-  override def dataType: DataType = targetType
-  override def nullable: Boolean = true
-  override def prettyName: String = if (failOnError) "variant_get" else "try_variant_get"
-
+  override def dataType: DataType = consumer.dataType
+  // is_variant_null answers false where the others answer SQL NULL
+  override def nullable: Boolean = consumer != JsonConsumer.IsNull
+  override def prettyName: String = consumer.prettyName
   override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"variant_get expects a variant struct, got: ${child.dataType.simpleString}")
+    VariantSchema.checkStruct(prettyName, child.dataType)
+
+  private def nullResult: Any = if (nullable) null else false
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) nullResult else nullSafeEval(v)
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (nullable) super.doGenCode(ctx, ev)
+    else {
+      val c = child.genCode(ctx)
+      val ref = ctx.addReferenceObj("graftExpr", this, getClass.getName)
+      ev.copy(code = c.code + code"boolean ${ev.value} = !${c.isNull} && " +
+        code"((Boolean) $ref.evalChildValue(${c.value})).booleanValue();", isNull = FalseLiteral)
+    }
 
   override def nullSafeEval(input: Any): Any = {
     val row = input.asInstanceOf[InternalRow]
     val metaBytes = row.getBinary(0)
     val valBytes = row.getBinary(1)
-    if (valBytes == null) return null
+    if (valBytes == null) return nullResult
     val meta = new MetadataView(metaBytes, 0)
     val cache = idCache.get()
-    val ids: Array[Int] =
+    val ids =
       if (cache(0) != null &&
           java.util.Arrays.equals(cache(0).asInstanceOf[Array[Byte]], metaBytes))
-        cache(1).asInstanceOf[Array[Int]]
+        cache(1).asInstanceOf[Array[Array[Int]]]
       else {
-        val r = VariantPath.resolveIds(meta, steps)
+        val r = steps.map(VariantPath.resolveIds(meta, _))
         // getBinary returns a fresh copy per call — safe to hold
         cache(0) = metaBytes
         cache(1) = r
         r
       }
-    val v = VariantPath.walkWithIds(new VariantView(valBytes, 0), steps, ids)
-    if (v == null) null else VariantExtract.cast(meta, v, targetType, failOnError)
+    consumer.readVariant(meta, new VariantView(valBytes, 0), steps, ids)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `variant_get_all(v, '$.path'[, 'type'])`: like variant_get but the
-  * path may contain `[*]` array wildcards — returns EVERY match as an
-  * array (document order: array indices ascending, depth-first across
-  * wildcard branches). The multi-valued extraction Snowflake/Databricks
-  * users reach for with FLATTEN-then-aggregate, done in one walk with
-  * no row explosion: `$.items[*].qty` over an order document yields the
-  * quantity array directly. Misses prune their branch (an element
-  * without the key contributes nothing); zero matches yield an EMPTY
-  * array — SQL NULL is reserved for NULL input. Element casts use try
-  * semantics (uncastable match → NULL element), matching
-  * try_variant_get. A wildcard-free path degenerates to a 0/1-element
-  * array.
-  */
-case class VariantGetAll(
-    child: Expression,
-    path: String,
-    elemType: DataType) extends UnaryExpression with GraftUnaryCodegen {
-
-  @transient private lazy val steps: Array[PathStep] = VariantPath.parse(path)
-
-  /** Same decoded-metadata id cache as VariantGet (SURVEY §4.2.3). */
-  @transient private lazy val idCache: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](2))
-
-  override def dataType: DataType = ArrayType(elemType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_get_all"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"variant_get_all expects a variant struct, got: ${child.dataType.simpleString}")
-
-  override def nullSafeEval(input: Any): Any = {
-    val row = input.asInstanceOf[InternalRow]
-    val metaBytes = row.getBinary(0)
-    val valBytes = row.getBinary(1)
-    if (valBytes == null) return null
-    val meta = new MetadataView(metaBytes, 0)
-    val cache = idCache.get()
-    val ids: Array[Int] =
-      if (cache(0) != null &&
-          java.util.Arrays.equals(cache(0).asInstanceOf[Array[Byte]], metaBytes))
-        cache(1).asInstanceOf[Array[Int]]
-      else {
-        val r = VariantPath.resolveIds(meta, steps)
-        cache(0) = metaBytes
-        cache(1) = r
-        r
-      }
-    val hits = new scala.collection.mutable.ArrayBuffer[graft.variant.VariantView](8)
-    VariantPath.walkAll(meta, new VariantView(valBytes, 0), steps, ids, hits)
-    val out = new Array[Any](hits.length)
-    var i = 0
-    while (i < hits.length) {
-      out(i) = VariantExtract.cast(meta, hits(i), elemType, failOnError = false)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `variant_typeof(v)`: human-readable type of the variant root. */
-case class VariantTypeOf(child: Expression) extends UnaryExpression with GraftUnaryCodegen {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"variant_typeof expects a variant struct, got: ${child.dataType.simpleString}")
-  override def prettyName: String = "variant_typeof"
-  override def nullSafeEval(input: Any): Any = {
-    val row = input.asInstanceOf[InternalRow]
-    UTF8String.fromString(new VariantView(row.getBinary(1), 0).typeName)
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `is_variant_null(v)`: true iff the variant encodes the JSON `null`
-  * primitive (distinct from SQL NULL — SURVEY §1.4).
-  */
-case class IsVariantNull(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "is_variant_null"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"is_variant_null expects a variant struct, got: ${child.dataType.simpleString}")
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) false
-    else new VariantView(v.asInstanceOf[InternalRow].getBinary(1), 0).isNull
-  }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -494,9 +409,7 @@ case class VariantToJson(child: Expression) extends UnaryExpression with GraftUn
   override def dataType: DataType = StringType
   override def prettyName: String = "variant_to_json"
   override def checkInputDataTypes(): TypeCheckResult =
-    if (VariantSchema.isVariantStruct(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"variant_to_json expects a variant struct, got: ${child.dataType.simpleString}")
+    VariantSchema.checkStruct(prettyName, child.dataType)
   override def nullSafeEval(input: Any): Any = {
     val row = input.asInstanceOf[InternalRow]
     UTF8String.fromString(

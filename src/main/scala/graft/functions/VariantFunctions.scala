@@ -21,21 +21,23 @@ object VariantFunctions {
   def variant_from_json(c: Column): Column = col(VariantFromJson(expr(c), failOnError = true))
   def try_variant_from_json(c: Column): Column = col(VariantFromJson(expr(c), failOnError = false))
 
-  def variant_get(c: Column, path: String): Column =
-    col(VariantGet(expr(c), path, VariantSchema.TYPE))
+  private def read(c: Column, path: String, consumer: JsonConsumer): Column =
+    col(VariantRead(expr(c), path, consumer))
+
+  def variant_get(c: Column, path: String): Column = variant_get(c, path, VariantSchema.TYPE)
   def variant_get(c: Column, path: String, targetType: DataType): Column =
-    col(VariantGet(expr(c), path, targetType))
+    read(c, path, JsonConsumer.Cast(targetType, castFailOnError = false))
   def variant_get(c: Column, path: String, targetType: String): Column =
-    col(VariantGet(expr(c), path, CatalystSqlParser.parseDataType(targetType)))
+    variant_get(c, path, CatalystSqlParser.parseDataType(targetType))
 
   def variant_flatten(c: Column): Column = col(VariantFlatten(expr(c)))
   def variant_get_all(c: Column, path: String): Column =
-    col(VariantGetAll(expr(c), path, VariantSchema.TYPE))
+    variant_get_all(c, path, VariantSchema.TYPE)
   def variant_get_all(c: Column, path: String, elemType: DataType): Column =
-    col(VariantGetAll(expr(c), path, elemType))
+    read(c, path, JsonConsumer.All(elemType))
 
-  def variant_typeof(c: Column): Column = col(VariantTypeOf(expr(c)))
-  def is_variant_null(c: Column): Column = col(IsVariantNull(expr(c)))
+  def variant_typeof(c: Column): Column = read(c, "$", JsonConsumer.TypeOf)
+  def is_variant_null(c: Column): Column = read(c, "$", JsonConsumer.IsNull)
   def variant_to_json(c: Column): Column = col(VariantToJson(expr(c)))
   def variant_merge_patch(target: Column, patch: Column): Column =
     col(VariantEdit(VariantEdit.Merge, expr(target), expr(patch)))
@@ -49,9 +51,9 @@ object VariantFunctions {
   def variant_explode(c: Column): Column = col(VariantExplode(expr(c)))
   def variant_explode_outer(c: Column): Column =
     col(GeneratorOuter(VariantExplode(expr(c))))
-  def variant_keys(c: Column): Column = col(VariantKeys(expr(c)))
-  def variant_size(c: Column): Column = col(VariantSize(expr(c)))
-  def schema_of_variant(c: Column): Column = col(SchemaOfVariant(expr(c)))
+  def variant_keys(c: Column): Column = read(c, "$", JsonConsumer.Keys)
+  def variant_size(c: Column): Column = read(c, "$", JsonConsumer.Size)
+  def schema_of_variant(c: Column): Column = read(c, "$", JsonConsumer.SchemaOf)
   def schema_of_variant_agg(c: Column): Column =
     col(SchemaOfVariantAgg(expr(c)).toAggregateExpression())
   def minhash_signature(c: Column, k: Int): Column = col(MinHashSignature(expr(c), k))
@@ -129,6 +131,15 @@ object VariantFunctions {
       s"$what must be an integer literal, got: $other")
   }
 
+  /** `name(v, path[, type])`: a read at a literal path whose row takes
+    * the type, a variant when it is left out. */
+  private def pathRead(name: String, consumer: DataType => JsonConsumer)(es: Seq[Expression]): Expression = {
+    val tpe =
+      if (es.length >= 3) CatalystSqlParser.parseDataType(litString(es(2), s"$name type"))
+      else VariantSchema.TYPE
+    VariantRead(es.head, litString(es(1), s"$name path"), consumer(tpe))
+  }
+
   /** (name, builder, usage) for every SQL function we expose. */
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
     ("variant_from_json",
@@ -141,40 +152,19 @@ object VariantFunctions {
       (es: Seq[Expression]) => VariantFromJson(es.head, failOnError = true),
       "parse_variant(jsonStr) - Alias of variant_from_json."),
     ("variant_get",
-      (es: Seq[Expression]) => {
-        val path = litString(es(1), "variant_get path")
-        val tpe =
-          if (es.length >= 3)
-            CatalystSqlParser.parseDataType(litString(es(2), "variant_get type"))
-          else VariantSchema.TYPE
-        VariantGet(es.head, path, tpe)
-      },
+      pathRead("variant_get", JsonConsumer.Cast(_, castFailOnError = false)),
       "variant_get(v, path[, type]) - Extract a path from a variant, optionally cast."),
     ("try_variant_get",
-      (es: Seq[Expression]) => {
-        val path = litString(es(1), "try_variant_get path")
-        val tpe =
-          if (es.length >= 3)
-            CatalystSqlParser.parseDataType(litString(es(2), "try_variant_get type"))
-          else VariantSchema.TYPE
-        VariantGet(es.head, path, tpe, failOnError = false)
-      },
+      pathRead("try_variant_get", JsonConsumer.Cast(_, castFailOnError = false)),
       "try_variant_get(v, path[, type]) - Like variant_get; NULL on cast failure."),
     ("variant_get_all",
-      (es: Seq[Expression]) => {
-        val path = litString(es(1), "variant_get_all path")
-        val tpe =
-          if (es.length >= 3)
-            CatalystSqlParser.parseDataType(litString(es(2), "variant_get_all type"))
-          else VariantSchema.TYPE
-        VariantGetAll(es.head, path, tpe)
-      },
+      pathRead("variant_get_all", JsonConsumer.All(_)),
       "variant_get_all(v, path[, type]) - All matches of a path with [*] / .* wildcards, as an array (empty when none)."),
     ("variant_typeof",
-      (es: Seq[Expression]) => VariantTypeOf(es.head),
+      (es: Seq[Expression]) => VariantRead(es.head, "$", JsonConsumer.TypeOf),
       "variant_typeof(v) - Type name of the variant root value."),
     ("is_variant_null",
-      (es: Seq[Expression]) => IsVariantNull(es.head),
+      (es: Seq[Expression]) => VariantRead(es.head, "$", JsonConsumer.IsNull),
       "is_variant_null(v) - True iff v encodes a variant (JSON) null."),
     ("variant_to_json",
       (es: Seq[Expression]) => VariantToJson(es.head),
@@ -207,13 +197,13 @@ object VariantFunctions {
       (es: Seq[Expression]) => VariantFlatten(es.head),
       "variant_flatten(v) - One row per node, depth-first: (path, typ, leaf); container leaf is SQL NULL, paths replay through variant_get."),
     ("variant_keys",
-      (es: Seq[Expression]) => VariantKeys(es.head),
+      (es: Seq[Expression]) => VariantRead(es.head, "$", JsonConsumer.Keys),
       "variant_keys(v) - Sorted key names of a variant object; NULL for non-objects."),
     ("variant_size",
-      (es: Seq[Expression]) => VariantSize(es.head),
+      (es: Seq[Expression]) => VariantRead(es.head, "$", JsonConsumer.Size),
       "variant_size(v) - Field/element count of a variant object/array; NULL for scalars."),
     ("schema_of_variant",
-      (es: Seq[Expression]) => SchemaOfVariant(es.head),
+      (es: Seq[Expression]) => VariantRead(es.head, "$", JsonConsumer.SchemaOf),
       "schema_of_variant(v) - Rendered type of a variant value."),
     ("schema_of_variant_agg",
       (es: Seq[Expression]) => SchemaOfVariantAgg(es.head).toAggregateExpression(),

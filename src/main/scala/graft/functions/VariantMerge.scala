@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
 import graft.variant._
@@ -21,9 +23,9 @@ import graft.variant._
   * of a `variant_from_json` child: the unfused chain's per-row
   * intermediate encode + decode disappears, and the plan name gains
   * `_fused`. Semantics equal the unfused chain (VariantMergeFuzzSpec):
-  *  - the left operand is evaluated first, and the right one is not
-  *    parsed after a SQL-null left, as a binary expression skips its
-  *    right child;
+  *  - the left operand is parsed first, and the right one is not even
+  *    evaluated after a SQL-null left tree, as a binary expression skips
+  *    its right child after the unfused left parse's SQL NULL;
   *  - a top-level JSON `null` is SQL NULL (the codec's SQL-null rule),
   *    and so is a failed `try_` parse, per side;
   *  - every parse error is the codec's own (the byte walk declines any
@@ -63,17 +65,64 @@ case class VariantEdit(
       s"$prettyName expects (${leftSide.describe}, ${rightSide.describe}), got: " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
+  private def jsonLeft: Boolean = leftSide.isInstanceOf[Side.Json]
+
+  // A JSON left side is parsed before the right operand is evaluated, so
+  // a left document whose tree is SQL NULL skips the right operand, as
+  // the unfused plan's null parse does.
+  override def eval(input: InternalRow): Any =
+    if (!jsonLeft) super.eval(input)
+    else {
+      val l = left.eval(input)
+      val read = if (l == null) null else readLeft(l)
+      val r = if (read == null) null else right.eval(input)
+      if (r == null) null else editRead(read, r)
+    }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (!jsonLeft) super.doGenCode(ctx, ev)
+    else {
+      val ref = ctx.addReferenceObj("graftExpr", this, getClass.getName)
+      val (l, r) = (left.genCode(ctx), right.genCode(ctx))
+      val (read, res) = (ctx.freshName("leftRead"), ctx.freshName("graftRes"))
+      ev.copy(code = code"""
+        |${l.code}
+        |Object[] $read = ${l.isNull} ? null : $ref.readLeft(${l.value});
+        |Object $res = null;
+        |if ($read != null) {
+        |  ${r.code}
+        |  if (!${r.isNull}) $res = $ref.editRead($read, ${r.value});
+        |}
+        |boolean ${ev.isNull} = $res == null;
+        |InternalRow ${ev.value} = (InternalRow) $res;
+        """.stripMargin)
+    }
+
+  /** The left operand's memo parts and tree, or null for a SQL-null tree. */
+  def readLeft(l: Any): Array[AnyRef] = {
     val lp = leftSide.parts(l)
+    val lt = leftSide.read(lp)
+    if (lt == null) null else Array[AnyRef](lp, lt)
+  }
+
+  /** The edit of a [[readLeft]] result and the right operand. */
+  def editRead(read: Array[AnyRef], r: Any): Any =
+    edited(read(0).asInstanceOf[Array[AnyRef]], read(1), r)
+
+  override def nullSafeEval(l: Any, r: Any): Any = edited(leftSide.parts(l), null, r)
+
+  /** The memoized edit of the left parts `lp` (with their tree `lt` once
+    * read) and the right operand `r`. */
+  private def edited(lp: Array[AnyRef], lt: AnyRef, r: Any): Any = {
     val rp = rightSide.parts(r)
     val key = Array[AnyRef](edit, leftSide, rightSide, lp, rp)
     val memo = lastEdit.get()
     if (java.util.Arrays.deepEquals(memo(0).asInstanceOf[Array[AnyRef]], key)) {
       return if (memo(1) eq NULL_RESULT) null else memo(1)
     }
-    val lt = leftSide.read(lp).asInstanceOf[VNode]
-    val rt = if (lt == null) null else rightSide.read(rp)
-    val out = if (rt == null) null else encode(edit(lt, rt))
+    val l = (if (lt != null) lt else leftSide.read(lp)).asInstanceOf[VNode]
+    val rt = if (l == null) null else rightSide.read(rp)
+    val out = if (rt == null) null else encode(edit(l, rt))
     memo(0) = snapshot(key)
     memo(1) = if (out == null) NULL_RESULT else out
     out

@@ -46,8 +46,8 @@ object Shred {
             fields: Seq[(String, DataType, String)],
             exactTypes: Boolean = false): DataFrame = {
     if (fields.isEmpty) return df
-    val multi = Bridge.column(
-      graft.functions.VariantGetMulti(Bridge.expression(col(variantCol)), fields))
+    val multi = Bridge.column(graft.functions.VariantRead(
+      Bridge.expression(col(variantCol)), "$", graft.functions.JsonConsumer.Multi(fields)))
     val shredded = df.withColumn("_shred", multi)
     val marked = fields.map { case (path, _, name) =>
       val mb = new MetadataBuilder()

@@ -135,6 +135,32 @@ class PlanSpec extends AnyFunSuite {
       assert(!plan.contains("variant_from_json"), plan)
       assert(df.collect().nonEmpty)
     }
+    // all eight raw_query op shapes hold a fused form by the predicate
+    // varbench's Plans.fused counts (a graft.functions.Json* class), so
+    // a rename fails here instead of zeroing functions.fused_plan_ratio
+    import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType, StringType}
+    def vg(path: String, t: DataType) = vf.variant_get(parse, path, t)
+    val rawQueryShapes = Seq(
+      "group_sum" -> events.groupBy(vg("$.grp", StringType).as("g"))
+        .agg(count(lit(1)), sum(vg("$.amt", DoubleType))),
+      "nested_filter" -> events.filter(vg("$.n.x", LongType) > 5).agg(count(lit(1))),
+      "vocab_key" -> events.agg(count(vg("$.k", LongType)), sum(vg("$.k", LongType))),
+      "typeof_mix" -> typeofMix,
+      "big_integers" -> events.agg(count(vg("$.big", DecimalType(38, 0))),
+        sum(vg("$.big", DecimalType(38, 0)))),
+      "escaped_strings" -> events.select(col("event_id"), vg("$.s", StringType).as("s"))
+        .filter(col("s").isNotNull),
+      "malformed_count" -> malformed,
+      "string_filter" -> events.filter(vg("$.grp", StringType) === "g1" && vg("$.amt", DoubleType) > 1.0)
+        .agg(count(lit(1))))
+    rawQueryShapes.foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      def holds(p: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+        plan.exists(_.expressions.exists(_.exists(p)))
+      // (an auto-generated column name may still spell the parse)
+      assert(!holds(_.isInstanceOf[graft.functions.VariantFromJson]), s"$name\n$plan")
+      assert(holds(_.getClass.getName.startsWith("graft.functions.Json")), s"$name\n$plan")
+    }
     // v_sql_surface: variant_typeof(variant_get(variant_from_json(props), '$.k'))
     val surface = Queries.queryMap("v_sql_surface")(spark, TestSpark.SF)
       .queryExecution.optimizedPlan.toString
@@ -233,8 +259,8 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.graftbridge.Bridge
     import org.apache.spark.sql.types.LongType
     val strict = spark.read.parquet(staged)
-      .select(Bridge.column(graft.functions.VariantGet(
-        Bridge.expression(col("v")), "$.k", LongType, failOnError = true)).as("k"))
+      .select(Bridge.column(graft.functions.VariantRead(
+        Bridge.expression(col("v")), "$.k", graft.functions.JsonConsumer.Cast(LongType, castFailOnError = true))).as("k"))
       .queryExecution.optimizedPlan.toString
     assert(strict.contains("variant_get(v#"), strict)
   }
@@ -245,11 +271,11 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.LongType
     val staged = graft.operators.Shred.stageShreddedTable(spark, TestSpark.SF, exact = true)
     val df = spark.read.parquet(staged)
-      .filter(Bridge.column(graft.functions.VariantGet(
-        Bridge.expression(col("v")), "$.k", LongType, failOnError = true)) > 90)
+      .filter(Bridge.column(graft.functions.VariantRead(
+        Bridge.expression(col("v")), "$.k", graft.functions.JsonConsumer.Cast(LongType, castFailOnError = true))) > 90)
       .select(col("event_id"),
-        Bridge.column(graft.functions.VariantGet(
-          Bridge.expression(col("v")), "$.k", LongType, failOnError = true)).as("k"))
+        Bridge.column(graft.functions.VariantRead(
+          Bridge.expression(col("v")), "$.k", graft.functions.JsonConsumer.Cast(LongType, castFailOnError = true))).as("k"))
     val opt = df.queryExecution.optimizedPlan.toString
     assert(!opt.contains("variant_get"), opt)
     val phys = df.queryExecution.executedPlan.toString

@@ -345,7 +345,7 @@ class ExpressionSpec extends AnyFunSuite {
       """{"a": 1, "d": []}""").toDF("j")
       .withColumn("v", VariantFunctions.variant_from_json(col("j")))
     val multi = df.withColumn("m", Bridge.column(
-        VariantGetMulti(Bridge.expression(col("v")), fields)))
+        VariantRead(Bridge.expression(col("v")), "$", JsonConsumer.Multi(fields))))
       .select(col("m.fa"), col("m.fbc"), col("m.fd1"), col("m.fm"))
       .collect().map(_.toSeq)
     val singles = df.select(
@@ -577,7 +577,8 @@ class ExpressionSpec extends AnyFunSuite {
         |       variant_keys(sv) AS ks,
         |       variant_size(sv) AS n,
         |       schema_of_variant(sv) AS sch,
-        |       variant_get(sv, '$.a', 'array<bigint>') AS arr
+        |       variant_get(sv, '$.a', 'array<bigint>') AS arr,
+        |       variant_get_all(sv, '$.a[*]', 'bigint') AS all_a
         |FROM native_v ORDER BY k""".stripMargin).collect()
     assert(r(0).getLong(0) === 7L)
     assert(r(0).getString(1) === "object")
@@ -587,7 +588,9 @@ class ExpressionSpec extends AnyFunSuite {
     assert(r(0).getAs[Number](5).longValue === 2L)
     assert(r(0).getString(6).startsWith("object<"))
     assert(r(0).getSeq[Long](7) === Seq(1L, 2L))
+    assert(r(0).getSeq[Long](8) === Seq(1L, 2L))
     assert(r(1).getLong(0) === 9L)
+    assert(r(1).getSeq[Long](8) === Seq.empty)
     // generators too
     val ex = spark.sql(
       "SELECT p.* FROM native_v, LATERAL variant_explode(sv) p WHERE variant_get(sv, '$.k', 'bigint') = 7")

@@ -52,7 +52,7 @@ class FusedPropertySpec extends AnyFunSuite {
   }
 
   private def unfused(json: String, path: String, t: DataType): Any =
-    VariantGet(VariantFromJson(Literal(json)), path, t, failOnError = false).eval(null)
+    VariantRead(VariantFromJson(Literal(json)), path, JsonConsumer.Cast(t, castFailOnError = false)).eval(null)
 
   /** A fused consumer at the root path. */
   private def root(c: JsonConsumer, json: Expression, parseFailOnError: Boolean) =
@@ -144,7 +144,7 @@ class FusedPropertySpec extends AnyFunSuite {
   test("fused scalar schema_of equals unfused over random trees and malformed docs") {
     forAllSamples(genNode(3)) { node =>
       val json = mapper.writeValueAsString(node)
-      val u = SchemaOfVariant(VariantFromJson(Literal(json))).eval(null)
+      val u = VariantRead(VariantFromJson(Literal(json)), "$", JsonConsumer.SchemaOf).eval(null)
       val f = root(JsonConsumer.SchemaOf, Literal(json), parseFailOnError = true).eval(null)
       assert(u == f, s"schema_of json=$json unfused=$u fused=$f")
     }
@@ -213,7 +213,7 @@ class FusedPropertySpec extends AnyFunSuite {
       val f = fused(json, "$.x", StringType)
       assert(u == f && u.toString == bi.toString, s"$bi: unfused=$u fused=$f")
       // schema inference sees decimal(38,0) on both paths
-      val us = SchemaOfVariant(VariantFromJson(Literal(json))).eval(null)
+      val us = VariantRead(VariantFromJson(Literal(json)), "$", JsonConsumer.SchemaOf).eval(null)
       val fs = root(JsonConsumer.SchemaOf, Literal(json), parseFailOnError = true).eval(null)
       assert(us == fs && us.toString == "object<x: decimal(38,0)>", s"$bi: $us vs $fs")
     }
@@ -279,12 +279,12 @@ class FusedPropertySpec extends AnyFunSuite {
         val s = Literal(json)
         val parse = VariantFromJson(s, strict)
         val pairs: Seq[(String, Expression, Expression)] = Seq(
-          ("keys", root(JsonConsumer.Keys, s, strict), VariantKeys(parse)),
-          ("size", root(JsonConsumer.Size, s, strict), VariantSize(parse)),
-          ("typeof", root(JsonConsumer.TypeOf, s, strict), VariantTypeOf(parse)),
-          ("schema_of", root(JsonConsumer.SchemaOf, s, strict), SchemaOfVariant(parse)),
+          ("keys", root(JsonConsumer.Keys, s, strict), VariantRead(parse, "$", JsonConsumer.Keys)),
+          ("size", root(JsonConsumer.Size, s, strict), VariantRead(parse, "$", JsonConsumer.Size)),
+          ("typeof", root(JsonConsumer.TypeOf, s, strict), VariantRead(parse, "$", JsonConsumer.TypeOf)),
+          ("schema_of", root(JsonConsumer.SchemaOf, s, strict), VariantRead(parse, "$", JsonConsumer.SchemaOf)),
           ("get $.a", JsonPathExtract(s, "$.a", JsonConsumer.Cast(StringType, castFailOnError = true), strict),
-            VariantGet(parse, "$.a", StringType, failOnError = true)))
+            VariantRead(parse, "$.a", JsonConsumer.Cast(StringType, castFailOnError = true))))
         pairs.foreach { case (name, fused, unfused) =>
           val f = outcome(fused.eval(null))
           val u = outcome(unfused.eval(null))
@@ -330,16 +330,16 @@ class FusedPropertySpec extends AnyFunSuite {
   test("fused keys/size equal unfused over random trees") {
     forAllSamples(genNode(3)) { node =>
       val json = mapper.writeValueAsString(node)
-      val uK = VariantKeys(VariantFromJson(Literal(json))).eval(null)
+      val uK = VariantRead(VariantFromJson(Literal(json)), "$", JsonConsumer.Keys).eval(null)
       val fK = root(JsonConsumer.Keys, Literal(json), parseFailOnError = true).eval(null)
       assert(uK == fK || (uK != null && fK != null &&
         uK.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].array.toSeq ==
           fK.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].array.toSeq),
         s"keys json=$json unfused=$uK fused=$fK")
-      val uS = VariantSize(VariantFromJson(Literal(json))).eval(null)
+      val uS = VariantRead(VariantFromJson(Literal(json)), "$", JsonConsumer.Size).eval(null)
       val fS = root(JsonConsumer.Size, Literal(json), parseFailOnError = true).eval(null)
       assert(uS == fS, s"size json=$json unfused=$uS fused=$fS")
-      val uT = VariantTypeOf(VariantFromJson(Literal(json))).eval(null)
+      val uT = VariantRead(VariantFromJson(Literal(json)), "$", JsonConsumer.TypeOf).eval(null)
       val fT = root(JsonConsumer.TypeOf, Literal(json), parseFailOnError = true).eval(null)
       assert(uT == fT, s"typeof json=$json unfused=$uT fused=$fT")
     }
@@ -347,8 +347,10 @@ class FusedPropertySpec extends AnyFunSuite {
 
   test("keys, size, typeof and schema_of at non-root paths equal the unfused consumer over a variant get") {
     val consumers: Seq[(JsonConsumer, Expression => Expression)] = Seq(
-      (JsonConsumer.Keys, VariantKeys(_)), (JsonConsumer.Size, VariantSize(_)),
-      (JsonConsumer.TypeOf, VariantTypeOf(_)), (JsonConsumer.SchemaOf, SchemaOfVariant(_)))
+      (JsonConsumer.Keys, VariantRead(_, "$", JsonConsumer.Keys)),
+      (JsonConsumer.Size, VariantRead(_, "$", JsonConsumer.Size)),
+      (JsonConsumer.TypeOf, VariantRead(_, "$", JsonConsumer.TypeOf)),
+      (JsonConsumer.SchemaOf, VariantRead(_, "$", JsonConsumer.SchemaOf)))
     // a found key, an array index, a nested JSON null, a missing key, an
     // index past the end, a path through a scalar and through an array
     val paths = Seq("$.x", "$.y[0]", "$.y[1]", "$.x.k", "$.missing", "$.y[7]", "$.n.k", "$.y.k",
@@ -358,7 +360,8 @@ class FusedPropertySpec extends AnyFunSuite {
       paths.foreach { path =>
         consumers.foreach { case (c, unfusedOf) =>
           val f = outcome(JsonPathExtract(s, path, c, strict).eval(null))
-          val u = outcome(unfusedOf(VariantGet(VariantFromJson(s, strict), path, VariantSchema.TYPE)).eval(null))
+          val u = outcome(unfusedOf(VariantRead(VariantFromJson(s, strict), path,
+            JsonConsumer.Cast(VariantSchema.TYPE, castFailOnError = false))).eval(null))
           assert(f == u, s"${c.prettyName} $path strict=$strict json=${json.take(60)} fused=$f unfused=$u")
         }
       }
@@ -407,7 +410,9 @@ class FusedPropertySpec extends AnyFunSuite {
     def check(json: String): Unit = Seq(true, false).foreach { strict =>
       val parse = VariantFromJson(Literal.create(json, StringType), strict)
       Seq("$", "$.a", "$.b[0]", "$.zzz").foreach { path =>
-        val unfused = IsVariantNull(if (path == "$") parse else VariantGet(parse, path, VariantSchema.TYPE))
+        val unfused = VariantRead(if (path == "$") parse
+          else VariantRead(parse, path, JsonConsumer.Cast(VariantSchema.TYPE, castFailOnError = false)),
+          "$", JsonConsumer.IsNull)
         val fused = fuse(unfused)
         assert(fused.find(_.isInstanceOf[JsonPathExtract]).isDefined, fused)
         val f = outcome(fused.eval(null))
@@ -418,7 +423,34 @@ class FusedPropertySpec extends AnyFunSuite {
     docs.foreach(check)
     forAllSamples(genNode(3))(node => check(s"""{"a": ${mapper.writeValueAsString(node)}}"""))
     // the nested null is the one true answer
-    assert(fuse(IsVariantNull(VariantGet(VariantFromJson(Literal("""{"a": null}""")), "$.a",
-      VariantSchema.TYPE))).eval(null) == true)
+    assert(fuse(VariantRead(VariantRead(VariantFromJson(Literal("""{"a": null}""")), "$.a",
+      JsonConsumer.Cast(VariantSchema.TYPE, castFailOnError = false)), "$", JsonConsumer.IsNull)).eval(null) == true)
+
+    // the unfused reader in a plan: a NULL struct, a NULL native column
+    // and a missing path answer false, a nested null true, with
+    // whole-stage codegen on and with it off (and no codegen at all)
+    import org.apache.spark.sql.functions.expr
+    import org.apache.spark.sql.graftbridge.Bridge
+    val spark = graft.TestSpark.spark
+    val v = expr("to_variant(named_struct('a', CASE WHEN id < 0 THEN 1 END, 'b', id))")
+    val exprs = Seq(
+      expr("is_variant_null(CASE WHEN id < 0 THEN variant_from_json('{}') END)"),
+      expr("is_variant_null(CASE WHEN id < 0 THEN parse_json('1') END)"),
+      Bridge.column(VariantRead(Bridge.expression(v), "$.zzz", JsonConsumer.IsNull)),
+      VariantFunctions.is_variant_null(VariantFunctions.variant_get(v, "$.zzz")),
+      Bridge.column(VariantRead(Bridge.expression(v), "$.a", JsonConsumer.IsNull)))
+    Seq(("true", "FALLBACK"), ("false", "FALLBACK"), ("false", "NO_CODEGEN")).foreach {
+      case (wholeStage, factory) =>
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        spark.conf.set("spark.sql.codegen.factoryMode", factory)
+        try {
+          val rows = spark.range(2).select(exprs: _*).collect()
+          rows.foreach(r => assert(r.toSeq == Seq(false, false, false, false, true),
+            s"wholeStage=$wholeStage factory=$factory: $r"))
+        } finally {
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+        }
+    }
   }
 }

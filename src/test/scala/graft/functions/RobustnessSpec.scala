@@ -56,7 +56,7 @@ class RobustnessSpec extends AnyFunSuite {
           |  WHEN 1 THEN concat('{"b": ', id, '}')
           |  ELSE concat('{"a": ', id, ', "b": ', id * 2, '}')
           |END""".stripMargin))
-      // route through a variant-target get so the unfused VariantGet
+      // route through a variant-target get so the unfused VariantRead
       // (the expression carrying the id cache) does the extraction
       .withColumn("v", VariantFunctions.variant_get(
         VariantFunctions.variant_from_json(col("j")), "$"))
@@ -101,7 +101,7 @@ class RobustnessSpec extends AnyFunSuite {
   }
 
   // Blocks fusion by routing through a variant-target identity
-  // extraction — VariantGet(v, "$") is not rewritten by the rule.
+  // extraction — a get over a variant get is not rewritten by the rule.
   private def unfusedVariant(c: org.apache.spark.sql.Column) =
     VariantFunctions.variant_get(VariantFunctions.variant_from_json(c), "$")
 

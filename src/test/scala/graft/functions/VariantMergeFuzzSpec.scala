@@ -350,6 +350,38 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
     })
   }
 
+  test("a fused edit skips its right operand after a top-level-null left, codegen on and off") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    // under ANSI the right document's source raises when evaluated; the
+    // unfused edit never evaluates it, because the left parse is SQL NULL
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val right = try spark.range(1)
+      .selectExpr("""concat('{"a":', CAST(CAST('x' AS INT) AS STRING), '}')""")
+      .queryExecution.analyzed.asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val left = Literal.create("null", StringType)
+    def run(e: Expression, codegen: Boolean): Any = outcome(
+      if (!codegen) e.eval(InternalRow.empty)
+      else GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty).getStruct(0, 2))
+    for (edit <- Seq(VariantEdit.Merge, VariantEdit.Diff); strict <- Seq(true, false);
+         codegen <- Seq(true, false)) {
+      val u = run(VariantEdit(edit, VariantFromJson(left, strict), VariantFromJson(right, strict)), codegen)
+      val f = run(fusedEdit(edit, left, right, strict, strict), codegen)
+      assert(u == null && f == u, s"${edit.prettyName} strict=$strict codegen=$codegen: fused=$f unfused=$u")
+      // a fused left over a variant right operand: same order, same result
+      val doc = Literal.create("""{"a":{"b":1},"c":2}""", StringType)
+      val other = VariantFromJson(Literal.create("""{"a":{"d":3},"c":null}""", StringType), strict)
+      for ((l, r) <- Seq((left, VariantFromJson(right, strict)), (doc, other))) {
+        val mixed = run(VariantEdit(edit, l, r, Json(strict), VariantEdit.Side.Variant), codegen)
+        val unfused = run(VariantEdit(edit, VariantFromJson(l, strict), r), codegen)
+        assert(mixed == unfused, s"${edit.prettyName} strict=$strict codegen=$codegen: $mixed vs $unfused")
+      }
+    }
+  }
+
   // -------------------------------------------------------------------
   // The one edit memo is shared by every edit, mode and instance on a
   // thread: its key must tell them apart.
