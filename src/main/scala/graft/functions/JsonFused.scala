@@ -73,7 +73,7 @@ private[functions] object JsonFused {
     while (found && nOpen < steps.length) {
       val depth = nOpen
       def skip(): Boolean = { L.skipValue(c, depth + 1); false }
-      val hit: Visit = steps(depth) match {
+      val hit: L.Visit = steps(depth) match {
         case k: PathStep.Key =>
           if ((c.peek & 0xff) != '{') null
           else (_, off, len) => L.sliceEq(c.b, off, len, k.utf8) || skip()
@@ -82,7 +82,7 @@ private[functions] object JsonFused {
         case _ => throw L.Miss // wildcards: the unfused plan raises
       }
       if (hit == null) found = false // a step into a scalar
-      else if (members(c, depth, hit) >= 0) { found = false; pending = false }
+      else if (L.members(c, depth, hit) >= 0) { found = false; pending = false }
       else { isObj(depth) = steps(depth).isInstanceOf[PathStep.Key]; nOpen += 1 }
     }
     var err: Exception = null
@@ -118,55 +118,6 @@ private[functions] object JsonFused {
     out
   }
 
-  /** A member visitor for [[members]] (a SAM type, so its Int
-    * arguments are not boxed per call). */
-  trait Visit { def apply(index: Int, keyOff: Int, keyLen: Int): Boolean }
-
-  /** Walk the members of the object or array at the cursor, `depth`
-    * containers around it, and return their count. `visit(index, keyOff,
-    * keyLen)` sees each member with the cursor on its value (an element
-    * has no key: −1, −1) and either consumes the value and returns false,
-    * or returns true to stop there with the container still open; then
-    * the result is −1. With no `visit` each value is skipped; with one,
-    * an escaped key misses.
-    */
-  def members(c: L.Cursor, depth: Int, visit: Visit): Int = {
-    val close = if ((c.peek & 0xff) == '{') '}' else ']'
-    L.openContainer(depth)
-    c.i += 1
-    c.skipWs()
-    var n = 0
-    var more = !(c.i < c.end && c.b(c.i) == close)
-    if (!more) c.i += 1
-    while (more) {
-      c.skipWs()
-      var kOff, kLen = -1
-      if (close == '}') {
-        c.expect('"')
-        if (visit == null) L.skipName(c) // no visitor reads the key: escapes are fine
-        else {
-          val end = L.scanSimpleString(c)
-          if (end < 0) throw L.Miss // escaped key: the unfused plan
-          kOff = c.i
-          kLen = end - c.i
-          L.checkName(kLen)
-          c.i = end + 1
-        }
-        c.skipWs(); c.expect(':'); c.skipWs()
-      }
-      if (visit == null) L.skipValue(c, depth + 1)
-      else if (visit(n, kOff, kLen)) return -1
-      n += 1
-      c.skipWs()
-      (c.peek & 0xff) match {
-        case ',' => c.i += 1
-        case x if x == close => c.i += 1; more = false
-        case _ => throw L.Miss
-      }
-    }
-    n
-  }
-
   /** Schema-lattice inference straight off the bytes — the fused
     * equivalent of encode-then-`SchemaInfer.infer` (FastJsonLex miss
     * contract). Parity by construction with the codec's JSON→variant
@@ -185,11 +136,11 @@ private[functions] object JsonFused {
       case '"' => c.i += 1; L.skipString(c); SString
       case '[' =>
         var elem: SType = SNull
-        members(c, depth, (_, _, _) => { elem = merge(elem, fastInferSchema(c, depth + 1)); false })
+        L.members(c, depth, (_, _, _) => { elem = merge(elem, fastInferSchema(c, depth + 1)); false })
         SArray(elem)
       case '{' =>
         var fields = scala.collection.immutable.TreeMap.empty[String, SType]
-        members(c, depth, (_, off, len) => {
+        L.members(c, depth, (_, off, len) => {
           // last dup wins
           fields += (new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8) ->
             fastInferSchema(c, depth + 1))

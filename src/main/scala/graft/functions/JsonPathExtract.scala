@@ -171,7 +171,7 @@ object JsonConsumer {
       if ((c.peek & 0xff) != '{') { L.skipValue(c, depth); null }
       else {
         val names = scala.collection.mutable.ArrayBuffer.empty[String]
-        JsonFused.members(c, depth, (_, off, len) => {
+        L.members(c, depth, (_, off, len) => {
           names += new String(c.b, off, len, java.nio.charset.StandardCharsets.UTF_8)
           L.skipValue(c, depth + 1)
           false
@@ -191,7 +191,7 @@ object JsonConsumer {
       else if (v.isArray) v.getArray.numElements
       else null
     override def read(c: L.Cursor, depth: Int): Any = (c.peek & 0xff) match {
-      case '{' | '[' => JsonFused.members(c, depth, null)
+      case '{' | '[' => L.members(c, depth, null)
       case _ => L.skipValue(c, depth); null
     }
   }

@@ -55,30 +55,19 @@ case class VariantFromJson(child: Expression, failOnError: Boolean = true)
       s"Input data type not supported in variant_from_json: ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes: Array[Byte] = input match {
-      case s: UTF8String => s.getBytes
-      case b: Array[Byte] => b
+  override def nullSafeEval(input: Any): Any = input match {
+    case s: UTF8String => s.getBaseObject match { // on-heap: read in place
+      case a: Array[Byte] =>
+        parse(a, (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ => val b = s.getBytes; parse(b, 0, b.length)
     }
-    val memo = VariantFromJson.lastParse.get()
-    if (memo(0) != null &&
-      java.util.Arrays.equals(memo(0).asInstanceOf[Array[Byte]], bytes)) {
-      val pair = memo(1).asInstanceOf[(Array[Byte], Array[Byte])]
-      return if (pair == null) null
-      else new GenericInternalRow(Array[Any](pair._1, pair._2))
-    }
-    try {
-      val pair = VariantJsonCodec.fromJsonBytes(bytes, 0, bytes.length)
-      // defensive copy: getBytes may expose a reused backing buffer, and
-      // a stale reference would make the equality probe compare a buffer
-      // against itself
-      memo(0) = bytes.clone()
-      memo(1) = pair
-      if (pair == null) null
-      else new GenericInternalRow(Array[Any](pair._1, pair._2))
-    } catch {
-      case e: Exception if !failOnError => null
-    }
+    case b: Array[Byte] => parse(b, 0, b.length)
+  }
+
+  private def parse(bytes: Array[Byte], off: Int, len: Int): Any = {
+    val pair = try VariantFromJson.lastParse.get().parse(bytes, off, len)
+    catch { case _: Exception if !failOnError => return null }
+    if (pair == null) null else new GenericInternalRow(Array[Any](pair._1, pair._2))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -94,8 +83,32 @@ object VariantFromJson {
     * last-input memo collapses the duplicate work. Also de-dupes
     * repeated identical JSON payloads across adjacent rows.
     */
-  private[functions] val lastParse: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](2))
+  private[functions] val lastParse: ThreadLocal[Memo] = ThreadLocal.withInitial(() => new Memo)
+
+  /** The last parsed input, copied into one reused buffer (the caller's
+    * array may be rewritten in place), and its result. An input over
+    * [[VariantEncoder.MaxKept]] bytes is not kept: the memo forgets it
+    * and its result, so a huge row does not stay resident per thread. */
+  private[functions] final class Memo {
+    private var input = new Array[Byte](256)
+    private var len = -1 // nothing kept
+    private var pair: (Array[Byte], Array[Byte]) = null
+    def parse(b: Array[Byte], off: Int, n: Int): (Array[Byte], Array[Byte]) = {
+      if (n == len && java.util.Arrays.equals(input, 0, n, b, off, off + n)) return pair
+      val parsed = VariantJsonCodec.fromJsonBytes(b, off, n) // a throw keeps the old memo
+      if (n > VariantEncoder.MaxKept) { len = -1; pair = null }
+      else {
+        if (n > input.length) input = new Array[Byte](math.max(n, math.min(2 * input.length, VariantEncoder.MaxKept)))
+        System.arraycopy(b, off, input, 0, n)
+        len = n; pair = parsed
+      }
+      parsed
+    }
+
+    /** Bytes the memo holds between rows. */
+    private[functions] def keptBytes: Long =
+      input.length.toLong + (if (pair == null) 0 else pair._1.length + pair._2.length)
+  }
 }
 
 /** Shared eval helpers for variant extraction expressions. */
@@ -442,40 +455,8 @@ case class ToVariant(child: Expression) extends UnaryExpression with GraftUnaryC
       s"to_variant does not support type: ${child.dataType.simpleString}")
   }
 
-  private def collectKeys(value: Any, dt: DataType, out: java.util.ArrayList[String]): Unit = {
-    if (value == null) return
-    dt match {
-      case s: StructType =>
-        val row = value.asInstanceOf[InternalRow]
-        var i = 0
-        while (i < s.length) {
-          out.add(s(i).name)
-          if (!row.isNullAt(i)) collectKeys(row.get(i, s(i).dataType), s(i).dataType, out)
-          i += 1
-        }
-      case ArrayType(et, _) =>
-        val arr = value.asInstanceOf[ArrayData]
-        var i = 0
-        while (i < arr.numElements()) {
-          if (!arr.isNullAt(i)) collectKeys(arr.get(i, et), et, out)
-          i += 1
-        }
-      case MapType(StringType, vt, _) =>
-        val map = value.asInstanceOf[MapData]
-        val keys = map.keyArray()
-        val vals = map.valueArray()
-        var i = 0
-        while (i < map.numElements()) {
-          out.add(keys.getUTF8String(i).toString)
-          if (!vals.isNullAt(i)) collectKeys(vals.get(i, vt), vt, out)
-          i += 1
-        }
-      case _ => ()
-    }
-  }
-
-  private def convert(value: Any, dt: DataType, buf: ByteBuf,
-                      ids: java.util.HashMap[String, Integer]): Unit = {
+  private def convert(value: Any, dt: DataType, enc: VariantEncoder): Unit = {
+    val buf = enc.buf
     if (value == null) { VariantWriter.writeNull(buf); return }
     dt match {
       case NullType => VariantWriter.writeNull(buf)
@@ -496,48 +477,45 @@ case class ToVariant(child: Expression) extends UnaryExpression with GraftUnaryC
       case TimestampNTZType => VariantWriter.writeTimestampNtz(buf, value.asInstanceOf[Long])
       case s: StructType =>
         val row = value.asInstanceOf[InternalRow]
-        val ob = new VariantObjectBuilder(buf)
+        enc.beginObject()
         var i = 0
         while (i < s.length) {
-          val id = ids.get(s(i).name)
-          convert(if (row.isNullAt(i)) null else row.get(i, s(i).dataType),
-            s(i).dataType, ob.fieldBuffer(id), ids)
+          enc.key(s(i).name)
+          convert(if (row.isNullAt(i)) null else row.get(i, s(i).dataType), s(i).dataType, enc)
           i += 1
         }
-        ob.finish()
+        enc.endObject()
       case ArrayType(et, _) =>
         val arr = value.asInstanceOf[ArrayData]
-        val ab = new VariantArrayBuilder(buf)
+        enc.beginArray()
         var i = 0
         while (i < arr.numElements()) {
-          convert(if (arr.isNullAt(i)) null else arr.get(i, et), et, ab.elementBuffer(), ids)
+          convert(if (arr.isNullAt(i)) null else arr.get(i, et), et, enc)
           i += 1
         }
-        ab.finish()
+        enc.endArray()
       case MapType(StringType, vt, _) =>
         val map = value.asInstanceOf[MapData]
         val keys = map.keyArray()
         val vals = map.valueArray()
-        val ob = new VariantObjectBuilder(buf)
+        enc.beginObject()
         var i = 0
         while (i < map.numElements()) {
-          val id = ids.get(keys.getUTF8String(i).toString)
-          convert(if (vals.isNullAt(i)) null else vals.get(i, vt), vt, ob.fieldBuffer(id), ids)
+          enc.key(keys.getUTF8String(i).toString)
+          convert(if (vals.isNullAt(i)) null else vals.get(i, vt), vt, enc)
           i += 1
         }
-        ob.finish()
+        enc.endObject()
       case other =>
         throw new UnsupportedOperationException(s"to_variant: ${other.simpleString}")
     }
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val keys = new java.util.ArrayList[String]()
-    collectKeys(input, child.dataType, keys)
-    val (metaBytes, ids) = VariantMetadata.build(keys)
-    val buf = new ByteBuf(64)
-    convert(input, child.dataType, buf, ids)
-    new GenericInternalRow(Array[Any](metaBytes, buf.result()))
+    val enc = VariantEncoder.get()
+    convert(input, child.dataType, enc)
+    val (metaBytes, valueBytes) = enc.result()
+    new GenericInternalRow(Array[Any](metaBytes, valueBytes))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -320,11 +320,11 @@ object VariantMergePatch {
         }
       case '[' =>
         val out = Vector.newBuilder[VNode]
-        JsonFused.members(c, depth, (_, _, _) => { out += jsonTree(c, depth + 1); false })
+        L.members(c, depth, (_, _, _) => { out += jsonTree(c, depth + 1); false })
         VArr(out.result())
       case '{' =>
         val out = new scala.collection.mutable.LinkedHashMap[String, VNode]
-        JsonFused.members(c, depth, (_, off, len) => {
+        L.members(c, depth, (_, off, len) => {
           out.put(new String(b, off, len, UTF_8), jsonTree(c, depth + 1))
           false
         })
@@ -454,42 +454,32 @@ object VariantMergePatch {
     case _ => b
   }
 
-  private def collectKeys(n: VNode, out: java.util.ArrayList[String]): Unit = n match {
-    case VObj(fields) =>
-      fields.foreach { case (k, v) => out.add(k); collectKeys(v, out) }
-    case VArr(items) => items.foreach(collectKeys(_, out))
-    case _ => ()
-  }
-
   def encode(n: VNode): InternalRow = {
-    val keys = new java.util.ArrayList[String]()
-    collectKeys(n, keys)
-    val (metaBytes, ids) = VariantMetadata.build(keys)
-    val buf = new ByteBuf(64)
-    write(n, buf, ids)
-    new GenericInternalRow(Array[Any](metaBytes, buf.result()))
+    val enc = VariantEncoder.get()
+    write(n, enc)
+    val (metaBytes, valueBytes) = enc.result()
+    new GenericInternalRow(Array[Any](metaBytes, valueBytes))
   }
 
-  private def write(n: VNode, buf: ByteBuf,
-                    ids: java.util.HashMap[String, Integer]): Unit = n match {
-    case VNull => VariantWriter.writeNull(buf)
-    case VBool(b) => VariantWriter.writeBoolean(buf, b)
-    case VLong(l) => VariantWriter.writeLong(buf, l)
-    case VDouble(d) => VariantWriter.writeDouble(buf, d)
-    case VFloat(f) => VariantWriter.writeFloat(buf, f)
-    case VDecimal(u, s) => VariantWriter.writeDecimal(buf, u, s)
-    case VStr(s) => VariantWriter.writeString(buf, s)
-    case VBin(b) => VariantWriter.writeBinary(buf, b)
-    case VDate(d) => VariantWriter.writeDate(buf, d)
-    case VTs(m) => VariantWriter.writeTimestamp(buf, m)
-    case VTsNtz(m) => VariantWriter.writeTimestampNtz(buf, m)
+  private def write(n: VNode, enc: VariantEncoder): Unit = n match {
+    case VNull => VariantWriter.writeNull(enc.buf)
+    case VBool(b) => VariantWriter.writeBoolean(enc.buf, b)
+    case VLong(l) => VariantWriter.writeLong(enc.buf, l)
+    case VDouble(d) => VariantWriter.writeDouble(enc.buf, d)
+    case VFloat(f) => VariantWriter.writeFloat(enc.buf, f)
+    case VDecimal(u, s) => VariantWriter.writeDecimal(enc.buf, u, s)
+    case VStr(s) => VariantWriter.writeString(enc.buf, s)
+    case VBin(b) => VariantWriter.writeBinary(enc.buf, b)
+    case VDate(d) => VariantWriter.writeDate(enc.buf, d)
+    case VTs(m) => VariantWriter.writeTimestamp(enc.buf, m)
+    case VTsNtz(m) => VariantWriter.writeTimestampNtz(enc.buf, m)
     case VArr(items) =>
-      val ab = new VariantArrayBuilder(buf)
-      items.foreach(it => write(it, ab.elementBuffer(), ids))
-      ab.finish()
+      enc.beginArray()
+      items.foreach(write(_, enc))
+      enc.endArray()
     case VObj(fields) =>
-      val ob = new VariantObjectBuilder(buf)
-      fields.foreach { case (k, v) => write(v, ob.fieldBuffer(ids.get(k)), ids) }
-      ob.finish()
+      enc.beginObject()
+      fields.foreach { case (k, v) => enc.key(k); write(v, enc) }
+      enc.endObject()
   }
 }

@@ -2,71 +2,62 @@ package graft.tools
 
 import graft.variant.VariantJsonCodec
 
-/** Pure-JVM micro-benchmark of the JSON→variant kernel, no Spark: how
-  * much of the pipeline's parse cost is the codec itself vs executor
-  * plumbing. Run: sbt "runMain graft.tools.CodecBench"
-  *
-  * Findings driving the round-3 work: tokenization alone is ~4M rows/s
-  * on these docs (isolated JIT profile), the pre-speculation encoder was
-  * 0.30M — 12× spent in per-row dictionary builds and re-encodes, now
-  * amortized by the speculative path (0.6-0.8M, ahead of Spark's builtin
-  * parseJson at ~0.5M). With tokenize+accessor floor measured at ~1M
-  * rows/s under a realistic mixed JIT profile, the remaining encoder
-  * overhead is ~35% — the kernel is Jackson-bound, so further pooling
-  * micro-optimization was measured and declined.
+/** Single-thread JSON→variant encode, no Spark session: ns/doc (median
+  * and min of 7 passes after 5 warm-up) and allocated bytes/doc
+  * (`ThreadMXBean.getThreadAllocatedBytes`) of `fromJsonBytes`, next to
+  * Spark 4.1's `VariantBuilder.parseJson` (its figures include the UTF-8
+  * decode to `String`), on two doc sets of [[docs]].
+  * Run: sbt "runMain graft.tools.CodecBench [docs]"
   */
 object CodecBench {
-  def main(args: Array[String]): Unit = {
-    // shape matches the events.props corpus: small objects, one int key
-    val rnd = new java.util.Random(42)
-    val docs: Array[Array[Byte]] = Array.tabulate(100000) { i =>
-      val k = rnd.nextInt(200)
-      s"""{"k": $k, "s": "ev$i", "f": ${k / 7.0}}""".getBytes("UTF-8")
-    }
-    val bytes = docs.map(_.length.toLong).sum
-    var blackhole = 0L
-    def bench(label: String)(f: Array[Byte] => Long): Unit =
-      (1 to 4).foreach { round =>
-        val t0 = System.nanoTime()
-        var i = 0
-        while (i < docs.length) { blackhole += f(docs(i)); i += 1 }
-        val s = (System.nanoTime() - t0) / 1e9
-        if (round >= 3)
-          println(f"[codec] $label%-28s ${docs.length / s / 1e6}%.2f M rows/s, ${bytes / s / 1e6}%.1f MB/s")
-      }
+  private val Cities = Array("Oslo", "Lima", "Pune", "Kyiv", "Perth", "Cork", "Quito", "Bern")
 
-    bench("ours fromJsonBytes") { d =>
-      VariantJsonCodec.fromJsonBytes(d, 0, d.length)._2.length.toLong
-    }
-    val factory = new com.fasterxml.jackson.core.JsonFactory()
-    bench("jackson tokenize only") { d =>
-      val p = factory.createParser(d, 0, d.length)
-      var n = 0L
-      while (p.nextToken() != null) n += 1
-      p.close()
-      n
-    }
-    bench("tokenize + value accessors") { d =>
-      import com.fasterxml.jackson.core.JsonToken._
-      val p = factory.createParser(d, 0, d.length)
-      var n = 0L
-      var t = p.nextToken()
-      while (t != null) {
-        t match {
-          case VALUE_NUMBER_INT => n += p.getLongValue
-          case VALUE_NUMBER_FLOAT => n += p.getDoubleValue.toLong
-          case VALUE_STRING => n += p.getText.length
-          case FIELD_NAME => n += p.currentName().length
-          case _ => ()
-        }
-        t = p.nextToken()
+  /** `n` objects: fixed fields (a nested object and an array among them)
+    * plus 4-8 of 256 vocabulary keys. With `runs`, rows come in runs of
+    * 20-200 that share one key set and field order (log shippers);
+    * without, each row draws its keys and shuffles its fields, so no two
+    * neighbours share a shape (schema-on-read). */
+  def docs(n: Int, runs: Boolean): Array[Array[Byte]] = {
+    val r = new java.util.Random(if (runs) 1 else 2)
+    var vocab = Seq.empty[Int]
+    var left = 0
+    Array.tabulate(n) { i =>
+      if (left == 0 || !runs) {
+        vocab = Iterator.continually(r.nextInt(256)).distinct.take(4 + r.nextInt(5)).toSeq
+        left = 20 + r.nextInt(180)
       }
-      p.close()
-      n
+      left -= 1
+      val fields = Seq(s""""id": $i""", s""""grp": "g${r.nextInt(16)}"""", s""""amt": ${r.nextInt(50000) / 100.0}""",
+        s""""n": {"x": ${r.nextInt(1000)}, "y": "${Cities(r.nextInt(8))}"}""",
+        s""""tags": [${Seq.fill(r.nextInt(4))("\"t" + r.nextInt(30) + "\"").mkString(", ")}]""") ++ vocab.map { k =>
+        f""""f$k%03d": """ + (if (k % 2 == 0) r.nextInt(10000).toString else "\"" + Cities(r.nextInt(8)) + "\"")
+      }
+      (if (runs) fields else new scala.util.Random(r.nextLong()).shuffle(fields)).mkString("{", ", ", "}").getBytes("UTF-8")
     }
-    bench("spark builtin parseJson") { d =>
-      org.apache.spark.types.variant.VariantBuilder
-        .parseJson(new String(d, "UTF-8"), false).getValue.length.toLong
+  }
+
+  def main(args: Array[String]): Unit = {
+    val n = if (args.nonEmpty) args(0).toInt else 20000
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated = mx.getThreadAllocatedBytes(Thread.currentThread().getId)
+    var blackhole = 0L
+    def bench(label: String, docs: Array[Array[Byte]])(f: java.util.function.ToIntFunction[Array[Byte]]): Unit = {
+      def pass(): Double = {
+        val t0 = System.nanoTime()
+        docs.foreach(d => blackhole += f.applyAsInt(d))
+        (System.nanoTime() - t0).toDouble / docs.length
+      }
+      (1 to 5).foreach(_ => pass())
+      val ns = Seq.fill(7)(pass()).sorted
+      val a0 = allocated
+      pass()
+      val alloc = (allocated - a0).toDouble / docs.length
+      println(f"[codec] $label%-40s median ${ns(3)}%6.0f ns/doc  min ${ns(0)}%6.0f ns/doc  $alloc%5.0f B/doc")
+    }
+    for ((set, ds) <- Seq("runs of one shape" -> docs(n, runs = true), "shuffled keys" -> docs(n, runs = false))) {
+      bench(s"graft fromJsonBytes, $set", ds)(d => VariantJsonCodec.fromJsonBytes(d, 0, d.length)._2.length)
+      bench(s"spark parseJson, $set", ds)(d => org.apache.spark.types.variant.VariantBuilder
+        .parseJson(new String(d, java.nio.charset.StandardCharsets.UTF_8), false).getValue.length)
     }
     println(s"[codec] blackhole $blackhole")
   }

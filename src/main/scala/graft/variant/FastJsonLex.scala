@@ -356,6 +356,55 @@ private[graft] object FastJsonLex {
     * counts like any other. */
   @inline def openContainer(depth: Int): Unit = if (depth >= MAX_DEPTH) throw Miss
 
+  /** A member visitor for [[members]] (a SAM type, so its Int
+    * arguments are not boxed per call). */
+  trait Visit { def apply(index: Int, keyOff: Int, keyLen: Int): Boolean }
+
+  /** Walk the members of the object or array at the cursor, `depth`
+    * containers around it, and return their count. `visit(index, keyOff,
+    * keyLen)` sees each member with the cursor on its value (an element
+    * has no key: −1, −1) and either consumes the value and returns false,
+    * or returns true to stop there with the container still open; then
+    * the result is −1. With no `visit` each value is skipped; with one,
+    * an escaped key misses.
+    */
+  def members(c: Cursor, depth: Int, visit: Visit): Int = {
+    val close = if ((c.peek & 0xff) == '{') '}' else ']'
+    openContainer(depth)
+    c.i += 1
+    c.skipWs()
+    var n = 0
+    var more = !(c.i < c.end && c.b(c.i) == close)
+    if (!more) c.i += 1
+    while (more) {
+      c.skipWs()
+      var kOff, kLen = -1
+      if (close == '}') {
+        c.expect('"')
+        if (visit == null) skipName(c) // no visitor reads the key: escapes are fine
+        else {
+          val end = scanSimpleString(c)
+          if (end < 0) throw Miss // escaped key: the unfused plan
+          kOff = c.i
+          kLen = end - c.i
+          checkName(kLen)
+          c.i = end + 1
+        }
+        c.skipWs(); c.expect(':'); c.skipWs()
+      }
+      if (visit == null) skipValue(c, depth + 1)
+      else if (visit(n, kOff, kLen)) return -1
+      n += 1
+      c.skipWs()
+      (c.peek & 0xff) match {
+        case ',' => c.i += 1
+        case x if x == close => c.i += 1; more = false
+        case _ => throw Miss
+      }
+    }
+    n
+  }
+
   /** Jackson 2.x default StreamReadConstraints, mirrored so the fast
     * path never accepts a document the Jackson fallback would reject:
     * max number literal length 1000, max field-name length 50k, max

@@ -4,28 +4,21 @@ import com.fasterxml.jackson.core.JsonFactory
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeType
 
-/** JSON ⇄ variant conversion.
-  *
-  * JSON → variant mirrors the reference kernel `variant_from_json`
-  * (/root/reference/arrow-open-variant/src/json.rs:38-81) per row:
-  * parse → collect all object keys (json.rs:115-163) → build metadata →
-  * recursively convert (json.rs:202-246). Coercions match the reference:
-  * JSON int → integer; big int → Decimal16 scale 0, error beyond 128 bits
-  * (json.rs:213-218); JSON float → Float64; top-level JSON `null` → SQL
-  * null (json.rs:184-196) while nested nulls stay variant Null
-  * (json.rs:27-29).
-  *
-  * Metadata is built per ROW, not per batch — the deliberate Spark-native
-  * divergence (SURVEY §7.3): rows stay self-contained across shuffles,
-  * persistence, and streaming.
+/** JSON ⇄ variant conversion. JSON → variant gives the bytes of the
+  * reference kernel `variant_from_json` (arrow-open-variant/src/json.rs:38-81),
+  * whose two passes (collect keys, json.rs:115-163; convert,
+  * json.rs:202-246) [[fromTree]] keeps as the independent reference;
+  * production walks the input once into [[VariantEncoder]]. Coercions
+  * match the reference: int → integer; big int → Decimal16 scale 0, error
+  * beyond 128 bits (json.rs:213-218); float → Float64; top-level `null` →
+  * SQL null (json.rs:184-196), nested nulls stay variant Null. Metadata
+  * is per ROW, not per batch (SURVEY §7.3): rows stay self-contained
+  * across shuffles, persistence and streaming.
   */
 object VariantJsonCodec {
   private val mapper = new ObjectMapper()
   private val factory = new JsonFactory()
-
-  final val VARIANT_NULL: Array[Byte] = {
-    val b = new ByteBuf(1); VariantWriter.writeNull(b); b.result()
-  }
+  private val NullValue = Array[Byte](VariantConst.primitiveHeader(VariantConst.P_NULL).toByte)
 
   /** Parse error wrapper — same trigger condition as the reference's
     * whole-batch ComputeError (json.rs:43-47), scoped to the row.
@@ -40,133 +33,30 @@ object VariantJsonCodec {
         throw new JsonParseException(s"Failed to parse JSON: ${e.getMessage}", e)
     }
 
-  /** Key → dictionary-id lookup for one encode walk over the raw bytes.
-    * `id` returns -1 when the row departs from a guessed shape; the
-    * caller then re-runs the walk with a [[KeyInterner]].
-    */
-  private abstract class KeyIds {
-    def id(b: Array[Byte], off: Int, len: Int): Int
-  }
-
-  /** First-seen key interner: keys get temporary ids in arrival order;
-    * `remapTo` translates them to the final sorted-dictionary ids.
-    */
-  private final class KeyInterner extends KeyIds {
-    val keys = new java.util.ArrayList[String]()
-    private val map = new java.util.HashMap[String, Integer]()
-    def intern(k: String): Int = {
-      val existing = map.get(k)
-      if (existing != null) existing.intValue()
-      else {
-        val id = keys.size()
-        map.put(k, id)
-        keys.add(k)
-        id
-      }
-    }
-    def id(b: Array[Byte], off: Int, len: Int): Int =
-      intern(new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8))
-    def remapTo(finalIds: java.util.HashMap[String, Integer]): Array[Int] = {
-      val remap = new Array[Int](keys.size())
-      var i = 0
-      while (i < keys.size()) { remap(i) = finalIds.get(keys.get(i)); i += 1 }
-      remap
-    }
-  }
-
-  /** Per-thread guess of the NEXT row's first-seen key sequence: real
-    * scans are runs of structurally-identical rows, so the previous
-    * row's (arrival keys → final dictionary ids, metadata bytes) almost
-    * always applies verbatim. A hit skips the dictionary build (sort +
-    * hash map + byte emission) AND the sorted-order re-encode — keys
-    * resolve straight to final ids and `VariantObjectBuilder.finish()`
-    * id-sorts fields, so one pass emits the canonical binary.
-    * This recovers the reference's per-batch shared-metadata
-    * amortization (arrow-open-variant/src/json.rs:51-63) without giving
-    * up self-contained rows (SURVEY §7.3): the metadata BYTES are shared
-    * by reference thread-locally, each row still carries them. Measured
-    * 0.30 → ~1 M rows/s single-thread on small homogeneous objects
-    * (CodecBench); a miss costs one extra walk of that row only.
-    */
-  private final class Speculation {
-    var keyBytes: Array[Array[Byte]] = new Array[Array[Byte]](0) // first-seen arrival order, UTF-8
-    var finalIds: Array[Int] = new Array[Int](0) // their sorted-dictionary ids
-    var meta: Array[Byte] = VariantMetadata.EMPTY
-
-    def adopt(arrival: java.util.ArrayList[String], remap: Array[Int],
-              metaBytes: Array[Byte]): Unit = {
-      keyBytes = new Array[Array[Byte]](arrival.size())
-      var i = 0
-      while (i < keyBytes.length) {
-        keyBytes(i) = arrival.get(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        i += 1
-      }
-      finalIds = remap
-      meta = metaBytes
-    }
-  }
-  private val lastRowShape: ThreadLocal[Speculation] =
-    ThreadLocal.withInitial(() => new Speculation)
-
-  /** Key lookup against the guessed shape, by byte comparison. A key
-    * seen EARLIER in this row resolves by linear scan over the seen
-    * prefix (small, and exactly first-seen interning); a new key must be
-    * the guess's next key, else -1.
-    */
-  private final class ShapeGuess(spec: Speculation) extends KeyIds {
-    private var n = 0 // keys of the guess seen so far
-    def complete: Boolean = n == spec.keyBytes.length
-    def id(b: Array[Byte], off: Int, len: Int): Int = {
-      var k = 0
-      while (k < n) {
-        if (FastJsonLex.sliceEq(b, off, len, spec.keyBytes(k))) return spec.finalIds(k)
-        k += 1
-      }
-      if (n < spec.keyBytes.length && FastJsonLex.sliceEq(b, off, len, spec.keyBytes(n))) {
-        n += 1
-        spec.finalIds(n - 1)
-      } else -1
-    }
-  }
-
-  /** JSON text → (metadata, value); returns null for a top-level JSON
-    * `null` (the SQL-null rule, json.rs:184-196).
-    *
-    * One streaming pass over the raw bytes in the common case: the byte
-    * walk (`fastConvert`) resolves keys against the guessed shape and
-    * emits final ids directly. When the row departs from the guess, the
-    * same walk re-runs with first-seen interning and `finish` builds the
-    * dictionary and, only when arrival order was not already the sorted
-    * order, re-encodes the compact binary with final ids (a memcpy-heavy
-    * walk over our own buffer). No JsonNode tree is materialized. Rows
-    * the byte lexer declines (escaped keys, lone surrogates, malformed
-    * or oversized input, integers ≥ 2^127) take the plain Jackson walk,
-    * which owns all error semantics. The hot path of `variant_from_json`:
-    * at 100 TB the parse IS the workload.
+  /** JSON text → (metadata, value), null for a top-level JSON `null`.
+    * One pass over the raw bytes (`fastConvert`) into this thread's
+    * [[VariantEncoder]], whatever the key order; no JsonNode tree. Rows
+    * the byte lexer declines (escaped keys, lone surrogates, malformed or
+    * oversized input, integers ≥ 2^127) take the Jackson walk into the
+    * same encoder, which owns all error semantics.
     */
   def fromJsonBytes(utf8: Array[Byte], off: Int, len: Int): (Array[Byte], Array[Byte]) =
-    try fastFromJsonBytes(utf8, off, off + len, lastRowShape.get())
+    try fastFromJsonBytes(utf8, off, off + len)
     catch { case FastJsonLex.Miss => jacksonFromJsonBytes(utf8, off, len) }
 
-  /** The Jackson token walk — the fallback for every row the byte lexer
-    * declines, and the semantics reference the lexer is
-    * differential-fuzzed against (FastJsonSpec).
-    */
+  /** The Jackson token walk: the fallback for every row the byte lexer
+    * declines, and the semantics it is fuzzed against (FastJsonSpec). */
   private[graft] def jacksonFromJsonBytes(
       utf8: Array[Byte], off: Int, len: Int): (Array[Byte], Array[Byte]) = {
-    import com.fasterxml.jackson.core.JsonToken
     try {
       val p = factory.createParser(utf8, off, len)
-      val tok = p.nextToken()
-      if (tok == null) throw new JsonParseException("Failed to parse JSON: empty input", null)
-      val interner = new KeyInterner
-      val buf = new ByteBuf(64)
-      if (tok != JsonToken.VALUE_NULL) convertStream(p, buf, interner)
+      if (p.nextToken() == null) throw new JsonParseException("Failed to parse JSON: empty input", null)
+      val enc = VariantEncoder.get()
+      convertStream(p, enc)
       if (p.nextToken() != null)
         throw new JsonParseException("Failed to parse JSON: trailing tokens", null)
       p.close()
-      if (tok == JsonToken.VALUE_NULL) null
-      else finish(interner, buf, lastRowShape.get())
+      sqlNull(enc.result())
     } catch {
       case e: JsonParseException => throw e
       case e: IllegalArgumentException => throw e
@@ -175,66 +65,12 @@ object VariantJsonCodec {
     }
   }
 
-  /** Shared tail of both walks for a row encoded with first-seen temp
-    * ids: build the row's dictionary, adopt its shape as the next guess,
-    * and re-encode with final ids unless arrival order already was
-    * dictionary order. The re-encode runs from our own binary so frame
-    * id widths and field sort reflect final ids (in-place id rewriting
-    * could change a frame's id byte width — the builders re-derive
-    * widths, keeping the encoding canonical).
+  /** Recursive-descent token → variant walk; parser is positioned ON
+    * the value's first token when called.
     */
-  private def finish(interner: KeyInterner, buf: ByteBuf,
-                     spec: Speculation): (Array[Byte], Array[Byte]) = {
-    val (metaBytes, finalIds) = VariantMetadata.build(interner.keys)
-    val remap = interner.remapTo(finalIds)
-    spec.adopt(interner.keys, remap, metaBytes)
-    var identity = true
-    var i = 0
-    while (identity && i < remap.length) { identity = remap(i) == i; i += 1 }
-    if (identity) (metaBytes, buf.result())
-    else {
-      val out = new ByteBuf(buf.length + 16)
-      reencode(buf.rawBytes, 0, out, remap)
-      (metaBytes, out.result())
-    }
-  }
-
-  /** Re-emit a temp-id-encoded value with final dictionary ids. Scalars
-    * copy verbatim; object/array frames rebuild through the canonical
-    * builders (sorted fields, minimal widths).
-    */
-  private def reencode(src: Array[Byte], pos: Int, out: ByteBuf, remap: Array[Int]): Unit = {
-    val v = new VariantView(src, pos)
-    v.basicType match {
-      case VariantConst.BASIC_OBJECT =>
-        val o = v.getObject
-        val ob = new VariantObjectBuilder(out)
-        var i = 0
-        while (i < o.numElements) {
-          reencode(src, o.valueAt(i).pos, ob.fieldBuffer(remap(o.fieldIdAt(i))), remap)
-          i += 1
-        }
-        ob.finish()
-      case VariantConst.BASIC_ARRAY =>
-        val a = v.getArray
-        val ab = new VariantArrayBuilder(out)
-        var i = 0
-        while (i < a.numElements) {
-          reencode(src, a.elementAt(i).pos, ab.elementBuffer(), remap)
-          i += 1
-        }
-        ab.finish()
-      case _ => out.addBytes(src, pos, v.sizeInBytes)
-    }
-  }
-
-  /** Recursive-descent token → variant writer; parser is positioned ON
-    * the value's first token when called. Object keys intern to
-    * first-seen temp ids (remapped by the caller when necessary).
-    */
-  private def convertStream(p: com.fasterxml.jackson.core.JsonParser, buf: ByteBuf,
-                            interner: KeyInterner): Unit = {
+  private def convertStream(p: com.fasterxml.jackson.core.JsonParser, enc: VariantEncoder): Unit = {
     import com.fasterxml.jackson.core.{JsonToken => T}
+    val buf = enc.buf
     p.currentToken() match {
       case T.VALUE_NULL => VariantWriter.writeNull(buf)
       case T.VALUE_TRUE => VariantWriter.writeBoolean(buf, true)
@@ -251,20 +87,17 @@ object VariantJsonCodec {
       case T.VALUE_NUMBER_FLOAT => VariantWriter.writeDouble(buf, p.getDoubleValue)
       case T.VALUE_STRING => VariantWriter.writeString(buf, p.getText)
       case T.START_ARRAY =>
-        val ab = new VariantArrayBuilder(buf)
-        while (p.nextToken() != T.END_ARRAY) {
-          convertStream(p, ab.elementBuffer(), interner)
-        }
-        ab.finish()
+        enc.beginArray()
+        while (p.nextToken() != T.END_ARRAY) convertStream(p, enc)
+        enc.endArray()
       case T.START_OBJECT =>
-        val ob = new VariantObjectBuilder(buf)
+        enc.beginObject()
         while (p.nextToken() != T.END_OBJECT) {
-          // currentToken == FIELD_NAME
-          val id = interner.intern(p.currentName())
+          enc.key(p.currentName()) // currentToken == FIELD_NAME
           p.nextToken()
-          convertStream(p, ob.fieldBuffer(id), interner)
+          convertStream(p, enc)
         }
-        ob.finish()
+        enc.endObject()
       case other =>
         throw new JsonParseException(s"Unsupported JSON token: $other", null)
     }
@@ -275,40 +108,22 @@ object VariantJsonCodec {
     fromJsonBytes(b, 0, b.length)
   }
 
-  // ===================================================================
-  // Byte-level JSON walk (round 7). The reference's kernel is
-  // json→variant; with the plan fused and the encoder single-pass, the
-  // remaining cost was Jackson's tokenizer (UTF-8→UTF-16 decode, token
-  // objects, feature checks). This lexer works directly on the UTF-8
-  // input: escape-free strings become one byte-slice copy, integers
-  // parse inline, and object keys match the guessed shape by BYTE
-  // comparison. Contract: it accepts a strict SUBSET of what Jackson's
-  // default feature set accepts; anything outside (malformed JSON,
-  // integers ≥ 2^127, escaped keys, lone surrogates, invalid UTF-8,
-  // leading zeros) throws the stackless FastMiss and the row re-runs
-  // through the plain Jackson walk above, which owns all error
-  // semantics. Differential-fuzzed byte-for-byte against the Jackson
-  // walk in FastJsonSpec.
-  // ===================================================================
+  // Byte-level JSON walk, without Jackson's UTF-16 decode and token
+  // objects. It accepts a strict SUBSET of what Jackson's default
+  // features accept; anything else (malformed JSON, integers ≥ 2^127,
+  // escaped keys, lone surrogates, invalid UTF-8, leading zeros) throws
+  // FastJsonLex.Miss and re-runs through the Jackson walk above.
+  // Differential-fuzzed byte-for-byte against it in FastJsonSpec.
 
-  /** Test hook: run ONLY the byte lexer (production speculation state),
-    * Left(()) when it declines the row. */
+  /** Test hook: run ONLY the byte lexer, Left(()) when it declines the row. */
   private[graft] def fastOnlyForTest(
       utf8: Array[Byte]): Either[Unit, (Array[Byte], Array[Byte])] =
-    try Right(fastFromJsonBytes(utf8, 0, utf8.length, lastRowShape.get()))
+    try Right(fastFromJsonBytes(utf8, 0, utf8.length))
     catch { case FastJsonLex.Miss => Left(()) }
 
-  /** Shared byte-level lexing core lives in [[FastJsonLex]] (also used
-    * by the fused extraction fast path). Aliases keep this file's walk
-    * code readable. */
-  private def FastMiss = FastJsonLex.Miss
-  private type FastCursor = FastJsonLex.Cursor
-
-  /** Emit one JSON number through the writer, with Jackson's integer
-    * rule ([[FastJsonLex.integer]]): fits a long → int64, else Decimal16
-    * scale 0; integers ≥ 2^127 miss so the Jackson walk raises its i128
-    * error. */
-  private def fastNumber(c: FastCursor, buf: ByteBuf): Unit = {
+  /** One JSON number, with Jackson's integer rule ([[FastJsonLex.integer]]):
+    * a long, else Decimal16 scale 0; ≥ 2^127 misses (Jackson's i128 error). */
+  private def fastNumber(c: FastJsonLex.Cursor, buf: ByteBuf): Unit = {
     val start = c.i
     if (FastJsonLex.scanNumber(c)) {
       val big = FastJsonLex.integer(c, start)
@@ -321,113 +136,62 @@ object VariantJsonCodec {
     }
   }
 
-  /** Byte-path entry: the walk against the guessed shape, then, if the
-    * row departs from it, the same walk with first-seen interning.
-    * Throws FastMiss to route the row to the Jackson walk. */
-  private def fastFromJsonBytes(b: Array[Byte], off: Int, end: Int,
-                                spec: Speculation): (Array[Byte], Array[Byte]) = {
+  /** Byte-path entry. Throws FastJsonLex.Miss to route the row to the
+    * Jackson walk. */
+  private def fastFromJsonBytes(b: Array[Byte], off: Int, end: Int): (Array[Byte], Array[Byte]) = {
     val c = new FastJsonLex.Cursor(b, off, end)
+    c.skipWs() // empty input misses: Jackson's "empty input" error
+    val walk = new ByteWalk(c, VariantEncoder.get())
+    walk.value()
     c.skipWs()
-    if (c.i >= end) throw FastMiss // empty → Jackson's "empty input" error
-    if (b(c.i) == 'n') { // top-level null → SQL NULL (json.rs:184-196)
-      FastJsonLex.literal(c, "null")
-      c.skipWs()
-      if (c.i != end) throw FastMiss // trailing → Jackson's error
-      return null
-    }
-    val valueStart = c.i
-    val guess = new ShapeGuess(spec)
-    val guessed = new ByteBuf(64)
-    if (fastConvert(c, guessed, guess) && guess.complete) {
-      c.skipWs()
-      if (c.i != end) throw FastMiss
-      return (spec.meta, guessed.result())
-    }
-    c.i = valueStart
-    val interner = new KeyInterner
-    val buf = new ByteBuf(64)
-    fastConvert(c, buf, interner)
-    c.skipWs()
-    if (c.i != end) throw FastMiss
-    finish(interner, buf, spec)
+    if (c.i != end) throw FastJsonLex.Miss // trailing bytes: Jackson's error
+    sqlNull(walk.enc.result())
   }
 
-  /** The byte walk: encodes the value at the cursor into `buf`, keys
-    * through `keys`. Returns false the moment `keys` reports a departure
-    * from the guessed shape (the caller discards `buf`); throws FastMiss
-    * on anything the lexer declines. */
-  private def fastConvert(c: FastCursor, buf: ByteBuf, keys: KeyIds,
-                          depth: Int = 0): Boolean = {
-    val b = c.b
-    (c.peek & 0xff) match {
-      case 'n' => FastJsonLex.literal(c, "null"); VariantWriter.writeNull(buf)
-      case 't' => FastJsonLex.literal(c, "true"); VariantWriter.writeBoolean(buf, true)
-      case 'f' => FastJsonLex.literal(c, "false"); VariantWriter.writeBoolean(buf, false)
-      case '"' =>
-        c.i += 1
-        val close = FastJsonLex.scanSimpleString(c)
-        if (close >= 0) {
-          VariantWriter.writeStringSlice(buf, b, c.i, close - c.i)
-          c.i = close + 1
-        } else {
-          val scratch = new ByteBuf(32)
-          FastJsonLex.unescapeString(c, scratch)
-          VariantWriter.writeStringSlice(buf, scratch.rawBytes, 0, scratch.length)
-        }
-      case '[' =>
-        FastJsonLex.openContainer(depth)
-        c.i += 1
-        val ab = new VariantArrayBuilder(buf)
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == ']') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            if (!fastConvert(c, ab.elementBuffer(), keys, depth + 1)) return false
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case ']' => c.i += 1; more = false
-              case _ => throw FastMiss
-            }
-          }
-        }
-        ab.finish()
-      case '{' =>
-        FastJsonLex.openContainer(depth)
-        c.i += 1
-        val ob = new VariantObjectBuilder(buf)
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == '}') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            c.expect('"')
-            val close = FastJsonLex.scanSimpleString(c)
-            if (close < 0) throw FastMiss // escaped keys: rare, Jackson path
-            FastJsonLex.checkName(close - c.i)
-            val id = keys.id(b, c.i, close - c.i)
-            if (id < 0) return false
-            c.i = close + 1
-            c.skipWs()
-            c.expect(':')
-            c.skipWs()
-            if (!fastConvert(c, ob.fieldBuffer(id), keys, depth + 1)) return false
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case '}' => c.i += 1; more = false
-              case _ => throw FastMiss
-            }
-          }
-        }
-        ob.finish()
-      case x if x == '-' || (x >= '0' && x <= '9') => fastNumber(c, buf)
-      case _ => throw FastMiss
+  /** A top-level JSON null is SQL NULL (json.rs:184-196). */
+  private def sqlNull(pair: (Array[Byte], Array[Byte])) =
+    if (java.util.Arrays.equals(pair._2, NullValue)) null else pair
+
+  /** The byte walk: hands the values at the cursor to `enc`, one visitor
+    * for every container of the row; throws FastJsonLex.Miss on anything
+    * the lexer declines. */
+  private final class ByteWalk(c: FastJsonLex.Cursor, val enc: VariantEncoder) extends FastJsonLex.Visit {
+    private var depth = 0 // containers around the cursor
+
+    /** A member: its key (objects only), then its value. */
+    def apply(index: Int, keyOff: Int, keyLen: Int): Boolean = {
+      if (keyOff >= 0) enc.key(c.b, keyOff, keyLen)
+      value()
+      false
     }
-    true
+
+    def value(): Unit = {
+      val buf = enc.buf
+      (c.peek & 0xff) match {
+        case 'n' => FastJsonLex.literal(c, "null"); VariantWriter.writeNull(buf)
+        case 't' => FastJsonLex.literal(c, "true"); VariantWriter.writeBoolean(buf, true)
+        case 'f' => FastJsonLex.literal(c, "false"); VariantWriter.writeBoolean(buf, false)
+        case '"' =>
+          c.i += 1
+          val close = FastJsonLex.scanSimpleString(c)
+          if (close >= 0) {
+            VariantWriter.writeStringSlice(buf, c.b, c.i, close - c.i)
+            c.i = close + 1
+          } else {
+            val text = new ByteBuf(32)
+            FastJsonLex.unescapeString(c, text)
+            VariantWriter.writeStringSlice(buf, text.rawBytes, 0, text.length)
+          }
+        case x if x == '[' || x == '{' =>
+          if (x == '{') enc.beginObject() else enc.beginArray()
+          depth += 1
+          FastJsonLex.members(c, depth - 1, this)
+          depth -= 1
+          if (x == '{') enc.endObject() else enc.endArray()
+        case x if x == '-' || (x >= '0' && x <= '9') => fastNumber(c, buf)
+        case _ => throw FastJsonLex.Miss
+      }
+    }
   }
 
   def fromTree(tree: JsonNode): (Array[Byte], Array[Byte]) = {

@@ -106,25 +106,9 @@ final class VariantView(val bytes: Array[Byte], val pos: Int) {
 
   /** Total encoded size of this value in bytes (header included) — O(1). */
   def sizeInBytes: Int = basicType match {
-    case BASIC_SHORT_STR => 1 + typeInfo
-    case BASIC_OBJECT    => getObject.totalSize
-    case BASIC_ARRAY     => getArray.totalSize
-    case _ =>
-      typeInfo match {
-        case P_NULL | P_TRUE | P_FALSE       => 1
-        case P_INT8                          => 2
-        case P_INT16                         => 3
-        case P_INT32 | P_DATE | P_FLOAT      => 5
-        case P_BINARY_FROM_DICT | P_STRING_FROM_DICT => 5
-        case P_INT64 | P_DOUBLE              => 9
-        case P_TIMESTAMP | P_TIMESTAMP_NTZ   => 9
-        case P_DECIMAL4                      => 6
-        case P_DECIMAL8                      => 10
-        case P_DECIMAL16                     => 18
-        case P_LONG_STR | P_BINARY =>
-          5 + ByteUtil.readUnsignedLE(bytes, pos + 1, 4).toInt
-        case t => throw new IllegalStateException(s"unknown type id $t")
-      }
+    case BASIC_OBJECT => getObject.totalSize
+    case BASIC_ARRAY  => getArray.totalSize
+    case _            => VariantView.scalarSize(bytes, pos)
   }
 
   /** Copy this value out as a standalone buffer. */
@@ -154,6 +138,27 @@ final class VariantView(val bytes: Array[Byte], val pos: Int) {
         case P_LONG_STR | P_STRING_FROM_DICT => "string"
         case t                             => s"unknown($t)"
       }
+  }
+}
+
+object VariantView {
+  /** Encoded size, header included, of the scalar (not container) at `pos`. */
+  def scalarSize(bytes: Array[Byte], pos: Int): Int = {
+    val h = bytes(pos) & 0xff
+    if ((h & 0x3) == BASIC_SHORT_STR) 1 + (h >> 2)
+    else (h >> 2) match {
+      case P_NULL | P_TRUE | P_FALSE       => 1
+      case P_INT8                          => 2
+      case P_INT16                         => 3
+      case P_INT32 | P_DATE | P_FLOAT | P_BINARY_FROM_DICT | P_STRING_FROM_DICT => 5
+      case P_INT64 | P_DOUBLE | P_TIMESTAMP | P_TIMESTAMP_NTZ => 9
+      case P_DECIMAL4                      => 6
+      case P_DECIMAL8                      => 10
+      case P_DECIMAL16                     => 18
+      case P_LONG_STR | P_BINARY =>
+        5 + ByteUtil.readUnsignedLE(bytes, pos + 1, 4).toInt
+      case t => throw new IllegalStateException(s"unknown type id $t")
+    }
   }
 }
 

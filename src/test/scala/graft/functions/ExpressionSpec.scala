@@ -45,9 +45,9 @@ class ExpressionSpec extends AnyFunSuite {
   test("heterogeneous JSON shapes shuffled across partitions stay canonical (speculative encoder)") {
     import graft.variant.VariantJsonCodec
     // 7 interleaved shapes over 8 partitions: every executor thread sees
-    // constant shape switches, so the speculative encoder's per-thread
-    // prediction misses constantly and must still produce the canonical
-    // bytes the two-pass tree encoder defines.
+    // constant shape switches, so the encoder's per-thread metadata reuse
+    // misses constantly and must still produce the canonical bytes the
+    // two-pass tree encoder defines.
     val shapes = (1 to 2100).map { i =>
       i % 7 match {
         case 0 => s"""{"k": $i, "s": "v$i", "f": ${i / 7.0}}"""
@@ -187,6 +187,52 @@ class ExpressionSpec extends AnyFunSuite {
     assert(sql1(
       """SELECT variant_get(to_variant(named_struct('d', DATE'2024-06-01')), '$.d', 'date') = DATE'2024-06-01' AS r""")
       .getBoolean(0))
+    // nested struct/map/array: the bytes of the JSON twin's parse
+    val twin = sql1(
+      """SELECT to_variant(named_struct('b', 1.5D, 'a', map('y', array(1L, 2L), 'x', array()),
+        |         's', named_struct('z', 'str', 'n', CAST(NULL AS STRING)), 'l', array(named_struct('k', true)))) AS t,
+        |       variant_from_json('{"b": 1.5, "a": {"y": [1, 2], "x": []}, "s": {"z": "str", "n": null}, "l": [{"k": true}]}') AS j"""
+        .stripMargin)
+    Seq("metadata", "value").foreach { f =>
+      assert(twin.getStruct(0).getAs[Array[Byte]](f).toSeq == twin.getStruct(1).getAs[Array[Byte]](f).toSeq, f)
+    }
+  }
+
+  test("variant_from_json reads a string's backing array in place, and a rewritten array parses afresh") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.unsafe.types.UTF8String
+    // two rows viewing one backing array (at an offset), rewritten in
+    // between with a different document of the same length
+    val backing = """xx{"a": 1}yy""".getBytes("UTF-8")
+    val parse = VariantFromJson(BoundReference(0, StringType, nullable = true))
+    def value(): Seq[Byte] = parse.eval(InternalRow(UTF8String.fromBytes(backing, 2, 8)))
+      .asInstanceOf[InternalRow].getBinary(1).toSeq
+    val first = value()
+    System.arraycopy("""{"a": 2}""".getBytes("UTF-8"), 0, backing, 2, 8)
+    val second = value()
+    assert(first != second)
+    assert(first == graft.variant.VariantJsonCodec.fromJson("""{"a": 1}""")._2.toSeq)
+    assert(second == graft.variant.VariantJsonCodec.fromJson("""{"a": 2}""")._2.toSeq)
+  }
+
+  test("variant_from_json keeps no copy of a row over the encoder's MaxKept") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.variant.{VariantEncoder, VariantJsonCodec}
+    val big = (0 until 80000).map(i => s"""{"id": $i, "v": "n$i"}""").mkString("[", ", ", "]")
+    assert(big.length > 2 * VariantEncoder.MaxKept)
+    val parse = VariantFromJson(BoundReference(0, StringType, nullable = true))
+    def value(json: String): Seq[Byte] = parse.eval(InternalRow(UTF8String.fromString(json)))
+      .asInstanceOf[InternalRow].getBinary(1).toSeq
+    // twice in a row, as a duplicated parse evaluates it: same bytes, nothing kept
+    val expected = VariantJsonCodec.fromJson(big)._2.toSeq
+    assert(value(big) == expected)
+    assert(VariantFromJson.lastParse.get().keptBytes <= VariantEncoder.MaxKept)
+    assert(value(big) == expected)
+    assert(VariantFromJson.lastParse.get().keptBytes <= VariantEncoder.MaxKept)
+    assert(value("""{"small": 1}""") == VariantJsonCodec.fromJson("""{"small": 1}""")._2.toSeq)
   }
 
   test("hash64 / simhash64 / minhash_signature determinism and shape") {

@@ -320,6 +320,14 @@ class VariantMergeFuzzSpec extends AnyFunSuite {
         if (pair == null) null else VariantMergePatch.decode(pair._1, pair._2)
       }
       assert(got == want, s"doc=${doc.take(60)}")
+      // and the edit encoder writes the codec's bytes back from the tree
+      val pair = try graft.variant.VariantJsonCodec.fromJsonBytes(b, 0, b.length)
+      catch { case _: Exception => null }
+      if (pair != null) {
+        val again = VariantMergePatch.encode(VariantMergePatch.decode(pair._1, pair._2))
+        assert(java.util.Arrays.equals(again.getBinary(0), pair._1) &&
+          java.util.Arrays.equals(again.getBinary(1), pair._2), s"re-encode of doc=${doc.take(60)}")
+      }
     })
   }
 

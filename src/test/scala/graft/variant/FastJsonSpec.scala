@@ -165,7 +165,7 @@ class FastJsonSpec extends AnyFunSuite {
     var hits = 0
     var total = 0
     (1 to 5000).foreach { i =>
-      // runs of identical shapes (speculation hits) mixed with shape breaks
+      // runs of identical shapes (metadata reuse) mixed with shape breaks
       val doc =
         if (i % 7 == 0) genValue(0)
         else s"""{"a": ${rnd.nextInt(100)}, "b": "s${rnd.nextInt(10)}", "c": ${rnd.nextInt(2) == 1}}"""

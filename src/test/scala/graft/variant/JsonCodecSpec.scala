@@ -14,6 +14,15 @@ class JsonCodecSpec extends AnyFunSuite {
     (new MetadataView(pair._1, 0), new VariantView(pair._2, 0))
   }
 
+  /** The encoder's bytes equal the two-pass reference's. */
+  private def assertReferenceBytes(json: String): Unit = {
+    val b = json.getBytes("UTF-8")
+    val fast = VariantJsonCodec.fromJson(json)
+    val ref = VariantJsonCodec.fromTree(VariantJsonCodec.parseTree(b, 0, b.length))
+    assert(java.util.Arrays.equals(fast._1, ref._1), s"metadata diverged for: ${json.take(80)}")
+    assert(java.util.Arrays.equals(fast._2, ref._2), s"value diverged for: ${json.take(80)}")
+  }
+
   private def roundTrip(json: String): String = {
     val pair = VariantJsonCodec.fromJson(json)
     VariantJsonCodec.toJsonString(pair._1, pair._2)
@@ -32,10 +41,10 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("speculative encoder: randomized document sequences (partial key-prefix matches) stay canonical") {
-    // Random key subsets in random order from a small pool → frequent
-    // PARTIAL prediction matches (the dangerous zone: same first keys,
-    // then a deviation mid-walk, or a clean prefix that must still miss
-    // on the exactness check). Objects avoid duplicate keys (tree
+    // Random key subsets in random order from a small pool: neighbouring
+    // rows often repeat the last row's keys (the encoder then reuses its
+    // metadata array) or differ from them by one key or their order,
+    // which must build a fresh one. Objects avoid duplicate keys (tree
     // encoder keeps last, streaming keeps both — documented divergence).
     val rnd = new scala.util.Random(20260812)
     val pool = Array("a", "b", "c", "dd", "é", "k😀")
@@ -63,11 +72,12 @@ class JsonCodecSpec extends AnyFunSuite {
   }
 
   test("speculative encoder: any document SEQUENCE yields the two-pass canonical bytes") {
-    // The single-pass encoder predicts each row's key arrival from the
-    // previous row (thread-local), so correctness is SEQUENCE-sensitive:
-    // drive runs of one shape, shape switches, key subsets/supersets,
-    // reordered arrivals, scalars and nested docs through one thread and
-    // require byte-identity with the two-pass tree encoder for every doc.
+    // The encoder reuses the last row's metadata (thread-local) when the
+    // row's keys arrive as they did there, so correctness is
+    // SEQUENCE-sensitive: drive runs of one shape, shape switches, key
+    // subsets/supersets, reordered arrivals, scalars and nested docs
+    // through one thread and require byte-identity with the two-pass
+    // tree encoder for every doc.
     val shapes = Seq(
       """{"k": %d, "s": "v%d", "f": 1.5}""", // arrival ≠ sorted (f<k<s)
       """{"a": %d, "b": %d}""", // arrival = sorted (identity remap)
@@ -78,7 +88,7 @@ class JsonCodecSpec extends AnyFunSuite {
       """[%d, "s", {"w": %d}]""", // array root
       """%d""", // scalar root (empty dictionary)
       // multi-byte UTF-8 keys: dictionary order is byte order
-      // (Z < a < é), exercised through the speculative id reuse
+      // (Z < a < é), exercised through the metadata reuse
       """{"é": %d, "Z": "z%d", "a": true}""",
       """{"k😀": %d, "k": %d}""" // supplementary-plane key
     )
@@ -217,6 +227,30 @@ class JsonCodecSpec extends AnyFunSuite {
     assert(va.getArray.elementAt(399).getLong == 399L)
     assert(roundTrip(obj) == TestJson.canonical(obj))
     assert(roundTrip(arr) == arr.replace(" ", ""))
+    def keys(n: Int) = (0 until n).map(i => f""""k$i%04d": $i""")
+    val boundaries = Seq(obj, arr) ++
+      // field ids move from 1 to 2 bytes at id 128
+      Seq(127, 128, 129).map(n => keys(n).mkString("{", ", ", "}")) ++
+      // wide ids in a small object: its two keys sort after 300 others
+      Seq((keys(300) :+ """"zz": {"zz1": 1, "zz2": [2]}""").mkString("{", ", ", "}")) ++
+      // the count byte holds 255 elements; 256 makes the array large
+      Seq(255, 256).map(n => (0 until n).mkString("[", ", ", "]")) ++
+      // children past 32,767 bytes take 4-byte offsets
+      Seq(s"""{"a": "${"x" * 40000}", "b": [1, "${"y" * 33000}"]}""",
+        // an escaped key: the Jackson walk through the same encoder
+        """{"a\"b": 1, "c": {"d\u00e9": [true, {"a\"b": null}]}, "b": 2}""")
+    assert(VariantJsonCodec.fastOnlyForTest(boundaries.last.getBytes("UTF-8")).isLeft)
+    boundaries.foreach(assertReferenceBytes)
+  }
+
+  test("a ~2 MB row then a small one: reference bytes, and the large row's buffers are freed") {
+    val big = (0 until 44000).map(i => s"""{"id": $i, "name": "n$i", "v": ${i * 1.5}}""")
+      .mkString("""{"rows": [""", ", ", "]}")
+    assert(big.length > 2000000)
+    assertReferenceBytes(big)
+    assert(VariantEncoder.current.retainedBytes <= VariantEncoder.MaxKept)
+    assertReferenceBytes("""{"small": [1, 2]}""")
+    assert(VariantEncoder.current.retainedBytes <= VariantEncoder.MaxKept)
   }
 
   test("deep nesting (500 levels) round-trips without stack issues") {
