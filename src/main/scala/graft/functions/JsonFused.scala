@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.variant.{FastJsonLex => L, PathStep, SchemaInfer, VariantMetadata}
+import graft.variant.{ByteBuf, FastJsonLex => L, MetadataView, PathStep, SchemaInfer, VariantEncoder, VariantMetadata, VariantView}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
@@ -11,12 +11,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * form ([[JsonPathExtract]], [[SchemaOfJsonAgg]], the value-tree reader
   * of a fused [[VariantEdit]]): navigate to a path,
   * hand the value there to a consumer, close out and validate the rest of
-  * the document — no metadata build, no variant encode, no decode. Each
-  * consumer reproduces the unfused expression's output exactly
-  * (dictionary-sorted key order included — the parity property tests in
-  * FusedPropertySpec pin this). Byte walk, else the codec's parse: a row
-  * the walk declines is evaluated by the unfused pipeline itself
-  * ([[JsonFused.evalUnfused]]), so the codec owns every error.
+  * the document — no metadata build, no row encode, no decode. A scalar
+  * there is written by the codec's own rule ([[L.scalar]]) into one
+  * scratch buffer per thread and read through the variant reader's own
+  * code ([[scalar]]); only containers have walkers of their own, whose
+  * output the parity property tests in FusedPropertySpec pin
+  * (dictionary-sorted key order included). Byte walk, else the codec's
+  * parse: a row the walk declines is evaluated by the unfused pipeline
+  * itself ([[JsonFused.evalUnfused]]), so the codec owns every error.
   */
 private[functions] object JsonFused {
   /** Stable sort of strings by UTF-8 byte order — the metadata
@@ -33,6 +35,22 @@ private[functions] object JsonFused {
       if (c != 0) c else Integer.compare(x, y)
     })
     order
+  }
+
+  /** The dictionary a [[scalar]] view reads against: a scalar names no key. */
+  val NoKeys = new MetadataView(VariantMetadata.EMPTY, 0)
+
+  private val scratch = ThreadLocal.withInitial[ByteBuf](() => new ByteBuf(64))
+
+  /** The JSON scalar at the cursor, consumed and encoded by the codec's
+    * rule into this thread's scratch buffer: a view valid until the
+    * thread's next call, read against [[NoKeys]]. A container misses. */
+  def scalar(c: L.Cursor): VariantView = {
+    var buf = scratch.get()
+    if (buf.rawBytes.length > VariantEncoder.MaxKept) { buf = new ByteBuf(64); scratch.set(buf) }
+    buf.reset()
+    L.scalar(c, buf)
+    new VariantView(buf.rawBytes, 0)
   }
 
   def toBytes(input: Any): Array[Byte] = input match {
@@ -119,21 +137,13 @@ private[functions] object JsonFused {
   }
 
   /** Schema-lattice inference straight off the bytes — the fused
-    * equivalent of encode-then-`SchemaInfer.infer` (FastJsonLex miss
-    * contract). Parity by construction with the codec's JSON→variant
-    * coercions: long-fitting ints → SLong, i128-fitting big ints →
-    * SDecimal(0) (both by [[graft.variant.FastJsonLex.integer]]), floats
-    * → SDouble; duplicate object keys overwrite in arrival order, which
-    * is exactly what `infer` produces over the encoding (TreeMap insert,
-    * last wins). Strings only need validation, never decoding. */
+    * equivalent of encode-then-`SchemaInfer.infer`: containers are
+    * walked here (duplicate object keys overwrite in arrival order, as
+    * `infer`'s TreeMap insert does over the encoding), every scalar is
+    * `infer` of its [[scalar]] encoding. */
   def fastInferSchema(c: L.Cursor, depth: Int): SchemaInfer.SType = {
     import SchemaInfer._
-    val b = c.b
     (c.peek & 0xff) match {
-      case 'n' => L.literal(c, "null"); SNull
-      case 't' => L.literal(c, "true"); SBool
-      case 'f' => L.literal(c, "false"); SBool
-      case '"' => c.i += 1; L.skipString(c); SString
       case '[' =>
         var elem: SType = SNull
         L.members(c, depth, (_, _, _) => { elem = merge(elem, fastInferSchema(c, depth + 1)); false })
@@ -142,17 +152,12 @@ private[functions] object JsonFused {
         var fields = scala.collection.immutable.TreeMap.empty[String, SType]
         L.members(c, depth, (_, off, len) => {
           // last dup wins
-          fields += (new String(b, off, len, java.nio.charset.StandardCharsets.UTF_8) ->
+          fields += (new String(c.b, off, len, java.nio.charset.StandardCharsets.UTF_8) ->
             fastInferSchema(c, depth + 1))
           false
         })
         SObject(fields)
-      case x if x == '-' || (x >= '0' && x <= '9') =>
-        val start = c.i
-        if (!L.scanNumber(c)) SDouble
-        else if (L.integer(c, start) == null) SLong
-        else SDecimal(0)
-      case _ => throw L.Miss
+      case _ => infer(NoKeys, scalar(c))
     }
   }
 }

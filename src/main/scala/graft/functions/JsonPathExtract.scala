@@ -13,14 +13,15 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The one fused form of `<consumer>(variant_from_json(s))`: a single
   * [[JsonFused.walk]] navigates the JSON text to `path` and hands the
   * value there to `consumer` — a scalar cast, keys, size, typeof or
-  * schema — with no metadata dictionary, no variant buffer and no
+  * schema — with no metadata dictionary, no row encode and no
   * intermediate struct. Installed by [[VariantGetFusionRule]] (the
   * optimization sketched in SURVEY §4.2.2). A row the walk declines is
   * evaluated by the unfused plan itself, which stays the semantic
   * reference: the [[VariantRead]] of `consumer` at `path` over the parse.
-  * The two byte sources share no evaluation code (a memo here, an id
-  * cache there; a cursor here, a View there), so each stays its own
-  * class; `graft.functions.Json*` names the fused forms.
+  * A scalar at the path is read by that reader's own code over the
+  * scalar's encoding ([[JsonConsumer]]); the byte sources differ (a
+  * memo and a cursor here, an id cache and a View there), so each stays
+  * its own class; `graft.functions.Json*` names the fused forms.
   */
 case class JsonPathExtract(
     child: Expression,
@@ -101,7 +102,9 @@ object JsonPathExtract {
 /** One row per variant reader: what [[VariantRead]] does with the
   * variant at its path (`readVariant`), and for the rows with a fused
   * form, what [[JsonPathExtract]] does with the JSON value there (`read`)
-  * — the same result off the raw bytes. `prettyName` is the reader's plan
+  * — the same result off the raw bytes. A JSON scalar is read by the
+  * row's own variant reader (`at`, over [[JsonFused.scalar]]); only
+  * containers have JSON walkers of their own. `prettyName` is the reader's plan
   * name and `fusedName` the fused form's, null for a row with no JSON
   * reader. Serializable itself, not only through its case subclasses:
   * expressions ship to executors, and Java deserialization needs the
@@ -131,11 +134,8 @@ sealed abstract class JsonConsumer(val prettyName: String, val fusedName: String
 }
 
 object JsonConsumer {
-  /** Targets whose cast semantics [[Cast]] replicates exactly. String
-    * targets: scalar values print the same text as
-    * VariantExtract.asString; object/array subtrees round-trip through
-    * the codec's canonical printer. Variant/binary targets keep the
-    * unfused pipeline.
+  /** Targets a [[Cast]] reads off the JSON bytes. Variant and binary
+    * targets keep the unfused pipeline.
     */
   def fusableTarget(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | BooleanType | _: DecimalType => true
@@ -196,34 +196,17 @@ object JsonConsumer {
     }
   }
 
-  /** `variant_typeof`: the type name. The JSON reader takes it from the
-    * first byte, the value only validated, and replicates the variant
-    * names exactly, including the narrowest-int-encoding names and
-    * big-int → decimal(38,0). */
+  /** `variant_typeof`: the type name. The JSON reader names a
+    * container from its first byte, the value only validated, and a
+    * scalar by `typeName` of its [[JsonFused.scalar]] encoding. */
   case object TypeOf extends AtPath("variant_typeof", "json_typeof_fused", StringType) {
     def at(meta: MetadataView, v: VariantView): Any =
       if (v == null) null else UTF8String.fromString(v.typeName)
-    override def read(c: L.Cursor, depth: Int): Any = UTF8String.fromString((c.peek & 0xff) match {
-      case 'n' => L.literal(c, "null"); "null"
-      case '{' => L.skipValue(c, depth); "object"
-      case '[' => L.skipValue(c, depth); "array"
-      case '"' => c.i += 1; L.skipString(c); "string"
-      case 't' => L.literal(c, "true"); "boolean"
-      case 'f' => L.literal(c, "false"); "boolean"
-      case x if x == '-' || (x >= '0' && x <= '9') =>
-        val start = c.i
-        if (!L.scanNumber(c)) "double"
-        else if (L.integer(c, start) != null) "decimal(38,0)"
-        else {
-          val v = c.longValue
-          // names of the narrowest-int encodings the writer picks
-          if (v >= Byte.MinValue && v <= Byte.MaxValue) "tinyint"
-          else if (v >= Short.MinValue && v <= Short.MaxValue) "smallint"
-          else if (v >= Int.MinValue && v <= Int.MaxValue) "int"
-          else "bigint"
-        }
-      case _ => throw L.Miss
-    })
+    override def read(c: L.Cursor, depth: Int): Any = (c.peek & 0xff) match {
+      case '{' => L.skipValue(c, depth); UTF8String.fromString("object")
+      case '[' => L.skipValue(c, depth); UTF8String.fromString("array")
+      case _ => at(JsonFused.NoKeys, JsonFused.scalar(c))
+    }
   }
 
   /** `schema_of_variant`: the rendered schema lattice of the value; the
@@ -280,7 +263,10 @@ object JsonConsumer {
 
   /** `variant_get` (strict casts) or `try_variant_get`: the value at the
     * path cast to `targetType`. A variant target reads the value itself;
-    * a [[fusableTarget]] also casts straight off the JSON bytes. */
+    * a [[fusableTarget]] also casts off the JSON bytes, through the same
+    * `VariantExtract.cast`: a scalar as its [[JsonFused.scalar]]
+    * encoding, an object or array as the codec's encoding of its slice,
+    * each consumed fully before a cast error is raised. */
   final case class Cast(targetType: DataType, castFailOnError: Boolean)
       extends AtPath(if (castFailOnError) "variant_get" else "try_variant_get",
         "json_path_extract", targetType) {
@@ -288,128 +274,16 @@ object JsonConsumer {
       VariantExtract.cast(meta, v, targetType, castFailOnError)
     override def fusable: Boolean = fusableTarget(targetType)
 
-    override def read(c: L.Cursor, depth: Int): Any =
-      try castValue(c, depth)
-      catch { case e: Exception if (e ne L.Miss) && !castFailOnError => null }
-
-    /** Cast the JSON value at the cursor to `targetType`, consuming it
-      * FULLY before any cast-class error is thrown (so the walk can
-      * always validate the document remainder). Cast rules mirror
-      * `VariantExtract.cast` on the value the unfused parse would encode.
-      */
-    private def castValue(c: L.Cursor, depth: Int): Any = {
-      val b = c.b
-      (c.peek & 0xff) match {
-        case 'n' => L.literal(c, "null"); null
-        case 't' | 'f' =>
-          val v = (c.peek & 0xff) == 't'
-          L.literal(c, if (v) "true" else "false")
-          targetType match {
-            case BooleanType => v
-            case LongType => if (v) 1L else 0L
-            case IntegerType => if (v) 1 else 0
-            case _: StringType => UTF8String.fromString(if (v) "true" else "false")
-            case _ => mismatch("boolean")
-          }
-        case '"' =>
-          c.i += 1
-          val close = L.scanSimpleString(c)
-          if (close >= 0) {
-            val off = c.i
-            val len = close - c.i
-            c.i = close + 1
-            targetType match {
-              case _: StringType => UTF8String.fromBytes(b, off, len)
-              case _ => castStringTo(new String(b, off, len,
-                java.nio.charset.StandardCharsets.UTF_8))
-            }
-          } else {
-            val scratch = new graft.variant.ByteBuf(32)
-            L.unescapeString(c, scratch)
-            targetType match {
-              case _: StringType =>
-                UTF8String.fromBytes(scratch.result(), 0, scratch.length)
-              case _ => castStringTo(new String(scratch.rawBytes, 0, scratch.length,
-                java.nio.charset.StandardCharsets.UTF_8))
-            }
-          }
-        case '{' | '[' =>
-          val start = c.i
-          L.skipValue(c, depth) // consume BEFORE the cast error
-          targetType match {
-            // canonical compact JSON, as the unfused asString prints it:
-            // encode the slice with the same codec and print it back
-            case _: StringType =>
-              val (m, v) =
-                try VariantJsonCodec.fromJsonBytes(b, start, c.i - start)
-                catch { case _: Exception => throw L.Miss }
-              UTF8String.fromString(VariantJsonCodec.toJsonString(m, v))
-            case _ => mismatch(if (b(start) == '{') "object" else "array")
-          }
-        case x if x == '-' || (x >= '0' && x <= '9') =>
-          val start = c.i
-          if (L.scanNumber(c)) {
-            val big = L.integer(c, start)
-            if (big == null) {
-              val v = c.longValue
-              targetType match {
-                case LongType => v
-                case IntegerType => Math.toIntExact(v)
-                case DoubleType => v.toDouble
-                case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(v), d)
-                case _: StringType => UTF8String.fromString(java.lang.Long.toString(v))
-                case _ => mismatch("bigint")
-              }
-            } else {
-              // a scale-0 decimal beyond 63 bits, as the unfused parse stores it
-              val bd = new java.math.BigDecimal(big)
-              targetType match {
-                case LongType => bd.longValueExact() // always throws, like the unfused cast
-                case IntegerType => Math.toIntExact(bd.longValueExact())
-                case DoubleType => bd.doubleValue()
-                case d: DecimalType => toDecimal(bd, d)
-                case _: StringType => UTF8String.fromString(big.toString)
-                case _ => mismatch("bigint")
-              }
-            }
-          } else {
-            val dv = java.lang.Double.parseDouble(new String(b, start, c.i - start,
-              java.nio.charset.StandardCharsets.US_ASCII))
-            targetType match {
-              case DoubleType => dv
-              // truncate-toward-zero, matching VariantExtract.cast;
-              // out-of-range/NaN throws instead of saturating (builtin
-              // parity — lenient mode maps the throw to NULL)
-              case LongType => VariantExtract.doubleToLongExact(dv)
-              case IntegerType => Math.toIntExact(VariantExtract.doubleToLongExact(dv))
-              case d: DecimalType => toDecimal(java.math.BigDecimal.valueOf(dv), d)
-              case _: StringType => UTF8String.fromString(java.lang.Double.toString(dv))
-              case _ => mismatch("double")
-            }
-          }
-        case _ => throw L.Miss
-      }
+    override def read(c: L.Cursor, depth: Int): Any = (c.peek & 0xff) match {
+      case '{' | '[' =>
+        val start = c.i
+        L.skipValue(c, depth)
+        val (m, v) =
+          try VariantJsonCodec.fromJsonBytes(c.b, start, c.i - start)
+          catch { case _: Exception => throw L.Miss }
+        at(new MetadataView(m, 0), new VariantView(v, 0))
+      case _ => at(JsonFused.NoKeys, JsonFused.scalar(c))
     }
-
-    /** A JSON string cast to a non-string target, as `VariantExtract.cast`
-      * casts a string variant. */
-    private def castStringTo(s: String): Any = targetType match {
-      case LongType => s.trim.toLong
-      case IntegerType => Math.toIntExact(s.trim.toLong)
-      case DoubleType => s.trim.toDouble
-      case BooleanType => s.trim.toBoolean
-      case d: DecimalType => toDecimal(new java.math.BigDecimal(s.trim), d)
-      case _ => mismatch("string")
-    }
-
-    private def toDecimal(bd: java.math.BigDecimal, d: DecimalType): Any = {
-      val dec = org.apache.spark.sql.types.Decimal(bd)
-      if (dec.changePrecision(d.precision, d.scale)) dec else mismatch("decimal")
-    }
-
-    private def mismatch(from: String): Any =
-      throw new IllegalArgumentException(
-        s"Cannot cast variant $from to ${targetType.simpleString}")
   }
 }
 

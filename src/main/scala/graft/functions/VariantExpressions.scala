@@ -170,7 +170,9 @@ object VariantExtract {
           else if (v.isDictString) v.getDictKey(meta).trim.toBoolean
           else fail(v, target)
         case _: StringType =>
-          UTF8String.fromString(asString(meta, v))
+          // a string's payload as stored: no decode and re-encode
+          if (v.isString) UTF8String.fromBytes(v.getStringBytes)
+          else UTF8String.fromString(asString(meta, v))
         case d: DecimalType =>
           val bd =
             if (v.isDecimal) v.getDecimal

@@ -294,49 +294,23 @@ object VariantMergePatch {
         if (pair == null) null else decode(pair._1, pair._2)
     }
 
-  /** The JSON value at the cursor as a tree, with the codec's coercions:
-    * 63-bit ints → long, below 2^127 → decimal scale 0 (`integer` misses
-    * at 2^127, the codec's error), other numbers → double; a duplicate
-    * key keeps the last value at the first position, as decode() does. */
-  private def jsonTree(c: FastJsonLex.Cursor, depth: Int): VNode = {
-    import graft.variant.{FastJsonLex => L}
-    import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
-    val b = c.b
-    (c.peek & 0xff) match {
-      case 'n' => L.literal(c, "null"); VNull
-      case 't' => L.literal(c, "true"); VBool(true)
-      case 'f' => L.literal(c, "false"); VBool(false)
-      case '"' =>
-        c.i += 1
-        val close = L.scanSimpleString(c)
-        if (close >= 0) {
-          val s = new String(b, c.i, close - c.i, UTF_8)
-          c.i = close + 1
-          VStr(s)
-        } else {
-          val scratch = new ByteBuf(32)
-          L.unescapeString(c, scratch)
-          VStr(new String(scratch.rawBytes, 0, scratch.length, UTF_8))
-        }
-      case '[' =>
-        val out = Vector.newBuilder[VNode]
-        L.members(c, depth, (_, _, _) => { out += jsonTree(c, depth + 1); false })
-        VArr(out.result())
-      case '{' =>
-        val out = new scala.collection.mutable.LinkedHashMap[String, VNode]
-        L.members(c, depth, (_, off, len) => {
-          out.put(new String(b, off, len, UTF_8), jsonTree(c, depth + 1))
-          false
-        })
-        VObj(out)
-      case x if x == '-' || (x >= '0' && x <= '9') =>
-        val start = c.i
-        if (L.scanNumber(c)) {
-          val big = L.integer(c, start)
-          if (big == null) VLong(c.longValue) else VDecimal(big, 0)
-        } else VDouble(java.lang.Double.parseDouble(new String(b, start, c.i - start, US_ASCII)))
-      case _ => throw L.Miss
-    }
+  /** The JSON value at the cursor as a tree: containers walked here (a
+    * duplicate key keeps the last value at the first position, as
+    * decode() does), every scalar decoded from its
+    * [[JsonFused.scalar]] encoding, so the codec's coercions hold. */
+  private def jsonTree(c: FastJsonLex.Cursor, depth: Int): VNode = (c.peek & 0xff) match {
+    case '[' =>
+      val out = Vector.newBuilder[VNode]
+      FastJsonLex.members(c, depth, (_, _, _) => { out += jsonTree(c, depth + 1); false })
+      VArr(out.result())
+    case '{' =>
+      val out = new scala.collection.mutable.LinkedHashMap[String, VNode]
+      FastJsonLex.members(c, depth, (_, off, len) => {
+        out.put(new String(c.b, off, len, java.nio.charset.StandardCharsets.UTF_8), jsonTree(c, depth + 1))
+        false
+      })
+      VObj(out)
+    case _ => decodeValue(JsonFused.scalar(c), JsonFused.NoKeys)
   }
 
   private def decodeValue(v: VariantView, meta: MetadataView): VNode = {

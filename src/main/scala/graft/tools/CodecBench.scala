@@ -1,12 +1,18 @@
 package graft.tools
 
+import graft.functions.{JsonConsumer, JsonPathExtract}
+import graft.functions.JsonConsumer.{Cast => Get}
 import graft.variant.VariantJsonCodec
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType}
 
 /** Single-thread JSON→variant encode, no Spark session: ns/doc (median
   * and min of 7 passes after 5 warm-up) and allocated bytes/doc
   * (`ThreadMXBean.getThreadAllocatedBytes`) of `fromJsonBytes`, next to
   * Spark 4.1's `VariantBuilder.parseJson` (its figures include the UTF-8
-  * decode to `String`), on two doc sets of [[docs]].
+  * decode to `String`), on two doc sets of [[docs]]; then the fused
+  * `try_variant_get(try_variant_from_json(s), path)` of raw_query
+  * (`JsonPathExtract`, one byte walk per doc) on the shuffled-keys set.
   * Run: sbt "runMain graft.tools.CodecBench [docs]"
   */
 object CodecBench {
@@ -54,10 +60,20 @@ object CodecBench {
       val alloc = (allocated - a0).toDouble / docs.length
       println(f"[codec] $label%-40s median ${ns(3)}%6.0f ns/doc  min ${ns(0)}%6.0f ns/doc  $alloc%5.0f B/doc")
     }
-    for ((set, ds) <- Seq("runs of one shape" -> docs(n, runs = true), "shuffled keys" -> docs(n, runs = false))) {
+    val shuffled = docs(n, runs = false)
+    for ((set, ds) <- Seq("runs of one shape" -> docs(n, runs = true), "shuffled keys" -> shuffled)) {
       bench(s"graft fromJsonBytes, $set", ds)(d => VariantJsonCodec.fromJsonBytes(d, 0, d.length)._2.length)
       bench(s"spark parseJson, $set", ds)(d => org.apache.spark.types.variant.VariantBuilder
         .parseJson(new String(d, java.nio.charset.StandardCharsets.UTF_8), false).getValue.length)
+    }
+    val row = new GenericInternalRow(1)
+    for ((path, read) <- Seq("$.grp" -> Get(StringType, false), "$.amt" -> Get(DoubleType, false),
+        "$.n.x" -> Get(LongType, false), "$.n" -> JsonConsumer.TypeOf)) {
+      val fused = JsonPathExtract(BoundReference(0, BinaryType, nullable = true), path, read, parseFailOnError = false)
+      bench(s"fused ${read.dataType.simpleString} ${read.fusedName} $path, shuffled keys", shuffled) { d =>
+        row.update(0, d)
+        fused.eval(row).hashCode
+      }
     }
     println(s"[codec] blackhole $blackhole")
   }

@@ -36,6 +36,7 @@ final class VariantEncoder private () {
   private var nTape = 0
   private var innermost = -1 // the open container; its END links to the next one out
   private var kids = new Array[Int](64) // containers' children, in field order
+  private var packed = new Array[Long](64) // an object's (id, entry) pairs while they sort
   private var nKids = 0
   private var mark = 0 // scalars before this position are on the tape
   private var pendingKey = -1
@@ -83,7 +84,8 @@ final class VariantEncoder private () {
   /** Bytes the buffers and arenas hold between rows. */
   private[variant] def retainedBytes: Long =
     scalars.rawBytes.length.toLong + keyBytes.length + prevBytes.length +
-      4L * (keyOff.length + order.length + rank.length + prevOff.length + tape.length + kids.length)
+      4L * (keyOff.length + order.length + rank.length + prevOff.length + tape.length + kids.length) +
+      8L * packed.length
 
   private def reset(): VariantEncoder = {
     scalars.reset()
@@ -208,19 +210,30 @@ final class VariantEncoder private () {
     var c = e + 1
     while (c < tape(t + END)) {
       kids = grow(kids, nKids + 1)
-      var j = nKids
-      if (isObject(e)) while (j > first && idOf(kids(j - 1)) > idOf(c)) { kids(j) = kids(j - 1); j -= 1 }
-      kids(j) = c
+      kids(nKids) = c
       nKids += 1
       c = tape(E * c + END)
     }
     val n = nKids - first
+    if (isObject(e)) sortById(first, n)
     var data = 0
     var k = first
     while (k < first + n) { data += measure(kids(k)); k += 1 }
     tape(t + FIRST) = first; tape(t + COUNT) = n; tape(t + DATA) = data
     tape(t + SIZE) = 1 + (if (n > 255) 4 else 1) + n * idWidth(e, first, n) + (n + 1) * offWidth(e) + data
     tape(t + SIZE)
+  }
+
+  /** Sort fields kids(first until first + n) by id in one library sort
+    * of packed (id, entry) longs: entries ascend in arrival order, so
+    * duplicate keys keep it. */
+  private def sortById(first: Int, n: Int): Unit = {
+    if (packed.length < n) packed = new Array[Long](math.max(n, 2 * packed.length))
+    var k = 0
+    while (k < n) { val c = kids(first + k); packed(k) = idOf(c).toLong << 32 | c; k += 1 }
+    java.util.Arrays.sort(packed, 0, n)
+    k = 0
+    while (k < n) { kids(first + k) = packed(k).toInt; k += 1 }
   }
 
   private def emit(e: Int, out: Array[Byte], at: Int): Unit = {

@@ -5,6 +5,9 @@ package graft.variant
   * over `variant_from_json` (`JsonFused.walk`: navigate a path, hand the
   * value to one consumer of `JsonPathExtract`'s table — cast, keys,
   * size, typeof or schema — then close out and validate the rest).
+  * [[scalar]] is the one rule for how a JSON scalar becomes a variant
+  * scalar: the encode writes it into the row, the fused consumers into
+  * a scratch buffer that the variant reader then reads.
   * Everything here follows one contract: accept a strict SUBSET of what
   * Jackson's default feature set accepts, and throw the stackless
   * [[FastJsonLex.Miss]] on ANYTHING doubtful — the caller then re-runs
@@ -89,7 +92,7 @@ private[graft] object FastJsonLex {
   /** Unescape a string body (cursor AFTER the opening quote) into
     * `scratch` as UTF-8; leaves the cursor AFTER the closing quote.
     * Lone surrogates miss (Jackson's lenient substitution owns them). */
-  def unescapeString(c: Cursor, scratch: ByteBuf): Unit = {
+  private def unescapeString(c: Cursor, scratch: ByteBuf): Unit = {
     val b = c.b
     val start0 = c.i
     var run = c.i
@@ -250,6 +253,38 @@ private[graft] object FastJsonLex {
     }
   }
 
+  /** Write the JSON scalar at the cursor to `out` as a variant scalar,
+    * with the reference's coercions (json.rs:202-246): an escape-free
+    * string as a copy of its bytes, an integer by [[integer]]'s rule (a
+    * long, else Decimal16 scale 0; 2^127 and beyond miss), any other
+    * number as a double parsed exactly as Jackson does. A container
+    * misses. */
+  def scalar(c: Cursor, out: ByteBuf): Unit = (c.peek & 0xff) match {
+    case 'n' => literal(c, "null"); VariantWriter.writeNull(out)
+    case 't' => literal(c, "true"); VariantWriter.writeBoolean(out, true)
+    case 'f' => literal(c, "false"); VariantWriter.writeBoolean(out, false)
+    case '"' =>
+      c.i += 1
+      val close = scanSimpleString(c)
+      if (close >= 0) {
+        VariantWriter.writeStringSlice(out, c.b, c.i, close - c.i)
+        c.i = close + 1
+      } else {
+        val text = new ByteBuf(32)
+        unescapeString(c, text)
+        VariantWriter.writeStringSlice(out, text.rawBytes, 0, text.length)
+      }
+    case x if x == '-' || (x >= '0' && x <= '9') =>
+      val start = c.i
+      if (scanNumber(c)) {
+        val big = integer(c, start)
+        if (big == null) VariantWriter.writeLong(out, c.longValue)
+        else VariantWriter.writeDecimal(out, big, 0)
+      } else VariantWriter.writeDouble(out, java.lang.Double.parseDouble(
+        new String(c.b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII)))
+    case _ => throw Miss
+  }
+
   def literal(c: Cursor, lit: String): Unit = {
     if (c.i + lit.length > c.end) throw Miss
     var k = 0
@@ -341,10 +376,6 @@ private[graft] object FastJsonLex {
     if (c.i - 1 - start0 > MAX_NAME_LEN) throw Miss
   }
 
-  /** Key-length gate for callers that scan keys with [[scanSimpleString]]
-    * (escape-free, so byte length == char length exactly). */
-  @inline def checkName(len: Int): Unit = if (len > MAX_NAME_LEN) throw Miss
-
   /** Nesting bound mirroring Jackson's default StreamReadConstraints max
     * depth (1000): deeper rows miss, Jackson's error is the behavior. */
   final val MAX_DEPTH = 1000
@@ -387,7 +418,7 @@ private[graft] object FastJsonLex {
           if (end < 0) throw Miss // escaped key: the unfused plan
           kOff = c.i
           kLen = end - c.i
-          checkName(kLen)
+          if (kLen > MAX_NAME_LEN) throw Miss // escape-free: bytes == chars
           c.i = end + 1
         }
         c.skipWs(); c.expect(':'); c.skipWs()

@@ -121,21 +121,6 @@ object VariantJsonCodec {
     try Right(fastFromJsonBytes(utf8, 0, utf8.length))
     catch { case FastJsonLex.Miss => Left(()) }
 
-  /** One JSON number, with Jackson's integer rule ([[FastJsonLex.integer]]):
-    * a long, else Decimal16 scale 0; ≥ 2^127 misses (Jackson's i128 error). */
-  private def fastNumber(c: FastJsonLex.Cursor, buf: ByteBuf): Unit = {
-    val start = c.i
-    if (FastJsonLex.scanNumber(c)) {
-      val big = FastJsonLex.integer(c, start)
-      if (big == null) VariantWriter.writeLong(buf, c.longValue)
-      else VariantWriter.writeDecimal(buf, big, 0)
-    } else {
-      // IEEE-correct, identical to Jackson's double conversion
-      VariantWriter.writeDouble(buf, java.lang.Double.parseDouble(
-        new String(c.b, start, c.i - start, java.nio.charset.StandardCharsets.US_ASCII)))
-    }
-  }
-
   /** Byte-path entry. Throws FastJsonLex.Miss to route the row to the
     * Jackson walk. */
   private def fastFromJsonBytes(b: Array[Byte], off: Int, end: Int): (Array[Byte], Array[Byte]) = {
@@ -165,32 +150,14 @@ object VariantJsonCodec {
       false
     }
 
-    def value(): Unit = {
-      val buf = enc.buf
-      (c.peek & 0xff) match {
-        case 'n' => FastJsonLex.literal(c, "null"); VariantWriter.writeNull(buf)
-        case 't' => FastJsonLex.literal(c, "true"); VariantWriter.writeBoolean(buf, true)
-        case 'f' => FastJsonLex.literal(c, "false"); VariantWriter.writeBoolean(buf, false)
-        case '"' =>
-          c.i += 1
-          val close = FastJsonLex.scanSimpleString(c)
-          if (close >= 0) {
-            VariantWriter.writeStringSlice(buf, c.b, c.i, close - c.i)
-            c.i = close + 1
-          } else {
-            val text = new ByteBuf(32)
-            FastJsonLex.unescapeString(c, text)
-            VariantWriter.writeStringSlice(buf, text.rawBytes, 0, text.length)
-          }
-        case x if x == '[' || x == '{' =>
-          if (x == '{') enc.beginObject() else enc.beginArray()
-          depth += 1
-          FastJsonLex.members(c, depth - 1, this)
-          depth -= 1
-          if (x == '{') enc.endObject() else enc.endArray()
-        case x if x == '-' || (x >= '0' && x <= '9') => fastNumber(c, buf)
-        case _ => throw FastJsonLex.Miss
-      }
+    def value(): Unit = (c.peek & 0xff) match {
+      case x if x == '[' || x == '{' =>
+        if (x == '{') enc.beginObject() else enc.beginArray()
+        depth += 1
+        FastJsonLex.members(c, depth - 1, this)
+        depth -= 1
+        if (x == '{') enc.endObject() else enc.endArray()
+      case _ => FastJsonLex.scalar(c, enc.buf)
     }
   }
 

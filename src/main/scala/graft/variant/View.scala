@@ -84,13 +84,19 @@ final class VariantView(val bytes: Array[Byte], val pos: Int) {
     new java.math.BigDecimal(unscaled, scale)
   }
 
-  def getString: String = {
-    if (basicType == BASIC_SHORT_STR) new String(bytes, pos + 1, typeInfo, UTF_8)
-    else if (typeInfo == P_LONG_STR) {
-      val len = ByteUtil.readUnsignedLE(bytes, pos + 1, 4).toInt
-      new String(bytes, pos + 5, len, UTF_8)
-    } else throw new IllegalStateException(s"not a string (type id $typeInfo)")
-  }
+  def getString: String = new String(bytes, stringStart, stringLength, UTF_8)
+
+  /** The string's UTF-8 payload, copied out as stored (no decode). */
+  def getStringBytes: Array[Byte] =
+    java.util.Arrays.copyOfRange(bytes, stringStart, stringStart + stringLength)
+
+  private def stringStart: Int =
+    if (basicType == BASIC_SHORT_STR) pos + 1
+    else if (typeInfo == P_LONG_STR) pos + 5
+    else throw new IllegalStateException(s"not a string (type id $typeInfo)")
+
+  private def stringLength: Int =
+    if (basicType == BASIC_SHORT_STR) typeInfo else ByteUtil.readUnsignedLE(bytes, pos + 1, 4).toInt
 
   def getBinary: Array[Byte] = {
     if (typeInfo != P_BINARY) throw new IllegalStateException(s"not binary (type id $typeInfo)")

@@ -170,7 +170,7 @@ final class VariantObjectBuilder(parent: ByteBuf) {
 
   def finish(): Unit = {
     // Capture each field's extent in insertion order (fields were written
-    // back-to-back into tmp), then sort (id, off, len) by id. Values are
+    // back-to-back into tmp), then order the fields by id. Values are
     // re-emitted in sorted order too: the encoding is CANONICAL — two
     // objects with the same fields produce identical bytes regardless of
     // append order, making raw-binary equality/grouping on variant
@@ -182,38 +182,28 @@ final class VariantObjectBuilder(parent: ByteBuf) {
       lens(i) = (if (i + 1 < n) offsets(i + 1) else tmp.length) - offsets(i)
       i += 1
     }
-    // insertion sort of the triples by id — objects are small
-    i = 1
-    while (i < n) {
-      val id = fieldIds(i); val off = offsets(i); val len = lens(i)
-      var j = i - 1
-      while (j >= 0 && fieldIds(j) > id) {
-        fieldIds(j + 1) = fieldIds(j); offsets(j + 1) = offsets(j)
-        lens(j + 1) = lens(j); j -= 1
-      }
-      fieldIds(j + 1) = id; offsets(j + 1) = off; lens(j + 1) = len
-      i += 1
-    }
-    var maxId = 0
-    i = 0
-    while (i < n) { if (fieldIds(i) > maxId) maxId = fieldIds(i); i += 1 }
-    val idW = ByteUtil.byteWidth(maxId)
+    // field k in id order is byId(k).toInt: one sort of packed (id,
+    // arrival) longs, stable for duplicate ids
+    val byId = Array.tabulate(n)(k => fieldIds(k).toLong << 32 | k)
+    java.util.Arrays.sort(byId)
+    val idW = ByteUtil.byteWidth(if (n == 0) 0L else byId(n - 1) >>> 32)
     val offW = ByteUtil.byteWidth(tmp.length)
     val isLarge = n > 255
     val hdrBits = (if (isLarge) 1 << 4 else 0) | ((idW - 1) << 2) | (offW - 1)
     parent.addByte(VariantConst.header(hdrBits, VariantConst.BASIC_OBJECT))
     parent.addIntLE(n, if (isLarge) 4 else 1)
     i = 0
-    while (i < n) { parent.addIntLE(fieldIds(i), idW); i += 1 }
+    while (i < n) { parent.addIntLE(byId(i) >>> 32, idW); i += 1 }
     var runningOff = 0
     i = 0
     while (i < n) {
-      parent.addIntLE(runningOff, offW); runningOff += lens(i); i += 1
+      parent.addIntLE(runningOff, offW); runningOff += lens(byId(i).toInt); i += 1
     }
     parent.addIntLE(runningOff, offW)
     i = 0
     while (i < n) {
-      parent.addBytes(tmp.rawBytes, offsets(i), lens(i)); i += 1
+      val k = byId(i).toInt
+      parent.addBytes(tmp.rawBytes, offsets(k), lens(k)); i += 1
     }
   }
 }

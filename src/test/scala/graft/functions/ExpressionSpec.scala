@@ -113,6 +113,19 @@ class ExpressionSpec extends AnyFunSuite {
         |""".stripMargin)
     assert(r.getLong(0) == 1L && r.getDouble(1) == 2.5 && r.getString(2) == "x")
     assert(r.getBoolean(3) && r.getLong(4) == 20L && r.isNullAt(5))
+
+    // a long string (over 63 bytes) and a 4-byte UTF-8 character read the
+    // same through the fused get, the unfused reader and Spark's builtin
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val long = "é" * 40 + "x"
+    val json = s"""{"l": "$long", "e": "a😀b", "u": "\\ud83d\\ude00"}"""
+    val get = JsonConsumer.Cast(StringType, castFailOnError = true)
+    for ((path, want) <- Seq("$.l" -> long, "$.e" -> "a😀b", "$.u" -> "😀")) {
+      assert(JsonPathExtract(Literal(json), path, get, parseFailOnError = true).eval(null).toString == want, path)
+      assert(VariantRead(VariantFromJson(Literal(json)), path, get).eval(null).toString == want, path)
+      assert(Seq(json).toDF("j").selectExpr(s"variant_get(parse_json(j), '$path', 'string')")
+        .collect()(0).getString(0) == want, path)
+    }
   }
 
   test("try_variant_get nulls on type mismatch; strict variant_get throws") {

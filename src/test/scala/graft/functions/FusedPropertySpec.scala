@@ -51,8 +51,8 @@ class FusedPropertySpec extends AnyFunSuite {
     }
   }
 
-  private def unfused(json: String, path: String, t: DataType): Any =
-    VariantRead(VariantFromJson(Literal(json)), path, JsonConsumer.Cast(t, castFailOnError = false)).eval(null)
+  private def unfused(json: String, path: String, t: DataType, castFailOnError: Boolean = false): Any =
+    VariantRead(VariantFromJson(Literal(json)), path, JsonConsumer.Cast(t, castFailOnError)).eval(null)
 
   /** A fused consumer at the root path. */
   private def root(c: JsonConsumer, json: Expression, parseFailOnError: Boolean) =
@@ -65,26 +65,38 @@ class FusedPropertySpec extends AnyFunSuite {
       case v => v
     } catch { case e: Exception => e.getClass }
 
-  private def fused(json: String, path: String, t: DataType): Any =
-    JsonPathExtract(Literal(json), path, JsonConsumer.Cast(t, castFailOnError = false),
+  private def fused(json: String, path: String, t: DataType, castFailOnError: Boolean = false): Any =
+    JsonPathExtract(Literal(json), path, JsonConsumer.Cast(t, castFailOnError),
       parseFailOnError = true).eval(null)
 
+  /** A value, or the class and message of the exception evaluation threw. */
+  private def valueOrError(f: => Any): Any =
+    try f catch { case e: Exception => (e.getClass, e.getMessage) }
+
   test("fused extraction equals unfused for every admissible target over random trees") {
+    /** Lenient and strict casts of `path` agree: the same value, or the
+      * same exception class and message. */
+    def check(json: String, path: String, targets: Seq[DataType]): Unit =
+      for (t <- targets; strict <- Seq(false, true)) {
+        val u = valueOrError(unfused(json, path, t, strict))
+        val f = valueOrError(fused(json, path, t, strict))
+        assert(u == f, s"target ${t.simpleString} strict=$strict json=${json.take(80)} unfused=$u fused=$f")
+      }
     val targets = Seq(StringType, LongType, DoubleType, BooleanType,
       IntegerType, DecimalType(38, 6))
     forAllSamples(genNode(3)) { node =>
-      val json = s"""{"x": ${mapper.writeValueAsString(node)}}"""
-      targets.foreach { t =>
-        val u = unfused(json, "$.x", t)
-        val f = fused(json, "$.x", t)
-        assert(u == f, s"target ${t.simpleString} json=$json unfused=$u fused=$f")
-      }
+      check(s"""{"x": ${mapper.writeValueAsString(node)}}""", "$.x", targets)
       // nested path into objects/arrays too
-      val deep = s"""{"a": [{"b": ${mapper.writeValueAsString(node)}}]}"""
-      val u = unfused(deep, "$.a[0].b", StringType)
-      val f = fused(deep, "$.a[0].b", StringType)
-      assert(u == f, s"deep json=$deep unfused=$u fused=$f")
+      check(s"""{"a": [{"b": ${mapper.writeValueAsString(node)}}]}""", "$.a[0].b", Seq(StringType))
     }
+    // the corners of the cast table: narrow and wide ints, an overflowing
+    // double, a 20-digit decimal, strings that parse, pad or overflow,
+    // containers, a long string, escapes and a 4-byte UTF-8 character
+    val corners = Seq("5", "300", "70000", "5000000000", "1e300", "true", "\"abc\"", "\" 12 \"",
+      "[1]", "{\"a\":1}", "99999999999999999999", "\"1e400\"", "\"" + "l" * 70 + "\"", "\"pi\\u00f1a \\ud83d\\ude00\"",
+      "\"😀\"")
+    corners.foreach(v => check(s"""{"x": $v}""", "$.x",
+      Seq(BooleanType, IntegerType, LongType, DoubleType, DecimalType(10, 2), StringType)))
   }
 
   /** Documents at the edges of the byte walks: an escaped key and a

@@ -54,9 +54,9 @@ class NativeDispatchDivergenceSpec extends AnyFunSuite {
   }
 
   private val doc =
-    """{"k": 7, "s": "12", "f": 3.0, "neg": -5, "b": true, "big": 9007199254740993,
+    s"""{"k": 7, "s": "12", "f": 3.0, "neg": -5, "b": true, "big": 9007199254740993,
       |"dec": 1.5, "nul": null, "a": [1, 2, 3], "nested": {"x": {"y": 42}},
-      |"sp ace": 11, "txt": "abc"}""".stripMargin.replace("\n", " ")
+      |"sp ace": 11, "txt": "abc", "long": "${"é" * 40}x", "emo": "a😀b"}""".stripMargin.replace("\n", " ")
 
   test("divergence matrix: cast-on-extract agrees across representations") {
     // string-to-number, number-to-string, widening/narrowing numerics
@@ -77,7 +77,9 @@ class NativeDispatchDivergenceSpec extends AnyFunSuite {
       ("$.big", "string"),
       ("$.dec", "decimal(5,2)"),
       ("$.dec", "double"),
-      ("$.txt", "string")))
+      ("$.txt", "string"),
+      ("$.long", "string"),     // over 63 bytes: a long-string encoding
+      ("$.emo", "string")))     // a 4-byte UTF-8 character
       agree("variant_get", doc, path, tpe)
   }
 

@@ -237,6 +237,8 @@ class JsonCodecSpec extends AnyFunSuite {
       Seq(255, 256).map(n => (0 until n).mkString("[", ", ", "]")) ++
       // children past 32,767 bytes take 4-byte offsets
       Seq(s"""{"a": "${"x" * 40000}", "b": [1, "${"y" * 33000}"]}""",
+        // 20,000 keys in reverse order: every field sorts across the object
+        (0 until 20000).reverse.map(i => f""""k$i%05d": $i""").mkString("{", ", ", "}"),
         // an escaped key: the Jackson walk through the same encoder
         """{"a\"b": 1, "c": {"d\u00e9": [true, {"a\"b": null}]}, "b": 2}""")
     assert(VariantJsonCodec.fastOnlyForTest(boundaries.last.getBytes("UTF-8")).isLeft)
