@@ -59,6 +59,9 @@ object Tables {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    // LocalFs: no forked chmod or readlink per local file
+    .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
     // The generated-code cache defaults to 100 entries — fewer than this
     // library's query set compiles in one process, so any workload that
     // revisits queries (the bench's interleaved passes, a notebook, a

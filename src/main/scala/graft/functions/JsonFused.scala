@@ -53,9 +53,16 @@ private[functions] object JsonFused {
     new VariantView(buf.rawBytes, 0)
   }
 
-  def toBytes(input: Any): Array[Byte] = input match {
-    case s: UTF8String => s.getBytes
-    case b: Array[Byte] => b
+  /** A cursor over a string or binary input's bytes: an on-heap string
+    * is read in place, not copied. */
+  def cursor(input: Any): L.Cursor = input match {
+    case s: UTF8String => s.getBaseObject match {
+      case a: Array[Byte] =>
+        val off = (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt
+        new L.Cursor(a, off, off + s.numBytes)
+      case _ => val b = s.getBytes; new L.Cursor(b, 0, b.length)
+    }
+    case b: Array[Byte] => new L.Cursor(b, 0, b.length)
   }
 
   /** A row the walk declined, evaluated by the unfused plan the fused
@@ -65,10 +72,10 @@ private[functions] object JsonFused {
     * anywhere in the chain is the result, so fused and unfused agree by
     * construction on every such row.
     */
-  def evalUnfused(unfused: Expression, bytes: Array[Byte]): Any = unfused match {
-    case parse: VariantFromJson => parse.evalChildValue(bytes)
+  def evalUnfused(unfused: Expression, input: Any): Any = unfused match {
+    case parse: VariantFromJson => parse.evalChildValue(input)
     case e: UnaryExpression with GraftUnaryCodegen =>
-      val in = evalUnfused(e.child, bytes)
+      val in = evalUnfused(e.child, input)
       if (in == null) null else e.evalChildValue(in)
   }
 
@@ -81,8 +88,7 @@ private[functions] object JsonFused {
     * validates, so parse errors outrank it as in the unfused plan. Miss
     * on anything the lexer declines, empty input and wildcards included.
     */
-  def walk(bytes: Array[Byte], steps: Array[PathStep], read: (L.Cursor, Int) => Any): Any = {
-    val c = new L.Cursor(bytes, 0, bytes.length)
+  def walk(c: L.Cursor, steps: Array[PathStep], read: (L.Cursor, Int) => Any): Any = {
     c.skipWs()
     val isObj = new Array[Boolean](steps.length) // the containers opened
     var nOpen = 0
@@ -194,7 +200,7 @@ case class SchemaOfJsonAgg(
     val in = child.eval(input)
     if (in == null) return buffer
     try {
-      JsonFused.walk(JsonFused.toBytes(in), Array.empty, JsonFused.fastInferSchema) match {
+      JsonFused.walk(JsonFused.cursor(in), Array.empty, JsonFused.fastInferSchema) match {
         case null => buffer
         case t: SchemaInfer.SType => SchemaInfer.merge(buffer, t)
       }

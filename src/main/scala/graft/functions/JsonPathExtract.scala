@@ -49,30 +49,19 @@ case class JsonPathExtract(
   @transient private lazy val memoKey = (path, consumer, parseFailOnError)
 
   override def nullSafeEval(input: Any): Any = {
-    val bytes = JsonFused.toBytes(input)
+    val c = JsonFused.cursor(input)
+    val off = c.i
+    val n = c.end - off
     // Same pushdown-duplication story as VariantFromJson.lastParse: the
     // Filter and Project copies of this expression evaluate back-to-back
     // on the same thread per row, so a thread-local last-input memo
     // halves the parse work (SURVEY §4.2).
     val memo = JsonPathExtract.lastExtract.get()
-    if (memo(0) != null && memo(1) == memoKey) {
-      val prev = memo(0).asInstanceOf[Array[Byte]]
-      // Reference identity first (free), content equality second. Both
-      // producer paths hand us an array nobody mutates afterwards —
-      // UTF8String.getBytes / UnsafeRow.getBinary copy out of row
-      // buffers, and the no-copy UTF8String case aliases the string's
-      // own immutable backing array — so no stale-alias hazard.
-      if ((prev eq bytes) || java.util.Arrays.equals(prev, bytes)) {
-        val r = memo(2)
-        return if (r eq JsonPathExtract.NULL_RESULT) null else r
-      }
-    }
+    if (memo.holds(memoKey, c.b, off, n)) return memo.result
     val result =
-      try JsonFused.walk(bytes, steps, read)
-      catch { case L.Miss => JsonFused.evalUnfused(unfused, bytes) }
-    memo(0) = bytes // stored by reference: see immutability note above
-    memo(1) = memoKey
-    memo(2) = if (result == null) JsonPathExtract.NULL_RESULT else result.asInstanceOf[AnyRef]
+      try JsonFused.walk(c, steps, read)
+      catch { case L.Miss => JsonFused.evalUnfused(unfused, input) }
+    memo.keep(memoKey, c.b, off, n, result)
     result
   }
 
@@ -88,15 +77,11 @@ case class JsonPathExtract(
 }
 
 object JsonPathExtract {
-  /** Sentinel distinguishing "memoized null result" from "no memo". */
-  private val NULL_RESULT = new Object
-
-  /** Thread-local (input bytes, memo key, result) of the last evaluation —
-    * shared across expression INSTANCES because pushdown duplicates the
-    * same extraction into Filter and Project as separate copies.
+  /** The last evaluation on this thread — shared across expression
+    * INSTANCES because pushdown duplicates the same extraction into
+    * Filter and Project as separate copies.
     */
-  private val lastExtract: ThreadLocal[Array[AnyRef]] =
-    ThreadLocal.withInitial(() => new Array[AnyRef](3))
+  private val lastExtract: ThreadLocal[LastInput] = ThreadLocal.withInitial(() => new LastInput)
 }
 
 /** One row per variant reader: what [[VariantRead]] does with the

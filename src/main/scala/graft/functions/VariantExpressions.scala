@@ -55,19 +55,20 @@ case class VariantFromJson(child: Expression, failOnError: Boolean = true)
       s"Input data type not supported in variant_from_json: ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = input match {
-    case s: UTF8String => s.getBaseObject match { // on-heap: read in place
-      case a: Array[Byte] =>
-        parse(a, (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
-      case _ => val b = s.getBytes; parse(b, 0, b.length)
+  override def nullSafeEval(input: Any): Any = {
+    val c = JsonFused.cursor(input)
+    val memo = VariantFromJson.lastParse.get()
+    val pair =
+      if (memo.holds(null, c.b, c.i, c.end - c.i)) memo.result
+      else try { // a throw keeps the old memo
+        val parsed = VariantJsonCodec.fromJsonBytes(c.b, c.i, c.end - c.i)
+        memo.keep(null, c.b, c.i, c.end - c.i, parsed)
+        parsed
+      } catch { case _: Exception if !failOnError => return null }
+    pair match {
+      case (m, v) => new GenericInternalRow(Array[Any](m, v))
+      case _ => null
     }
-    case b: Array[Byte] => parse(b, 0, b.length)
-  }
-
-  private def parse(bytes: Array[Byte], off: Int, len: Int): Any = {
-    val pair = try VariantFromJson.lastParse.get().parse(bytes, off, len)
-    catch { case _: Exception if !failOnError => return null }
-    if (pair == null) null else new GenericInternalRow(Array[Any](pair._1, pair._2))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -83,32 +84,36 @@ object VariantFromJson {
     * last-input memo collapses the duplicate work. Also de-dupes
     * repeated identical JSON payloads across adjacent rows.
     */
-  private[functions] val lastParse: ThreadLocal[Memo] = ThreadLocal.withInitial(() => new Memo)
+  private[functions] val lastParse: ThreadLocal[LastInput] = ThreadLocal.withInitial(() => new LastInput)
+}
 
-  /** The last parsed input, copied into one reused buffer (the caller's
-    * array may be rewritten in place), and its result. An input over
-    * [[VariantEncoder.MaxKept]] bytes is not kept: the memo forgets it
-    * and its result, so a huge row does not stay resident per thread. */
-  private[functions] final class Memo {
-    private var input = new Array[Byte](256)
-    private var len = -1 // nothing kept
-    private var pair: (Array[Byte], Array[Byte]) = null
-    def parse(b: Array[Byte], off: Int, n: Int): (Array[Byte], Array[Byte]) = {
-      if (n == len && java.util.Arrays.equals(input, 0, n, b, off, off + n)) return pair
-      val parsed = VariantJsonCodec.fromJsonBytes(b, off, n) // a throw keeps the old memo
-      if (n > VariantEncoder.MaxKept) { len = -1; pair = null }
-      else {
-        if (n > input.length) input = new Array[Byte](math.max(n, math.min(2 * input.length, VariantEncoder.MaxKept)))
-        System.arraycopy(b, off, input, 0, n)
-        len = n; pair = parsed
-      }
-      parsed
+/** A thread-local memo of the last input: a copy of it in one reused
+  * buffer (the caller's array may be a row buffer rewritten in place),
+  * the key it was read under and the result. An input over
+  * [[VariantEncoder.MaxKept]] bytes is not kept (the memo forgets what it
+  * held), so a huge row does not stay resident per thread. */
+private[functions] final class LastInput {
+  private var input = new Array[Byte](256)
+  private var len = -1 // nothing kept
+  private var key: AnyRef = null
+  var result: Any = null
+
+  def holds(key: AnyRef, b: Array[Byte], off: Int, n: Int): Boolean =
+    n == len && key == this.key && java.util.Arrays.equals(input, 0, n, b, off, off + n)
+
+  def keep(key: AnyRef, b: Array[Byte], off: Int, n: Int, result: Any): Unit =
+    if (n > VariantEncoder.MaxKept) { len = -1; this.result = null }
+    else {
+      if (n > input.length) input = new Array[Byte](math.max(n, math.min(2 * input.length, VariantEncoder.MaxKept)))
+      System.arraycopy(b, off, input, 0, n)
+      len = n; this.key = key; this.result = result
     }
 
-    /** Bytes the memo holds between rows. */
-    private[functions] def keptBytes: Long =
-      input.length.toLong + (if (pair == null) 0 else pair._1.length + pair._2.length)
-  }
+  /** Bytes held between rows, a parse's `(metadata, value)` included. */
+  private[functions] def keptBytes: Long = input.length + (result match {
+    case (m: Array[Byte], v: Array[Byte]) => m.length + v.length
+    case _ => 0
+  })
 }
 
 /** Shared eval helpers for variant extraction expressions. */

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.variant._
 
 /** One structural edit of a variant value tree — `variant_merge_patch`,
@@ -204,9 +205,9 @@ object VariantEdit {
       * mapping: a failed parse throws, or is SQL NULL under `try_`. */
     final case class Json(failOnError: Boolean) extends Side("string/binary") {
       def accepts(dt: DataType): Boolean = dt == StringType || dt == BinaryType
-      def parts(in: Any): Array[AnyRef] = Array(JsonFused.toBytes(in))
+      def parts(in: Any): Array[AnyRef] = Array(in.asInstanceOf[AnyRef])
       def read(p: Array[AnyRef]): AnyRef =
-        try docToVNode(p(0).asInstanceOf[Array[Byte]])
+        try docToVNode(p(0))
         catch { case _: Exception if !failOnError => null }
     }
 
@@ -237,10 +238,12 @@ object VariantEdit {
   private val lastEdit: ThreadLocal[Array[AnyRef]] =
     ThreadLocal.withInitial(() => new Array[AnyRef](2))
 
-  /** A kept copy of a memo key: the bytes of struct rows and JSON
-    * strings can be reused buffers; strings and modes are immutable. */
+  /** A kept copy of a memo key: struct rows' bytes and JSON operands
+    * (read in place) can be reused buffers; key names and modes are
+    * immutable. */
   private def snapshot(key: Array[AnyRef]): Array[AnyRef] = key.map {
     case b: Array[Byte] => b.clone()
+    case s: UTF8String => s.clone()
     case parts: Array[AnyRef] => snapshot(parts)
     case x => x
   }
@@ -277,7 +280,7 @@ object VariantMergePatch {
     decodeValue(new VariantView(valueBytes, 0), meta)
   }
 
-  /** Parse a whole JSON document straight into the value tree — the
+  /** Parse a whole JSON document (string or binary) straight into the value tree — the
     * fused path's replacement for parse→encode→decode. Returns Scala
     * null for a top-level JSON `null` (the SQL-null rule, JsonCodec
     * fromJsonBytes). The one fused walk ([[JsonFused.walk]] at the root,
@@ -286,13 +289,16 @@ object VariantMergePatch {
     * parse, decoded — so every error, and the tree of every row the walk
     * declines, is exactly the unfused pipeline's.
     */
-  def docToVNode(utf8: Array[Byte]): VNode =
-    try JsonFused.walk(utf8, Array.empty, jsonTree).asInstanceOf[VNode]
+  def docToVNode(input: Any): VNode = {
+    val c = JsonFused.cursor(input)
+    val off = c.i
+    try JsonFused.walk(c, Array.empty, jsonTree).asInstanceOf[VNode]
     catch {
       case FastJsonLex.Miss =>
-        val pair = VariantJsonCodec.fromJsonBytes(utf8, 0, utf8.length)
+        val pair = VariantJsonCodec.fromJsonBytes(c.b, off, c.end - off)
         if (pair == null) null else decode(pair._1, pair._2)
     }
+  }
 
   /** The JSON value at the cursor as a tree: containers walked here (a
     * duplicate key keeps the last value at the first position, as

@@ -119,7 +119,7 @@ class FusedPropertySpec extends AnyFunSuite {
     var misses = 0
     def check(json: String): Unit =
       try {
-        val f = JsonFused.walk(json.getBytes("UTF-8"), Array.empty, JsonFused.fastInferSchema)
+        val f = JsonFused.walk(JsonFused.cursor(json.getBytes("UTF-8")), Array.empty, JsonFused.fastInferSchema)
           .asInstanceOf[SchemaInfer.SType]
         val enc = VariantFromJson(Literal(json)).eval(null)
         if (enc == null) {
