@@ -1521,14 +1521,14 @@ object Queries {
              |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // Bloom-filter semi-join reduction: the build side's KEY SIGNATURE
-    // (a 128 KiB bitset here; a few MB at 100 TB) is aggregated with a
-    // mergeable bloom_agg — partial aggregation ORs per-partition
-    // bitsets, so building it never shuffles rows — then broadcast to
-    // prune the probe side BEFORE the join shuffle. No false negatives,
-    // so pruned-join ≡ exact join (the oracle is the plain join); false
-    // positives only ride along until the exact join drops them. At
-    // 100 TB this is the difference between shuffling the full probe
-    // table and shuffling the ~matching fraction of it.
+    // (a 128 KiB bitset here; a few MB at 100 TB) is aggregated with
+    // Spark's mergeable Bloom filter aggregate — partial aggregation
+    // ORs per-partition bitsets, so building it never shuffles rows —
+    // then broadcast to prune the probe side BEFORE the join shuffle.
+    // No false negatives, so pruned-join ≡ exact join (the oracle is the
+    // plain join); false positives only ride along until the exact join
+    // drops them. At 100 TB this is the difference between shuffling
+    // the full probe table and shuffling the ~matching fraction of it.
     QueryDef("q_bloom_join",
       (s, d) => {
         val sel = orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
@@ -1537,7 +1537,8 @@ object Queries {
         // re-materialize (copy) it out of the joined row for every
         // probe row, which at 600k rows is gigabytes of memcpy for a
         // constant. Same scalar-fetch economics as a broadcast variable.
-        val bfBytes = sel.agg(vf.bloom_agg(col("o_orderkey"), 1 << 20, 5))
+        // 145k expected keys in 2^20 bits: Spark derives 5 hashes.
+        val bfBytes = sel.agg(vf.bloom_agg(col("o_orderkey"), 145000L, 1L << 20))
           .head().getAs[Array[Byte]](0)
         val pruned = lineitem(s, d)
           .filter(vf.bloom_might_contain(lit(bfBytes), col("l_orderkey")))

@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     ≤ e^-depth.
   *
   * Hashing is XXH64 double-hashing (Kirsch–Mitzenmacher g_r = h1 +
-  * r·h2), the same construction as [[BloomUtil]]. Deterministic by
+  * r·h2). Deterministic by
   * design: estimates are a pure function of the multiset of keys, so
   * the driver lane can gate them (q_countmin) like any exact query.
   */
@@ -169,8 +169,7 @@ case class CountMinQuery(left: Expression, right: Expression)
     }
 
   // The sketch bytes are the same broadcast value for every row of a
-  // partition; decode once per thread keyed by reference identity
-  // (same memo pattern as BloomMightContain).
+  // partition; decode once per thread keyed by reference identity.
   @transient private lazy val decoded =
     new ThreadLocal[(AnyRef, (Int, Int, Array[Long]))]
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** `topk_pairs(score, id, k)`: exact top-k (score desc, id asc) as a
@@ -20,7 +20,10 @@ import org.apache.spark.sql.types._
   *
   * Determinism: ties on score break by id ascending, so the result is
   * input-order- and partition-count-invariant (pinned by the
-  * partition-invariance gate in QueriesSmokeSpec).
+  * partition-invariance gate in QueriesSmokeSpec). The buffer is a set
+  * of pairs, so a duplicate delivery is idempotent; Spark's
+  * `CollectTopK` keeps every copy, which is why this stays (README
+  * "Decisions").
   */
 case class TopKPairs(
     left: Expression,

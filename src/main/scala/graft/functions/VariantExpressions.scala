@@ -252,7 +252,7 @@ object VariantExtract {
       }
     } catch {
       case e: UnsupportedOperationException => throw e
-      case e: Exception if !failOnError => null
+      case _: Exception if !failOnError => null
     }
   }
 
@@ -474,7 +474,7 @@ case class ToVariant(child: Expression) extends UnaryExpression with GraftUnaryC
       case LongType => VariantWriter.writeLong(buf, value.asInstanceOf[Long])
       case FloatType => VariantWriter.writeFloat(buf, value.asInstanceOf[Float])
       case DoubleType => VariantWriter.writeDouble(buf, value.asInstanceOf[Double])
-      case d: DecimalType =>
+      case _: DecimalType =>
         val dec = value.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal
         VariantWriter.writeDecimal(buf, dec.unscaledValue(), dec.scale())
       case StringType => VariantWriter.writeStringBytes(buf, value.asInstanceOf[UTF8String].getBytes)

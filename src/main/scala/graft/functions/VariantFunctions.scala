@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GeneratorOuter, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, GeneratorOuter, If, IsNull, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataFrame DSL + SQL registration for the variant function surface
@@ -100,10 +101,18 @@ object VariantFunctions {
     col(PqQueryTable(expr(c), codebook, m, ksub))
   def pq_adc_lookup(codes: Column, table: Column, codebook: Array[Float], m: Int, ksub: Int): Column =
     col(PqAdcLookup(expr(codes), expr(table), codebook, m, ksub))
-  def bloom_agg(c: Column, numBits: Int, numHashes: Int): Column =
-    col(BloomAgg(expr(c), numBits, numHashes).toAggregateExpression())
+  // Bloom semi-join reduction on Spark's own kernels. Both sides hash
+  // the key with xxhash64 first, as Spark's runtime filter does for a
+  // non-bigint key, so any key type probes; a NULL key stays NULL.
+  private def bloomKey(key: Expression): Expression =
+    If(IsNull(key), Literal(null, LongType), new XxHash64(Seq(key)))
+  private def bloomAgg(key: Expression, estimatedNumItems: Long, numBits: Long): Expression =
+    new BloomFilterAggregate(bloomKey(key), Literal(estimatedNumItems), Literal(numBits))
+      .toAggregateExpression()
+  def bloom_agg(c: Column, estimatedNumItems: Long, numBits: Long): Column =
+    col(bloomAgg(expr(c), estimatedNumItems, numBits))
   def bloom_might_contain(bf: Column, key: Column): Column =
-    col(BloomMightContain(expr(bf), expr(key)))
+    col(BloomFilterMightContain(expr(bf), bloomKey(expr(key))))
   def topk_pairs(score: Column, id: Column, k: Int): Column =
     col(TopKPairs(expr(score), expr(id), k).toAggregateExpression())
   def bottom_k_longs(c: Column, k: Int): Column =
@@ -140,7 +149,12 @@ object VariantFunctions {
     VariantRead(es.head, litString(es(1), s"$name path"), consumer(tpe))
   }
 
-  /** (name, builder, usage) for every SQL function we expose. */
+  /** (name, builder, usage) for every SQL function we expose. A name
+    * that Spark also registers is taken over in every session built
+    * through `Tables.configure`; only the variant readers do that, on
+    * purpose (`NativeVariantDispatch` routes native `VariantType`
+    * inputs to Spark's own). `bitmap_or_agg` is DSL-only for that
+    * reason: the SQL name stays Spark's builtin over Spark's bitmaps. */
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
     ("variant_from_json",
       (es: Seq[Expression]) => VariantFromJson(es.head, failOnError = true),
@@ -153,7 +167,7 @@ object VariantFunctions {
       "parse_variant(jsonStr) - Alias of variant_from_json."),
     ("variant_get",
       pathRead("variant_get", JsonConsumer.Cast(_, castFailOnError = false)),
-      "variant_get(v, path[, type]) - Extract a path from a variant, optionally cast."),
+      "variant_get(v, path[, type]) - Extract a path from a variant, optionally cast; NULL when the cast fails (lenient, the same as try_variant_get; Spark's own variant_get raises)."),
     ("try_variant_get",
       pathRead("try_variant_get", JsonConsumer.Cast(_, castFailOnError = false)),
       "try_variant_get(v, path[, type]) - Like variant_get; NULL on cast failure."),
@@ -238,13 +252,12 @@ object VariantFunctions {
       (es: Seq[Expression]) => HyperplaneBucket(es.head, litInt(es(1), "hyperplane_bucket bits")),
       "hyperplane_bucket(vec, bits) - Sign-hash LSH bucket of an embedding vector."),
     ("bloom_agg",
-      (es: Seq[Expression]) => BloomAgg(es.head,
-        litInt(es(1), "bloom_agg numBits"), litInt(es(2), "bloom_agg numHashes"))
-        .toAggregateExpression(),
-      "bloom_agg(key, numBits, numHashes) - Mergeable Bloom bitset over a join key (no false negatives)."),
+      (es: Seq[Expression]) => bloomAgg(es.head,
+        litInt(es(1), "bloom_agg estimatedNumItems"), litInt(es(2), "bloom_agg numBits")),
+      "bloom_agg(key, estimatedNumItems, numBits) - Spark's mergeable Bloom filter over a join key (no false negatives)."),
     ("bloom_might_contain",
-      (es: Seq[Expression]) => BloomMightContain(es.head, es(1)),
-      "bloom_might_contain(bf, key) - Probe a bloom_agg bitset; false for NULL keys."),
+      (es: Seq[Expression]) => BloomFilterMightContain(es.head, bloomKey(es(1))),
+      "bloom_might_contain(bf, key) - Probe a bloom_agg filter (a literal or scalar subquery); NULL for NULL keys."),
     ("bottomk_by_hash",
       (es: Seq[Expression]) => BottomKByHash(es.head, litInt(es(1), "bottomk_by_hash k"))
         .toAggregateExpression(),
@@ -260,9 +273,6 @@ object VariantFunctions {
     ("bitmap_agg",
       (es: Seq[Expression]) => BitmapAgg(es.head).toAggregateExpression(),
       "bitmap_agg(id) - Exact-distinct paged bitmap over non-negative ids; mergeable."),
-    ("bitmap_or_agg",
-      (es: Seq[Expression]) => BitmapOrAgg(es.head).toAggregateExpression(),
-      "bitmap_or_agg(bytes) - OR-merge serialized bitmaps (distinct over a union without rescanning)."),
     ("bitmap_cardinality",
       (es: Seq[Expression]) => BitmapCardinality(es.head),
       "bitmap_cardinality(bytes) - Popcount of a bitmap sketch."),

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -237,11 +236,6 @@ case class VecQuantizePpm(child: Expression)
   */
 case class VecSubLong(left: Expression, right: Expression)
     extends BinaryExpression with GraftBinaryCodegen {
-
-  @transient private lazy val anyContainsNull = (left.dataType, right.dataType) match {
-    case (ArrayType(_, c1), ArrayType(_, c2)) => c1 || c2
-    case _ => true
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "vec_sub_long"

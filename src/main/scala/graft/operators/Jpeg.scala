@@ -331,11 +331,6 @@ object Jpeg {
   // Encoder
   // ---------------------------------------------------------------
 
-  private def clamp255(d: Double): Int = {
-    val v = math.round(d).toInt
-    if (v < 0) 0 else if (v > 255) 255 else v
-  }
-
   /** Encode an RGB image as baseline JFIF (3-component YCbCr 4:4:4,
     * all-ones quantization tables, standard huffman tables). Pixels
     * come from `px(x, y) -> 0xRRGGBB`; dims need not be multiples of 8

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 import graft.Tables.{documents, embeddings, events, lineitem}
 import graft.functions.{VariantFunctions => vf}
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{SchemaOfVariantAgg, VariantFunctions => vf}
 import graft.variant.SchemaInfer
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._

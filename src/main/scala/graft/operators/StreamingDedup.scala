@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{VariantFunctions => vf}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -69,7 +69,7 @@ object StreamingDedup {
       .select(col("id"), posexplode(col("bandArr")).as(Seq("band", "bucket")), col("sig"))
 
   private def bucketMatcher(threshold: Double)(
-      key: (Int, Long), rows: Iterator[BandedDoc],
+      @annotation.unused key: (Int, Long), rows: Iterator[BandedDoc],
       state: GroupState[BucketState]): Iterator[DupPair] = {
     val prev = state.getOption.getOrElse(BucketState(Nil, Nil))
     var ids = prev.ids

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Streaming sessionization with EVENT-TIME TIMEOUT emission
   * (`flatMapGroupsWithState` + `GroupStateTimeout.EventTimeTimeout`):

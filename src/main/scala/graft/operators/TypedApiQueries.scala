@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
-import graft.Tables.{events, lineitem, orders}
+import graft.QueryDef
+import graft.Tables.{lineitem, orders}
 
 /** Round-7 typed-API surface: KeyValueGroupedDataset.cogroup, the
   * public `Aggregator` UDAF API (the user-facing layer above the

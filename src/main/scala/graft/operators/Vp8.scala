@@ -223,7 +223,6 @@ object Vp8 {
   // Inverse transforms (RFC 6386 section 14.3-14.4) — exact integers
   // ------------------------------------------------------------------
 
-  private def mul1(v: Int): Int = v + ((v * 20091) >> 16) // cospi8sqrt2-1
   private def mul2(v: Int): Int = (v * 35468) >> 16       // sinpi8sqrt2
 
   /** In-place 4x4 inverse DCT: input/output raster order. */
@@ -478,7 +477,7 @@ object Vp8 {
     val partsStart = part0 + firstPartSize
     val partOffsets = new Array[Int](nParts)
     val partEnds = new Array[Int](nParts)
-    var dataStart = partsStart + 3 * (nParts - 1)
+    val dataStart = partsStart + 3 * (nParts - 1)
     var pi = 0
     var cursor = dataStart
     while (pi < nParts) {
@@ -659,8 +658,7 @@ object Vp8 {
           mb.hasCoeffs = anyNz
         }
 
-        reconstructMb(h, mbs, mb, mbx, mby, coeffs, yPlane, uPlane, vPlane,
-          pw, cw)
+        reconstructMb(h, mb, mbx, mby, coeffs, yPlane, uPlane, vPlane, pw, cw)
         mbx += 1
       }
       mby += 1
@@ -748,7 +746,7 @@ object Vp8 {
     }
   }
 
-  private def reconstructMb(h: Header, mbs: Array[MbInfo], mb: MbInfo,
+  private def reconstructMb(h: Header, mb: MbInfo,
       mbx: Int, mby: Int, coeffs: Array[Int],
       yP: Array[Int], uP: Array[Int], vP: Array[Int],
       pw: Int, cw: Int): Unit = {
@@ -767,7 +765,7 @@ object Vp8 {
       while (sb < 16) {
         val sx = sb & 3; val sy = sb >> 2
         predict4x4(yP, pw, x0 + sx * 4, y0 + sy * 4, mb.bModes(sb),
-          mbx, mby, h.mbW, sx, sy)
+          mbx, mby, h.mbW, sx)
         addResidual(yP, pw, x0 + sx * 4, y0 + sy * 4, coeffs, sb * 16)
         sb += 1
       }
@@ -847,10 +845,10 @@ object Vp8 {
   }
 
   /** 4x4 intra prediction (RFC 12.3). (x0,y0) are plane coordinates of
-    * the subblock; (sx,sy) its position within the MB. Above-right for
+    * the subblock; sx its column within the MB. Above-right for
     * right-column subblocks always comes from the row above the MB. */
   private def predict4x4(plane: Array[Int], stride: Int, x0: Int, y0: Int,
-      mode: Int, mbx: Int, mby: Int, mbW: Int, sx: Int, sy: Int): Unit = {
+      mode: Int, mbx: Int, mby: Int, mbW: Int, sx: Int): Unit = {
     val aboveRow = y0 - 1
     val a = new Array[Int](8)
     var i = 0

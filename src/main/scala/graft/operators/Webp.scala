@@ -161,11 +161,6 @@ object Webp {
     }
   }
 
-  private def singleSymbolDecoder(sym: Int, alphabet: Int): PrefixDecoder = {
-    val l = new Array[Int](alphabet); l(sym) = 1
-    new PrefixDecoder(l) // the 1-present-symbol rule makes it 0-bit
-  }
-
   /** kCodeLengthCodeOrder (VP8L spec). */
   private val ClcOrder: Array[Int] =
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)

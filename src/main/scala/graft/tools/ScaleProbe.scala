@@ -141,7 +141,7 @@ object ScaleProbe {
       val ws = workloads(spark, d)
         .filter { case (n, _) => only.isEmpty || only(n) }
       names = ws.map(_._1)
-      ws.foreach { case (n, f) =>   // warm: codegen + listing
+      ws.foreach { case (_, f) =>   // warm: codegen + listing
         f().write.mode("overwrite").format("noop").save()
       }
       ws.foreach { case (n, f) =>

@@ -309,53 +309,12 @@ private[graft] object FastJsonLex {
   /** Skip (and fully validate) one JSON value of any shape. Depth-bounded
     * like the encoding walks. */
   def skipValue(c: Cursor, depth: Int = 0): Unit = {
-    val b = c.b
     (c.peek & 0xff) match {
       case 'n' => literal(c, "null")
       case 't' => literal(c, "true")
       case 'f' => literal(c, "false")
       case '"' => c.i += 1; skipString(c)
-      case '[' =>
-        openContainer(depth)
-        c.i += 1
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == ']') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            skipValue(c, depth + 1)
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case ']' => c.i += 1; more = false
-              case _ => throw Miss
-            }
-          }
-        }
-      case '{' =>
-        openContainer(depth)
-        c.i += 1
-        c.skipWs()
-        if (c.i < c.end && b(c.i) == '}') c.i += 1
-        else {
-          var more = true
-          while (more) {
-            c.skipWs()
-            c.expect('"')
-            skipName(c)
-            c.skipWs()
-            c.expect(':')
-            c.skipWs()
-            skipValue(c, depth + 1)
-            c.skipWs()
-            (c.peek & 0xff) match {
-              case ',' => c.i += 1
-              case '}' => c.i += 1; more = false
-              case _ => throw Miss
-            }
-          }
-        }
+      case '[' | '{' => members(c, depth, null)
       case x if x == '-' || (x >= '0' && x <= '9') =>
         // even SKIPPED integers carry the unfused pipeline's i128 bound:
         // ≤38 digits always fit i128; longer ones take [[integer]]'s rule

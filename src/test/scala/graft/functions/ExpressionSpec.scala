@@ -128,9 +128,12 @@ class ExpressionSpec extends AnyFunSuite {
     }
   }
 
-  test("try_variant_get nulls on type mismatch; strict variant_get throws") {
+  test("lenient variant_get and try_variant_get null on type mismatch") {
     assert(sql1(
       """SELECT try_variant_get(variant_from_json('{"c": "xyz"}'), '$.c', 'bigint') IS NULL AS r""")
+      .getBoolean(0))
+    assert(sql1(
+      """SELECT variant_get(variant_from_json('{"c": "xyz"}'), '$.c', 'bigint') IS NULL AS r""")
       .getBoolean(0))
   }
 
